@@ -281,7 +281,6 @@ object Bench {
               val r = operators.Fitter.fit(spark, df, Seq("l_extendedprice"),
                 Some(list), cfg)
               r.df.count()
-              r.unpersist()
               Some((System.nanoTime() - t0) / 1e9)
             } catch { case e: Throwable =>
               System.err.println(s"DIST CHECK FAILED @ $k dists -> $e"); None }

@@ -1,18 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 
-/** Query surface over the cached results table (reference:
-  * src/spark_bestfit/collection.py:51-1216). Every method is a plain
-  * DataFrame op, so Catalyst folds filters and the cached relation is
-  * reused — no refitting ever happens here.
+/** Query surface over the results table (reference:
+  * src/spark_bestfit/collection.py:51-1216). The fitters build `df` on the
+  * driver from the collected fan-out rows — O(columns · families) rows, the
+  * order of the contexts the driver already holds — so it is never cached
+  * and every method is a plain DataFrame op over a local relation: no
+  * query here rescans the input or refits.
   */
 final class FitResults(
     val df: DataFrame,
     val samples: Map[String, Array[Double]] = Map.empty,
     val cfg: FitConfig = FitConfig(),
-    cachedRoot: Option[DataFrame] = None,
     // discrete fits keep the EXACT integral sample alongside the double
     // view, so a lazy K-S recompute never round-trips values above 2^53
     // through Double
@@ -23,24 +25,10 @@ final class FitResults(
 
   def count: Long = df.count()
 
-  /** Release the cached results relation (fit() caches it eagerly).
-    * Queries still work afterwards — they just recompute the lineage.
-    * Long-lived sessions fitting many columns should call this when a
-    * collection is no longer needed, or executors accumulate one pinned
-    * relation per fit (reference: collection.py unpersist lifecycle).
-    *
-    * Derived views (forColumn/filterByMetrics) carry the ORIGINAL cached
-    * relation along — unpersisting the filtered plan would be a no-op
-    * against the cache manager, which matches plans exactly. */
-  def unpersist(): this.type = { cachedRoot.getOrElse(df).unpersist(); this }
-
-  /** The relation that actually sits in the cache manager — shared by
-    * every derived view of the same fit. Cache-lifecycle code (e.g. an
-    * LRU evicting one view) needs identity on this to avoid unpersisting
-    * a relation its siblings still use. */
-  private[graft] def rootDf: DataFrame = cachedRoot.getOrElse(df)
-
-  private def root: Option[DataFrame] = Some(cachedRoot.getOrElse(df))
+  /** A no-op, kept for callers of the reference's collection lifecycle
+    * (collection.py unpersist): the results table lives on the driver and
+    * a fit caches nothing, so there is nothing to release. */
+  def unpersist(): this.type = this
 
   /** Drop sentinel rows from failed fits (sse = +inf)
     * (reference: backends/spark.py:193). */
@@ -71,38 +59,46 @@ final class FitResults(
     maxAd.foreach(t => out = out.where(F.col("ad_statistic") < t))
     // keep samples/cfg so a filtered lazy collection can still fill
     // deferred metrics (bestLazy/materialize)
-    new FitResults(out, samples, cfg, root, discreteSamples)
+    new FitResults(out, samples, cfg, discreteSamples)
   }
 
   def forColumn(column: String): FitResults =
-    new FitResults(df.where(F.col("column_name") === column), samples, cfg, root,
+    new FitResults(df.where(F.col("column_name") === column), samples, cfg,
       discreteSamples)
 
   /** Lazy-metric top-n (reference: collection.py:1008-1120): when the
     * requested metric was deferred at fit time, pre-select 3n+5 candidates
-    * by AIC as a proxy, recompute K-S/A-D for only those from the cached
-    * sample, re-sort by the requested metric. */
+    * by AIC as a proxy, recompute K-S/A-D for only those from the kept
+    * sample, re-sort by the requested metric. The results table is small
+    * and driver-local, so all of it runs on the driver over one collect. */
   def bestLazy(spark: org.apache.spark.sql.SparkSession, n: Int, metric: String): DataFrame = {
     requireMetric(metric)
+    import spark.implicits._
+    val rows = df.as[FitResult].collect()
+    def value(r: FitResult): Option[Double] =
+      if (metric == "ks_statistic") r.ks_statistic else r.ad_statistic
     // recompute iff any SUCCESSFUL fit still has the metric deferred —
     // failed-fit sentinels carry ks = +inf, so a bare isNotNull probe
     // would see them and skip the fill, ranking a sentinel "best"
     val needsRecompute = Set("ks_statistic", "ad_statistic")(metric) &&
-      !df.where(F.col("sse") < Double.PositiveInfinity && F.col(metric).isNull).isEmpty
+      rows.exists(r => r.sse < Double.PositiveInfinity && value(r).isEmpty)
     if (!needsRecompute) return best(n, metric)
-    val candidates = successful.orderBy(F.col("aic").asc_nulls_last).limit(3 * n + 5)
-    val filled = FitResults.fillMetrics(spark, candidates, samples, cfg,
-      discreteSamples)
-    new FitResults(filled, samples, cfg, None, discreteSamples).best(n, metric)
+    val candidates = rows.filter(_.sse < Double.PositiveInfinity)
+      .sortWith((a, b) => SQLOrderingUtil.compareDoubles(a.aic, b.aic) < 0).take(3 * n + 5)
+    val filled = fillMetrics(candidates, samples, discreteSamples)
+      .sortWith((a, b) => {
+        val byMetric = ascNullsLast(value(a), value(b))
+        byMetric < 0 || (byMetric == 0 && a.distribution < b.distribution)
+      }).take(n)
+    spark.createDataset(filled.toSeq).toDF()
   }
 
   /** Fill deferred K-S/A-D for every row → an eager FitResults
     * (reference: collection.py:918-1006, materialize()). */
   def materialize(spark: org.apache.spark.sql.SparkSession): FitResults = {
-    val filled = FitResults.fillMetrics(spark, df, samples, cfg,
-      discreteSamples).cache()
-    filled.count()
-    new FitResults(filled, samples, cfg, None, discreteSamples)
+    import spark.implicits._
+    val filled = fillMetrics(df.as[FitResult].collect(), samples, discreteSamples)
+    new FitResults(spark.createDataset(filled.toSeq).toDF(), samples, cfg, discreteSamples)
   }
 
   /** Distinct non-null fitted column names (reference: collection.py:522-544). */
@@ -167,20 +163,25 @@ object FitResults {
     require(sortableMetrics(metric),
       s"metric must be one of ${sortableMetrics.mkString(", ")}, got '$metric'")
 
-  /** Recompute deferred K-S/A-D(/A-D p) from the cached per-column sample
+  /** Spark's ascending order with nulls last (NaN above every number,
+    * -0.0 equal to 0.0), for sorting collected rows as `orderBy` would. */
+  private def ascNullsLast(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+    case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(x, y)
+    case (Some(_), None) => -1
+    case (None, Some(_)) => 1
+    case _ => 0
+  }
+
+  /** Recompute deferred K-S/A-D(/A-D p) from the kept per-column sample
     * for rows where they are null (reference: metrics.py:325-382 +
-    * collection.py:174-297 — the cached-array path; we always cache). */
+    * collection.py:174-297 — the cached-array path; we always keep it). */
   private[operators] def fillMetrics(
-      spark: org.apache.spark.sql.SparkSession,
-      candidates: DataFrame,
+      rows: Array[FitResult],
       samples: Map[String, Array[Double]],
-      cfg: FitConfig,
-      discreteSamples: Map[String, Array[Long]] = Map.empty): DataFrame = {
-    import spark.implicits._
+      discreteSamples: Map[String, Array[Long]]): Array[FitResult] = {
     import graft.dists.{DistRegistry, FrozenModel}
     import graft.functions.Metrics
-    val rows = candidates.as[FitResult].collect()
-    val filled = rows.map { r =>
+    rows.map { r =>
       if (r.ks_statistic.isDefined || !samples.contains(r.column_name)) r
       else DistRegistry.get(r.distribution) match {
         case Some(dist) if r.parameters.forall(java.lang.Double.isFinite) =>
@@ -194,7 +195,7 @@ object FitResults {
             ad_statistic = Some(ad), ad_pvalue = adP)
         case None =>
           // discrete families defer too: recompute the tie-aware
-          // discrete K-S from the cached (integral) sample; A-D stays
+          // discrete K-S from the kept (integral) sample; A-D stays
           // undefined for discrete fits, as in the eager path
           graft.dists.DiscreteRegistry.get(r.distribution) match {
             case Some(d) if r.parameters.forall(java.lang.Double.isFinite) =>
@@ -209,6 +210,5 @@ object FitResults {
         case _ => r
       }
     }
-    spark.createDataset(filled.toSeq).toDF()
   }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 import graft.dists._
 import graft.functions.{Metrics, SpecialMath => SM}
 
@@ -228,16 +231,9 @@ object Fitter {
     val c = F.col(column).cast("double")
     val valid = df.select(c.as("x")).where(validValue(F.col("x")))
     val n = totalCount.getOrElse(valid.count())
-    val collected: Array[Double] =
-      if (n <= sampleSize) {
-        valid.collect().map(_.getDouble(0))
-      } else {
-        // oversample slightly so the post-filter size still reaches target
-        val fraction = math.min(1.0, sampleSize * 1.2 / n)
-        val arr = valid.sample(withReplacement = false, fraction, seed)
-          .limit(sampleSize * 2).collect().map(_.getDouble(0))
-        arr
-      }
+    val draw = FitScan.Draw.seeded(FitScan.anyRow, n <= sampleSize, n, sampleSize,
+      seed, sampleSize * 2)
+    val collected = FitScan.draw(valid, Seq(draw)).head.map(_.getDouble(0))
     if (collected.length <= sampleSize) collected
     else exactResample(collected, sampleSize, seed)
   }
@@ -289,18 +285,93 @@ object Fitter {
     a.slice(0, n)
   }
 
+  /** Equal-width bins over [mn, mx], Histogram.continuous's arithmetic:
+    * the last edge is widened by 1e-10 of the range so the max lands in
+    * the final bin, and out-of-range values clamp into the end bins. */
+  private final case class EqualBins(mn: Double, mx: Double, nBins: Int) {
+    val hi: Double = mx + (mx - mn) * 1e-10
+    val width: Double = (hi - mn) / nBins
+    def bin(x: Double): Int =
+      math.min(math.max(math.floor((x - mn) / width).toLong, 0L), nBins - 1L).toInt
+    /** Density over the rows the scan binned (the adaptive sampler may
+      * have reduced them below the full count). */
+    def hist(counts: Array[Long]): Hist = {
+      val nScan = math.max(counts.sum, 1L)
+      Hist(counts.map(_.toDouble / (nScan * width)),
+        Array.tabulate(nBins + 1)(j => mn + j * (hi - mn) / nBins))
+    }
+  }
+
+  private def equalBins(mn: Double, mx: Double, cnt: Long, cfg: FitConfig): EqualBins =
+    EqualBins(mn, mx, math.max(2, if (cfg.useRiceRule) Histogram.riceBins(cnt) else cfg.bins))
+
+  /** One histogram of the fused pass: column `ci` of the scanned row into
+    * `nBins` counts; `bin` is -1 for a value outside the histogram. */
+  private final case class Binner(ci: Int, nBins: Int, bin: Double => Int)
+
+  /** The fused pass of [[fit]]: every binner's counts plus the draws. */
+  private def binnedPass(frame: DataFrame, binners: Array[Binner],
+                         draws: Seq[FitScan.Draw]): (Array[Array[Long]], Seq[Array[InternalRow]]) =
+    FitScan.run(frame, draws, FitScan.zeroCounts(binners.map(_.nBins)),
+      (t: Array[Array[Long]], row: InternalRow) => {
+        var i = 0
+        while (i < binners.length) {
+          val b = binners(i)
+          if (!row.isNullAt(b.ci)) {
+            val k = b.bin(row.getDouble(b.ci))
+            if (k >= 0) t(i)(k) += 1
+          }
+          i += 1
+        }
+      }, FitScan.addCounts)
+
+  /** Pass 3 of every fit: ONE job over the (key, family) pairs, with the
+    * driver-built contexts in one broadcast that is destroyed once the
+    * results are back. `parallelize` slices the pairs in order, so the
+    * interleaved slow families spread over the tasks; fine-grained tasks
+    * (a few fits each) keep one slow family from queueing behind another. */
+  private def fanOut[C: scala.reflect.ClassTag](spark: SparkSession, pairs: Seq[(String, String)],
+                                                nParts: Int, shared: C)
+                                               (fitPair: (C, String, String) => FitResult): Array[FitResult] = {
+    val bc = spark.sparkContext.broadcast(shared)
+    try spark.sparkContext.parallelize(pairs, nParts)
+      .map { case (key, name) => fitPair(bc.value, key, name) }
+      .collect()
+    finally bc.destroy()
+  }
+
+  /** The results table over the collected rows: a driver-local relation
+    * of O(keys · families) rows, so queries on it never rescan the input
+    * and nothing needs caching or releasing. */
+  private def resultsOf(spark: SparkSession, rows: Array[FitResult],
+                        samples: Map[String, Array[Double]], cfg: FitConfig,
+                        discreteSamples: Map[String, Array[Long]] = Map.empty): FitResults = {
+    import spark.implicits._
+    new FitResults(spark.createDataset(rows.toSeq).toDF(), samples, cfg, discreteSamples)
+  }
+
+  /** Column of a censored fit's scan that carries the event flag. */
+  private val EventCol = "__event"
+
   /** Fit all requested continuous families to one or more numeric columns.
     *
-    * Pipeline per column (reference lifecycle, SURVEY.md §3.1): distributed
-    * histogram + 10K sample collect → driver stats/prefilter/interleave →
-    * broadcast FitContext → `Dataset[String].map(fitOne)` fan-out (a plain
-    * JVM closure — the reference's Arrow/pandas-UDF hop does not exist
-    * here) → union → cache.
+    * Three passes over the data, whatever the number of columns (the
+    * reference fits 3 columns for ~the price of 1,
+    * docs/_static/benchmark_summary.md:36-43):
+    *  1. one min/max/count aggregate over every column;
+    *  2. one [[FitScan]] job: every column's histogram counts and the
+    *     fitting sample (per column, with its event flags, for a censored
+    *     fit);
+    *  3. driver stats/prefilter/interleave → broadcast FitContexts → one
+    *     `parallelize(pairs).map(fitOne)` fan-out (a plain JVM closure —
+    *     the reference's Arrow/pandas-UDF hop does not exist here) →
+    *     collect.
+    * The results table is a driver-local relation of the collected rows
+    * (reference lifecycle, SURVEY.md §3.1, without its cache).
     */
   def fit(spark: SparkSession, df: DataFrame, columns: Seq[String],
           distributions: Option[Seq[String]] = None,
           cfg: FitConfig = FitConfig()): FitResults = {
-    import spark.implicits._
     require(columns.nonEmpty, "at least one column required")
     val schema = df.schema
     columns.foreach { c =>
@@ -318,41 +389,11 @@ object Fitter {
       else baseNames
     val capped = supportFiltered.take(cfg.maxDistributions)
 
-    // ---- shared-scan data collection: ONE stats scan + ONE histogram
-    // shuffle + ONE sample scan for ALL columns (the reference fits 3
-    // columns for ~the price of 1, docs/_static/benchmark_summary.md:36-43;
-    // round 1 looped columns and paid 3×) ----
-
-    // censored fitting collects the paired (value, event) sample per
-    // column with the same seeded-sample + exact-resample discipline as
-    // the continuous path — a bare `.limit` would take the head of the
-    // table in partition order, a time-biased (and layout-dependent)
-    // subsample when the source is time-ordered
-    val censorByCol: Map[String, (Array[Double], Array[Boolean])] =
-      cfg.censoringColumn match {
-        case None => Map.empty
-        case Some(cc) => columns.map { column =>
-          val valid = df
-            .select(F.col(column).cast("double").as("x"), F.col(cc).cast("boolean").as("e"))
-            .where(validValue(F.col("x")))
-          val n = valid.count()
-          val rows =
-            if (n <= cfg.fittingSampleSize) valid.collect()
-            else valid
-              .sample(withReplacement = false,
-                math.min(1.0, cfg.fittingSampleSize * 1.2 / n), cfg.sampleSeed)
-              .limit(cfg.fittingSampleSize * 2).collect()
-          val sized =
-            if (rows.length <= cfg.fittingSampleSize) rows
-            else exactResampleRows(rows, cfg.fittingSampleSize, cfg.sampleSeed)
-          column -> (sized.map(_.getDouble(0)), sized.map(_.getBoolean(1)))
-        }.toMap
-      }
-
-    // NaN/±Inf→null per column so min/max/count see only finite values
+    // ---- pass 1: stats. NaN/±Inf→null per column so min/max/count see
+    // only finite values; a censored fit carries its event flag along ----
     val cleaned = df.select(columns.map { c =>
       finiteOrNull(F.col(c).cast("double")).as(c)
-    }: _*)
+    } ++ cfg.censoringColumn.map(cc => F.col(cc).cast("boolean").as(EventCol)): _*)
     val statAggs = columns.flatMap(c =>
       Seq(F.min(c).as(s"mn_$c"), F.max(c).as(s"mx_$c"), F.count(c).as(s"cnt_$c")))
     val statRow = cleaned.agg(statAggs.head, statAggs.tail: _*).head()
@@ -370,133 +411,86 @@ object Fitter {
 
     // ---- adaptive pre-fit sampling (A7/P3/P1, reference:
     // base_fitter.py:243-477): inputs above the row threshold are reduced
-    // ONCE here — pilot skew decides uniform vs stratified — and both the
-    // histogram and the sample scan below run over the reduced frame. At
-    // 100 TB this bounds every downstream scan instead of rescanning the
-    // corpus per fit.
+    // ONCE here — pilot skew decides uniform vs stratified — and the
+    // fused pass below runs over the reduced frame. At 100 TB this bounds
+    // every downstream scan instead of rescanning the corpus per fit.
     val nMax = colStats.values.map(_._3).max
     val (scanDf, samplePlan) = AdaptiveSampling.prepare(cleaned, fitCols, nMax, cfg)
 
-    // one sample scan shared by every column; per-column null filter +
-    // exact-size downsample happen on the collected rows. The fraction is
-    // derived from the MINIMUM per-column count so sparse (nully) columns
-    // still reach the fitting sample size; the row cap bounds the collect.
-    // The sample scan and the histogram scan below are INDEPENDENT (both
-    // depend only on the stats row), so the sample collect runs on a
-    // driver thread while the histogram job is submitted — the two scans
-    // overlap instead of serializing (opt guide §2.6).
-    val reduceFactor = samplePlan.map(_.fraction).getOrElse(1.0)
-    val nMin = math.max(1L, (colStats.values.map(_._3).min * reduceFactor).toLong)
-    val nMaxEff = math.max(1L, (nMax * reduceFactor).toLong)
-    val sampleRowsF: scala.concurrent.Future[Array[org.apache.spark.sql.Row]] =
-      scala.concurrent.Future {
-        if (nMaxEff <= cfg.fittingSampleSize) scanDf.collect()
-        else scanDf
-          .sample(withReplacement = false,
-            math.min(1.0, cfg.fittingSampleSize * 1.2 / nMin), cfg.sampleSeed)
-          .limit(cfg.fittingSampleSize * 4).collect()
-      }(scala.concurrent.ExecutionContext.global)
-
-    // one histogram pass for all non-singular columns: explode
-    // (columnIndex, bin) pairs → ONE ~(columns·bins)-row shuffle; bin
-    // arithmetic identical to Histogram.continuous
-    case class HistSpec(c: String, mn: Double, hi: Double, nBins: Int, width: Double)
-    // explicit bin edges (reference's tuple `bins` form): one CASE-chain
-    // bin expression per column in the SAME single exploded scan, with
-    // per-bin widths in the density normalization (edges may be
-    // non-uniform); values outside [head, last] are excluded
-    val explicitHists: Option[Map[String, Hist]] = cfg.binEdges.map { es =>
-      // shared helpers with Histogram.continuousWithEdges — ONE bin/
-      // density definition. The struct is emitted unconditionally with a
-      // nullable bin (evaluating the CASE chain once per column per row)
-      // and null bins drop after the explode.
-      val edges = Histogram.validEdges(es)
-      val entries = F.array(fitCols.zipWithIndex.map { case (c, i) =>
-        F.struct(F.lit(i).as("ci"),
-          Histogram.edgeBinExpr(F.col(c), edges).as("bin"))
-      }: _*)
-      val countsByCol = scanDf.select(F.explode(entries).as("e"))
-        .where(F.col("e.bin").isNotNull)
-        .groupBy(F.col("e.ci").as("ci"), F.col("e.bin").as("bin"))
-        .agg(F.count(F.lit(1)).as("cnt"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (ci, rows) =>
-          ci -> rows.map(r => r.getLong(1).toInt -> r.getLong(2)).toMap
-        }
-      fitCols.zipWithIndex.map { case (c, i) =>
-        val counts = countsByCol.getOrElse(i, Map.empty[Int, Long])
-        c -> Hist(Histogram.edgeDensity(counts, edges), edges)
-      }.toMap
-    }
-    val specs = if (explicitHists.isDefined) Nil else fitCols.flatMap { c =>
-      val (mn, mx, cnt) = colStats(c)
-      if (mn == mx) None
-      else {
-        val nBins = math.max(2,
-          if (cfg.useRiceRule) Histogram.riceBins(cnt) else cfg.bins)
-        val hi = mx + (mx - mn) * 1e-10
-        Some(HistSpec(c, mn, hi, nBins, (hi - mn) / nBins))
-      }
-    }
-    val histByCol: Map[String, Hist] = explicitHists.getOrElse {
-      val countsByCol: Map[Int, Map[Int, Long]] =
-        if (specs.isEmpty) Map.empty
-        else {
-          val entries = F.array(specs.zipWithIndex.map { case (sp, i) =>
-            val bin = F.least(
-              F.greatest(F.floor((F.col(sp.c) - F.lit(sp.mn)) / F.lit(sp.width)), F.lit(0L)),
-              F.lit((sp.nBins - 1).toLong))
-            F.when(F.col(sp.c).isNotNull,
-              F.struct(F.lit(i).as("ci"), bin.as("bin"))).otherwise(F.lit(null))
-          }: _*)
-          scanDf.select(F.explode(entries).as("e"))
-            .where(F.col("e").isNotNull)
-            .groupBy(F.col("e.ci").as("ci"), F.col("e.bin").as("bin"))
-            .agg(F.count(F.lit(1)).as("cnt"))
-            .collect()
-            .groupBy(_.getInt(0))
-            .map { case (ci, rows) =>
-              ci -> rows.map(r => r.getLong(1).toInt -> r.getLong(2)).toMap
-            }
-        }
-      fitCols.map { c =>
+    // ---- pass 2: histograms + fitting sample in one scan ----
+    // explicit bin edges (the reference's tuple `bins` form) bin every
+    // column by Histogram's edge rule — non-uniform widths allowed, values
+    // outside [head, last] excluded; otherwise each non-singular column
+    // gets equal-width bins over its [min, max]
+    val ci: Map[String, Int] = columns.zipWithIndex.toMap // scan column order
+    val edges = cfg.binEdges.map(Histogram.validEdges)
+    val equal: Map[String, EqualBins] =
+      if (edges.isDefined) Map.empty
+      else fitCols.flatMap { c =>
         val (mn, mx, cnt) = colStats(c)
-        if (mn == mx) c -> Hist(Array(1.0), Array(mn))
-        else {
-          val i = specs.indexWhere(_.c == c)
-          val sp = specs(i)
-          val counts = countsByCol.getOrElse(i, Map.empty)
-          val edges = Array.tabulate(sp.nBins + 1)(j => sp.mn + j * (sp.hi - sp.mn) / sp.nBins)
-          // normalize by the rows the histogram scan actually saw (the
-          // adaptive sampler may have reduced it below the full count)
-          val nScan = math.max(counts.values.sum, 1L)
-          val density = Array.tabulate(sp.nBins)(b =>
-            counts.getOrElse(b, 0L).toDouble / (nScan * sp.width))
-          c -> Hist(density, edges)
-        }
+        if (mn == mx) None else Some(c -> equalBins(mn, mx, cnt, cfg))
       }.toMap
-    }
+    val binned = fitCols.filter(c => edges.isDefined || equal.contains(c))
+    val binners = binned.map { c =>
+      edges match {
+        case Some(ea) => Binner(ci(c), ea.length - 1, x => Histogram.edgeBin(x, ea))
+        case None => val eb = equal(c); Binner(ci(c), eb.nBins, eb.bin)
+      }
+    }.toArray
 
-    val sampleRows: Array[org.apache.spark.sql.Row] =
-      scala.concurrent.Await.result(sampleRowsF,
-        scala.concurrent.duration.Duration.Inf)
-    val samples: Map[String, Array[Double]] = fitCols.map { c =>
-      val i = columns.indexOf(c) // scanDf keeps the original column order
-      val arr = sampleRows.iterator.filterNot(_.isNullAt(i)).map(_.getDouble(i)).toArray
-      val sized =
-        if (arr.length <= cfg.fittingSampleSize) arr
-        else exactResample(arr, cfg.fittingSampleSize, cfg.sampleSeed)
-      if (sized.isEmpty)
-        throw new IllegalArgumentException(s"column '$c' has no valid data")
-      c -> sized
+    // a plain fit draws ONE row sample shared by every column, its
+    // fraction from the MINIMUM per-column count so sparse (nully)
+    // columns still reach the fitting sample size, the row cap bounding
+    // the collect. A censored fit draws each column's (value, event) rows
+    // separately from the unreduced rows, with the same seeded-sample +
+    // exact-resample discipline — a bare `.limit` would take the head of
+    // the table in partition order, a time-biased (and layout-dependent)
+    // subsample when the source is time-ordered
+    val size = cfg.fittingSampleSize
+    val censored = cfg.censoringColumn.isDefined
+    val draws: Seq[FitScan.Draw] =
+      if (censored) fitCols.map { c =>
+        val (i, n) = (ci(c), colStats(c)._3)
+        FitScan.Draw.seeded(r => !r.isNullAt(i), n <= size, n, size, cfg.sampleSeed, size * 2)
+      }
+      else {
+        val reduceFactor = samplePlan.map(_.fraction).getOrElse(1.0)
+        val nMin = math.max(1L, (colStats.values.map(_._3).min * reduceFactor).toLong)
+        val nMaxEff = math.max(1L, (nMax * reduceFactor).toLong)
+        Seq(FitScan.Draw.seeded(FitScan.anyRow, nMaxEff <= size, nMin, size,
+          cfg.sampleSeed, size * 4))
+      }
+    val (counts, drawn) =
+      if (!censored || (scanDf eq cleaned)) binnedPass(scanDf, binners, draws)
+      else (binnedPass(scanDf, binners, Nil)._1, FitScan.draw(cleaned, draws))
+    val histByCol: Map[String, Hist] = fitCols.map { c =>
+      val slot = binned.indexOf(c)
+      c -> (edges match {
+        case Some(ea) => Hist(Histogram.edgeDensity(counts(slot).zipWithIndex.map(_.swap).toMap, ea), ea)
+        case None =>
+          if (slot < 0) Hist(Array(1.0), Array(colStats(c)._1)) else equal(c).hist(counts(slot))
+      })
     }.toMap
 
-    // ---- one fan-out job over every (column, family) pair ----
+    // each column's kept rows: its non-null drawn rows, cut to the exact
+    // size by the seeded resample (whole rows, so a censored value keeps
+    // its event flag, which follows the value columns)
+    val kept: Map[String, Array[InternalRow]] = fitCols.zipWithIndex.map { case (c, k) =>
+      val rows = if (censored) drawn(k) else drawn.head.filterNot(_.isNullAt(ci(c)))
+      if (rows.isEmpty) throw new IllegalArgumentException(s"column '$c' has no valid data")
+      c -> (if (rows.length <= size) rows else exactResampleG(rows, size, cfg.sampleSeed))
+    }.toMap
+    val samples: Map[String, Array[Double]] =
+      kept.map { case (c, rows) => c -> rows.map(_.getDouble(ci(c))) }
+    val ei = columns.length // a null event flag counts as censored
+    val censorByCol: Map[String, Array[Boolean]] =
+      if (!censored) Map.empty
+      else kept.map { case (c, rows) => c -> rows.map(r => !r.isNullAt(ei) && r.getBoolean(ei)) }
+
+    // ---- pass 3: one fan-out job over every (column, family) pair ----
     val ctxs: Map[String, FitContext] = fitCols.map { c =>
-      val sample = censorByCol.get(c).map(_._1).getOrElse(samples(c))
-      c -> FitContext(c, histByCol(c), sample, DataStats.of(sample),
-        censorByCol.get(c).map(_._2))
+      c -> FitContext(c, histByCol(c), samples(c), DataStats.of(samples(c)),
+        censorByCol.get(c))
     }.toMap
     val methodByCol: Map[String, String] = fitCols.map { c =>
       c -> (if (cfg.estimationMethod == "auto") {
@@ -506,27 +500,16 @@ object Fitter {
     val pairs: Seq[(String, String)] = fitCols.flatMap { c =>
       interleave(prefilter(capped, ctxs(c).stats, cfg.prefilter)).map(n => (c, n))
     }
-    // fine-grained tasks (≤2 fits each) keep one slow family from
-    // queueing behind another on the same core — the wall clock floor is
-    // then the single slowest fit, not a partition's sum
     val nParts = cfg.numPartitions.getOrElse(
       math.max(1, math.min(pairs.length, 4 * spark.sparkContext.defaultParallelism)))
-
     // the custom-registry snapshot rides the broadcast so runtime-registered
     // families resolve on executor JVMs (not just in local mode)
-    val bc = spark.sparkContext.broadcast((ctxs, methodByCol, DistRegistry.customSnapshot))
     val cfgBase = cfg
-    val results: Dataset[FitResult] = spark.createDataset(pairs)
-      .repartition(nParts)
-      .map { case (c, name) =>
-        val (ctxMap, methods, customDists) = bc.value
+    val rows = fanOut(spark, pairs, nParts, (ctxs, methodByCol, DistRegistry.customSnapshot)) {
+      case ((ctxMap, methods, customDists), c, name) =>
         fitOne(name, ctxMap(c), cfgBase.copy(estimationMethod = methods(c)), customDists)
-      }
-
-    val combined = results.toDF().cache()
-    combined.count() // materialize, as the reference does (continuous_fitter.py:409-414)
-    new FitResults(combined, samples ++ censorByCol.collect {
-      case (c, v) if fitCols.contains(c) => c -> v._1 }, cfg)
+    }
+    resultsOf(spark, rows, samples, cfg)
   }
 
   /** Group-wise continuous fit: fit every requested family to `valueCol`
@@ -535,19 +518,18 @@ object Fitter {
     * reference, which fits whole columns only; its lifecycle per group
     * would rescan the table G times).
     *
-    * Shared-scan discipline, independent of the number of groups:
-    * ONE stats shuffle (groupBy stats), ONE histogram shuffle (broadcast
-    * spec join → (group, bin) counts), ONE sample pass (per-group
-    * `sampleBy` with fractions sized from the stats), then a single
-    * (group, family) fan-out through the same [[fitOne]] kernel. Results
-    * carry the group value in `column_name`. Driver state is
+    * Three passes, independent of the number of groups: ONE per-group
+    * stats aggregate, ONE [[FitScan]] job for the (group, bin) counts
+    * and the per-group sample (`sampleBy` semantics: a `rand(seed)`
+    * column against per-group fractions sized from the stats), then a
+    * single (group, family) fan-out through the same [[fitOne]] kernel.
+    * Results carry the group value in `column_name`. Driver state is
     * O(groups · (bins + sampleSize)) — groups must be segment-like
     * (flags, categories), not key-like. */
   def fitGrouped(spark: SparkSession, df: DataFrame, groupCol: String,
                  valueCol: String,
                  distributions: Option[Seq[String]] = None,
                  cfg: FitConfig = FitConfig()): FitResults = {
-    import spark.implicits._
     // explicit error beats a silently-ignored config field
     require(cfg.censoringColumn.isEmpty,
       "censored fitting is not supported in grouped fits")
@@ -556,13 +538,12 @@ object Fitter {
     // named like a column would truncate unexpectedly)
     require(cfg.lowerBounds.isEmpty && cfg.upperBounds.isEmpty,
       "per-column bounds are not supported in grouped fits — use the scalar bounds")
-    val vc = F.col(valueCol).cast("double")
     val cleaned = df
       .select(F.col(groupCol).cast("string").as("g"),
-        F.when(F.isnan(vc), F.lit(null)).otherwise(vc).as("x"))
+        finiteOrNull(F.col(valueCol).cast("double")).as("x"))
       .where(F.col("g").isNotNull && F.col("x").isNotNull)
 
-    // 1) one stats shuffle
+    // 1) per-group stats
     val statRows = cleaned.groupBy("g")
       .agg(F.min("x").as("mn"), F.max("x").as("mx"), F.count("x").as("cnt"))
       .collect()
@@ -571,58 +552,46 @@ object Fitter {
       r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3)))
     }.toMap
 
-    // 2) one histogram shuffle: broadcast per-group bin specs, then a
-    // (group, bin) count — ~groups·bins rows regardless of input size
-    val specs = stats.toSeq.collect { case (g, (mn, mx, cnt)) if mn < mx =>
-      val nBins = math.max(2,
-        if (cfg.useRiceRule) Histogram.riceBins(cnt) else cfg.bins)
-      val hi = mx + (mx - mn) * 1e-10
-      (g, mn, (hi - mn) / nBins, nBins, hi)
-    }
-    val histByGroup: Map[String, Hist] = if (specs.isEmpty) Map.empty else {
-      val specDf = specs.map(s => (s._1, s._2, s._3, s._4)).toDF("g", "bmn", "width", "nb")
-      val counts = cleaned.join(F.broadcast(specDf), "g")
-        .select(F.col("g"),
-          F.least(
-            F.greatest(F.floor((F.col("x") - F.col("bmn")) / F.col("width")), F.lit(0L)),
-            (F.col("nb") - 1).cast("long")).as("bin"))
-        .groupBy("g", "bin").agg(F.count(F.lit(1)).as("cnt"))
-        .collect()
-        .groupBy(_.getString(0))
-      specs.map { case (g, mn, width, nBins, hi) =>
-        val byBin = counts.getOrElse(g, Array.empty)
-          .map(r => r.getLong(1).toInt -> r.getLong(2)).toMap
-        val nScan = math.max(byBin.values.sum, 1L)
-        val edges = Array.tabulate(nBins + 1)(j => mn + j * (hi - mn) / nBins)
-        val density = Array.tabulate(nBins)(b =>
-          byBin.getOrElse(b, 0L).toDouble / (nScan * width))
-        g -> Hist(density, edges)
-      }.toMap
-    }
-
-    // 3) one sample pass: per-group fractions from the known counts. The
-    // full-collect shortcut gates on the TOTAL row count — gating on the
-    // max group size would let many small groups pull the whole table
-    // onto the driver
+    // 2) one scan: (group, bin) counts over each non-singular group's
+    // equal-width bins, and the sample. The full-collect shortcut gates
+    // on the TOTAL row count — gating on the max group size would let
+    // many small groups pull the whole table onto the driver; above it a
+    // row is kept when its rand(seed) falls below its group's fraction,
+    // exactly the rows `stat.sampleBy("g", fracs, seed)` keeps
+    val binned: Array[(String, EqualBins)] = stats.toSeq.sortBy(_._1).collect {
+      case (g, (mn, mx, cnt)) if mn < mx => g -> equalBins(mn, mx, cnt, cfg)
+    }.toArray
+    // executor-side lookups key on the row's own UTF8String (no per-row
+    // String); g is column 0, x column 1, the draw's rand column 2
+    val slotOf: Map[UTF8String, Int] =
+      binned.map(_._1).zipWithIndex.map { case (g, s) => UTF8String.fromString(g) -> s }.toMap
     val totalRows = stats.values.map(_._3).sum
-    val sampleRows: Array[(String, Double)] =
-      if (totalRows <= cfg.fittingSampleSize.toLong * 4)
-        cleaned.as[(String, Double)].collect()
-      else {
-        val fracs: Map[String, Double] = stats.map { case (g, (_, _, n)) =>
-          g -> math.min(1.0, cfg.fittingSampleSize * 1.2 / n)
-        }
-        cleaned.stat.sampleBy("g", fracs.map { case (k, v) => (k: Any, v) }, cfg.sampleSeed)
-          .as[(String, Double)].collect()
-      }
-    val samples: Map[String, Array[Double]] = sampleRows.groupBy(_._1).map {
-      case (g, rows) =>
-        val arr = rows.map(_._2)
+    val fracOf: Map[UTF8String, Double] = stats.map { case (g, (_, _, n)) =>
+      UTF8String.fromString(g) -> math.min(1.0, cfg.fittingSampleSize * 1.2 / n)
+    }
+    val admit: InternalRow => Boolean =
+      if (totalRows <= cfg.fittingSampleSize.toLong * 4) FitScan.anyRow
+      else r => r.getDouble(2) < fracOf.getOrElse(r.getUTF8String(0), 0.0)
+    val (counts, drawn) = FitScan.run(
+      cleaned.withColumn("r", F.rand(cfg.sampleSeed)),
+      Seq(FitScan.Draw(admit, None, cfg.sampleSeed, Int.MaxValue)),
+      FitScan.zeroCounts(binned.map(_._2.nBins)),
+      (t: Array[Array[Long]], row: InternalRow) =>
+        slotOf.get(row.getUTF8String(0)).foreach { s =>
+          t(s)(binned(s)._2.bin(row.getDouble(1))) += 1
+        },
+      FitScan.addCounts)
+    val histByGroup: Map[String, Hist] = binned.zipWithIndex.map { case ((g, eb), s) =>
+      g -> eb.hist(counts(s))
+    }.toMap
+    val samples: Map[String, Array[Double]] = drawn.head
+      .groupBy(_.getUTF8String(0).toString).map { case (g, rows) =>
+        val arr = rows.map(_.getDouble(1))
         g -> (if (arr.length <= cfg.fittingSampleSize) arr
               else exactResample(arr, cfg.fittingSampleSize, cfg.sampleSeed))
-    }
+      }
 
-    // 4) one (group, family) fan-out through the shared kernel
+    // 3) one (group, family) fan-out through the shared kernel
     val baseNames = distributions.getOrElse(DistRegistry.defaultNames)
     val capped = (if (cfg.supportAtZeroOnly)
       baseNames.filter(DistRegistry.supportsAtZero) else baseNames)
@@ -643,17 +612,12 @@ object Fitter {
     }
     val nParts = cfg.numPartitions.getOrElse(
       math.max(1, math.min(pairs.length, 4 * spark.sparkContext.defaultParallelism)))
-    val bc = spark.sparkContext.broadcast((ctxs, methodByGroup, DistRegistry.customSnapshot))
     val cfgBase = cfg
-    val results = spark.createDataset(pairs)
-      .repartition(nParts)
-      .map { case (g, name) =>
-        val (ctxMap, methods, customDists) = bc.value
+    val rows = fanOut(spark, pairs, nParts, (ctxs, methodByGroup, DistRegistry.customSnapshot)) {
+      case ((ctxMap, methods, customDists), g, name) =>
         fitOne(name, ctxMap(g), cfgBase.copy(estimationMethod = methods(g)), customDists)
-      }
-    val combined = results.toDF().cache()
-    combined.count()
-    new FitResults(combined, samples, cfg)
+    }
+    resultsOf(spark, rows, samples, cfg)
   }
 
   /** Discrete fit over the registry's discrete families
@@ -663,14 +627,13 @@ object Fitter {
                   cfg: FitConfig = FitConfig()): FitResults =
     fitDiscreteMulti(spark, df, Seq(column), distributions, cfg)
 
-  /** Multi-column discrete fit with the same shared-scan discipline as the
-    * continuous path: ONE exploded scan computes every column's empirical
-    * PMF, ONE scan collects every column's fitting sample, then a single
-    * fan-out job runs every (column, family) pair. m columns cost ~1. */
+  /** Multi-column discrete fit in the continuous path's three passes: ONE
+    * count aggregate, ONE [[FitScan]] job for every column's empirical
+    * PMF and the shared fitting sample, then a single fan-out job over
+    * every (column, family) pair. m columns cost ~1. */
   def fitDiscreteMulti(spark: SparkSession, df: DataFrame, columns: Seq[String],
                        distributions: Option[Seq[String]] = None,
                        cfg: FitConfig = FitConfig()): FitResults = {
-    import spark.implicits._
     require(columns.nonEmpty, "at least one column required")
     // floating columns route through double so NaN/±Inf become null
     // BEFORE the long cast (a bare double→long cast turns NaN into 0 and
@@ -686,60 +649,53 @@ object Fitter {
       }
     }: _*)
 
-    // per-column PMFs from one exploded (columnIndex, value) shuffle —
-    // the collect is ~(columns · unique values) rows, bounded for
-    // genuinely discrete data regardless of input size
-    val entries = F.array(columns.zipWithIndex.map { case (c, i) =>
-      F.when(F.col(c).isNotNull, F.struct(F.lit(i).as("ci"), F.col(c).as("k")))
-        .otherwise(F.lit(null))
-    }: _*)
-    val grouped = cleaned.select(F.explode(entries).as("e"))
-      .where(F.col("e").isNotNull)
-      .groupBy(F.col("e.ci").as("ci"), F.col("e.k").as("k"))
-      .agg(F.count(F.lit(1)).as("cnt"))
-      .collect()
-    // all-invalid columns drop out; an all-invalid request returns the
-    // empty collection with the full schema (the reference's contract)
-    val pmfByCol: Map[String, Pmf] = columns.zipWithIndex.flatMap { case (c, i) =>
-      val rows = grouped.filter(_.getInt(0) == i).sortBy(_.getLong(1))
-      if (rows.isEmpty) None
-      else {
-        val counts = rows.map(_.getLong(2))
-        val total = counts.sum
-        Some(c -> Pmf(rows.map(_.getLong(1)), counts.map(_.toDouble / total), total))
-      }
+    // 1) per-column valid counts; all-invalid columns drop out, and an
+    // all-invalid request returns the empty collection with the full
+    // schema (the reference's contract)
+    val countRow = cleaned.agg(F.count(columns.head), columns.tail.map(F.count): _*).head()
+    val nByCol: Map[String, Long] = columns.zipWithIndex.collect {
+      case (c, i) if countRow.getLong(i) > 0L => c -> countRow.getLong(i)
     }.toMap
-    val fitCols = columns.filter(pmfByCol.contains)
+    val fitCols = columns.filter(nByCol.contains)
     if (fitCols.isEmpty) return emptyResults(spark, cfg)
 
-    // one shared sample scan; per-column null-filter + exact resample on
-    // the collected rows (fraction from the MINIMUM count so sparse
-    // columns still reach the target size)
-    val nMax = pmfByCol.values.map(_.total).max
-    val nMin = pmfByCol.values.map(_.total).min
-    val sampleRows: Array[org.apache.spark.sql.Row] =
-      if (nMax <= cfg.fittingSampleSize) cleaned.collect()
-      else cleaned
-        .sample(withReplacement = false,
-          math.min(1.0, cfg.fittingSampleSize * 1.2 / math.max(nMin, 1L)), cfg.sampleSeed)
-        .limit(cfg.fittingSampleSize * 4).collect()
+    // 2) one scan: per-column value counts (~columns · unique values on
+    // the driver, bounded for genuinely discrete data regardless of input
+    // size) and one shared row sample — fraction from the MINIMUM count so
+    // sparse columns still reach the target size; per-column null filter +
+    // exact resample on the drawn rows
+    val size = cfg.fittingSampleSize
+    val nMax = nByCol.values.max
+    val draw = FitScan.Draw.seeded(FitScan.anyRow, nMax <= size, nByCol.values.min, size,
+      cfg.sampleSeed, size * 4)
+    val nCols = columns.length
+    val (valueCounts, drawn) = FitScan.run(cleaned, Seq(draw),
+      () => Array.fill(nCols)(mutable.HashMap.empty[Long, Long]),
+      (t: Array[mutable.HashMap[Long, Long]], row: InternalRow) => {
+        var i = 0
+        while (i < nCols) {
+          if (!row.isNullAt(i)) {
+            val k = row.getLong(i)
+            t(i)(k) = t(i).getOrElse(k, 0L) + 1L
+          }
+          i += 1
+        }
+      },
+      (into: Array[mutable.HashMap[Long, Long]], from: Array[mutable.HashMap[Long, Long]]) =>
+        into.zip(from).foreach { case (m, p) =>
+          p.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
+        })
+    val pmfByCol: Map[String, Pmf] = fitCols.map { c =>
+      val byValue = valueCounts(columns.indexOf(c))
+      val xs = byValue.keys.toArray.sorted
+      val n = xs.map(byValue)
+      val total = n.sum
+      c -> Pmf(xs, n.map(_.toDouble / total), total)
+    }.toMap
     val samplesByCol: Map[String, Array[Long]] = fitCols.map { c =>
       val i = columns.indexOf(c)
-      val arr = sampleRows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).toArray
-      val sized =
-        if (arr.length <= cfg.fittingSampleSize) arr
-        else {
-          val rng = new java.util.Random(cfg.sampleSeed)
-          val a = arr.clone()
-          var j = 0
-          while (j < cfg.fittingSampleSize) {
-            val m = j + rng.nextInt(a.length - j)
-            val t = a(j); a(j) = a(m); a(m) = t
-            j += 1
-          }
-          java.util.Arrays.copyOfRange(a, 0, cfg.fittingSampleSize)
-        }
-      c -> sized
+      val arr = drawn.head.filterNot(_.isNullAt(i)).map(_.getLong(i))
+      c -> (if (arr.length <= size) arr else exactResampleG(arr, size, cfg.sampleSeed))
     }.toMap
 
     // default zoo = registry minus the reference's discrete exclusions
@@ -748,17 +704,14 @@ object Fitter {
       .filter(n => DiscreteRegistry.get(n).isDefined)
     val pairs: Seq[(String, String)] = fitCols.flatMap(c => names.map(n => (c, n)))
 
-    // SSE compares empirical vs fitted PMF at the unique observed values
-    // (reference: discrete_fitting.py:184-209)
+    // 3) one fan-out job. SSE compares empirical vs fitted PMF at the
+    // unique observed values (reference: discrete_fitting.py:184-209)
     val ctx: Map[String, (Array[Long], Pmf, DataStats)] = fitCols.map { c =>
       c -> ((samplesByCol(c), pmfByCol(c), DataStats.of(samplesByCol(c).map(_.toDouble))))
     }.toMap
-    val bc = spark.sparkContext.broadcast((ctx, DiscreteRegistry.customSnapshot))
-
-    val results = spark.createDataset(pairs)
-      .repartition(math.max(1, math.min(pairs.length, 2 * spark.sparkContext.defaultParallelism)))
-      .map { case (colName, name) =>
-        val (ctxMap, customDists) = bc.value
+    val nParts = math.max(1, math.min(pairs.length, 2 * spark.sparkContext.defaultParallelism))
+    val rows = fanOut(spark, pairs, nParts, (ctx, DiscreteRegistry.customSnapshot)) {
+      case ((ctxMap, customDists), colName, name) =>
         val (sample, pm, st) = ctxMap(colName)
         val t0 = System.nanoTime()
         val res = try {
@@ -771,7 +724,7 @@ object Fitter {
             val (aic, bic) = Metrics.informationCriteriaDiscrete(dist, params, sample)
             // lazy metrics defer the K-S pass exactly like the
             // continuous path; FitResults.fillMetrics recomputes it from
-            // the cached sample on demand
+            // the kept sample on demand
             val (ks, pv) =
               if (cfg.lazyMetrics) (None, None)
               else {
@@ -787,14 +740,11 @@ object Fitter {
           case _: Throwable => failed(name, colName, st, None, None)
         }
         res.copy(fit_seconds = (System.nanoTime() - t0) / 1e9)
-      }
-    val combined = results.toDF().cache()
-    combined.count()
+    }
     // carry the fitting samples so deferred metrics can fill on demand —
     // both the double view and the exact integral sample (the latter so
     // a lazy K-S never loses bits above 2^53)
-    new FitResults(combined,
-      samplesByCol.map { case (c, a) => c -> a.map(_.toDouble) }, cfg,
-      None, samplesByCol)
+    resultsOf(spark, rows, samplesByCol.map { case (c, a) => c -> a.map(_.toDouble) }, cfg,
+      samplesByCol)
   }
 }

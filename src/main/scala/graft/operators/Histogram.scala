@@ -103,8 +103,8 @@ object Histogram {
 
   /** Codegen'd CASE-chain bin index over explicit edges: bin i covers
     * [edges(i), edges(i+1)), the last bin is closed, out-of-range (and
-    * null) values map to null. The ONE bin definition shared by the
-    * public histogram and the fitter's multi-column scan. */
+    * null) values map to null. The public histogram's bin definition;
+    * [[edgeBin]] is the same rule per value, for the fitter's scan. */
   private[operators] def edgeBinExpr(c: org.apache.spark.sql.Column,
                                      ea: Array[Double]): org.apache.spark.sql.Column = {
     val k = ea.length - 1
@@ -116,6 +116,17 @@ object Histogram {
     }
     F.when(c >= ea.head && c <= ea.last, bin)
   }
+
+  /** [[edgeBinExpr]] for one finite value, for code that bins rows outside
+    * an expression (the fitter's fused pass): the same bin index, or -1
+    * where the expression gives null. */
+  private[operators] def edgeBin(x: Double, ea: Array[Double]): Int =
+    if (!(x >= ea.head && x <= ea.last)) -1
+    else {
+      var i = 0
+      while (i < ea.length - 2 && !(x < ea(i + 1))) i += 1
+      i
+    }
 
   /** Per-bin-width density from explicit-edge counts: integrates to 1
     * over the covered span. */

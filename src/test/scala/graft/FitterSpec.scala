@@ -630,6 +630,183 @@ class FitterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fit2.df.head().getSeq[Double](2) == fit1.df.head().getSeq[Double](2))
   }
 
+  /** A 20,000-row parquet table in three files (one scan partition
+    * each): x ~ norm(50, 10); y with NaN, ±Inf and nulls; censored times
+    * t with an event flag; poisson(4) counts k; a 4-value group key g. */
+  private lazy val fitTable: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rng = new java.util.Random(31L)
+    val rows = (0 until 20000).map { i =>
+      val y: java.lang.Double =
+        if (i % 97 == 0) Double.NaN else if (i % 89 == 0) Double.PositiveInfinity
+        else if (i % 83 == 0) null else java.lang.Double.valueOf(rng.nextGaussian())
+      val t = ContinuousFamilies.WeibullMin.ppf(rng.nextDouble(), Array(2.0, 0.0, 10.0))
+      val cens = 5.0 + 15.0 * rng.nextDouble()
+      var k = 0L; var u = rng.nextDouble(); var pk = math.exp(-4.0); var cdf = pk
+      while (u > cdf && k < 100) { k += 1; pk *= 4.0 / k; cdf += pk }
+      (50.0 + 10.0 * rng.nextGaussian(), y, math.min(t, cens), t <= cens, k, (i % 4).toString)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("fitter-spec").resolve("fit")
+    rows.toDF("x", "y", "t", "event", "k", "g").repartition(3).write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
+  /** `c` with NaN/±Inf nulled, as every fit cleans its input. */
+  private def finite(c: String) = {
+    val x = F.col(c).cast("double")
+    F.when(!F.isnan(x) && x =!= Double.PositiveInfinity && x =!= Double.NegativeInfinity, x)
+  }
+
+  /** Runs `body`; returns its value, the Spark jobs it ran and the stages
+    * that wrote shuffle records. */
+  private def jobsOf[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffles.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      (r, jobs.get, shuffles.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("every fit runs in three passes: at most 4 jobs, only the stats exchange, no cache") {
+    val table = fitTable
+    val cfg = FitConfig(fittingSampleSize = 1000)
+    val calls = Seq[(String, () => FitResults)](
+      "continuous" -> (() => Fitter.fit(spark, table, Seq("x", "y"), Some(Seq("norm", "expon")), cfg)),
+      "censored" -> (() => Fitter.fit(spark, table, Seq("t"), Some(Seq("weibull_min", "expon")),
+        cfg.copy(censoringColumn = Some("event")))),
+      "discrete" -> (() => Fitter.fitDiscrete(spark, table, "k", Some(Seq("poisson", "geom")), cfg)),
+      "grouped" -> (() => Fitter.fitGrouped(spark, table, "g", "x", Some(Seq("norm", "expon")), cfg)))
+    spark.sharedState.cacheManager.clearCache()
+    for ((name, call) <- calls) {
+      val (r, jobs, shuffles) = jobsOf(call())
+      // AQE runs the stats aggregate as 2 jobs; the fused pass and the
+      // fan-out are one job each
+      assert(jobs <= 4, s"$name fit ran $jobs jobs")
+      assert(shuffles <= 1, s"$name fit shuffled in $shuffles stages; " +
+        "only the stats aggregate may shuffle")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name fit cached a relation")
+      assert(r.successful.count() > 0, s"$name fit has no successful rows")
+    }
+  }
+
+  test("the fused pass draws Dataset.sample's rows and bins like the histogram aggregate") {
+    import spark.implicits._
+    import graft.dists.{DiscreteFamilies, FrozenModel}
+    import graft.functions.Metrics
+    val (k, seed, bins) = (500, 7L, 20)
+    val cfg = FitConfig(fittingSampleSize = k, sampleSeed = seed, bins = bins)
+    def params(r: FitResults, c: String): Array[Double] = {
+      val row = r.forColumn(c).df.head()
+      row.getSeq[Double](row.fieldIndex("parameters")).toArray
+    }
+    def sse(r: FitResults, c: String): Double = r.forColumn(c).df.head().getAs[Double]("sse")
+    // over the three-file parquet table and over an in-memory relation
+    val local = toDf(sample(ContinuousFamilies.Norm, Array(50.0, 10.0), 20000), "x")
+      .withColumn("y", F.when(F.col("x") > 60.0, F.lit(null)).otherwise(F.col("x") - 50.0))
+    for (table <- Seq(fitTable, local)) {
+      val cols = Seq("x", "y")
+      val r = Fitter.fit(spark, table, cols, Some(Seq("norm")), cfg)
+      // the sample as `sample(false, f, seed).limit(4k)` draws it, f from
+      // the smaller column count, then each column's exact resample
+      val cleaned = table.select(cols.map(c => finite(c).as(c)): _*)
+      val stats = cleaned.agg(F.min("x"), F.max("x"), F.count("x"),
+        F.min("y"), F.max("y"), F.count("y")).head()
+      val f = math.min(1.0, k * 1.2 / math.min(stats.getLong(2), stats.getLong(5)))
+      val rows = cleaned.sample(withReplacement = false, f, seed).limit(4 * k).collect()
+      for ((c, i) <- cols.zipWithIndex) {
+        val drawn = rows.filterNot(_.isNullAt(i)).map(_.getDouble(i))
+        val want = if (drawn.length <= k) drawn else Fitter.exactResample(drawn, k, seed)
+        assert(r.samples(c).sameElements(want), s"$c: sample differs from Dataset.sample's")
+        // the histogram as the exploded (bin, count) aggregate built it;
+        // equal density gives the fitted norm the same SSE to the bit
+        val (mn, mx) = (stats.getDouble(3 * i), stats.getDouble(3 * i + 1))
+        val hi = mx + (mx - mn) * 1e-10
+        val width = (hi - mn) / bins
+        val byBin = cleaned.where(F.col(c).isNotNull)
+          .select(F.least(F.greatest(F.floor((F.col(c) - F.lit(mn)) / F.lit(width)), F.lit(0L)),
+            F.lit(bins - 1L)).as("b"))
+          .groupBy("b").count().collect().map(b => b.getLong(0).toInt -> b.getLong(1)).toMap
+        val density = Array.tabulate(bins)(b => byBin.getOrElse(b, 0L).toDouble / (byBin.values.sum * width))
+        val edges = Array.tabulate(bins + 1)(j => mn + j * (hi - mn) / bins)
+        val model = FrozenModel(ContinuousFamilies.Norm, params(r, c), None, None)
+        assert(sse(r, c) == Metrics.sseContinuous(model, density, edges), s"$c: histogram differs")
+      }
+    }
+
+    // explicit edges bin each value by the public histogram's CASE chain
+    val edges = Seq(20.0, 35.0, 45.0, 50.0, 55.0, 65.0, 80.0)
+    val er = Fitter.fit(spark, fitTable, Seq("x"), Some(Seq("norm")), cfg.copy(binEdges = Some(edges)))
+    val eh = Histogram.continuousWithEdges(fitTable, "x", edges)
+    assert(sse(er, "x") == Metrics.sseContinuous(
+      FrozenModel(ContinuousFamilies.Norm, params(er, "x"), None, None), eh.density, eh.edges),
+      "explicit-edge histogram differs")
+
+    // censored: each column's (value, event) rows, sampled over its valid rows
+    val cr = Fitter.fit(spark, fitTable, Seq("t"), Some(Seq("expon")),
+      cfg.copy(censoringColumn = Some("event")))
+    val valid = fitTable.select(finite("t").as("t"), $"event").where($"t".isNotNull)
+    val nT = valid.count()
+    val tRows = valid.sample(withReplacement = false, math.min(1.0, k * 1.2 / nT), seed)
+      .limit(2 * k).collect()
+    val tWant = (if (tRows.length <= k) tRows else Fitter.exactResampleRows(tRows, k, seed))
+      .map(_.getDouble(0))
+    assert(cr.samples("t").sameElements(tWant), "censored sample differs from Dataset.sample's")
+
+    // discrete: the shared sample and the PMF (through the poisson SSE)
+    val dr = Fitter.fitDiscrete(spark, fitTable, "k", Some(Seq("poisson")), cfg)
+    val ks = fitTable.select($"k".cast("long").as("k"))
+    val kRows = ks.sample(withReplacement = false, math.min(1.0, k * 1.2 / ks.count()), seed)
+      .limit(4 * k).collect().map(_.getLong(0))
+    val kWant = if (kRows.length <= k) kRows else Fitter.exactResample(kRows.map(_.toDouble), k, seed)
+      .map(_.toLong)
+    assert(dr.samples("k").sameElements(kWant.map(_.toDouble)), "discrete sample differs")
+    val pmf = ks.groupBy("k").count().orderBy("k").collect()
+    val total = pmf.map(_.getLong(1)).sum
+    assert(sse(dr, "k") == Metrics.sseDiscrete(DiscreteFamilies.Poisson, params(dr, "k"),
+      pmf.map(_.getLong(0)), pmf.map(_.getLong(1).toDouble / total)), "PMF differs")
+
+    // grouped: exactly the rows `stat.sampleBy` keeps, per group
+    val gk = 300
+    val gr = Fitter.fitGrouped(spark, fitTable, "g", "x", Some(Seq("norm")),
+      cfg.copy(fittingSampleSize = gk))
+    val gClean = fitTable.select($"g".cast("string").as("g"), finite("x").as("x"))
+      .where($"g".isNotNull && $"x".isNotNull)
+    val fracs: Map[Any, Double] = gClean.groupBy("g").count().collect()
+      .map(r => (r.getString(0): Any) -> math.min(1.0, gk * 1.2 / r.getLong(1))).toMap
+    val byGroup = gClean.stat.sampleBy("g", fracs, seed).collect().groupBy(_.getString(0))
+    assert(byGroup.keySet == gr.samples.keySet)
+    for ((g, rs) <- byGroup) {
+      val arr = rs.map(_.getDouble(1))
+      val want = if (arr.length <= gk) arr else Fitter.exactResample(arr, gk, seed)
+      assert(gr.samples(g).sameElements(want), s"group $g: sample differs from sampleBy's")
+    }
+  }
+
+  test("fitGrouped ignores ±Inf like fit: results with and without injected infinities agree") {
+    import spark.implicits._
+    val rng = new java.util.Random(23L)
+    val clean = Seq.fill(3000)(((rng.nextInt(2)).toString, 10.0 + 2.0 * rng.nextGaussian()))
+    val dirty = clean ++ Seq(("0", Double.PositiveInfinity), ("1", Double.NegativeInfinity))
+    def fitted(rows: Seq[(String, Double)]) =
+      Fitter.fitGrouped(spark, rows.toDF("g", "v"), "g", "v", Some(Seq("norm", "logistic")))
+        .df.drop("fit_seconds").orderBy("column_name", "distribution").collect().toSeq
+    val want = fitted(clean)
+    assert(want.forall(r => java.lang.Double.isFinite(r.getAs[Double]("aic"))))
+    assert(fitted(dirty) == want)
+  }
+
   test("a harness fit sweep leaves no pinned relations after clearFitMemo") {
     spark.sharedState.cacheManager.clearCache()
     val dir = "/root/testdata/sf0.001"
@@ -637,10 +814,12 @@ class FitterSpec extends AnyFunSuite with BeforeAndAfterAll {
         "fit_mse_heavy_tail", "fit_censored", "fit_closed_form",
         "fit_summary_closed_form", "fit_acceptable_count", "fit_lazy"))
       SparkEntry.queries(name)(spark, dir).count()
-    assert(!spark.sharedState.cacheManager.isEmpty, "sweep should cache fits")
+    // fits build their results on the driver: even the memoized ones pin
+    // nothing, before clearFitMemo as after it
+    assert(spark.sharedState.cacheManager.isEmpty, "the sweep's fits cached a relation")
     SparkEntry.clearFitMemo()
     assert(spark.sharedState.cacheManager.isEmpty,
-      "clearFitMemo must release every relation the sweep cached")
+      "clearFitMemo must leave no relation cached")
   }
 
   test("harness queries run on sf0.001 and entry returns rows") {
