@@ -114,43 +114,4 @@ object Optimize extends Serializable {
     val bi = (0 to n).minBy(fv)
     (simplex(bi), fv(bi))
   }
-
-  /** Golden-section search for a 1-D minimum on [a, b]. */
-  def goldenSection(f: Double => Double, a0: Double, b0: Double,
-                    tol: Double = 1e-10, maxIter: Int = 200): Double = {
-    val invPhi = (math.sqrt(5.0) - 1.0) / 2.0
-    var a = a0; var b = b0
-    var c = b - invPhi * (b - a)
-    var d = a + invPhi * (b - a)
-    var fc = f(c); var fd = f(d)
-    var it = 0
-    while (math.abs(b - a) > tol * (math.abs(a) + math.abs(b) + 1e-30) && it < maxIter) {
-      if (fc < fd) { b = d; d = c; fd = fc; c = b - invPhi * (b - a); fc = f(c) }
-      else { a = c; c = d; fc = fd; d = a + invPhi * (b - a); fd = f(d) }
-      it += 1
-    }
-    (a + b) / 2.0
-  }
-
-  /** Newton iteration with bisection safeguard on [lo, hi] for g(x)=0,
-    * where g is monotone-ish. Used by per-family profile-MLE equations. */
-  def safeNewton(g: Double => Double, gPrime: Double => Double,
-                 x0: Double, lo: Double, hi: Double,
-                 tol: Double = 1e-12, maxIter: Int = 100): Double = {
-    var x = math.min(math.max(x0, lo), hi)
-    var a = lo; var b = hi
-    var i = 0
-    while (i < maxIter) {
-      val gx = g(x)
-      if (math.abs(gx) < tol) return x
-      if (gx > 0) b = x else a = x
-      val gp = gPrime(x)
-      var next = if (gp != 0.0 && !gp.isNaN) x - gx / gp else Double.NaN
-      if (next.isNaN || next <= a || next >= b) next = 0.5 * (a + b)
-      if (math.abs(next - x) < tol * (1.0 + math.abs(x))) return next
-      x = next
-      i += 1
-    }
-    x
-  }
 }

@@ -149,20 +149,8 @@ object SpecialMath extends Serializable {
   /** Student-t CDF with df degrees of freedom (standardized). */
   def tCdf(df: Double, z: Double): Double = new TDistribution(null, df).cumulativeProbability(z)
 
-  def tPpf(df: Double, q: Double): Double = {
-    if (q <= 0.0) Double.NegativeInfinity
-    else if (q >= 1.0) Double.PositiveInfinity
-    else new TDistribution(null, df).inverseCumulativeProbability(q)
-  }
-
   def fCdf(d1: Double, d2: Double, z: Double): Double =
     if (z <= 0.0) 0.0 else new FDistribution(null, d1, d2).cumulativeProbability(z)
-
-  def fPpf(d1: Double, d2: Double, q: Double): Double = {
-    if (q <= 0.0) 0.0
-    else if (q >= 1.0) Double.PositiveInfinity
-    else new FDistribution(null, d1, d2).inverseCumulativeProbability(q)
-  }
 
   /** log(1 - exp(x)) for x < 0, numerically stable. */
   def log1mexp(x: Double): Double = {

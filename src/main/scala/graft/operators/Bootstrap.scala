@@ -107,7 +107,7 @@ object Bootstrap {
     * the sampling policy), so the rank table and the b·n draw grid are
     * bounded by construction; the grid and the join still run distributed
     * (the sorted sample broadcasts), and the ranks come from the
-    * [[Ranks]] prefix-sum construction — no single-partition window even
+    * [[PrefixSum]] substrate — no single-partition window even
     * inside the cap. Refusing oversized input is the same
     * bounded-audit-op discipline as the exact near-dup baseline. */
   def hashResampleCI(df: DataFrame, valueCol: String, b: Int = 200,
@@ -118,47 +118,30 @@ object Bootstrap {
     import spark.implicits._
     val s = df.select(F.col(valueCol).cast("long").as("x"))
       .where(F.col("x").isNotNull)
-    // dense 0..n−1 index over the value-sorted sample via the Ranks
-    // prefix-sum construction (distinct-value counts, range-partitioned
-    // sort, O(#partitions) longs to the driver, flatMap expansion) — the
-    // same ranks a global row_number window gives, with no
-    // single-partition WindowExec; ties share a value, so which tied row
-    // lands at which index cannot change any replicate sum. The total
-    // count falls out of the same pass (offsets.last), saving a scan.
+    // dense 0..n−1 index over the value-sorted sample: distinct-value
+    // counts through the PrefixSum substrate, then a flatMap
+    // expansion — the same ranks a global row_number window gives, with
+    // no single-partition WindowExec; ties share a value, so which tied
+    // row lands at which index cannot change any replicate sum. The
+    // total count is the last offset, saving a scan.
     val counts = s.groupBy("x").agg(F.count(F.lit(1)).as("c"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    counts.persist()
-    val sorted = counts.repartitionByRange(F.col("x"))
-      .sortWithinPartitions("x").as[(Long, Long)].rdd
-    sorted.cache()
-    // try/finally: the bounded-audit refusal below throws AFTER the
-    // cache materialized — without the finally, a refused call pins the
-    // counts RDD in executor storage for the session's lifetime
-    val (n, indexed) = try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var t = 0L; it.foreach(t += _._2); Iterator((i, t))
-      }.collect().sortBy(_._1).map(_._2)
-      val offsets = partSums.scanLeft(0L)(_ + _)
-      val total = offsets.last
-      require(total > 0, "empty sample")
-      require(total <= maxSample, s"hashResampleCI is a bounded audit op: " +
-        s"$total rows > cap $maxSample — pass the fitting sample, not the corpus")
-      val bcOff = spark.sparkContext.broadcast(offsets)
-      val pinned = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var running = bcOff.value(i)
-        it.flatMap { case (v, c) =>
-          val start = running
-          running += c
-          (0L until c).iterator.map(o => (start + o, v))
-        }
-      }.toDF("idx", "x").localCheckpoint(true)
-      (total, pinned)
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
-    }
+    val (n, indexed) =
+      PrefixSum(counts.as[(Long, Long)], F.col("x")) { ps =>
+        val off = ps.offsets(1)((s, r) => s(0) += r._2)
+        val total = off.last(0)
+        require(total > 0, "empty sample")
+        require(total <= maxSample, s"hashResampleCI is a bounded audit op: " +
+          s"$total rows > cap $maxSample — pass the fitting sample, not the corpus")
+        val pinned = ps.walk(off) { (seed, it) =>
+          var running = seed(0)
+          it.flatMap { case (v, c) =>
+            val start = running
+            running += c
+            (0L until c).iterator.map(o => (start + o, v))
+          }
+        }.toDF("idx", "x").localCheckpoint(true)
+        (total, pinned)
+      }
     val draws = spark.range(b).toDF("rep")
       .crossJoin(spark.range(n).toDF("j"))
       .select(F.col("rep"),

@@ -83,28 +83,12 @@ object Drift {
       .groupBy("v").agg(
         F.sum(F.when(F.col("g") === labelA, 1L).otherwise(0L)).as("ca"),
         F.sum(F.when(F.col("g") === labelB, 1L).otherwise(0L)).as("cb"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var sa = 0L; var sb = 0L
-        it.foreach { r => sa += r._2; sb += r._3 }
-        Iterator((i, sa, sb))
-      }.collect().sortBy(_._1)
-      val na = partSums.map(_._2).sum
-      val nb = partSums.map(_._3).sum
+    PrefixSum(counts.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val off = ps.offsets(2) { (s, r) => s(0) += r._2; s(1) += r._3 }
+      val na = off.last(0); val nb = off.last(1)
       require(na > 0 && nb > 0, "both cohorts need rows")
-      val offA = partSums.map(_._2).scanLeft(0L)(_ + _)
-      val offB = partSums.map(_._3).scanLeft(0L)(_ + _)
-      val bc = spark.sparkContext.broadcast((offA, offB))
-      val d = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val d = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var best = 0.0
         it.foreach { case (_, a, b) =>
           cumA += a; cumB += b
@@ -116,9 +100,6 @@ object Drift {
       val nEff = na.toDouble * nb / (na.toDouble + nb)
       val p = graft.functions.SpecialMath.kolmogorovSf(math.sqrt(nEff) * d)
       Seq((d, p, na, nb)).toDF("ks_d", "p_value", "n_a", "n_b")
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
     }
   }
 
@@ -154,29 +135,19 @@ object Drift {
       .groupBy("v").agg(
         F.sum(F.when(F.col("g") === labelA, 1L).otherwise(0L)).as("ca"),
         F.sum(F.when(F.col("g") === labelB, 1L).otherwise(0L)).as("cb"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partInfo = sorted.mapPartitionsWithIndex { case (i, it) =>
+    PrefixSum(counts.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val partInfo = ps.parts { it =>
         var sa = 0L; var sb = 0L
         var first = Double.NaN
         it.foreach { r =>
           if (first.isNaN) first = r._1
           sa += r._2; sb += r._3
         }
-        Iterator((i, sa, sb, first))
-      }.collect().sortBy(_._1)
-      val na = partInfo.map(_._2).sum
-      val nb = partInfo.map(_._3).sum
+        (Array(sa, sb), first)
+      }
+      val off = PrefixSum.scan(2, partInfo.map(_._1))
+      val na = off.last(0); val nb = off.last(1)
       require(na > 0 && nb > 0, "both cohorts need rows")
-      val offA = partInfo.map(_._2).scanLeft(0L)(_ + _)
-      val offB = partInfo.map(_._3).scanLeft(0L)(_ + _)
       // successor's first value per partition: the first non-NaN first
       // value among the partitions to the right (empty ones skipped)
       val nexts = new Array[Double](partInfo.length)
@@ -184,12 +155,11 @@ object Drift {
       var i = partInfo.length - 1
       while (i >= 0) {
         nexts(i) = carry
-        if (!partInfo(i)._4.isNaN) carry = partInfo(i)._4
+        if (!partInfo(i)._2.isNaN) carry = partInfo(i)._2
         i -= 1
       }
-      val bc = spark.sparkContext.broadcast((offA, offB, nexts))
-      val partials = sorted.mapPartitionsWithIndex { case (pi, it) =>
-        var cumA = bc.value._1(pi); var cumB = bc.value._2(pi)
+      val partials = ps.walk(off.zip(nexts)) { (seed, it) =>
+        var cumA = seed._1(0); var cumB = seed._1(1)
         var acc = 0.0
         var prev = Double.NaN
         it.foreach { case (v, a, b) =>
@@ -198,17 +168,14 @@ object Drift {
               (v - prev)
           cumA += a; cumB += b; prev = v
         }
-        val succ = bc.value._3(pi)
+        val succ = seed._2
         if (!prev.isNaN && !succ.isNaN)
           acc += math.abs(cumA.toDouble / na - cumB.toDouble / nb) *
             (succ - prev)
-        Iterator((pi, acc))
-      }.collect().sortBy(_._1)
-      val w1 = math.rint(partials.map(_._2).sum * 1e6) / 1e6
+        Iterator(acc)
+      }.collect()
+      val w1 = math.rint(partials.sum * 1e6) / 1e6
       Seq((w1, na, nb)).toDF("w1", "n_a", "n_b")
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
     }
   }
 

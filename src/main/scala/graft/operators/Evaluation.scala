@@ -380,29 +380,14 @@ object Evaluation {
       .groupBy(s.as("v")).agg(
         F.sum(F.when(y, 1L).otherwise(0L)).as("cp"),
         F.sum(F.when(!y, 1L).otherwise(0L)).as("cn"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var p = 0L; var n = 0L
-        it.foreach { r => p += r._2; n += r._3 }
-        Iterator((i, p, n))
-      }.collect().sortBy(_._1)
-      val nPos = partSums.map(_._2).sum
-      val nNeg = partSums.map(_._3).sum
+    PrefixSum(cells.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val off = ps.offsets(2) { (s, r) => s(0) += r._2; s(1) += r._3 }
+      val nPos = off.last(0); val nNeg = off.last(1)
       require(nPos > 0 && nNeg > 0, "need both positives and negatives")
-      val offN = partSums.map(_._3).scanLeft(0L)(_ + _)
-      val bc = spark.sparkContext.broadcast(offN)
       // ascending over scores: every positive at score v beats the
       // negatives strictly below v, half-credits the ties at v
-      val u = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumN = bc.value(i)
+      val u = ps.walk(off) { (o, it) =>
+        var cumN = o(1)
         var acc = 0.0
         it.foreach { case (_, cp, cn) =>
           acc += cp * (cumN + 0.5 * cn)
@@ -421,9 +406,6 @@ object Evaluation {
         1e6) / 1e6
       Seq((auc, gini, se, u, nPos, nNeg))
         .toDF("auc", "gini", "se", "u_stat", "n_pos", "n_neg")
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 
@@ -451,29 +433,12 @@ object Evaluation {
       .groupBy(s.as("v")).agg(
         F.sum(F.when(y, 1L).otherwise(0L)).as("cp"),
         F.count(F.lit(1)).as("ct"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var p = 0L; var t = 0L
-        it.foreach { r => p += r._2; t += r._3 }
-        Iterator((i, p, t))
-      }.collect().sortBy(_._1)
-      val nPos = partSums.map(_._2).sum
-      val nTot = partSums.map(_._3).sum
+    PrefixSum(cells.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val off = ps.offsets(2) { (s, r) => s(0) += r._2; s(1) += r._3 }
+      val nPos = off.last(0); val nTot = off.last(1)
       require(nPos > 0 && nTot > nPos, "need both classes")
-      val offP = partSums.map(_._2).scanLeft(0L)(_ + _)
-      val offT = partSums.map(_._3).scanLeft(0L)(_ + _)
-      val bcP = spark.sparkContext.broadcast(offP)
-      val bcT = spark.sparkContext.broadcast(offT)
-      val ap = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumP = bcP.value(i); var cumT = bcT.value(i)
+      val ap = ps.walk(off) { (o, it) =>
+        var cumP = o(0); var cumT = o(1)
         var acc = 0.0
         it.foreach { case (_, cp, ct) =>
           // at threshold = this score: TP = positives at or above,
@@ -487,9 +452,6 @@ object Evaluation {
       def r6(v: Double) = math.rint(v * 1e6) / 1e6
       Seq((r6(ap), r6(nPos.toDouble / nTot), nPos, nTot - nPos))
         .toDF("ap", "baseline", "n_pos", "n_neg")
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 

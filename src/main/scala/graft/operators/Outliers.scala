@@ -509,14 +509,12 @@ object Outliers {
       .collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val n = F.lit(nL).cast("double")
-    // per-feature count lookup as a literal decision chain over the
-    // ≤ bins observed cells — every data row's own bin is present
+    // per-feature count lookup: one map literal over the ≤ bins
+    // observed cells (every data row's own bin is present), so the
+    // expression size does not grow with `bins`
     def countOf(i: Int): org.apache.spark.sql.Column = {
-      val cells = counts.collect { case ((ci, b), c) if ci == i => (b, c) }
-        .toSeq.sortBy(_._1)
-      cells.foldLeft(F.lit(null).cast("long")) { case (acc, (b, c)) =>
-        F.when(F.col(s"bin_${cols(i)}") === b, F.lit(c)).otherwise(acc)
-      }
+      val cells = counts.collect { case ((ci, b), c) if ci == i => b -> c }
+      F.try_element_at(F.typedLit(cells), F.col(s"bin_${cols(i)}"))
     }
     val score = cols.indices.map(i =>
       -F.log(countOf(i).cast("double") / n)).reduce(_ + _)

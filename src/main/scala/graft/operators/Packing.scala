@@ -10,11 +10,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   *
   * Scale design: the global offset is a prefix sum in id order. A window
   * `sum() over (order by id)` would funnel the corpus through ONE
-  * partition; instead this uses the zipWithIndex construction —
-  * range-partition by id, collect per-partition token sums (#partitions
-  * longs, nothing else, to the driver), broadcast the partition base
-  * offsets, then a per-partition running sum where the rows already live.
-  * Every stage is distributed; driver traffic is O(#partitions).
+  * partition; instead the [[PrefixSum]] substrate range-partitions by
+  * id and runs the token sums where the rows already live. Every stage
+  * is distributed; driver traffic is O(#partitions).
   */
 object Packing {
 
@@ -31,28 +29,18 @@ object Packing {
       .select(F.col(idCol).cast("long").as("id"),
         F.coalesce(F.col(nTokensCol).cast("long"), F.lit(0L)).as("n_tokens"))
       .where(F.col("id").isNotNull)
-      .repartitionByRange(F.col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Long)].rdd
-    base.cache()
-    val partSums = base.mapPartitionsWithIndex { case (i, it) =>
-      var s = 0L; it.foreach(s += _._2); Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val packed = base.mapPartitionsWithIndex { case (i, it) =>
-      var running = bc.value(i)
-      it.map { case (id, nt) =>
-        val off = running
-        running += nt
-        val first = off / capacity
-        val last = if (nt == 0) first else (off + nt - 1) / capacity
-        (id, nt, off, first, last, last - first + 1)
-      }
-    }.toDF("id", "n_tokens", "offset", "first_seq", "last_seq", "n_seqs")
-    // lineage-free copy so the result survives the base RDD's unpersist
-    val pinned = packed.localCheckpoint(true)
-    base.unpersist(blocking = false)
-    pinned
+    PrefixSum.scanTwice(base.as[(Long, Long)], F.col("id")) { ps =>
+      ps.walk(ps.offsets(1)((s, r) => s(0) += r._2)) { (o, it) =>
+        var running = o(0)
+        it.map { case (id, nt) =>
+          val off = running
+          running += nt
+          val first = off / capacity
+          val last = if (nt == 0) first else (off + nt - 1) / capacity
+          (id, nt, off, first, last, last - first + 1)
+        }
+      }.toDF("id", "n_tokens", "offset", "first_seq", "last_seq", "n_seqs")
+        .localCheckpoint(true)
+    }
   }
 }

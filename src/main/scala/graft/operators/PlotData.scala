@@ -99,10 +99,9 @@ object PlotData {
   }
 
   /** Exact order statistics of `column` at `points` evenly-spaced ranks
-    * r_j = max(1, j·n div points), computed scale-safely: one value
-    * groupBy shuffle, range partitioning, per-partition cumulative
-    * offsets broadcast back (the Ranks pattern) — NO single-partition
-    * window, so this holds at 100 TB where a global row_number() dies.
+    * r_j = max(1, j·n div points), computed scale-safely over the
+    * [[PrefixSum]] substrate — NO single-partition window, so this
+    * holds at 100 TB where a global row_number() dies.
     * Returns (n, DataFrame(rank: long, sample_quantile: double)). */
   private def rankSelect(df: DataFrame, column: String,
                          points: Int): (Long, DataFrame) =
@@ -122,43 +121,29 @@ object PlotData {
     // second shuffle a distinct-value pass costs outweighs the dedup for
     // typical near-unique numeric columns), then per-partition sizes →
     // global offsets → targeted emit
-    val sorted = df
+    val values = df
       .select(F.col(column).cast("double").as("__v"))
       .where(F.col("__v").isNotNull && !F.isnan(F.col("__v")))
-      .repartitionByRange(F.col("__v"))
-      .sortWithinPartitions("__v")
-      .as[Double]
-      .rdd
-    sorted.cache()
-    val partSizes = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; while (it.hasNext) { it.next(); s += 1 }; Iterator((i, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val n = partSizes.sum
-    val offsets = partSizes.scanLeft(0L)(_ + _)
-    // the emit loop walks targets monotonically — enforce the sorted,
-    // duplicate-free precondition rather than documenting it away
-    val targets = targetsOf(n).distinct.sorted
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val bcT = spark.sparkContext.broadcast(targets)
-    val rows = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var r = bcOff.value(i)
-      val ts = bcT.value
-      var idx = java.util.Arrays.binarySearch(ts, r + 1)
-      if (idx < 0) idx = -idx - 1
-      it.flatMap { v =>
-        r += 1
-        if (idx < ts.length && ts(idx) == r) {
-          idx += 1
-          Iterator((r, v))
-        } else Iterator.empty
-      }
-    }.toDF("rank", "sample_quantile")
-    // lineage-free copy so the result survives the unpersist (Ranks pattern)
-    val pinned = rows.localCheckpoint(true)
-    sorted.unpersist(blocking = false)
-    (n, pinned)
+    PrefixSum.scanTwice(values.as[Double], F.col("__v")) { ps =>
+      val off = ps.offsets(1)((s, _) => s(0) += 1)
+      val n = off.last(0)
+      // the emit loop walks targets monotonically — enforce the sorted,
+      // duplicate-free precondition rather than documenting it away
+      val ts = targetsOf(n).distinct.sorted
+      val rows = ps.walk(off) { (o, it) =>
+        var r = o(0)
+        var idx = java.util.Arrays.binarySearch(ts, r + 1)
+        if (idx < 0) idx = -idx - 1
+        it.flatMap { v =>
+          r += 1
+          if (idx < ts.length && ts(idx) == r) {
+            idx += 1
+            Iterator((r, v))
+          } else Iterator.empty
+        }
+      }.toDF("rank", "sample_quantile")
+      (n, rows.localCheckpoint(true))
+    }
   }
 
   /** Distributed Q-Q data: exact order statistics at `points` ranks vs

@@ -9,13 +9,11 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * computes the same ranks with no global window:
   *
   *   1. aggregate counts per distinct value (one hash shuffle),
-  *   2. range-partition + sort the distinct values (ascending partitions),
-  *   3. collect ONLY the per-partition count sums (≤ #partitions longs),
-  *   4. per-partition running prefix sums seeded by the broadcast offsets,
-  *   5. hash-join the (value → rank) table back to the rows.
+  *   2. running count sums over the sorted distinct values — the
+  *      [[PrefixSum]] construction, driver traffic O(#partitions),
+  *   3. hash-join the (value → rank) table back to the rows.
   *
-  * Every stage is distributed; driver traffic is O(#partitions).
-  * (Same construction Spark uses internally for zipWithIndex.)
+  * Every stage is distributed.
   */
 object Ranks {
 
@@ -43,36 +41,16 @@ object Ranks {
     val counts = df.select(F.col(column).cast("double").as("__v"))
       .where(F.col("__v").isNotNull && !F.isnan(F.col("__v")))
       .groupBy("__v").agg(F.count(F.lit(1)).as("__c"))
-    // range partitioning SAMPLES its child in a separate job before the
-    // shuffle job runs it again — persist the counts aggregation across
-    // the two passes so the source is scanned/aggregated once, not
-    // twice (released below once the rank table is checkpointed)
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("__v"))
-      .sortWithinPartitions("__v")
-      .as[(Double, Long)]
-      .rdd
-    sorted.cache()
-    val partSums = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; it.foreach(s += _._2); Iterator((i, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ranked = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var running = bc.value(i)
-      it.map { case (v, c) =>
-        val r = running + 1; running += c; (v, r.toDouble, c) }
-    }.toDF(column, rankCol, countCol)
-    // lineage-free copy so the rank table survives the unpersist of
-    // `sorted` without recomputing the shuffle; storage is released by the
-    // ContextCleaner when the caller drops the DataFrame
-    val pinned = ranked.localCheckpoint(true)
-    sorted.unpersist(blocking = false)
-    counts.unpersist(blocking = false)
-    (offsets.last, pinned)
+    PrefixSum(counts.as[(Double, Long)], F.col("__v")) { ps =>
+      val off = ps.offsets(1)((s, r) => s(0) += r._2)
+      val ranked = ps.walk(off) { (o, it) =>
+        var running = o(0)
+        it.map { case (v, c) =>
+          val r = running + 1; running += c; (v, r.toDouble, c) }
+      }.toDF(column, rankCol, countCol)
+      // lineage-free copy: the rank table outlives the loan
+      (off.last(0), ranked.localCheckpoint(true))
+    }
   }
 
   /** Quantile buckets 1..k over a column — the curriculum/pacing binning
@@ -438,33 +416,27 @@ object Ranks {
       F.lit(null).cast("double").as("__u"))
     // ref boundaries sort BEFORE src probes at equal position, so a
     // probe t matches the ref value whose rank range starts at t
-    val sorted = refRows.unionByName(srcRows)
-      .repartitionByRange(F.col("__pos"), F.col("__side"))
-      .sortWithinPartitions("__pos", "__side")
-      .as[(Double, Int, Option[Double], Option[Double], Option[Double])]
-      .rdd
-    sorted.cache()
-    try {
-      val partLast = sorted.mapPartitionsWithIndex { case (i, it) =>
+    PrefixSum.scanTwice(refRows.unionByName(srcRows)
+        .as[(Double, Int, Option[Double], Option[Double], Option[Double])],
+        F.col("__pos"), F.col("__side")) { ps =>
+      val partLast = ps.parts { it =>
         var last: Option[Double] = None
         it.foreach { r => if (r._2 == 0) last = r._3 }
-        Iterator((i, last))
-      }.collect().sortBy(_._1).map(_._2)
+        last
+      }
       val seeds = partLast.scanLeft(Option.empty[Double]) {
         (acc, cur) => cur.orElse(acc)
       }
-      val bc = spark.sparkContext.broadcast(seeds)
-      val out = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var carry = bc.value(i)
+      ps.walk(seeds) { (seed, it) =>
+        var carry = seed
         it.flatMap { r =>
           if (r._2 == 0) { carry = r._3; None }
           // a ref row with rank 1 precedes every probe, so the carry
           // is always defined by the time a probe is reached
           else Some((r._4.get, r._5.get, carry.get))
         }
-      }.toDF("value", "u", "mapped")
-      out.localCheckpoint(true)
-    } finally sorted.unpersist(blocking = false)
+      }.toDF("value", "u", "mapped").localCheckpoint(true)
+    }
   }
 
   /** Exact weighted median per group (type-1 / lower): the smallest

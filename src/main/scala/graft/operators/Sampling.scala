@@ -380,10 +380,10 @@ object Sampling {
     *
     * Scale path: one range shuffle on the md5 key (Spark samples range
     * bounds, so partitions stay balanced — md5 is uniform by
-    * construction), a per-partition sort, then positions via the same
-    * prefix-sum construction as [[Ranks.minRanks]]: only the
-    * per-partition COUNTS visit the driver (O(#partitions) longs), never
-    * rows. No global window, no single-partition stage, nothing collected.
+    * construction), a per-partition sort, then positions via the
+    * [[PrefixSum]] substrate: only the per-partition COUNTS visit the
+    * driver (O(#partitions) longs), never rows. No global window, no
+    * single-partition stage, nothing collected.
     * Downstream, `position div chunkRows` is the shard assignment for a
     * sharded training-data write.
     */
@@ -393,30 +393,18 @@ object Sampling {
     val keyed = df.withColumn("__gs_key",
       F.md5(F.concat_ws(":", F.col(keyCol).cast("string"),
         F.lit(seed.toString))))
-    val sorted = keyed
-      .repartitionByRange(F.col("__gs_key"), F.col(keyCol))
-      .sortWithinPartitions("__gs_key", keyCol)
-    val schema = sorted.schema
-    val rdd = sorted.rdd
-    rdd.cache()
-    val partCounts = rdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partCounts.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val positioned = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var pos = bc.value(i)
-      it.map { row => val r = org.apache.spark.sql.Row.fromSeq(
-        row.toSeq :+ pos); pos += 1; r }
+    PrefixSum.scanTwice(keyed, F.col("__gs_key"), F.col(keyCol)) { ps =>
+      val positioned = ps.walk(ps.offsets(1)((s, _) => s(0) += 1)) {
+        (o, it) =>
+          var pos = o(0)
+          it.map { row => val r = org.apache.spark.sql.Row.fromSeq(
+            row.toSeq :+ pos); pos += 1; r }
+      }
+      spark.createDataFrame(positioned,
+          keyed.schema.add(positionCol, "long", nullable = false))
+        .drop("__gs_key")
+        .localCheckpoint(true)
     }
-    val out = spark.createDataFrame(positioned,
-        schema.add(positionCol, "long", nullable = false))
-      .drop("__gs_key")
-    // lineage-free copy so the result survives the unpersist without
-    // recomputing the range shuffle twice (count pass + consumer pass)
-    val pinned = out.localCheckpoint(true)
-    rdd.unpersist(blocking = false)
-    pinned
   }
 
   /** Deterministic uniform negative sampling — the contrastive-training

@@ -28,22 +28,24 @@ import graft.functions.SpecialMath
   *
   * Scale shape: every test reduces the data to per-distinct-value (or
   * per-cell) counts with ONE map-side-combined aggregation, then walks
-  * the tiny counts frame with the [[Ranks]] prefix-sum construction
-  * (range partitions + broadcast offsets, O(#partitions) driver
-  * traffic, no global window). Statistics are ratios of exact integers,
+  * the tiny counts frame with the [[PrefixSum]] substrate (range
+  * partitions + broadcast offsets, O(#partitions) driver traffic, no
+  * global window). Statistics are ratios of exact integers,
   * so an external SQL engine replays them bit-for-bit; p-values are
   * computed from the ROUNDED statistic on both sides so ULP noise can
   * never flip a decision across engines.
   */
 object StatTests {
 
-  /** Per-distinct-value cohort counts, range-sorted ascending, plus the
-    * prefix-sum offsets: the shared substrate of the rank tests. The
-    * caller owns the returned RDD's unpersist. */
-  private def cohortCounts(df: DataFrame, cohortCol: String, valueCol: String,
-                           labelA: String, labelB: String):
-      (org.apache.spark.rdd.RDD[(Double, Long, Long)],
-       Long, Long, Array[Long], Array[Long]) = {
+  /** Per-distinct-value cohort counts (v, count_a, count_b), loaned in
+    * ascending value order over the [[PrefixSum]] substrate with the
+    * cohort totals and the 2-lane prefix offsets (lane 0 = a, lane 1 =
+    * b): the shared substrate of the rank tests. */
+  private def cohortCounts[R](df: DataFrame, cohortCol: String,
+                              valueCol: String, labelA: String,
+                              labelB: String)(
+      body: (PrefixSum[(Double, Long, Long)], Long, Long,
+             Array[Array[Long]]) => R): R = {
     require(labelA != labelB, "cohort labels must differ")
     val counts = df
       .select(F.col(cohortCol).cast("string").as("g"),
@@ -55,26 +57,12 @@ object StatTests {
         F.sum(F.when(F.col("g") === labelB, 1L).otherwise(0L)).as("cb"))
     val spark = df.sparkSession
     import spark.implicits._
-    // persist across the range-sampling pass and the shuffle pass (the
-    // sampler is a separate job over the same aggregation) — released
-    // once `sorted` is materialized by the partSums collect below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var sa = 0L; var sb = 0L
-      it.foreach { r => sa += r._2; sb += r._3 }
-      Iterator((i, sa, sb))
-    }.collect().sortBy(_._1)
-    counts.unpersist(blocking = false)
-    val na = partSums.map(_._2).sum
-    val nb = partSums.map(_._3).sum
-    require(na > 0 && nb > 0, "both cohorts need rows")
-    (sorted, na, nb,
-      partSums.map(_._2).scanLeft(0L)(_ + _),
-      partSums.map(_._3).scanLeft(0L)(_ + _))
+    PrefixSum(counts.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val off = ps.offsets(2) { (s, r) => s(0) += r._2; s(1) += r._3 }
+      val na = off.last(0); val nb = off.last(1)
+      require(na > 0 && nb > 0, "both cohorts need rows")
+      body(ps, na, nb, off)
+    }
   }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) two-sample test: U_a = #{(x, y)
@@ -96,12 +84,10 @@ object StatTests {
                    labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, _, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast(offB)
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumB = bc.value(i)
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
+      val parts = ps.walk(off) { (o, it) =>
+        var cumB = o(1)
         var u = 0.0; var ties = 0.0
         it.foreach { case (_, ca, cb) =>
           u += ca * (cumB + 0.5 * cb)
@@ -124,7 +110,7 @@ object StatTests {
       val p = math.rint(SpecialMath.erfc(
         math.abs(zr) / math.sqrt(2.0)) * 1e6) / 1e6
       Seq((u, zr, p, na, nb)).toDF("u_a", "z", "p_value", "n_a", "n_b")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Cramér–von Mises two-sample statistic in the pooled-ECDF integral
@@ -143,12 +129,10 @@ object StatTests {
                    labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast((offA, offB))
-      val acc = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
+      val acc = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var s = 0.0
         it.foreach { case (_, ca, cb) =>
           cumA += ca; cumB += cb
@@ -163,7 +147,7 @@ object StatTests {
       val p = math.rint(math.max(0.0,
         1.0 - SpecialMath.cvmCdfInf(tr)) * 1e6) / 1e6
       Seq((tr, p, na, nb)).toDF("cvm_t", "p_value", "n_a", "n_b")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Conover squared-ranks test for equal VARIANCES (Conover 1999) —
@@ -195,12 +179,9 @@ object StatTests {
       .agg(F.round(F.avg("__v"), 6).as("__m"))
     val dev = clean.join(F.broadcast(means), "__g")
       .select(F.col("__g"), F.abs(F.col("__v") - F.col("__m")).as("__d"))
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(dev, "__g", "__d", labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast((offA, offB))
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+    cohortCounts(dev, "__g", "__d", labelA, labelB) { (ps, na, nb, off) =>
+      val parts = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var sS = 0.0; var sS2 = 0.0; var tA = 0.0
         it.foreach { case (_, ca, cb) =>
           val t = ca + cb
@@ -223,7 +204,7 @@ object StatTests {
       val p = r6(SpecialMath.erfc(math.abs(z) / math.sqrt(2.0)))
       Seq((na, nb, tStat, z, p))
         .toDF("n_a", "n_b", "t_stat", "z", "p_value")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** D'Agostino–Pearson K² omnibus normality test — the moment-based
@@ -444,13 +425,11 @@ object StatTests {
                     labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
       require(na > 1 && nb > 1, "need at least two rows per cohort")
-      val bc = spark.sparkContext.broadcast((offA, offB))
-      val p1 = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val p1 = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var sA = 0.0; var sB = 0.0
         it.foreach { case (_, ca, cb) =>
           val t = ca + cb
@@ -464,8 +443,8 @@ object StatTests {
       val rbar2 = p1.map(_._2).sum / nb
       val c1 = rbar1 - (na + 1) / 2.0
       val c2 = rbar2 - (nb + 1) / 2.0
-      val p2 = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val p2 = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var qA = 0.0; var qB = 0.0
         it.foreach { case (_, ca, cb) =>
           val t = ca + cb
@@ -491,7 +470,7 @@ object StatTests {
       val p = r6(SpecialMath.erfc(math.abs(w) / math.sqrt(2.0)))
       Seq((na, nb, pHat, w, dfW, p))
         .toDF("n_a", "n_b", "p_hat", "w", "df", "p_value")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Cucconi two-sample location–scale test (Cucconi 1968; Marozzi
@@ -513,13 +492,11 @@ object StatTests {
                   labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast((offA, offB))
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
       val n = (na + nb).toDouble
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val parts = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var sR2 = 0.0; var sC2 = 0.0
         it.foreach { case (_, ca, cb) =>
           val t = ca + cb
@@ -546,7 +523,7 @@ object StatTests {
       val p = r6(math.exp(-c))
       Seq((na, nb, u, v, rho, c, p))
         .toDF("n_a", "n_b", "u", "v", "rho", "c", "p_value")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Lepage two-sample location–scale test (Lepage 1971): the sum of
@@ -566,13 +543,11 @@ object StatTests {
                  labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast((offA, offB))
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
       val n = (na + nb).toDouble
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val parts = ps.walk(off) { (o, it) =>
+        var cumA = o(0); var cumB = o(1)
         var sR = 0.0; var sR2 = 0.0; var wA = 0.0
         var sS = 0.0; var sS2 = 0.0; var cA = 0.0
         it.foreach { case (_, ca, cb) =>
@@ -604,7 +579,7 @@ object StatTests {
       Seq((na, nb, wStat, zW, abStat, zC, d, p))
         .toDF("n_a", "n_b", "w_stat", "z_w", "ab_stat", "z_ab", "d",
           "p_value")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Scholz–Stephens exact standard deviation of A² under H0 for k
@@ -665,7 +640,7 @@ object StatTests {
     * spec pins a fully hand-computed example (A² = 19/11, σ² = 2/9).
     *
     * Scale shape: one per-distinct-value aggregation, then the
-    * [[Ranks]] prefix-sum walk — driver traffic O(#partitions).
+    * [[PrefixSum]] walk — driver traffic O(#partitions).
     *
     * @return one row: (ad_stat, sigma, t_stat, n_a, n_b), 6-rounded;
     *         t from the rounded pieces so engines agree exactly */
@@ -673,15 +648,13 @@ object StatTests {
                   labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, offA, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
       val nTot = na + nb
       require(nTot >= 4, "Anderson-Darling needs N >= 4")
       val nD = nTot.toDouble
-      val bc = spark.sparkContext.broadcast((offA, offB))
-      val acc = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var fa = bc.value._1(i); var fb = bc.value._2(i)
+      val acc = ps.walk(off) { (o, it) =>
+        var fa = o(0); var fb = o(1)
         var sa = 0.0; var sb = 0.0
         it.foreach { case (_, ca, cb) =>
           val l = (ca + cb).toDouble
@@ -708,7 +681,7 @@ object StatTests {
       val tr = math.rint((a2r - (k - 1.0)) / sr * 1e6) / 1e6
       Seq((a2r, sr, tr, na, nb))
         .toDF("ad_stat", "sigma", "t_stat", "n_a", "n_b")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** k-sample Anderson–Darling test (Scholz–Stephens 1987, the
@@ -733,8 +706,8 @@ object StatTests {
     * bucket the labels first if the segmentation is high-cardinality.
     *
     * Scale shape: one per-distinct-value aggregation with k count
-    * lanes, then the [[Ranks]]-style range-partitioned prefix-sum walk
-    * — driver traffic O(k · #partitions).
+    * lanes, then the k-lane [[PrefixSum]] walk — driver traffic
+    * O(k · #partitions).
     *
     * @return one row: (n_cohorts, n_total, ad_stat, sigma, t_stat),
     *         statistics 6-rounded, t from the rounded pieces */
@@ -759,39 +732,21 @@ object StatTests {
     }
     val counts = clean.groupBy("__v")
       .agg(countCols.head, countCols.tail: _*)
-    // persist across the range-sampling and shuffle passes (see
-    // cohortCounts) — released in the finally below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("__v")).sortWithinPartitions("__v")
-      .rdd.map(r => (r.getDouble(0),
-        Array.tabulate(k)(i => r.getLong(i + 1))))
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        val s = new Array[Long](k)
-        it.foreach { case (_, cs) =>
-          var j = 0; while (j < k) { s(j) += cs(j); j += 1 }
-        }
-        Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-      val ns = Array.tabulate(k)(j => partSums.map(_(j)).sum)
+    // one prefix-sum lane per cohort
+    PrefixSum(counts, F.col("__v")) { ps =>
+      val offs = ps.offsets(k) { (s, r) =>
+        var j = 0; while (j < k) { s(j) += r.getLong(j + 1); j += 1 }
+      }
+      val ns = offs.last
       require(ns.forall(_ > 0L), "every cohort needs rows")
       val nTot = ns.sum
       require(nTot >= 4, "Anderson-Darling needs N >= 4")
       val nD = nTot.toDouble
-      // per-partition prefix offsets, one lane per cohort
-      val offs = Array.tabulate(partSums.length + 1) { p =>
-        Array.tabulate(k) { j =>
-          (0 until p).foldLeft(0L)((a, q) => a + partSums(q)(j))
-        }
-      }
-      val bc = spark.sparkContext.broadcast((offs, ns))
-      val acc = sorted.mapPartitionsWithIndex { case (i, it) =>
-        val f = bc.value._1(i).clone()
-        val nsL = bc.value._2
+      val acc = ps.walk(offs) { (o, it) =>
+        val f = o.clone()
         val s = new Array[Double](k)
-        it.foreach { case (_, cs) =>
+        it.foreach { r =>
+          val cs = Array.tabulate(k)(j => r.getLong(j + 1))
           var l = 0L
           var j = 0; while (j < k) { l += cs(j); j += 1 }
           if (l < nTot) { // l == N (single distinct value) is degenerate
@@ -803,7 +758,7 @@ object StatTests {
             j = 0
             while (j < k) {
               val mj = f(j) + cs(j) / 2.0
-              val dj = nD * mj - nsL(j) * bj
+              val dj = nD * mj - ns(j) * bj
               s(j) += lD / nD * (dj * dj) / den
               f(j) += cs(j)
               j += 1
@@ -825,9 +780,6 @@ object StatTests {
       val tr = math.rint((a2r - (k - 1.0)) / sr * 1e6) / 1e6
       Seq((k.toLong, nTot, a2r, sr, tr))
         .toDF("n_cohorts", "n_total", "ad_stat", "sigma", "t_stat")
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
     }
   }
 
@@ -1797,58 +1749,43 @@ object StatTests {
     val pc = F.col(pCol).cast("double")
     val cells = df.where(pc.isNotNull && !F.isnan(pc))
       .groupBy(pc.as("__p")).agg(F.count(F.lit(1)).as("__c"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("__p")).sortWithinPartitions("__p")
-      .as[(Double, Long)].rdd
-    sorted.cache()
-    try {
-      val partCounts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; it.foreach(s += _._2); Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-      val m = partCounts.sum
+    PrefixSum(cells.as[(Double, Long)], F.col("__p")) { ps =>
+      val off = ps.offsets(1)((s, r) => s(0) += r._2)
+      val m = off.last(0)
       if (m == 0L)
-        return df.withColumn("holm_rank", F.lit(null).cast("long"))
+        df.withColumn("holm_rank", F.lit(null).cast("long"))
           .withColumn("p_holm", F.lit(null).cast("double"))
           .withColumn("reject_fwer", F.lit(false))
-      val offsets = partCounts.scanLeft(0L)(_ + _)
-      val bcOff = spark.sparkContext.broadcast(offsets)
-      // per-partition max of the candidate (m − rank + 1)·p — needs
-      // only the broadcast rank offsets, so one more pass
-      val partMax = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cum = bcOff.value(i)
-        var best = Double.NegativeInfinity
-        it.foreach { case (p, c) =>
-          val cand = math.min(1.0, (m - (cum + 1) + 1).toDouble * p)
-          if (cand > best) best = cand
-          cum += c
-        }
-        Iterator((i, best))
-      }.collect().sortBy(_._1).map(_._2)
-      val prefix = partMax.scanLeft(Double.NegativeInfinity)(math.max)
-      val bcPre = spark.sparkContext.broadcast(prefix)
-      val qTable = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cum = bcOff.value(i)
-        var run = bcPre.value(i)
-        it.map { case (p, c) =>
-          val rank = cum + 1
-          val cand = math.min(1.0, (m - rank + 1).toDouble * p)
-          if (cand > run) run = cand
-          cum += c
-          (p, rank, run)
-        }
-      }.toDF("__p", "holm_rank", "p_holm")
-      val pinned = qTable.localCheckpoint(true)
-      df.join(pinned, pc === F.col("__p"), "left")
-        .withColumn("reject_fwer",
-          F.coalesce(F.col("p_holm") <= F.lit(alpha), F.lit(false)))
-        .drop("__p")
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
+      else {
+        // per-partition max of the candidate (m − rank + 1)·p — needs
+        // only the rank offsets, so one more pass
+        val partMax = ps.walk(off) { (o, it) =>
+          var cum = o(0)
+          var best = Double.NegativeInfinity
+          it.foreach { case (p, c) =>
+            val cand = math.min(1.0, (m - (cum + 1) + 1).toDouble * p)
+            if (cand > best) best = cand
+            cum += c
+          }
+          Iterator(best)
+        }.collect()
+        val prefix = partMax.scanLeft(Double.NegativeInfinity)(math.max)
+        val qTable = ps.walk(off.map(_(0)).zip(prefix)) { (seed, it) =>
+          var (cum, run) = seed
+          it.map { case (p, c) =>
+            val rank = cum + 1
+            val cand = math.min(1.0, (m - rank + 1).toDouble * p)
+            if (cand > run) run = cand
+            cum += c
+            (p, rank, run)
+          }
+        }.toDF("__p", "holm_rank", "p_holm")
+        val pinned = qTable.localCheckpoint(true)
+        df.join(pinned, pc === F.col("__p"), "left")
+          .withColumn("reject_fwer",
+            F.coalesce(F.col("p_holm") <= F.lit(alpha), F.lit(false)))
+          .drop("__p")
+      }
     }
   }
 
@@ -1927,7 +1864,7 @@ object StatTests {
     * level α ⟺ q ≤ α reproduces the classic "largest i with
     * p_(i) ≤ iα/m" rule.
     *
-    * Scale shape: the [[Ranks]] construction on the p column — distinct
+    * Scale shape: the [[PrefixSum]] substrate on the p column — distinct
     * p counts, range partitions, broadcast prefix offsets for the
     * max-rank, then a per-partition SUFFIX minimum of m·p/rank seeded by
     * a broadcast suffix-min of the partition minima (the mirror image of
@@ -1943,69 +1880,57 @@ object StatTests {
     val counts = df.select(F.col(pCol).cast("double").as("__p"))
       .where(F.col("__p").isNotNull && !F.isnan(F.col("__p")))
       .groupBy("__p").agg(F.count(F.lit(1)).as("__c"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("__p")).sortWithinPartitions("__p")
-      .as[(Double, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; it.foreach(s += _._2); Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-      val m = partSums.sum
+    PrefixSum(counts.as[(Double, Long)], F.col("__p")) { ps =>
+      val off = ps.offsets(1)((s, r) => s(0) += r._2)
+      val m = off.last(0)
       if (m == 0L)
-        return df.withColumn("bh_rank", F.lit(null).cast("long"))
+        df.withColumn("bh_rank", F.lit(null).cast("long"))
           .withColumn("q_value", F.lit(null).cast("double"))
           .withColumn("reject", F.lit(false))
-      require(df.select(F.col(pCol).cast("double").as("p"))
-        .where(F.col("p") < 0.0 || F.col("p") > 1.0).isEmpty,
-        "p-values must lie in [0,1]")
-      val offsets = partSums.scanLeft(0L)(_ + _)
-      val bcOff = spark.sparkContext.broadcast(offsets)
-      // per-partition minimum of the ratio m·p/maxrank, then the driver
-      // suffix-mins those minima: partition i's seed is the smallest
-      // ratio anywhere to its right
-      val partMins = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cum = bcOff.value(i)
-        var best = Double.PositiveInfinity
-        it.foreach { case (p, c) =>
-          cum += c
-          val r = m.toDouble * p / cum
-          if (r < best) best = r
-        }
-        Iterator((i, best))
-      }.collect().sortBy(_._1).map(_._2)
-      val suffix = partMins.scanRight(Double.PositiveInfinity)(math.min)
-      val bcSuf = spark.sparkContext.broadcast(suffix)
-      val qTable = sorted.mapPartitionsWithIndex { case (i, it) =>
-        // suffix-min within the partition needs a right-to-left pass:
-        // buffer this partition's DISTINCT (p, count) rows — the same
-        // footprint its range-sort already used
-        val rows = it.toArray
-        var cum = bcOff.value(i)
-        val ranks = rows.map { case (_, c) => cum += c; cum }
-        var best = bcSuf.value(i + 1)
-        val out = new Array[(Double, Long, Double)](rows.length)
-        var j = rows.length - 1
-        while (j >= 0) {
-          val r = m.toDouble * rows(j)._1 / ranks(j)
-          if (r < best) best = r
-          out(j) = (rows(j)._1, ranks(j), math.min(1.0, best))
-          j -= 1
-        }
-        out.iterator
-      }.toDF("__p", "bh_rank", "q_value")
-      val pinned = qTable.localCheckpoint(true)
-      df.join(pinned, F.col(pCol).cast("double") === F.col("__p"), "left")
-        .withColumn("reject",
-          F.coalesce(F.col("q_value") <= F.lit(alpha), F.lit(false)))
-        .drop("__p")
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
+      else {
+        require(df.select(F.col(pCol).cast("double").as("p"))
+          .where(F.col("p") < 0.0 || F.col("p") > 1.0).isEmpty,
+          "p-values must lie in [0,1]")
+        // per-partition minimum of the ratio m·p/maxrank, then the
+        // driver suffix-mins those minima: partition i's seed is the
+        // smallest ratio anywhere to its right
+        val partMins = ps.walk(off) { (o, it) =>
+          var cum = o(0)
+          var best = Double.PositiveInfinity
+          it.foreach { case (p, c) =>
+            cum += c
+            val r = m.toDouble * p / cum
+            if (r < best) best = r
+          }
+          Iterator(best)
+        }.collect()
+        val suffix = partMins.scanRight(Double.PositiveInfinity)(math.min)
+        val seeds = off.map(_(0)).zip(suffix.tail)
+        val qTable = ps.walk(seeds) { (seed, it) =>
+          // suffix-min within the partition needs a right-to-left pass:
+          // buffer this partition's DISTINCT (p, count) rows — the same
+          // footprint its range-sort already used
+          val rows = it.toArray
+          var cum = seed._1
+          val ranks = rows.map { case (_, c) => cum += c; cum }
+          var best = seed._2
+          val out = new Array[(Double, Long, Double)](rows.length)
+          var j = rows.length - 1
+          while (j >= 0) {
+            val r = m.toDouble * rows(j)._1 / ranks(j)
+            if (r < best) best = r
+            out(j) = (rows(j)._1, ranks(j), math.min(1.0, best))
+            j -= 1
+          }
+          out.iterator
+        }.toDF("__p", "bh_rank", "q_value")
+        val pinned = qTable.localCheckpoint(true)
+        df.join(pinned, F.col(pCol).cast("double") === F.col("__p"),
+            "left")
+          .withColumn("reject",
+            F.coalesce(F.col("q_value") <= F.lit(alpha), F.lit(false)))
+          .drop("__p")
+      }
     }
   }
 
@@ -2911,7 +2836,7 @@ object StatTests {
     * ([[mannWhitneyU]] convention).
     *
     * Scale shape: ONE distinct-|d| count aggregation, then the
-    * [[cohortCounts]]-style range-partition prefix-sum walk — W⁺ and
+    * [[PrefixSum]] walk — W⁺ and
     * the tie sum accumulate partition-locally, driver traffic
     * O(#partitions). W⁺ is a sum of count×midrank half-integers, so it
     * replays bit-for-bit.
@@ -2932,24 +2857,12 @@ object StatTests {
       .groupBy(F.abs(F.col("d")).as("v"))
       .agg(F.sum(F.when(F.col("d") > 0.0, 1L).otherwise(0L)).as("cp"),
         F.count(F.lit(1)).as("ct"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .as[(Double, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; it.foreach(s += _._3); Iterator((i, s))
-      }.collect().sortBy(_._1)
-      val n = partSums.map(_._2).sum
+    PrefixSum(cells.as[(Double, Long, Long)], F.col("v")) { ps =>
+      val off = ps.offsets(1)((s, r) => s(0) += r._3)
+      val n = off.last(0)
       require(n >= 2L, "need at least two nonzero differences")
-      val offsets = partSums.map(_._2).scanLeft(0L)(_ + _)
-      val bc = spark.sparkContext.broadcast(offsets)
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cum = bc.value(i)
+      val parts = ps.walk(off) { (o, it) =>
+        var cum = o(0)
         var w = 0.0; var ties = 0.0
         it.foreach { case (_, cp, ct) =>
           w += cp * (cum + (ct + 1.0) / 2.0)
@@ -2972,9 +2885,6 @@ object StatTests {
         math.abs(zr) / math.sqrt(2.0)) * 1e6) / 1e6
       Seq((n, nZero, w, zr, p))
         .toDF("n", "n_zero", "w_plus", "z", "p_value")
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 
@@ -3083,12 +2993,10 @@ object StatTests {
                   labelA: String = "a", labelB: String = "b"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sorted, na, nb, _, offB) =
-      cohortCounts(df, cohortCol, valueCol, labelA, labelB)
-    try {
-      val bc = spark.sparkContext.broadcast(offB)
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumB = bc.value(i)
+    cohortCounts(df, cohortCol, valueCol, labelA, labelB) {
+        (ps, na, nb, off) =>
+      val parts = ps.walk(off) { (o, it) =>
+        var cumB = o(1)
         var gt = 0L; var tie = 0L
         it.foreach { case (_, ca, cb) =>
           gt += ca * cumB
@@ -3110,7 +3018,7 @@ object StatTests {
       }
       Seq((dr, mag, gt, lt, tie, na, nb))
         .toDF("delta", "magnitude", "n_gt", "n_lt", "n_tie", "n_a", "n_b")
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Page's L trend test — the ordered-alternative companion of
@@ -3367,35 +3275,18 @@ object StatTests {
       .where(v.isNotNull && !F.isnan(v) && g.isin(levels: _*))
       .groupBy(v.as("v"))
       .agg(aggs.head, aggs.tail: _*)
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    counts.persist()
-    val sorted = counts
-      .repartitionByRange(F.col("v")).sortWithinPartitions("v")
-      .map(r => (r.getDouble(0),
-        Array.tabulate(k)(i => r.getLong(i + 1)))).rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        val s = Array.fill(k)(0L)
-        it.foreach { case (_, cs) =>
-          var j = 0; while (j < k) { s(j) += cs(j); j += 1 }
-        }
-        Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-      val totals = Array.tabulate(k)(j => partSums.map(_(j)).sum)
+    PrefixSum(counts, F.col("v")) { ps =>
+      val off = ps.offsets(k) { (s, r) =>
+        var j = 0; while (j < k) { s(j) += r.getLong(j + 1); j += 1 }
+      }
+      val totals = off.last
       val n = totals.sum
       require(totals.forall(_ > 0L), "every level needs rows")
-      val offsets = partSums
-        .scanLeft(Array.fill(k)(0L)) { (acc, s) =>
-          Array.tabulate(k)(j => acc(j) + s(j))
-        }
-      val bc = spark.sparkContext.broadcast(offsets)
-      val jParts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        val cum = bc.value(i).clone()
+      val jParts = ps.walk(off) { (o, it) =>
+        val cum = o.clone()
         var jj = 0.0
-        it.foreach { case (_, cs) =>
+        it.foreach { r =>
+          val cs = Array.tabulate(k)(j => r.getLong(j + 1))
           var lo = 0L; var tieLo = 0L
           var j = 0
           while (j < k) {
@@ -3423,9 +3314,6 @@ object StatTests {
         math.abs(zr) / math.sqrt(2.0)) * 1e6) / 1e6
       Seq((jStat, zr, p, n, k.toLong))
         .toDF("j_stat", "z", "p_value", "n", "k")
-    } finally {
-      sorted.unpersist(blocking = false)
-      counts.unpersist(blocking = false)
     }
   }
   /** Vuong closed-form model comparison — "which of two fitted

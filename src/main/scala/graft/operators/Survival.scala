@@ -373,29 +373,14 @@ object Survival {
         F.sum(F.when(F.col("g") =!= labelA && F.col("e"), 1L)
           .otherwise(0L)).as("db"),
         F.sum(F.when(F.col("g") =!= labelA, 1L).otherwise(0L)).as("cb"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("t")).sortWithinPartitions("t")
-      .as[(Double, Long, Long, Long, Long)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var sa = 0L; var sb = 0L
-        it.foreach { r => sa += r._3; sb += r._5 }
-        Iterator((i, sa, sb))
-      }.collect().sortBy(_._1)
-      val na = partSums.map(_._2).sum
-      val nb = partSums.map(_._3).sum
+    val typed = cells.as[(Double, Long, Long, Long, Long)]
+    PrefixSum(typed, F.col("t")) { ps =>
+      val off = ps.offsets(2) { (s, r) => s(0) += r._3; s(1) += r._5 }
+      val na = off.last(0); val nb = off.last(1)
       require(na > 0 && nb > 0, "both cohorts need rows")
-      val offA = partSums.map(_._2).scanLeft(0L)(_ + _)
-      val offB = partSums.map(_._3).scanLeft(0L)(_ + _)
-      val bc = spark.sparkContext.broadcast((offA, offB))
       val nTot = (na + nb).toDouble
-      val parts = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var cumA = bc.value._1(i); var cumB = bc.value._2(i)
+      val parts = ps.walk(off) { (seed, it) =>
+        var cumA = seed(0); var cumB = seed(1)
         var o = 0L; var e = 0.0; var v = 0.0
         var z = 0.0; var vw = 0.0
         it.foreach { case (_, da, ca, db, cb) =>
@@ -418,9 +403,6 @@ object Survival {
       }.collect()
       (parts.map(_._1).sum, parts.map(_._2).sum, parts.map(_._3).sum,
         parts.map(_._4).sum, parts.map(_._5).sum, na, nb)
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 
@@ -744,40 +726,29 @@ object Survival {
       .agg(F.sum(F.when(F.col(eventCol).cast("boolean"), 1L)
           .otherwise(0L)).as("d"),
         F.sum(F.exp(xb)).as("r0"))
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("t")).sortWithinPartitions("t")
-      .as[(Double, Long, Double)].rdd
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
+    PrefixSum(cells.as[(Double, Long, Double)], F.col("t")) { ps =>
+      val partR0 = ps.parts { it =>
         var r = 0.0
         it.foreach(row => r += row._3)
-        Iterator((i, r))
-      }.collect().sortBy(_._1)
-      val totR0 = partSums.map(_._2).sum
-      val offR0 = partSums.map(_._2).scanLeft(0.0)(_ + _)
-      val bcR0 = spark.sparkContext.broadcast(offR0)
+        r
+      }
+      val totR0 = partR0.sum
+      val offR0 = partR0.scanLeft(0.0)(_ + _)
       // pass 1: per-partition Σ d/m0 (m0 = suffix r0 = tot − prefix)
-      val hSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var pre = bcR0.value(i)
+      val hSums = ps.walk(offR0) { (pre0, it) =>
+        var pre = pre0
         var h = 0.0
         it.foreach { case (_, d, r0) =>
           val m0 = totR0 - pre
           if (d > 0L && m0 > 0.0) h += d.toDouble / m0
           pre += r0
         }
-        Iterator((i, h))
-      }.collect().sortBy(_._1)
-      val offH = hSums.map(_._2).scanLeft(0.0)(_ + _)
-      val bcH = spark.sparkContext.broadcast(offH)
+        Iterator(h)
+      }.collect()
+      val offH = hSums.scanLeft(0.0)(_ + _)
       // pass 2: emit the curve rows with seeded running sums
-      val rows = sorted.mapPartitionsWithIndex { case (i, it) =>
-        var pre = bcR0.value(i)
-        var h = bcH.value(i)
+      val rows = ps.walk(offR0.zip(offH)) { (seed, it) =>
+        var (pre, h) = seed
         it.flatMap { case (t, d, r0) =>
           val m0 = totR0 - pre
           pre += r0
@@ -788,12 +759,7 @@ object Survival {
           } else None
         }
       }
-      // materialize before the cache releases: the lazy frame would
-      // otherwise re-run the range shuffle on first use
       rows.toDF("t", "n_event", "h0", "s0").localCheckpoint(true)
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 
@@ -838,7 +804,7 @@ object Survival {
       .where(F.col("__t").isNotNull && !F.isnan(F.col("__t")) &&
         F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX)
       // every Newton pass re-aggregates this same narrow projection;
-      // persist once, release before return (opt guide §5)
+      // persist once, released in the finally below
       .persist()
 
     // one Newton-step pass at a fixed β: (U, I, ℓ, n, d_total)
@@ -863,20 +829,10 @@ object Survival {
         F.array(rCols: _*).as("__r"))
       // t-DESCENDING prefix = risk-set suffix: rows seen so far (plus
       // the current row — tⱼ ≥ t includes t itself) ARE the risk set
-      // persist across the range-sampling and shuffle passes (the
-      // range partitioner samples its child in a separate job) --
-      // released in the finally below
-      cells.persist()
-      val sorted = cells
-        .repartitionByRange(F.col("__t").desc)
-        .sortWithinPartitions(F.col("__t").desc)
-        .select(F.col("__t"), F.col("__d"), F.col("__c"),
-          F.col("__s"), F.col("__r"))
-        .as[(Double, Long, Long, Seq[Double], Seq[Double])].rdd
-      sorted.cache()
-      try {
+      PrefixSum(cells.as[(Double, Long, Long, Seq[Double], Seq[Double])],
+          F.col("__t").desc) { ps =>
         val rLen = 1 + k + tri
-        val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
+        val partSums = ps.parts { it =>
           val acc = new Array[Double](rLen)
           var c = 0L; var d = 0L
           it.foreach { row =>
@@ -884,17 +840,16 @@ object Survival {
             while (j < rLen) { acc(j) += row._5(j); j += 1 }
             c += row._3; d += row._2
           }
-          Iterator((i, acc, c, d))
-        }.collect().sortBy(_._1)
-        val n = partSums.map(_._3).sum
-        val dTot = partSums.map(_._4).sum
+          (acc, c, d)
+        }
+        val n = partSums.map(_._2).sum
+        val dTot = partSums.map(_._3).sum
         require(dTot > 0, "no events observed")
-        val offsets = partSums.map(_._2).scanLeft(new Array[Double](rLen)) {
+        val offsets = partSums.map(_._1).scanLeft(new Array[Double](rLen)) {
           (a, b) => Array.tabulate(rLen)(j => a(j) + b(j))
         }
-        val bc = spark.sparkContext.broadcast(offsets)
-        val parts = sorted.mapPartitionsWithIndex { case (pi, it) =>
-          val cum = bc.value(pi).clone()
+        val parts = ps.walk(offsets) { (seed, it) =>
+          val cum = seed.clone()
           val u = new Array[Double](k)
           val inf = Array.ofDim[Double](k, k)
           var ll = 0.0
@@ -940,32 +895,30 @@ object Survival {
           ll += pll
         }
         (u, inf, ll, n, dTot)
-      } finally {
-        sorted.unpersist(blocking = false)
-        cells.unpersist(blocking = false)
       }
     }
 
-    var beta = Array.fill(k)(0.0)
-    var ll0 = 0.0
-    var it = 0
-    while (it < iters) {
-      val (u, inf, ll, _, _) = pass(beta)
-      if (it == 0) ll0 = ll
-      val delta = Regression.solve(inf, u)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
-    }
-    // final pass at β_final: observed information → SEs, final ℓ
-    val (_, infF, llF, n, dTot) = pass(beta)
-    val se = Array.tabulate(k) { i =>
-      // i-th diagonal of I⁻¹ via k solves against unit vectors would be
-      // wasteful; solve once per feature (k ≤ dozens, driver-side)
-      val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
-      math.sqrt(Regression.solve(infF, ei)(i))
-    }
-    clean.unpersist(false)
-    CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
+    try {
+      var beta = Array.fill(k)(0.0)
+      var ll0 = 0.0
+      var it = 0
+      while (it < iters) {
+        val (u, inf, ll, _, _) = pass(beta)
+        if (it == 0) ll0 = ll
+        val delta = Regression.solve(inf, u)
+        beta = Array.tabulate(k)(i => beta(i) + delta(i))
+        it += 1
+      }
+      // final pass at β_final: observed information → SEs, final ℓ
+      val (_, infF, llF, n, dTot) = pass(beta)
+      val se = Array.tabulate(k) { i =>
+        // i-th diagonal of I⁻¹ via k solves against unit vectors would be
+        // wasteful; solve once per feature (k ≤ dozens, driver-side)
+        val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
+        math.sqrt(Regression.solve(infF, ei)(i))
+      }
+      CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
+    } finally clean.unpersist(false)
   }
 
   /** Cox proportional hazards with EFRON ties — the tie correction R's
@@ -1002,7 +955,7 @@ object Survival {
       .where(F.col("__t").isNotNull && !F.isnan(F.col("__t")) &&
         F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX)
       // every Newton pass re-aggregates this same narrow projection;
-      // persist once, release before return (opt guide §5)
+      // persist once, released in the finally below
       .persist()
 
     def pass(beta: Array[Double]): (Array[Double], Array[Array[Double]],
@@ -1031,21 +984,10 @@ object Survival {
         F.array(sCols: _*).as("__s"),
         F.array(rCols: _*).as("__r"),
         F.array(eCols: _*).as("__ev"))
-      // persist across the range-sampling and shuffle passes (the
-      // range partitioner samples its child in a separate job) --
-      // released in the finally below
-      cells.persist()
-      val sorted = cells
-        .repartitionByRange(F.col("__t").desc)
-        .sortWithinPartitions(F.col("__t").desc)
-        .select(F.col("__t"), F.col("__d"), F.col("__c"),
-          F.col("__s"), F.col("__r"), F.col("__ev"))
-        .as[(Double, Long, Long, Seq[Double], Seq[Double], Seq[Double])]
-        .rdd
-      sorted.cache()
-      try {
+      PrefixSum(cells.as[(Double, Long, Long, Seq[Double], Seq[Double],
+          Seq[Double])], F.col("__t").desc) { ps =>
         val rLen = 1 + k + tri
-        val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
+        val partSums = ps.parts { it =>
           val acc = new Array[Double](rLen)
           var c = 0L; var d = 0L
           it.foreach { row =>
@@ -1053,17 +995,16 @@ object Survival {
             while (j < rLen) { acc(j) += row._5(j); j += 1 }
             c += row._3; d += row._2
           }
-          Iterator((i, acc, c, d))
-        }.collect().sortBy(_._1)
-        val n = partSums.map(_._3).sum
-        val dTot = partSums.map(_._4).sum
+          (acc, c, d)
+        }
+        val n = partSums.map(_._2).sum
+        val dTot = partSums.map(_._3).sum
         require(dTot > 0, "no events observed")
-        val offsets = partSums.map(_._2).scanLeft(new Array[Double](rLen)) {
+        val offsets = partSums.map(_._1).scanLeft(new Array[Double](rLen)) {
           (a, b) => Array.tabulate(rLen)(j => a(j) + b(j))
         }
-        val bc = spark.sparkContext.broadcast(offsets)
-        val parts = sorted.mapPartitionsWithIndex { case (pi, it) =>
-          val cum = bc.value(pi).clone()
+        val parts = ps.walk(offsets) { (seed, it) =>
+          val cum = seed.clone()
           val u = new Array[Double](k)
           val inf = Array.ofDim[Double](k, k)
           var ll = 0.0
@@ -1118,29 +1059,27 @@ object Survival {
           ll += pll
         }
         (u, inf, ll, n, dTot)
-      } finally {
-        sorted.unpersist(blocking = false)
-        cells.unpersist(blocking = false)
       }
     }
 
-    var beta = Array.fill(k)(0.0)
-    var ll0 = 0.0
-    var it = 0
-    while (it < iters) {
-      val (u, inf, ll, _, _) = pass(beta)
-      if (it == 0) ll0 = ll
-      val delta = Regression.solve(inf, u)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
-    }
-    val (_, infF, llF, n, dTot) = pass(beta)
-    val se = Array.tabulate(k) { i =>
-      val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
-      math.sqrt(Regression.solve(infF, ei)(i))
-    }
-    clean.unpersist(false)
-    CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
+    try {
+      var beta = Array.fill(k)(0.0)
+      var ll0 = 0.0
+      var it = 0
+      while (it < iters) {
+        val (u, inf, ll, _, _) = pass(beta)
+        if (it == 0) ll0 = ll
+        val delta = Regression.solve(inf, u)
+        beta = Array.tabulate(k)(i => beta(i) + delta(i))
+        it += 1
+      }
+      val (_, infF, llF, n, dTot) = pass(beta)
+      val se = Array.tabulate(k) { i =>
+        val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
+        math.sqrt(Regression.solve(infF, ei)(i))
+      }
+      CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
+    } finally clean.unpersist(false)
   }
 
   /** Harrell's concordance index — the acceptance metric for [[coxPH]]
@@ -1256,42 +1195,24 @@ object Survival {
     }
     val cells = clean.groupBy("__t").agg((dCols ++ cCols).head,
       (dCols ++ cCols).tail: _*)
-    // persist across the range-sampling and shuffle passes (the
-    // range partitioner samples its child in a separate job) --
-    // released in the finally below
-    cells.persist()
-    val sorted = cells
-      .repartitionByRange(F.col("__t")).sortWithinPartitions("__t")
-      .rdd.map(r => (r.getDouble(0),
-        Array.tabulate(k)(i => r.getLong(i + 1)),
-        Array.tabulate(k)(i => r.getLong(k + i + 1))))
-    sorted.cache()
-    try {
-      val partSums = sorted.mapPartitionsWithIndex { case (i, it) =>
-        val s = new Array[Long](k)
-        it.foreach { case (_, _, cs) =>
-          var j = 0; while (j < k) { s(j) += cs(j); j += 1 }
-        }
-        Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-      val ns = Array.tabulate(k)(j => partSums.map(_(j)).sum)
+    // row layout: (t, d_0..d_{k-1}, c_0..c_{k-1})
+    PrefixSum(cells, F.col("__t")) { ps =>
+      val offs = ps.offsets(k) { (s, r) =>
+        var j = 0; while (j < k) { s(j) += r.getLong(k + j + 1); j += 1 }
+      }
+      val ns = offs.last
       require(ns.forall(_ > 0L), "every cohort needs rows")
       val nTot = ns.sum
-      val offs = Array.tabulate(partSums.length + 1) { p =>
-        Array.tabulate(k) { j =>
-          (0 until p).foldLeft(0L)((a, q) => a + partSums(q)(j))
-        }
-      }
-      val bc = spark.sparkContext.broadcast((offs, ns))
-      val acc = sorted.mapPartitionsWithIndex { case (pi, it) =>
-        val cum = bc.value._1(pi).clone()
-        val nsL = bc.value._2
+      val acc = ps.walk(offs) { (o, it) =>
+        val cum = o.clone()
         var u = 0.0; var vv = 0.0
-        it.foreach { case (_, ds, cs) =>
+        it.foreach { r =>
+          val ds = Array.tabulate(k)(i => r.getLong(i + 1))
+          val cs = Array.tabulate(k)(i => r.getLong(k + i + 1))
           var dT = 0L; var nT = 0L
           var j = 0
           while (j < k) {
-            dT += ds(j); nT += nsL(j) - cum(j); j += 1
+            dT += ds(j); nT += ns(j) - cum(j); j += 1
           }
           if (dT > 0L && nT > 1L) {
             val nTD = nT.toDouble
@@ -1299,7 +1220,7 @@ object Survival {
             var s1 = 0.0; var s2 = 0.0 // Σ a p, Σ a² p
             j = 0
             while (j < k) {
-              val p = (nsL(j) - cum(j)) / nTD
+              val p = (ns(j) - cum(j)) / nTD
               u += j * (ds(j) - dTD * p)
               s1 += j * p
               s2 += j * j * p
@@ -1320,9 +1241,6 @@ object Survival {
       val p = r6(SpecialMath.erfc(math.abs(z) / math.sqrt(2.0)))
       Seq((k.toLong, nTot, r6(u), r6(vv), z, p))
         .toDF("n_cohorts", "n_total", "u_stat", "var_u", "z", "p_value")
-    } finally {
-      sorted.unpersist(blocking = false)
-      cells.unpersist(blocking = false)
     }
   }
 

@@ -4465,6 +4465,29 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows(1).getAs[Double]("score"))
   }
 
+  test("hbosScore's bin-count lookup does not grow with bins") {
+    import spark.implicits._
+    val df = Seq.tabulate(3000)(i =>
+      (i.toLong, (i * 37 % 1009) / 7.0, (i.toLong * i % 2003).toDouble))
+      .toDF("id", "x", "y")
+    def hbos(bins: Int) = Outliers.hbosScore(df, "id", Seq("x", "y"),
+      bins = bins, topK = 3000)
+    // every row at bins = 10, in output order, as the former per-bin
+    // `when`-chain lookup scored them
+    val rows = hbos(10).collect().map(r => Seq[Any](r.getLong(0),
+      r.getDouble(1), r.getLong(2), r.getLong(3)).mkString(",")).mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(digest == "d2620d5f8269146e81e492d0884e84a7")
+    // one map lookup per feature: the analyzed plan's expression count
+    // is the same at any bins (a per-bin chain grew 290 → 2090 nodes
+    // from bins = 20 to 200 and overflowed the stack at 2000)
+    def nodes(bins: Int): Int = hbos(bins).queryExecution.analyzed
+      .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }
+      .sum
+    assert(nodes(2000) == nodes(20))
+  }
+
   test("itsEstimate reads the level jump and slope change at the break") {
     import spark.implicits._
     // pre: y = 10 + t (t = 0..4); post (t >= 5): y = 25 + 2t
