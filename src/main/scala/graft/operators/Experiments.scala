@@ -808,11 +808,8 @@ object Experiments {
     def r6(v: Double) = math.rint(v * 1e6) / 1e6
     val m1 = Regression.olsFit(clean.where(t === 1.0), outcomeCol, xCols)
     val m0 = Regression.olsFit(clean.where(t === 0.0), outcomeCol, xCols)
-    def pred(b: Array[Double]) =
-      xCols.zipWithIndex.foldLeft(F.lit(b(0))) { case (acc, (c, i)) =>
-        acc + F.col(c).cast("double") * b(i + 1)
-      }
-    val p1 = pred(m1.beta.map(r6)); val p0 = pred(m0.beta.map(r6))
+    val p1 = Regression.linearPredictor(xCols, m1.beta.map(r6))
+    val p0 = Regression.linearPredictor(xCols, m0.beta.map(r6))
     val w1 = t / e
     val w0 = (F.lit(1.0) - t) / (F.lit(1.0) - e)
     val r = clean.agg(

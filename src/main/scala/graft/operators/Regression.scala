@@ -323,15 +323,117 @@ object Regression {
         F.col("r_xy_z")): _*)
   }
 
+  /** A fitted model's linear predictor β₀ + Σ xᵢ·βᵢ₊₁ as a codegen'd
+    * column, β aligned to `"intercept" +: xCols`. */
+  private[operators] def linearPredictor(xCols: Seq[String],
+                                         beta: Array[Double]): Column =
+    xCols.zipWithIndex.foldLeft(F.lit(beta(0))) { case (acc, (c, i)) =>
+      acc + F.col(c).cast("double") * beta(i + 1)
+    }
+
+  private def valid(c: Column): Column = c.isNotNull && !F.isnan(c)
+
+  /** The fixed-step Newton substrate of the GLM fits. A fit is a loan
+    * over its design: rows with a null/NaN feature or response, or a
+    * response outside `domain`, are dropped listwise; the projection
+    * onto the feature and response columns is persisted, because every
+    * step re-aggregates it (each pass after the first reads the
+    * columnar cache instead of re-running the scan and any upstream
+    * exchange), and it is released in `finally`, also when the body
+    * throws.
+    *
+    * Each Newton step is ONE aggregation (`Design.step`): the upper
+    * triangle of the weighted Gram Σ w·fᵢ·fⱼ and the k gradient sums
+    * Σ grad(fᵢ), with the current β folded into `w` and `grad` as plan
+    * literals (a block-diagonal fit passes one (w, grad) block per
+    * class), plus any extra aggregates. The driver unpacks the
+    * symmetric matrix and solves k×k (`newton`). So a fit costs a
+    * fixed number of Spark jobs, independent of data size, and no row
+    * reaches the driver. `yType = "string"` keeps a class label as is. */
+  private def withDesign[A](df: DataFrame, yCol: String, xCols: Seq[String],
+                            domain: Column => Column = _ => F.lit(true),
+                            yType: String = "double")
+                           (body: Design => A): A = {
+    val y = F.col(yCol).cast(yType)
+    val ok = xCols.map(c => valid(F.col(c).cast("double"))).reduce(_ && _) &&
+      (if (yType == "double") valid(y) else y.isNotNull) && domain(y)
+    val clean = df.where(ok)
+      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
+    try body(new Design(clean, y, xCols)) finally clean.unpersist(false)
+  }
+
+  /** The design a fixed-step GLM fit iterates over: the persisted clean
+    * projection, the response `y`, and `feats` = intercept +: features. */
+  private final class Design(val clean: DataFrame, val y: Column,
+                             xCols: Seq[String]) {
+    val feats: Seq[Column] =
+      F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
+    val k: Int = feats.length
+
+    /** β with `b0` as the intercept and zero slopes. */
+    def start(b0: Double): Array[Double] =
+      Array.tabulate(k)(i => if (i == 0) b0 else 0.0)
+
+    /** The linear predictor Σ fᵢ·βᵢ, β folded in as plan literals. */
+    def eta(beta: Array[Double]): Column =
+      feats.zipWithIndex.foldLeft(F.lit(0.0)) {
+        case (acc, (f, i)) => acc + f * beta(i)
+      }
+
+    /** One aggregation of the clean projection. */
+    def agg(cols: Column*): Row = clean.agg(cols.head, cols.tail: _*).head()
+
+    /** One Newton step's aggregation: Σ w·fᵢ·fⱼ and Σ grad(fᵢ). */
+    def step(w: Column, grad: Column => Column,
+             extra: Column*): (Array[Array[Double]], Array[Double], Row) = {
+      val (hs, gs, r) = steps(Seq(w), Seq(grad), extra: _*)
+      (hs.head, gs.head, r)
+    }
+
+    /** Several weights and gradient summands in that one aggregation. */
+    def steps(ws: Seq[Column], grads: Seq[Column => Column], extra: Column*)
+        : (Seq[Array[Array[Double]]], Seq[Array[Double]], Row) =
+      gramStep(clean, feats, ws, grads, extra)
+  }
+
+  /** One aggregation of `frame`: for each weight w the upper triangle of
+    * Σ w·fᵢ·fⱼ, for each gradient summand the k sums Σ grad(fᵢ), then
+    * `extra`. Returns the symmetric matrices, the vectors and the row. */
+  private def gramStep(frame: DataFrame, feats: Seq[Column], ws: Seq[Column],
+                       grads: Seq[Column => Column], extra: Seq[Column])
+      : (Seq[Array[Array[Double]]], Seq[Array[Double]], Row) = {
+    val k = feats.length
+    val cols = ws.indices.flatMap { b =>
+      for { i <- 0 until k; j <- i until k }
+        yield F.sum(ws(b) * feats(i) * feats(j)).as(s"h_${b}_${i}_$j")
+    } ++ grads.indices.flatMap { b =>
+      (0 until k).map(i => F.sum(grads(b)(feats(i))).as(s"g_${b}_$i"))
+    } ++ extra
+    val r = frame.agg(cols.head, cols.tail: _*).head()
+    val hs = ws.indices.map { b =>
+      val h = Array.ofDim[Double](k, k)
+      for { i <- 0 until k; j <- i until k } {
+        h(i)(j) = r.getAs[Double](s"h_${b}_${i}_$j"); h(j)(i) = h(i)(j)
+      }
+      h
+    }
+    (hs, grads.indices.map(b =>
+      Array.tabulate(k)(i => r.getAs[Double](s"g_${b}_$i"))), r)
+  }
+
+  /** The Newton update β + h⁻¹g. */
+  private def newton(beta: Array[Double], h: Array[Array[Double]],
+                     g: Array[Double]): Array[Double] = {
+    val delta = solve(h, g)
+    Array.tabulate(beta.length)(i => beta(i) + delta(i))
+  }
+
   /** A fitted linear model: coefficient vector aligned to
     * `"intercept" +: features`, plus fit diagnostics. */
   final case class LinearModel(features: Seq[String], beta: Array[Double],
                                n: Long, r2: Double) {
     /** The model's prediction as a codegen'd column over `df`'s columns. */
-    def predict: Column =
-      features.zipWithIndex.foldLeft(F.lit(beta(0))) { case (acc, (f, i)) =>
-        acc + F.col(f).cast("double") * beta(i + 1)
-      }
+    def predict: Column = linearPredictor(features, beta)
     def toDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
       import spark.implicits._
       ("intercept" +: features).zip(beta.toSeq).toDF("feature", "coef")
@@ -351,29 +453,18 @@ object Regression {
     val k = xCols.length + 1 // + intercept
     val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
     val y = F.col(yCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    // upper-triangle of XᵀX, then Xᵀy, then Σy, Σy², n
-    val gramCols =
-      (for { i <- 0 until k; j <- i until k }
-        yield F.sum(feats(i) * feats(j)).as(s"g_${i}_$j")) ++
-      (0 until k).map(i => F.sum(feats(i) * y).as(s"xy_$i")) :+
-      F.sum(y).as("sy") :+ F.sum(y * y).as("syy") :+
-      F.count(F.lit(1)).as("n")
-    val r: Row = df.where(ok).agg(gramCols.head, gramCols.tail: _*).head()
+    val ok = (xCols.map(F.col(_).cast("double")) :+ y).map(valid)
+      .reduce(_ && _)
+    // XᵀX and Xᵀy, then Σy, Σy², n
+    val (Seq(xtx), Seq(xty), r) = gramStep(df.where(ok), feats,
+      Seq(F.lit(1.0)), Seq(f => f * y), Seq(F.sum(y).as("sy"),
+        F.sum(y * y).as("syy"), F.count(F.lit(1)).as("n")))
     val n = r.getAs[Long]("n")
     require(n > k, s"need more than $k rows, got $n")
-    val a = Array.ofDim[Double](k, k)
-    for { i <- 0 until k; j <- i until k } {
-      a(i)(j) = r.getAs[Double](s"g_${i}_$j"); a(j)(i) = a(i)(j)
-    }
+    val a = xtx.map(_.clone)
     if (lambda > 0.0) (1 until k).foreach(i => a(i)(i) += lambda)
-    val b = Array.tabulate(k)(i => r.getAs[Double](s"xy_$i"))
-    val beta = solve(a, b)
+    val beta = solve(a, xty)
     // R² from the same pass: SSR = Σy² − 2βᵀXᵀy + βᵀXᵀXβ, SST = Σy² − n·ȳ²
-    val xty = Array.tabulate(k)(i => r.getAs[Double](s"xy_$i"))
-    val xtx = Array.tabulate(k, k)((i, j) =>
-      r.getAs[Double](s"g_${math.min(i, j)}_${math.max(i, j)}"))
     val ssr = r.getAs[Double]("syy") -
       2.0 * dot(beta, xty) + dot(beta, matVec(xtx, beta))
     val sy = r.getAs[Double]("sy")
@@ -386,12 +477,8 @@ object Regression {
   final case class LogisticModel(features: Seq[String], beta: Array[Double],
                                  logLik: Double, n: Long, iterations: Int) {
     /** P(y=1 | x) as a codegen'd column (the quality-scorer surface). */
-    def score: Column = {
-      val z = features.zipWithIndex.foldLeft(F.lit(beta(0))) {
-        case (acc, (f, i)) => acc + F.col(f).cast("double") * beta(i + 1)
-      }
-      F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    }
+    def score: Column =
+      F.lit(1.0) / (F.lit(1.0) + F.exp(-linearPredictor(features, beta)))
   }
 
   /** Logistic regression by IRLS / Newton with a FIXED iteration count.
@@ -412,57 +499,26 @@ object Regression {
                    iters: Int = 6, lambda: Double = 0.0): LogisticModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one IRLS iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(labelCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ labelCol).distinct.map(F.col): _*).persist()
-    var beta = Array.fill(k)(0.0)
-    var n = 0L
-    var it = 0
-    while (it < iters) {
-      val z = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
+    withDesign(df, labelCol, xCols) { d =>
+      val (beta, n) = (0 until iters).foldLeft((d.start(0.0), 0L)) {
+        case ((beta, _), _) =>
+          val p = F.lit(1.0) / (F.lit(1.0) + F.exp(-d.eta(beta)))
+          val (h, g, r) = d.step(p * (F.lit(1.0) - p), f => (d.y - p) * f,
+            F.count(F.lit(1)).as("n"))
+          if (lambda > 0.0) (1 until d.k).foreach { i =>
+            h(i)(i) += lambda; g(i) -= lambda * beta(i)
+          }
+          (newton(beta, h, g), r.getAs[Long]("n"))
       }
-      val p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-      val w = p * (F.lit(1.0) - p)
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(w * feats(i) * feats(j)).as(s"h_${i}_$j")) ++
-        (0 until k).map(i => F.sum((y - p) * feats(i)).as(s"g_$i")) :+
-        F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-      }
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      if (lambda > 0.0) (1 until k).foreach { i =>
-        h(i)(i) += lambda; g(i) -= lambda * beta(i)
-      }
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+      // final log-likelihood at the FINAL β: ll = Σ [y·z − ln(1+eᶻ)],
+      // written with log1p-style guard via the stable two-branch form
+      val zF = d.eta(beta)
+      // ln(1+e^z) = max(z,0) + ln(1+e^{−|z|}) — no overflow either side
+      val softplus = F.greatest(zF, F.lit(0.0)) +
+        F.log(F.lit(1.0) + F.exp(-F.abs(zF)))
+      val ll = d.agg(F.sum(d.y * zF - softplus).as("ll")).getAs[Double]("ll")
+      LogisticModel(xCols, beta, ll, n, iters)
     }
-    // final log-likelihood at the FINAL β: ll = Σ [y·z − ln(1+eᶻ)],
-    // written with log1p-style guard via the stable two-branch form
-    val zF = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-      case (acc, (f, i)) => acc + f * beta(i)
-    }
-    // ln(1+e^z) = max(z,0) + ln(1+e^{−|z|}) — no overflow either side
-    val softplus = F.greatest(zF, F.lit(0.0)) +
-      F.log(F.lit(1.0) + F.exp(-F.abs(zF)))
-    val ll = clean.agg(F.sum(y * zF - softplus).as("ll")).head()
-      .getAs[Double]("ll")
-    clean.unpersist(false)
-    LogisticModel(xCols, beta, ll, n, iters)
   }
 
   /** A fitted multinomial (softmax) logistic model: `classes` sorted
@@ -471,10 +527,7 @@ object Regression {
   final case class SoftmaxModel(features: Seq[String], classes: Seq[String],
                                 beta: Array[Array[Double]], logLik: Double,
                                 n: Long, iterations: Int) {
-    private def z(c: Int): Column =
-      features.zipWithIndex.foldLeft(F.lit(beta(c)(0))) {
-        case (acc, (f, i)) => acc + F.col(f).cast("double") * beta(c)(i + 1)
-      }
+    private def z(c: Int): Column = linearPredictor(features, beta(c))
     /** P(y = classes(c) | x) as a codegen'd column. */
     def score(c: Int): Column = {
       val denom = (0 until classes.length - 1)
@@ -527,90 +580,62 @@ object Regression {
                   iters: Int = 4, lambda: Double = 0.0): SoftmaxModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one Newton iteration")
-    val k = xCols.length + 1
-    val y = F.col(labelCol).cast("string")
-    val ok = (xCols.map(F.col(_).cast("double")))
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) && y.isNotNull
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ labelCol).distinct.map(F.col): _*).persist()
-    val classes = clean.select(y.as("__y")).distinct()
-      .orderBy("__y").collect().map(_.getString(0)).toSeq
-    require(classes.length >= 2, "need at least two classes")
-    require(classes.length <= 16,
-      s"${classes.length} classes: softmaxIrls is a small-K router " +
-        "(<= 16); bucket the label upstream")
-    val kc = classes.length - 1 // non-reference class count
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
-    var beta = Array.fill(kc)(Array.fill(k)(0.0))
-    var n = 0L
-    var it = 0
-    while (it < iters) {
-      val zs = (0 until kc).map(c =>
-        feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-          case (acc, (f, i)) => acc + f * beta(c)(i)
-        })
-      val denom = (0 until kc).foldLeft(F.lit(1.0))(
-        (acc, c) => acc + F.exp(zs(c)))
-      val ps = (0 until kc).map(c => F.exp(zs(c)) / denom)
-      val cols = (0 until kc).flatMap { c =>
-        val w = ps(c) * (F.lit(1.0) - ps(c))
-        val yc = (y === classes(c)).cast("double")
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(w * feats(i) * feats(j)).as(s"h_${c}_${i}_$j")) ++
-          (0 until k).map(i =>
-            F.sum((yc - ps(c)) * feats(i)).as(s"g_${c}_$i"))
-      } :+ F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      beta = Array.tabulate(kc) { c =>
-        val h = Array.ofDim[Double](k, k)
-        for { i <- 0 until k; j <- i until k } {
-          h(i)(j) = r.getAs[Double](s"h_${c}_${i}_$j"); h(j)(i) = h(i)(j)
+    withDesign(df, labelCol, xCols, yType = "string") { d =>
+      val classes = d.clean.select(d.y.as("__y")).distinct()
+        .orderBy("__y").collect().map(_.getString(0)).toSeq
+      require(classes.length >= 2, "need at least two classes")
+      require(classes.length <= 16,
+        s"${classes.length} classes: softmaxIrls is a small-K router " +
+          "(<= 16); bucket the label upstream")
+      val kc = classes.length - 1 // non-reference class count
+      def r6(x: Double) = math.rint(x * 1e6) / 1e6
+      def finite(v: Double) = !v.isNaN && !v.isInfinite
+      def denomOf(zs: Seq[Column]) =
+        zs.foldLeft(F.lit(1.0))((acc, z) => acc + F.exp(z))
+      val (beta, n) =
+        (0 until iters).foldLeft((Array.fill(kc)(d.start(0.0)), 0L)) {
+          case ((beta, _), it) =>
+            val zs = beta.toSeq.map(d.eta)
+            val denom = denomOf(zs)
+            val ps = zs.map(z => F.exp(z) / denom)
+            val (hs, gs, r) = d.steps(ps.map(p => p * (F.lit(1.0) - p)),
+              (0 until kc).map { c =>
+                val yc = (d.y === classes(c)).cast("double")
+                (f: Column) => (yc - ps(c)) * f
+              }, F.count(F.lit(1)).as("n"))
+            (Array.tabulate(kc) { c =>
+              val (h, g) = (hs(c), gs(c))
+              if (lambda > 0.0) (1 until d.k).foreach { i =>
+                h(i)(i) += lambda; g(i) -= lambda * beta(c)(i)
+              }
+              // enforce the bounded-feature contract loudly:
+              // unstandardized features overflow exp()/x² → Inf/NaN
+              // sufficient statistics → NaN β that would otherwise ride
+              // silently through the remaining fixed Newton steps
+              require(h.forall(_.forall(finite)) && g.forall(finite),
+                s"softmaxIrls hit a non-finite Gram/gradient for class " +
+                  s"'${classes(c)}' at iteration ${it + 1} — the linear " +
+                  "predictor overflowed exp() (or x² overflowed); " +
+                  "standardize or bound the features upstream (the " +
+                  "documented contract)")
+              val nb = newton(beta(c), h, g).map(r6)
+              require(nb.forall(finite),
+                s"softmaxIrls produced a non-finite beta for class " +
+                  s"'${classes(c)}' at iteration ${it + 1}; standardize " +
+                  "or bound the features upstream (the documented " +
+                  "contract)")
+              nb
+            }, r.getAs[Long]("n"))
         }
-        val g = Array.tabulate(k)(i => r.getAs[Double](s"g_${c}_$i"))
-        if (lambda > 0.0) (1 until k).foreach { i =>
-          h(i)(i) += lambda; g(i) -= lambda * beta(c)(i)
-        }
-        // enforce the bounded-feature contract loudly: unstandardized
-        // features overflow exp()/x² → Inf/NaN sufficient statistics →
-        // NaN β that would otherwise ride silently through the
-        // remaining fixed Newton steps
-        def finite(v: Double) = !v.isNaN && !v.isInfinite
-        require(h.forall(_.forall(finite)) && g.forall(finite),
-          s"softmaxIrls hit a non-finite Gram/gradient for class " +
-            s"'${classes(c)}' at iteration ${it + 1} — the linear " +
-            "predictor overflowed exp() (or x² overflowed); " +
-            "standardize or bound the features upstream (the " +
-            "documented contract)")
-        val delta = solve(h, g)
-        val nb = Array.tabulate(k)(i => r6(beta(c)(i) + delta(i)))
-        require(nb.forall(finite),
-          s"softmaxIrls produced a non-finite beta for class " +
-            s"'${classes(c)}' at iteration ${it + 1}; standardize or " +
-            "bound the features upstream (the documented contract)")
-        nb
-      }
-      it += 1
+      // final multinomial log-likelihood at the final rounded β:
+      // ll = Σ [z_y − ln(1 + Σ_c exp(z_c))], z_ref ≡ 0
+      val zsF = beta.toSeq.map(d.eta)
+      val zy = (0 until kc).foldLeft(F.lit(0.0))((acc, c) =>
+        acc + F.when(d.y === classes(c), zsF(c)).otherwise(F.lit(0.0)))
+      val ll = d.agg(F.sum(zy - F.log(denomOf(zsF))).as("ll"))
+        .getAs[Double]("ll")
+      SoftmaxModel(xCols, classes, beta, ll, n, iters)
     }
-    // final multinomial log-likelihood at the final rounded β:
-    // ll = Σ [z_y − ln(1 + Σ_c exp(z_c))], z_ref ≡ 0
-    val zsF = (0 until kc).map(c =>
-      feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(c)(i)
-      })
-    val denomF = (0 until kc).foldLeft(F.lit(1.0))(
-      (acc, c) => acc + F.exp(zsF(c)))
-    val zy = (0 until kc).foldLeft(F.lit(0.0))((acc, c) =>
-      acc + F.when(y === classes(c), zsF(c)).otherwise(F.lit(0.0)))
-    val ll = clean.agg(F.sum(zy - F.log(denomF)).as("ll")).head()
-      .getAs[Double]("ll")
-    clean.unpersist(false)
-    SoftmaxModel(xCols, classes, beta, ll, n, iters)
   }
 
   /** PRESS and leave-one-out cross-validation for simple regression —
@@ -675,10 +700,7 @@ object Regression {
   final case class HuberModel(features: Seq[String], beta: Array[Double],
                               n: Long, iterations: Int, delta: Double) {
     /** The model's prediction as a codegen'd column over `df`'s columns. */
-    def predict: Column =
-      features.zipWithIndex.foldLeft(F.lit(beta(0))) { case (acc, (f, i)) =>
-        acc + F.col(f).cast("double") * beta(i + 1)
-      }
+    def predict: Column = linearPredictor(features, beta)
   }
 
   /** Huber robust linear regression by IRLS with a FIXED iteration
@@ -704,49 +726,32 @@ object Regression {
     require(xCols.nonEmpty, "need at least one feature")
     require(delta > 0.0, "delta must be positive")
     require(iters >= 1, "need at least one iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(yCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
-    var beta: Array[Double] = null
-    var n = 0L
-    var it = 0
-    while (it < iters) {
-      val w: Column =
-        if (beta == null) F.lit(1.0)
-        else {
-          val pred = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-            case (acc, (f, i)) => acc + f * beta(i)
-          }
-          val r = F.abs(y - pred)
-          F.when(r <= delta, F.lit(1.0)).otherwise(F.lit(delta) / r)
-        }
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(w * feats(i) * feats(j)).as(s"g_${i}_$j")) ++
-        (0 until k).map(i => F.sum(w * feats(i) * y).as(s"xy_$i")) :+
-        F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      require(n > k, s"need more than $k rows, got $n")
-      val a = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        a(i)(j) = r.getAs[Double](s"g_${i}_$j"); a(j)(i) = a(i)(j)
-      }
-      val b = Array.tabulate(k)(i => r.getAs[Double](s"xy_$i"))
-      beta = solve(a, b)
-      it += 1
+    val (beta, n) = reweighted(df, yCol, xCols, iters, identity) { res =>
+      val r = F.abs(res)
+      F.when(r <= delta, F.lit(1.0)).otherwise(F.lit(delta) / r)
     }
-    clean.unpersist(false)
     HuberModel(xCols, beta, n, iters, delta)
   }
+
+  /** Iteratively reweighted least squares with `iters` fixed passes:
+    * pass 1 is OLS, each further pass solves the weighted normal
+    * equations Σ w·fᵢ·fⱼ · β = Σ w·fᵢ·y with w = `weight(y − η)` at the
+    * previous β, and `round`s the solution. Returns β and n. */
+  private def reweighted(df: DataFrame, yCol: String, xCols: Seq[String],
+                         iters: Int, round: Double => Double)
+                        (weight: Column => Column): (Array[Double], Long) =
+    withDesign(df, yCol, xCols) { d =>
+      val (beta, n) = (0 until iters)
+        .foldLeft((Option.empty[Array[Double]], 0L)) { case ((prev, _), _) =>
+          val w = prev.fold(F.lit(1.0))(b => weight(d.y - d.eta(b)))
+          val (a, xy, r) = d.step(w, f => w * f * d.y,
+            F.count(F.lit(1)).as("n"))
+          val n = r.getAs[Long]("n")
+          require(n > d.k, s"need more than ${d.k} rows, got $n")
+          (Some(solve(a, xy).map(round)), n)
+        }
+      (beta.get, n)
+    }
 
   /** A fitted quantile (pinball-loss) linear model: β aligned to
     * `"intercept" +: features`, the target quantile, row count, fixed
@@ -755,10 +760,7 @@ object Regression {
                                  tau: Double, n: Long, iterations: Int,
                                  eps: Double) {
     /** The conditional-quantile prediction as a codegen'd column. */
-    def predict: Column =
-      features.zipWithIndex.foldLeft(F.lit(beta(0))) { case (acc, (f, i)) =>
-        acc + F.col(f).cast("double") * beta(i + 1)
-      }
+    def predict: Column = linearPredictor(features, beta)
   }
 
   /** TRUE quantile regression over continuous covariates — pinball
@@ -788,49 +790,11 @@ object Regression {
     require(tau > 0.0 && tau < 1.0, "tau must be in (0,1)")
     require(eps > 0.0, "eps must be positive")
     require(iters >= 1, "need at least one iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(yCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
-    var beta: Array[Double] = null
-    var n = 0L
-    var it = 0
-    while (it < iters) {
-      val w: Column =
-        if (beta == null) F.lit(1.0)
-        else {
-          val pred = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-            case (acc, (f, i)) => acc + f * beta(i)
-          }
-          val r = y - pred
-          F.when(r >= 0.0, F.lit(tau)).otherwise(F.lit(1.0 - tau)) /
-            F.greatest(F.abs(r), F.lit(eps))
-        }
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(w * feats(i) * feats(j)).as(s"g_${i}_$j")) ++
-        (0 until k).map(i => F.sum(w * feats(i) * y).as(s"xy_$i")) :+
-        F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      require(n > k, s"need more than $k rows, got $n")
-      val a = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        a(i)(j) = r.getAs[Double](s"g_${i}_$j"); a(j)(i) = a(i)(j)
-      }
-      val b = Array.tabulate(k)(i => r.getAs[Double](s"xy_$i"))
-      beta = solve(a, b).map(r6)
-      it += 1
+    val (beta, n) = reweighted(df, yCol, xCols, iters,
+        x => math.rint(x * 1e6) / 1e6) { r =>
+      F.when(r >= 0.0, F.lit(tau)).otherwise(F.lit(1.0 - tau)) /
+        F.greatest(F.abs(r), F.lit(eps))
     }
-    clean.unpersist(false)
     QuantileModel(xCols, beta, tau, n, iters, eps)
   }
 
@@ -903,23 +867,13 @@ object Regression {
       F.col("n"), F.lit(tau).as("tau")): _*)
   }
 
-  // --- small dense linear algebra (k ≤ ~dozens; driver-side only) ---
-
-  /** Gaussian elimination with partial pivoting; mutates copies.
-    * Singularity is judged against the input's magnitude (an exactly
-    * collinear Gram matrix eliminates to ~1e-10 pivots, not 0.0). */
   /** A fitted Poisson model: β aligned to `"intercept" +: features`,
     * final-β log-likelihood (including the −ln y! data term), row count
     * and the fixed iteration count. */
   final case class PoissonModel(features: Seq[String], beta: Array[Double],
                                 logLik: Double, n: Long, iterations: Int) {
     /** Expected count E[y|x] = exp(xᵀβ) as a codegen'd column. */
-    def predictRate: Column = {
-      val z = features.zipWithIndex.foldLeft(F.lit(beta(0))) {
-        case (acc, (f, i)) => acc + F.col(f).cast("double") * beta(i + 1)
-      }
-      F.exp(z)
-    }
+    def predictRate: Column = F.exp(linearPredictor(features, beta))
   }
 
   /** Poisson regression (log link) by Newton/IRLS with a FIXED
@@ -946,57 +900,32 @@ object Regression {
                   iters: Int = 4): PoissonModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one Newton iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(countCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) && y >= 0.0
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ countCol).distinct.map(F.col): _*).persist()
-    val meanY = clean.agg(F.avg(y)).head().getDouble(0)
+    withDesign(df, countCol, xCols, _ >= 0.0) { d =>
+      val (beta, n) = poissonSteps(d, iters)
+      val zF = d.eta(beta)
+      // lgamma(y+1) = ln y! — finite for any y ≥ 0 (fractional
+      // included); same JVM-lgamma-per-ROW convention as GroupedFit's
+      // Poisson loglik (the UDF touches the data once, in the single
+      // final pass)
+      val lgUdf = F.udf((v: Double) => graft.functions.SpecialMath.lgamma(v))
+      val ll = d.agg(F.sum(d.y * zF - F.exp(zF) -
+        lgUdf(d.y + F.lit(1.0))).as("ll")).getAs[Double]("ll")
+      PoissonModel(xCols, beta, ll, n, iters)
+    }
+  }
+
+  /** `iters` Poisson Newton steps (W = diag μ) from the ln ȳ warm start;
+    * returns β and n. */
+  private def poissonSteps(d: Design, iters: Int): (Array[Double], Long) = {
+    val meanY = d.agg(F.avg(d.y)).getDouble(0)
     require(meanY > 0.0, "mean response must be positive for a log link")
-    val beta0 = Array.fill(k)(0.0)
-    beta0(0) = math.log(meanY)
-    var beta = beta0
-    var n = 0L
-    var it = 0
-    while (it < iters) {
-      val z = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
-      }
-      val mu = F.exp(z)
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(mu * feats(i) * feats(j)).as(s"h_${i}_$j")) ++
-        (0 until k).map(i => F.sum((y - mu) * feats(i)).as(s"g_$i")) :+
-        F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-      }
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+    (0 until iters).foldLeft((d.start(math.log(meanY)), 0L)) {
+      case ((beta, _), _) =>
+        val mu = F.exp(d.eta(beta))
+        val (h, g, r) = d.step(mu, f => (d.y - mu) * f,
+          F.count(F.lit(1)).as("n"))
+        (newton(beta, h, g), r.getAs[Long]("n"))
     }
-    val zF = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-      case (acc, (f, i)) => acc + f * beta(i)
-    }
-    // lgamma(y+1) = ln y! — finite for any y ≥ 0 (fractional included);
-    // same JVM-lgamma-per-ROW convention as GroupedFit's Poisson loglik
-    // (the UDF touches the data once, in the single final pass)
-    val lgUdf = F.udf((v: Double) => graft.functions.SpecialMath.lgamma(v))
-    val ll = clean.agg(F.sum(y * zF - F.exp(zF) -
-      lgUdf(y + F.lit(1.0))).as("ll"))
-      .head().getAs[Double]("ll")
-    clean.unpersist(false)
-    PoissonModel(xCols, beta, ll, n, iters)
   }
 
   /** A fitted gamma GLM (log link): β aligned to
@@ -1006,12 +935,7 @@ object Regression {
                               deviance: Double, dispersion: Double,
                               n: Long, iterations: Int) {
     /** Expected response E[y|x] = exp(xᵀβ) as a codegen'd column. */
-    def predictMean: Column = {
-      val z = features.zipWithIndex.foldLeft(F.lit(beta(0))) {
-        case (acc, (f, i)) => acc + F.col(f).cast("double") * beta(i + 1)
-      }
-      F.exp(z)
-    }
+    def predictMean: Column = F.exp(linearPredictor(features, beta))
   }
 
   /** Gamma regression (log link) by Fisher scoring with a FIXED
@@ -1039,57 +963,29 @@ object Regression {
                 iters: Int = 4): GammaModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one scoring iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(yCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) && y > 0.0
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
-    // constant Gram + the warm start in ONE pass
-    val gramCols =
-      (for { i <- 0 until k; j <- i until k }
-        yield F.sum(feats(i) * feats(j)).as(s"h_${i}_$j")) ++
-      Seq(F.avg(y).as("ybar"), F.count(F.lit(1)).as("n"))
-    val gr = clean.agg(gramCols.head, gramCols.tail: _*).head()
-    val n = gr.getAs[Long]("n")
-    val meanY = gr.getAs[Double]("ybar")
-    require(n > k && meanY > 0.0, "need n > k positive responses")
-    val h = Array.ofDim[Double](k, k)
-    for { i <- 0 until k; j <- i until k } {
-      h(i)(j) = gr.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-    }
-    var beta = Array.fill(k)(0.0)
-    beta(0) = math.log(meanY)
-    var it = 0
-    while (it < iters) {
-      val z = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
+    withDesign(df, yCol, xCols, _ > 0.0) { d =>
+      val (k, y) = (d.k, d.y)
+      // constant Gram + the warm start in ONE pass
+      val (Seq(h), _, gr) = d.steps(Seq(F.lit(1.0)), Nil,
+        F.avg(y).as("ybar"), F.count(F.lit(1)).as("n"))
+      val n = gr.getAs[Long]("n")
+      val meanY = gr.getAs[Double]("ybar")
+      require(n > k && meanY > 0.0, "need n > k positive responses")
+      val beta = (0 until iters).foldLeft(d.start(math.log(meanY))) {
+        (beta, _) =>
+          val mu = F.exp(d.eta(beta))
+          val gCols = (0 until k).map(i =>
+            F.sum((y / mu - 1.0) * d.feats(i)).as(s"g_$i"))
+          val r = d.agg(gCols: _*)
+          newton(beta, h, Array.tabulate(k)(i => r.getAs[Double](s"g_$i")))
       }
-      val mu = F.exp(z)
-      val gCols = (0 until k).map(i =>
-        F.sum((y / mu - 1.0) * feats(i)).as(s"g_$i"))
-      val r = clean.agg(gCols.head, gCols.tail: _*).head()
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+      val muF = F.exp(d.eta(beta))
+      val fin = d.agg(
+        F.sum(F.lit(2.0) * (-F.log(y / muF) + (y - muF) / muF)).as("dev"),
+        F.sum(((y - muF) / muF) * ((y - muF) / muF)).as("pearson"))
+      GammaModel(xCols, beta, fin.getAs[Double]("dev"),
+        fin.getAs[Double]("pearson") / (n - k), n, iters)
     }
-    val zF = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-      case (acc, (f, i)) => acc + f * beta(i)
-    }
-    val muF = F.exp(zF)
-    val fin = clean.agg(
-      F.sum(F.lit(2.0) * (-F.log(y / muF) + (y - muF) / muF)).as("dev"),
-      F.sum(((y - muF) / muF) * ((y - muF) / muF)).as("pearson"))
-      .head()
-    clean.unpersist(false)
-    GammaModel(xCols, beta, fin.getAs[Double]("dev"),
-      fin.getAs[Double]("pearson") / (n - k), n, iters)
   }
 
   /** A fitted negative-binomial (NB2) GLM: β aligned to
@@ -1099,12 +995,7 @@ object Regression {
                                alpha: Double, logLik: Double, n: Long,
                                poissonIters: Int, iterations: Int) {
     /** Expected response E[y|x] = exp(xᵀβ) as a codegen'd column. */
-    def predictMean: Column = {
-      val z = features.zipWithIndex.foldLeft(F.lit(beta(0))) {
-        case (acc, (f, i)) => acc + F.col(f).cast("double") * beta(i + 1)
-      }
-      F.exp(z)
-    }
+    def predictMean: Column = F.exp(linearPredictor(features, beta))
   }
 
   /** Negative-binomial (NB2) regression with log link — the rung the
@@ -1142,85 +1033,38 @@ object Regression {
     require(xCols.nonEmpty, "need at least one feature")
     require(poissonIters >= 1 && iters >= 1,
       "need at least one iteration in each stage")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(countCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) && y >= 0.0
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ countCol).distinct.map(F.col): _*).persist()
-    val meanY = clean.agg(F.avg(y)).head().getDouble(0)
-    require(meanY > 0.0, "mean response must be positive for a log link")
-    def zOf(beta: Array[Double]): Column =
-      feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
+    withDesign(df, countCol, xCols, _ >= 0.0) { d =>
+      val y = d.y
+      // stage 1: Poisson warm start (W = μ)
+      val (betaP, n) = poissonSteps(d, poissonIters)
+      // stage 2: α by MoM at the Poisson fit, then FIXED
+      val muP = F.exp(d.eta(betaP))
+      val ar = d.agg(
+        F.sum((y - muP) * (y - muP) - muP).as("num"),
+        F.sum(muP * muP).as("den"))
+      val alpha = math.max(ar.getAs[Double]("num") /
+        ar.getAs[Double]("den"), 1e-6)
+      // stage 3: NB2 Fisher scoring, w = μ/(1+αμ)
+      val beta = (0 until iters).foldLeft(betaP) { (beta, _) =>
+        val mu = F.exp(d.eta(beta))
+        val gw = (y - mu) / (F.lit(1.0) + F.lit(alpha) * mu)
+        val (h, g, _) = d.step(mu / (F.lit(1.0) + F.lit(alpha) * mu),
+          f => gw * f)
+        newton(beta, h, g)
       }
-    var beta = Array.fill(k)(0.0); beta(0) = math.log(meanY)
-    var n = 0L
-    // stage 1: Poisson warm start (W = μ)
-    var it = 0
-    while (it < poissonIters) {
-      val mu = F.exp(zOf(beta))
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(mu * feats(i) * feats(j)).as(s"h_${i}_$j")) ++
-        (0 until k).map(i => F.sum((y - mu) * feats(i)).as(s"g_$i")) :+
-        F.count(F.lit(1)).as("n")
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      n = r.getAs[Long]("n")
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-      }
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+      // final pass: NB2 log-likelihood at (β, α); lgamma per ROW via the
+      // shared JVM kernel (the poissonIrls convention), constants folded
+      val rPar = 1.0 / alpha
+      val lgR = graft.functions.SpecialMath.lgamma(rPar)
+      val lgUdf = F.udf((v: Double) => graft.functions.SpecialMath.lgamma(v))
+      val muF = F.exp(d.eta(beta))
+      val ll = d.agg(F.sum(
+        lgUdf(y + F.lit(rPar)) - F.lit(lgR) - lgUdf(y + F.lit(1.0)) +
+          F.lit(rPar) * (F.lit(math.log(rPar)) - F.log(F.lit(rPar) + muF)) +
+          y * (F.log(muF) - F.log(F.lit(rPar) + muF))).as("ll"))
+        .getAs[Double]("ll")
+      NbinomModel(xCols, beta, alpha, ll, n, poissonIters, iters)
     }
-    // stage 2: α by MoM at the Poisson fit, then FIXED
-    val muP = F.exp(zOf(beta))
-    val ar = clean.agg(
-      F.sum((y - muP) * (y - muP) - muP).as("num"),
-      F.sum(muP * muP).as("den")).head()
-    val alpha = math.max(ar.getAs[Double]("num") /
-      ar.getAs[Double]("den"), 1e-6)
-    // stage 3: NB2 Fisher scoring, w = μ/(1+αμ)
-    it = 0
-    while (it < iters) {
-      val mu = F.exp(zOf(beta))
-      val w = mu / (F.lit(1.0) + F.lit(alpha) * mu)
-      val gw = (y - mu) / (F.lit(1.0) + F.lit(alpha) * mu)
-      val cols =
-        (for { i <- 0 until k; j <- i until k }
-          yield F.sum(w * feats(i) * feats(j)).as(s"h_${i}_$j")) ++
-        (0 until k).map(i => F.sum(gw * feats(i)).as(s"g_$i"))
-      val r = clean.agg(cols.head, cols.tail: _*).head()
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-      }
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
-    }
-    // final pass: NB2 log-likelihood at (β, α); lgamma per ROW via the
-    // shared JVM kernel (the poissonIrls convention), constants folded
-    val rPar = 1.0 / alpha
-    val lgR = graft.functions.SpecialMath.lgamma(rPar)
-    val lgUdf = F.udf((v: Double) => graft.functions.SpecialMath.lgamma(v))
-    val muF = F.exp(zOf(beta))
-    val ll = clean.agg(F.sum(
-      lgUdf(y + F.lit(rPar)) - F.lit(lgR) - lgUdf(y + F.lit(1.0)) +
-        F.lit(rPar) * (F.lit(math.log(rPar)) - F.log(F.lit(rPar) + muF)) +
-        y * (F.log(muF) - F.log(F.lit(rPar) + muF))).as("ll"))
-      .head().getAs[Double]("ll")
-    clean.unpersist(false)
-    NbinomModel(xCols, beta, alpha, ll, n, poissonIters, iters)
   }
 
   /** Conditional-quantile trend ("p90 latency vs load") — the
@@ -2074,6 +1918,11 @@ object Regression {
     }
   }
 
+  // --- small dense linear algebra (k ≤ ~dozens; driver-side only) ---
+
+  /** Gaussian elimination with partial pivoting; mutates copies.
+    * Singularity is judged against the input's magnitude (an exactly
+    * collinear Gram matrix eliminates to ~1e-10 pivots, not 0.0). */
   private[graft] def solve(aIn: Array[Array[Double]],
                            bIn: Array[Double]): Array[Double] = {
     val k = bIn.length
@@ -2159,59 +2008,28 @@ object Regression {
                   iters: Int = 3): TweedieModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one scoring iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(yCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) && y >= 0.0
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
-    val warm = clean.agg(F.avg(y).as("ybar"),
-      F.count(F.lit(1)).as("n")).head()
-    val n = warm.getAs[Long]("n")
-    val meanY = warm.getAs[Double]("ybar")
-    require(n > k && meanY > 0.0, "need n > k and a positive mean")
-    var beta = Array.fill(k)(0.0)
-    beta(0) = math.log(meanY)
-    var it = 0
-    while (it < iters) {
-      val eta = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
+    withDesign(df, yCol, xCols, _ >= 0.0) { d =>
+      val (k, y) = (d.k, d.y)
+      val warm = d.agg(F.avg(y).as("ybar"), F.count(F.lit(1)).as("n"))
+      val n = warm.getAs[Long]("n")
+      val meanY = warm.getAs[Double]("ybar")
+      require(n > k && meanY > 0.0, "need n > k and a positive mean")
+      val beta = (0 until iters).foldLeft(d.start(math.log(meanY))) {
+        (beta, _) =>
+          val mu = F.exp(d.eta(beta))
+          val (h, g, _) = d.step(F.sqrt(mu), f => (y - mu) / F.sqrt(mu) * f)
+          newton(beta, h, g)
       }
-      val mu = F.exp(eta)
-      val gCols = (0 until k).map(i =>
-        F.sum((y - mu) / F.sqrt(mu) * feats(i)).as(s"g_$i"))
-      val hCols = for { i <- 0 until k; j <- i until k }
-        yield F.sum(F.sqrt(mu) * feats(i) * feats(j)).as(s"h_${i}_$j")
-      val r = clean.agg((gCols ++ hCols).head,
-        (gCols ++ hCols).tail: _*).head()
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
-      }
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+      val muF = F.exp(d.eta(beta))
+      val fin = d.agg(
+        F.sum(F.lit(2.0) * (F.lit(-4.0) * F.sqrt(y) +
+          F.lit(2.0) * y / F.sqrt(muF) + F.lit(2.0) * F.sqrt(muF)))
+          .as("dev"),
+        F.sum((y - muF) * (y - muF) /
+          (muF * F.sqrt(muF))).as("pearson"))
+      TweedieModel(xCols, beta, 1.5, fin.getAs[Double]("dev"),
+        fin.getAs[Double]("pearson") / (n - k), n, iters)
     }
-    val etaF = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-      case (acc, (f, i)) => acc + f * beta(i)
-    }
-    val muF = F.exp(etaF)
-    val fin = clean.agg(
-      F.sum(F.lit(2.0) * (F.lit(-4.0) * F.sqrt(y) +
-        F.lit(2.0) * y / F.sqrt(muF) + F.lit(2.0) * F.sqrt(muF)))
-        .as("dev"),
-      F.sum((y - muF) * (y - muF) /
-        (muF * F.sqrt(muF))).as("pearson"))
-      .head()
-    clean.unpersist(false)
-    TweedieModel(xCols, beta, 1.5, fin.getAs[Double]("dev"),
-      fin.getAs[Double]("pearson") / (n - k), n, iters)
   }
 
   /** Two-feature ridge path — [[olsByGroup2]] with an L2 penalty on the
@@ -2349,63 +2167,33 @@ object Regression {
                  iters: Int = 3): ProbitModel = {
     require(xCols.nonEmpty, "need at least one feature")
     require(iters >= 1, "need at least one scoring iteration")
-    val k = xCols.length + 1
-    val feats = F.lit(1.0) +: xCols.map(c => F.col(c).cast("double"))
-    val y = F.col(labelCol).cast("double")
-    val ok = (xCols.map(F.col(_).cast("double")) :+ y)
-      .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _) &&
-      (y === 0.0 || y === 1.0)
-    // every fixed round (plus warm-start/loglik passes) re-aggregates
-    // this same narrow projection; persist it once so each pass after
-    // the first reads the columnar cache instead of re-running the scan
-    // and any upstream exchange (opt guide §5). Released before return.
-    val clean = df.where(ok)
-      .select((xCols :+ labelCol).distinct.map(F.col): _*).persist()
-    val n = clean.count()
-    require(n > k, "need n > k labeled rows")
-    val muUdf = F.udf((eta: Double) =>
-      0.5 * graft.functions.SpecialMath.erfc(-eta / math.sqrt(2.0)))
-    val invSqrt2Pi = 0.3989422804014327
-    def muPhi(eta: Column): (Column, Column) = {
-      val mu = F.least(F.greatest(muUdf(eta), F.lit(1e-10)),
-        F.lit(1.0 - 1e-10))
-      val phi = F.exp(eta * eta * F.lit(-0.5)) * F.lit(invSqrt2Pi)
-      (mu, phi)
-    }
-    var beta = Array.fill(k)(0.0)
-    var it = 0
-    while (it < iters) {
-      val eta = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-        case (acc, (f, i)) => acc + f * beta(i)
+    withDesign(df, labelCol, xCols, y => y === 0.0 || y === 1.0) { d =>
+      val y = d.y
+      val n = d.clean.count()
+      require(n > d.k, "need n > k labeled rows")
+      val muUdf = F.udf((eta: Double) =>
+        0.5 * graft.functions.SpecialMath.erfc(-eta / math.sqrt(2.0)))
+      val invSqrt2Pi = 0.3989422804014327
+      def muPhi(eta: Column): (Column, Column) = {
+        val mu = F.least(F.greatest(muUdf(eta), F.lit(1e-10)),
+          F.lit(1.0 - 1e-10))
+        val phi = F.exp(eta * eta * F.lit(-0.5)) * F.lit(invSqrt2Pi)
+        (mu, phi)
       }
-      val (mu, phi) = muPhi(eta)
-      val v = mu * (F.lit(1.0) - mu)
-      val gCols = (0 until k).map(i =>
-        F.sum((y - mu) * phi / v * feats(i)).as(s"g_$i"))
-      val hCols = for { i <- 0 until k; j <- i until k }
-        yield F.sum(phi * phi / v * feats(i) * feats(j)).as(s"h_${i}_$j")
-      val r = clean.agg((gCols ++ hCols).head,
-        (gCols ++ hCols).tail: _*).head()
-      val g = Array.tabulate(k)(i => r.getAs[Double](s"g_$i"))
-      val h = Array.ofDim[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        h(i)(j) = r.getAs[Double](s"h_${i}_$j"); h(j)(i) = h(i)(j)
+      val beta = (0 until iters).foldLeft(d.start(0.0)) { (beta, _) =>
+        val (mu, phi) = muPhi(d.eta(beta))
+        val v = mu * (F.lit(1.0) - mu)
+        val (h, g, _) = d.step(phi * phi / v, f => (y - mu) * phi / v * f)
+        newton(beta, h, g)
       }
-      val delta = solve(h, g)
-      beta = Array.tabulate(k)(i => beta(i) + delta(i))
-      it += 1
+      val (muF, _) = muPhi(d.eta(beta))
+      val fin = d.agg(
+        F.sum(y * F.log(muF) +
+          (F.lit(1.0) - y) * F.log(F.lit(1.0) - muF)).as("ll"),
+        F.sum((y - muF) * (y - muF)).as("sq"))
+      ProbitModel(xCols, beta, fin.getAs[Double]("ll"),
+        fin.getAs[Double]("sq") / n, n, iters)
     }
-    val etaF = feats.zipWithIndex.foldLeft(F.lit(0.0)) {
-      case (acc, (f, i)) => acc + f * beta(i)
-    }
-    val (muF, _) = muPhi(etaF)
-    val fin = clean.agg(
-      F.sum(y * F.log(muF) +
-        (F.lit(1.0) - y) * F.log(F.lit(1.0) - muF)).as("ll"),
-      F.sum((y - muF) * (y - muF)).as("sq")).head()
-    clean.unpersist(false)
-    ProbitModel(xCols, beta, fin.getAs[Double]("ll"),
-      fin.getAs[Double]("sq") / n, n, iters)
   }
 
   /** Two-feature lasso path by exact coordinate descent on SUFFICIENT

@@ -523,7 +523,6 @@ object Survival {
     val gCols = groupCols.map(F.col)
     val km = kmByGroup(df, durationCol, eventCol, groupCols)
       .select(gCols :+ F.col("t") :+ F.col("survival"): _*)
-      .persist()
     val anchorDf = anchors.toDF("anchor")
     val grid = km.select(gCols: _*).distinct()
       .crossJoin(F.broadcast(anchorDf))
@@ -538,9 +537,7 @@ object Survival {
           F.lit(1.0)).as(out))
     val sA = asOf(F.col("anchor"), "s_anchor")
     val sH = asOf(F.col("anchor") + horizon, "s_horizon")
-    val joined = sA.join(sH, groupCols :+ "anchor")
-    km.unpersist(blocking = false)
-    joined
+    sA.join(sH, groupCols :+ "anchor")
       .select(gCols ++ Seq(F.col("anchor"),
         F.col("s_anchor"), F.col("s_horizon"),
         F.when(F.col("s_anchor") > 0.0,
@@ -1286,74 +1283,74 @@ object Survival {
       .select(F.log(t).as("__lt"), x.as("__x"),
         F.when(e, 1.0).otherwise(0.0).as("__d"))
       // the warm-start pass + `iters` Newton rounds all aggregate this
-      // 3-column projection; persist once, release before return
-      // (opt guide §5)
+      // 3-column projection; persist once, release in `finally`
       .persist()
-    def r6(v: Double) = math.rint(v * 1e6) / 1e6 + 0.0
-    // warm start: OLS of ln t on x over uncensored rows
-    val init = clean.agg(
-      F.count(F.lit(1)).as("n"),
-      F.sum("__d").as("nev"),
-      F.sum("__x").as("sxa"),
-      F.sum(F.col("__d") * F.col("__x")).as("sx"),
-      F.sum(F.col("__d") * F.col("__x") * F.col("__x")).as("sxx"),
-      F.sum(F.col("__d") * F.col("__lt")).as("sy"),
-      F.sum(F.col("__d") * F.col("__x") * F.col("__lt")).as("sxy"),
-      F.sum(F.col("__d") * F.col("__lt") * F.col("__lt")).as("syy"))
-      .head()
-    val n = init.getAs[Long]("n")
-    val nev = init.getAs[Double]("nev")
-    require(n >= 8L && nev >= 5.0,
-      s"need n >= 8 rows and >= 5 events, got n=$n events=$nev")
-    val sx = init.getAs[Double]("sx"); val sxx = init.getAs[Double]("sxx")
-    val sy = init.getAs[Double]("sy"); val sxy = init.getAs[Double]("sxy")
-    val syy = init.getAs[Double]("syy")
-    val det0 = nev * sxx - sx * sx
-    require(det0 > 0.0, "constant covariate among events — no OLS start")
-    var bb = r6((nev * sxy - sx * sy) / det0)
-    var mu = r6((sy * sxx - sx * sxy) / det0)
-    val mse = (syy - mu * sy - bb * sxy) / nev
-    require(mse > 0.0, "zero residual variance in the OLS start")
-    // Gumbel moment: Var(ln t) = sigma^2 * pi^2 / 6
-    var sg = r6(math.sqrt(mse * 6.0) / math.Pi)
-    val xbar = init.getAs[Double]("sxa") / n
-    var it = 0
-    while (it < iters) {
-      val w = (F.col("__lt") - F.lit(mu) - F.lit(bb) * F.col("__x")) /
-        F.lit(sg)
-      val z = F.exp(w)
-      val r = clean.agg(
-        F.sum(z).as("a1"),
-        F.sum(z * F.col("__x")).as("a2"),
-        F.sum(z * F.col("__x") * F.col("__x")).as("a3"),
-        F.sum(z - F.col("__d")).as("g1"),
-        F.sum((z - F.col("__d")) * F.col("__x")).as("g2"),
-        F.sum(w * (z - F.col("__d"))).as("u3"),
-        F.sum(w * w * z).as("i3")).head()
-      val a1 = r.getAs[Double]("a1"); val a2 = r.getAs[Double]("a2")
-      val a3 = r.getAs[Double]("a3"); val g1 = r.getAs[Double]("g1")
-      val g2 = r.getAs[Double]("g2"); val u3 = r.getAs[Double]("u3")
-      val i3 = r.getAs[Double]("i3")
-      val dd = a1 * a3 - a2 * a2
-      val is = u3 + i3
-      require(java.lang.Double.isFinite(dd) &&
-        java.lang.Double.isFinite(g1) && java.lang.Double.isFinite(g2) &&
-        java.lang.Double.isFinite(is) && dd > 0.0 && is > 0.0,
-        s"Weibull AFT Newton round ${it + 1} degenerate (det=$dd, " +
-          s"I_s=$is) — standardize the covariate or check ln-duration " +
-          "outliers; refusing to emit garbage")
-      val muN = r6(mu + sg * (a3 * g1 - a2 * g2) / dd)
-      val bbN = r6(bb + sg * (a1 * g2 - a2 * g1) / dd)
-      val sgN = r6(sg * math.exp((u3 - nev) / is))
-      mu = muN; bb = bbN; sg = sgN
-      require(sg > 0.0, s"sigma collapsed at round ${it + 1}")
-      it += 1
-    }
-    clean.unpersist(false)
-    val med = r6(math.exp(mu + bb * xbar + sg * math.log(math.log(2.0))))
-    Seq((n, nev.toLong, mu, bb, sg, med))
-      .toDF("n", "n_events", "icept", "slope", "sigma",
-        "median_at_mean")
+    try {
+      def r6(v: Double) = math.rint(v * 1e6) / 1e6 + 0.0
+      // warm start: OLS of ln t on x over uncensored rows
+      val init = clean.agg(
+        F.count(F.lit(1)).as("n"),
+        F.sum("__d").as("nev"),
+        F.sum("__x").as("sxa"),
+        F.sum(F.col("__d") * F.col("__x")).as("sx"),
+        F.sum(F.col("__d") * F.col("__x") * F.col("__x")).as("sxx"),
+        F.sum(F.col("__d") * F.col("__lt")).as("sy"),
+        F.sum(F.col("__d") * F.col("__x") * F.col("__lt")).as("sxy"),
+        F.sum(F.col("__d") * F.col("__lt") * F.col("__lt")).as("syy"))
+        .head()
+      val n = init.getAs[Long]("n")
+      val nev = init.getAs[Double]("nev")
+      require(n >= 8L && nev >= 5.0,
+        s"need n >= 8 rows and >= 5 events, got n=$n events=$nev")
+      val sx = init.getAs[Double]("sx"); val sxx = init.getAs[Double]("sxx")
+      val sy = init.getAs[Double]("sy"); val sxy = init.getAs[Double]("sxy")
+      val syy = init.getAs[Double]("syy")
+      val det0 = nev * sxx - sx * sx
+      require(det0 > 0.0, "constant covariate among events — no OLS start")
+      var bb = r6((nev * sxy - sx * sy) / det0)
+      var mu = r6((sy * sxx - sx * sxy) / det0)
+      val mse = (syy - mu * sy - bb * sxy) / nev
+      require(mse > 0.0, "zero residual variance in the OLS start")
+      // Gumbel moment: Var(ln t) = sigma^2 * pi^2 / 6
+      var sg = r6(math.sqrt(mse * 6.0) / math.Pi)
+      val xbar = init.getAs[Double]("sxa") / n
+      var it = 0
+      while (it < iters) {
+        val w = (F.col("__lt") - F.lit(mu) - F.lit(bb) * F.col("__x")) /
+          F.lit(sg)
+        val z = F.exp(w)
+        val r = clean.agg(
+          F.sum(z).as("a1"),
+          F.sum(z * F.col("__x")).as("a2"),
+          F.sum(z * F.col("__x") * F.col("__x")).as("a3"),
+          F.sum(z - F.col("__d")).as("g1"),
+          F.sum((z - F.col("__d")) * F.col("__x")).as("g2"),
+          F.sum(w * (z - F.col("__d"))).as("u3"),
+          F.sum(w * w * z).as("i3")).head()
+        val a1 = r.getAs[Double]("a1"); val a2 = r.getAs[Double]("a2")
+        val a3 = r.getAs[Double]("a3"); val g1 = r.getAs[Double]("g1")
+        val g2 = r.getAs[Double]("g2"); val u3 = r.getAs[Double]("u3")
+        val i3 = r.getAs[Double]("i3")
+        val dd = a1 * a3 - a2 * a2
+        val is = u3 + i3
+        require(java.lang.Double.isFinite(dd) &&
+          java.lang.Double.isFinite(g1) && java.lang.Double.isFinite(g2) &&
+          java.lang.Double.isFinite(is) && dd > 0.0 && is > 0.0,
+          s"Weibull AFT Newton round ${it + 1} degenerate (det=$dd, " +
+            s"I_s=$is) — standardize the covariate or check ln-duration " +
+            "outliers; refusing to emit garbage")
+        val muN = r6(mu + sg * (a3 * g1 - a2 * g2) / dd)
+        val bbN = r6(bb + sg * (a1 * g2 - a2 * g1) / dd)
+        val sgN = r6(sg * math.exp((u3 - nev) / is))
+        mu = muN; bb = bbN; sg = sgN
+        require(sg > 0.0, s"sigma collapsed at round ${it + 1}")
+        it += 1
+      }
+      val med = r6(math.exp(mu + bb * xbar + sg * math.log(math.log(2.0))))
+      Seq((n, nev.toLong, mu, bb, sg, med))
+        .toDF("n", "n_events", "icept", "slope", "sigma",
+          "median_at_mean")
+    } finally clean.unpersist(false)
   }
 
   /** Predicted median lifetime under a fitted [[weibullAft]] model as

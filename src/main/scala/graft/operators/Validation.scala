@@ -388,10 +388,7 @@ object Validation {
     val observed = df.where(y.isNotNull && !F.isnan(y))
     val m = Regression.olsFit(observed, targetCol, xCols)
     def r6(v: Double) = math.rint(v * 1e6) / 1e6
-    val b = m.beta.map(r6)
-    val pred = xCols.zipWithIndex.foldLeft(F.lit(b(0))) {
-      case (acc, (c, i)) => acc + F.col(c).cast("double") * b(i + 1)
-    }
+    val pred = Regression.linearPredictor(xCols, m.beta.map(r6))
     val featsOk = xCols.map(c => F.col(c).cast("double"))
       .map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
     val missing = y.isNull || F.isnan(y)

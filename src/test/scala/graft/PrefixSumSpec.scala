@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import graft.operators._
+import graft.SparkProbes.{added, cachedState, jobsOf}
 
 /** The range-partition prefix-sum substrate (`operators/PrefixSum`) and
   * its callers: cached state is released on every path, Spark jobs per
@@ -33,20 +31,6 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
         (i * 7 % 23 + i % 3 - 1).toDouble)
     }.toDF("g", "v", "t", "e", "x", "y", "p", "id", "ntok", "w")
   }
-
-  /** Persisted RDDs other than local checkpoints (a result that
-    * outlives its call is checkpointed on purpose and released by the
-    * ContextCleaner), and whether the CacheManager is empty. */
-  private def cachedState(): (Set[Int], Boolean) =
-    (spark.sparkContext.getPersistentRDDs.collect {
-      case (id, rdd) if !rdd.isCheckpointed => id
-    }.toSet, spark.sharedState.cacheManager.isEmpty)
-
-  /** State `after` holds that `before` did not. Entries may only vanish
-    * in between: the ContextCleaner drops collected RDDs on its own. */
-  private def added(before: (Set[Int], Boolean),
-                    after: (Set[Int], Boolean)): Boolean =
-    (after._1 -- before._1).nonEmpty || (before._2 && !after._2)
 
   private def force(r: Any): Unit = r match {
     case df: DataFrame => df.collect()
@@ -112,28 +96,12 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("holmAdjust, no valid p", () => StatTests.holmAdjust(
         df.withColumn("p", F.lit(null).cast("double")), "p"), false))
     val leaked = cases.filter { case (_, call, throws) =>
-      val before = cachedState()
+      val before = cachedState(spark)
       if (throws) intercept[IllegalArgumentException](call())
       else force(call())
-      added(before, cachedState())
+      added(before, cachedState(spark))
     }.map(_._1)
     assert(leaked.isEmpty, s"cached state left behind by: ${leaked.mkString(", ")}")
-  }
-
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusAccess.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("Spark jobs per call are those of the hand-written constructions") {
@@ -151,7 +119,7 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
         () => Survival.coxPH(df, "t", "e", Seq("x"), iters = 2), 19))
     val got = pinned.map { case (name, call, _) =>
       call() // warm: first-use planning may differ from steady state
-      name -> jobsOf(call())
+      name -> jobsOf(spark)(call())
     }
     assert(got == pinned.map(p => p._1 -> p._3))
   }

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import graft.operators._
+import graft.SparkProbes.{added, cachedState, jobsOf}
 
 /** Regression operators: per-group OLS, Gram-matrix OLS/ridge, IRLS
   * logistic. Recovery tests use deterministic constructions (no RNG). */
@@ -809,5 +810,100 @@ class RegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       iters = 3)
     assert(math.abs(out("g1").getAs[Double]("b0") - single.beta(0)) < 1e-5)
     assert(math.abs(out("g1").getAs[Double]("b1") - single.beta(1)) < 1e-5)
+  }
+
+  /** 40 rows for every GLM fit: a bounded feature x, a binary label b,
+    * counts c, a positive response pos, a class label cls and a
+    * continuous response v. */
+  private def glmFrame: DataFrame = {
+    import spark.implicits._
+    (0 until 40).map { i =>
+      val x = (i % 10) / 10.0
+      (x, if ((i * 3) % 7 < 3) 1.0 else 0.0, ((i * 5) % 9).toDouble,
+        1.0 + (i * 7) % 11, Seq("a", "b", "c")(i % 3),
+        2.0 + 3.0 * x + ((i * 13) % 5 - 2) * 0.5)
+    }.toDF("x", "b", "c", "pos", "cls", "v")
+  }
+
+  test("every GLM fit leaves no cached state, also when it throws") {
+    import spark.implicits._
+    val df = glmFrame
+    val two = df.limit(2) // n <= k for one feature plus the intercept
+    val cases = Seq[(String, () => Any, Boolean)](
+      ("logisticIrls", () => Regression.logisticIrls(df, "b", Seq("x")), false),
+      ("softmaxIrls", () => Regression.softmaxIrls(df, "cls", Seq("x")), false),
+      ("huberIrls",
+        () => Regression.huberIrls(df, "v", Seq("x"), delta = 1.0), false),
+      ("quantileIrls",
+        () => Regression.quantileIrls(df, "v", Seq("x"), tau = 0.5), false),
+      ("poissonIrls", () => Regression.poissonIrls(df, "c", Seq("x")), false),
+      ("gammaIrls", () => Regression.gammaIrls(df, "pos", Seq("x")), false),
+      ("nbinomIrls", () => Regression.nbinomIrls(df, "c", Seq("x")), false),
+      ("tweedieIrls", () => Regression.tweedieIrls(df, "c", Seq("x")), false),
+      ("probitIrls", () => Regression.probitIrls(df, "b", Seq("x")), false),
+      // degenerate inputs: a typed require error, nothing left pinned
+      ("softmaxIrls, one class", () => Regression.softmaxIrls(
+        df.withColumn("cls", F.lit("a")), "cls", Seq("x")), true),
+      ("huberIrls, n <= k",
+        () => Regression.huberIrls(two, "v", Seq("x"), delta = 1.0), true),
+      ("quantileIrls, n <= k",
+        () => Regression.quantileIrls(two, "v", Seq("x"), tau = 0.5), true),
+      ("poissonIrls, all-zero response", () => Regression.poissonIrls(
+        df.withColumn("c", F.lit(0.0)), "c", Seq("x")), true),
+      ("nbinomIrls, all-zero response", () => Regression.nbinomIrls(
+        df.withColumn("c", F.lit(0.0)), "c", Seq("x")), true),
+      ("gammaIrls, n <= k",
+        () => Regression.gammaIrls(two, "pos", Seq("x")), true),
+      ("tweedieIrls, n <= k",
+        () => Regression.tweedieIrls(two, "c", Seq("x")), true),
+      ("probitIrls, n <= k",
+        () => Regression.probitIrls(two, "b", Seq("x")), true),
+      ("weibullAft, 6 rows and 3 events", () => Survival.weibullAft(
+        Seq((1.0, true, 0.1), (2.0, true, 0.2), (3.0, true, 0.3),
+          (4.0, false, 0.4), (5.0, false, 0.5), (6.0, false, 0.6))
+          .toDF("t", "e", "x"), "t", "e", "x"), true))
+    val leaked = cases.filter { case (_, call, throws) =>
+      // an earlier leak of the same plan would mask this case's own
+      spark.catalog.clearCache()
+      val before = cachedState(spark)
+      if (throws) intercept[IllegalArgumentException](call())
+      else call()
+      added(before, cachedState(spark))
+    }.map(_._1)
+    assert(leaked.isEmpty, s"cached state left behind by: ${leaked.mkString(", ")}")
+  }
+
+  test("Spark jobs per GLM fit are those of the hand-written fits") {
+    val df = glmFrame
+    // counts measured on the hand-written fits the Newton substrate
+    // replaced, same session settings (local[4], 4 shuffle partitions)
+    val pinned = Seq[(String, () => Any, Int)](
+      ("logisticIrls (3 steps)",
+        () => Regression.logisticIrls(df, "b", Seq("x"), iters = 3), 9),
+      ("softmaxIrls (3 steps)",
+        () => Regression.softmaxIrls(df, "cls", Seq("x"), iters = 3), 13),
+      ("gammaIrls", () => Regression.gammaIrls(df, "pos", Seq("x")), 13),
+      ("nbinomIrls", () => Regression.nbinomIrls(df, "c", Seq("x")), 17),
+      ("probitIrls", () => Regression.probitIrls(df, "b", Seq("x")), 11))
+    val got = pinned.map { case (name, call, _) =>
+      call() // warm: first-use planning may differ from steady state
+      name -> jobsOf(spark)(call())
+    }
+    assert(got == pinned.map(p => p._1 -> p._3))
+  }
+
+  test("Regression.scala persists and releases only in the GLM substrate") {
+    val f = new java.io.File("src/main/scala/graft/operators/Regression.scala")
+    assert(f.isFile, s"source not found at ${f.getAbsolutePath}")
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val lines = try src.getLines().toVector finally src.close()
+    val start = lines.indexWhere(_.contains("private def withDesign"))
+    val end = lines.indexWhere(_ == "  }", start)
+    val sites = lines.indices.filter(i =>
+      lines(i).contains(".persist(") || lines(i).contains("unpersist"))
+    val outside = sites.filterNot(i => i > start && i < end)
+    assert(start >= 0 && sites.nonEmpty && outside.isEmpty,
+      "hand-written cache lifecycle at Regression.scala lines " +
+        s"${outside.map(_ + 1).mkString(", ")}: use withDesign")
   }
 }
