@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.stat.Correlation
-import org.apache.spark.TaskContext
 import org.apache.commons.math3.linear.{Array2DRowRealMatrix, CholeskyDecomposition}
 import graft.dists.{ContinuousDist, DistRegistry, Truncated}
 import graft.functions.{SpecialMath => SM}
@@ -57,19 +56,17 @@ final class GaussianCopula(
     }
   }
 
-  /** Distributed sampling: one row per sample, one column per marginal. */
-  /** `returnUniform` skips the marginal ppf transform and emits the
-    * correlated uniforms themselves (reference: copula.py:255-356) — the
-    * cheap form when a caller feeds its own quantile functions, and the
-    * one that keeps rank correlation exactly (ppf is monotone, so both
-    * forms share the Spearman structure). */
+  /** Distributed sampling: one row per sample, one (nullable) column per
+    * marginal, drawn by [[Sampling.seededRows]] — each partition writes
+    * its draws into one reused UnsafeRow. `returnUniform` skips the
+    * marginal ppf transform and emits the correlated uniforms themselves
+    * (reference: copula.py:255-356) — the cheap form when a caller feeds
+    * its own quantile functions, and the one that keeps rank correlation
+    * exactly (ppf is monotone, so both forms share the Spearman
+    * structure). */
   def sampleDistributed(spark: SparkSession, n: Long, seed: Long = 42L,
                         numPartitions: Int = 0,
                         returnUniform: Boolean = false): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sparkContext.defaultParallelism
-    val counts = Sampling.partitionCounts(n, parts)
-    val bcCounts = spark.sparkContext.broadcast(counts)
     val l = cholesky
     val margs = marginals.toArray
     val k = margs.length
@@ -80,25 +77,18 @@ final class GaussianCopula(
     // grid on every task. Not built at all on the uniform path.
     val ppfs = if (returnUniform) Array.empty[Double => Double]
                else margs.map(GaussianCopula.marginalPpf)
-    val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
-      val pid = TaskContext.getPartitionId()
-      val rng = new java.util.SplittableRandom(seed + pid)
-      Iterator.range(0L, bcCounts.value(pid)).map { _ =>
-        val z = Array.fill(k)(GaussianCopula.nextGaussian(rng))
-        val out = new Array[Any](k)
-        var i = 0
-        while (i < k) {
-          var s = 0.0
-          var j = 0
-          while (j <= i) { s += l(i)(j) * z(j); j += 1 }
-          val u = SM.normCdf(s)
-          out(i) = if (returnUniform) u else ppfs(i)(u)
-          i += 1
-        }
-        Row.fromSeq(out.toSeq)
+    Sampling.seededRows(spark, n, seed, numPartitions, schema) { (rng, w) =>
+      val z = Array.fill(k)(GaussianCopula.nextGaussian(rng))
+      var i = 0
+      while (i < k) {
+        var s = 0.0
+        var j = 0
+        while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+        val u = SM.normCdf(s)
+        w.write(i, if (returnUniform) u else ppfs(i)(u))
+        i += 1
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Deterministic, engine-replayable audit of the sampling pipeline —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, functions => F}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 
@@ -73,8 +73,7 @@ final class FitResults(
     * and driver-local, so all of it runs on the driver over one collect. */
   def bestLazy(spark: org.apache.spark.sql.SparkSession, n: Int, metric: String): DataFrame = {
     requireMetric(metric)
-    import spark.implicits._
-    val rows = df.as[FitResult].collect()
+    val rows = df.as(encoder).collect()
     def value(r: FitResult): Option[Double] =
       if (metric == "ks_statistic") r.ks_statistic else r.ad_statistic
     // recompute iff any SUCCESSFUL fit still has the metric deferred —
@@ -90,15 +89,14 @@ final class FitResults(
         val byMetric = ascNullsLast(value(a), value(b))
         byMetric < 0 || (byMetric == 0 && a.distribution < b.distribution)
       }).take(n)
-    spark.createDataset(filled.toSeq).toDF()
+    spark.createDataset(filled.toSeq)(encoder).toDF()
   }
 
   /** Fill deferred K-S/A-D for every row → an eager FitResults
     * (reference: collection.py:918-1006, materialize()). */
   def materialize(spark: org.apache.spark.sql.SparkSession): FitResults = {
-    import spark.implicits._
-    val filled = fillMetrics(df.as[FitResult].collect(), samples, discreteSamples)
-    new FitResults(spark.createDataset(filled.toSeq).toDF(), samples, cfg, discreteSamples)
+    val filled = fillMetrics(df.as(encoder).collect(), samples, discreteSamples)
+    new FitResults(spark.createDataset(filled.toSeq)(encoder).toDF(), samples, cfg, discreteSamples)
   }
 
   /** Distinct non-null fitted column names (reference: collection.py:522-544). */
@@ -158,6 +156,11 @@ final class FitResults(
 
 object FitResults {
   val sortableMetrics: Set[String] = Set("sse", "aic", "bic", "ks_statistic", "ad_statistic")
+
+  /** The results table's row encoder, derived by reflection once: every
+    * fit builds its table with it, and the lazy-metric paths read rows
+    * back through it. */
+  private[operators] val encoder: Encoder[FitResult] = Encoders.product[FitResult]
 
   private def requireMetric(metric: String): Unit =
     require(sortableMetrics(metric),

@@ -2,13 +2,18 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.util.random.BernoulliCellSampler
 
-/** The data pass every fit makes after its stats aggregate: ONE job, no
-  * shuffle, that returns per-partition tallies (histogram bin counts or
-  * PMF counts) together with the fitting-sample rows.
+/** The data passes of every fit, over the rows of ONE planned frame
+  * (`frame.queryExecution.toRdd`, planned once per call): each pass is one
+  * job with no shuffle whose per-partition tallies are collected and
+  * merged on the driver in partition order. The stats pass ([[tally]]
+  * with [[Extent]]s) reads min/max/count; the fused pass ([[run]]) adds
+  * histogram bin counts or PMF counts together with the fitting-sample
+  * rows.
   *
   * A draw keeps exactly the rows that
   * `frame.where(admit).sample(withReplacement = false, fraction, seed)
@@ -23,7 +28,7 @@ import org.apache.spark.util.random.BernoulliCellSampler
   * identity holds while `admit` does not change the frame's partitioning,
   * which a row filter never does except over an in-memory local relation
   * (Catalyst folds the filter into the relation, which re-slices it). */
-private[operators] object FitScan {
+private[graft] object FitScan {
 
   /** One fitting-sample draw: the rows `admit` accepts, Bernoulli-sampled
     * at `fraction` (None keeps every admitted row), at most `cap` of them. */
@@ -43,15 +48,16 @@ private[operators] object FitScan {
   /** Every row is a candidate. */
   val anyRow: InternalRow => Boolean = _ => true
 
-  /** Scans `frame` once. Each partition folds its rows into a fresh
+  /** Scans `rows` once. Each partition folds its rows into a fresh
     * `zero()` with `add` and runs every draw; the driver folds the
-    * partitions' tallies into one with `merge(into, from)`. Returns that
-    * tally and each draw's rows (copied, in the frame's column order). */
-  def run[T](frame: DataFrame, draws: Seq[Draw], zero: () => T,
+    * partitions' tallies into one with `merge(into, from)`, in partition
+    * order. Returns that tally and each draw's rows (copied, in the
+    * frame's column order). */
+  def run[T](rows: RDD[InternalRow], draws: Seq[Draw], zero: () => T,
              add: (T, InternalRow) => Unit,
              merge: (T, T) => Unit): (T, Seq[Array[InternalRow]]) = {
     val ds = draws.toArray
-    val parts = frame.queryExecution.toRdd.mapPartitionsWithIndex { (pi, rows) =>
+    val parts = rows.mapPartitionsWithIndex { (pi, it) =>
       val tally = zero()
       val samplers = ds.map(d => d.fraction.map { f =>
         val s = new BernoulliCellSampler[InternalRow](0.0, f, false)
@@ -59,7 +65,7 @@ private[operators] object FitScan {
         s
       })
       val kept = ds.map(_ => ArrayBuffer.empty[InternalRow])
-      rows.foreach { row =>
+      it.foreach { row =>
         add(tally, row)
         var i = 0
         while (i < ds.length) {
@@ -77,8 +83,52 @@ private[operators] object FitScan {
   }
 
   /** [[run]] without a tally: the draws alone. */
-  def draw(frame: DataFrame, draws: Seq[Draw]): Seq[Array[InternalRow]] =
-    run[Unit](frame, draws, () => (), (_, _) => (), (_, _) => ())._2
+  def draw(rows: RDD[InternalRow], draws: Seq[Draw]): Seq[Array[InternalRow]] =
+    run[Unit](rows, draws, () => (), (_, _) => (), (_, _) => ())._2
+
+  /** [[run]] without draws: the tally alone. */
+  def tally[T](rows: RDD[InternalRow], zero: () => T, add: (T, InternalRow) => Unit,
+               merge: (T, T) => Unit): T =
+    run(rows, Nil, zero, add, merge)._1
+
+  /** Spark's `min`, `max` and `count` of one double column, folded a value
+    * at a time: `least`/`greatest` order (NaN above every number, −0.0
+    * equal to 0.0) and, on a tie, the value seen first stays. Spark's
+    * aggregate merges its partials in partition order, so folding the
+    * partitions in that order gives the aggregate's bits, −0.0 against
+    * 0.0 included. */
+  final class Extent extends Serializable {
+    var min: Double = 0.0
+    var max: Double = 0.0
+    var count: Long = 0L
+
+    def add(x: Double): Unit = widen(x, x, 1L)
+
+    def merge(from: Extent): Unit = if (from.count > 0L) widen(from.min, from.max, from.count)
+
+    private def widen(lo: Double, hi: Double, n: Long): Unit = {
+      if (count == 0L) { min = lo; max = hi }
+      else {
+        if (SQLOrderingUtil.compareDoubles(lo, min) < 0) min = lo
+        if (SQLOrderingUtil.compareDoubles(hi, max) > 0) max = hi
+      }
+      count += n
+    }
+  }
+
+  /** One [[Extent]] per column `0 until n` of the scanned rows; nulls
+    * count for nothing. */
+  def extents(rows: RDD[InternalRow], n: Int): Array[Extent] =
+    tally(rows, () => Array.fill(n)(new Extent),
+      (t: Array[Extent], row: InternalRow) => {
+        var i = 0
+        while (i < n) {
+          if (!row.isNullAt(i)) t(i).add(row.getDouble(i))
+          i += 1
+        }
+      },
+      (into: Array[Extent], from: Array[Extent]) =>
+        into.indices.foreach(i => into(i).merge(from(i))))
 
   /** Per-slot bin counts: the tally of the histogram passes. */
   def zeroCounts(nBins: Array[Int]): () => Array[Array[Long]] =

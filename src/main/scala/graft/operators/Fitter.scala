@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
@@ -225,11 +226,13 @@ object Fitter {
   /** Collect the fitting sample for one column: ≤ sampleSize rows, NaN/null
     * filtered, deterministic seed; exact-size driver downsample when the
     * pre-sample overshoots (reference: base_fitter.py:681-700,
-    * estimation.py:946-967). */
+    * estimation.py:946-967). The valid rows are planned once: a count
+    * (unless `totalCount` is given) and the draw are two no-shuffle jobs
+    * over them. */
   def fittingSample(df: DataFrame, column: String, sampleSize: Int, seed: Long,
                     totalCount: Option[Long] = None): Array[Double] = {
     val c = F.col(column).cast("double")
-    val valid = df.select(c.as("x")).where(validValue(F.col("x")))
+    val valid = df.select(c.as("x")).where(validValue(F.col("x"))).queryExecution.toRdd
     val n = totalCount.getOrElse(valid.count())
     val draw = FitScan.Draw.seeded(FitScan.anyRow, n <= sampleSize, n, sampleSize,
       seed, sampleSize * 2)
@@ -254,10 +257,8 @@ object Fitter {
     * for a column with no valid data (tests/test_numerical_stability.py:
     * 105-116): queries over the collection work, `best()` returns zero
     * rows, nothing throws. */
-  private def emptyResults(spark: SparkSession, cfg: FitConfig): FitResults = {
-    import spark.implicits._
-    new FitResults(spark.emptyDataset[FitResult].toDF(), Map.empty, cfg)
-  }
+  private def emptyResults(spark: SparkSession, cfg: FitConfig): FitResults =
+    new FitResults(spark.emptyDataset(FitResults.encoder).toDF(), Map.empty, cfg)
 
   /** Exact-size downsample without replacement via seeded Fisher-Yates
     * (reference: estimation.py:946-967). Delegates to the shared kernel
@@ -310,9 +311,9 @@ object Fitter {
   private final case class Binner(ci: Int, nBins: Int, bin: Double => Int)
 
   /** The fused pass of [[fit]]: every binner's counts plus the draws. */
-  private def binnedPass(frame: DataFrame, binners: Array[Binner],
+  private def binnedPass(rows: RDD[InternalRow], binners: Array[Binner],
                          draws: Seq[FitScan.Draw]): (Array[Array[Long]], Seq[Array[InternalRow]]) =
-    FitScan.run(frame, draws, FitScan.zeroCounts(binners.map(_.nBins)),
+    FitScan.run(rows, draws, FitScan.zeroCounts(binners.map(_.nBins)),
       (t: Array[Array[Long]], row: InternalRow) => {
         var i = 0
         while (i < binners.length) {
@@ -325,7 +326,7 @@ object Fitter {
         }
       }, FitScan.addCounts)
 
-  /** Pass 3 of every fit: ONE job over the (key, family) pairs, with the
+  /** The fan-out of every fit: ONE job over the (key, family) pairs, with the
     * driver-built contexts in one broadcast that is destroyed once the
     * results are back. `parallelize` slices the pairs in order, so the
     * interleaved slow families spread over the tasks; fine-grained tasks
@@ -345,27 +346,28 @@ object Fitter {
     * and nothing needs caching or releasing. */
   private def resultsOf(spark: SparkSession, rows: Array[FitResult],
                         samples: Map[String, Array[Double]], cfg: FitConfig,
-                        discreteSamples: Map[String, Array[Long]] = Map.empty): FitResults = {
-    import spark.implicits._
-    new FitResults(spark.createDataset(rows.toSeq).toDF(), samples, cfg, discreteSamples)
-  }
+                        discreteSamples: Map[String, Array[Long]] = Map.empty): FitResults =
+    new FitResults(spark.createDataset(rows.toSeq)(FitResults.encoder).toDF(), samples, cfg,
+      discreteSamples)
 
   /** Column of a censored fit's scan that carries the event flag. */
   private val EventCol = "__event"
 
   /** Fit all requested continuous families to one or more numeric columns.
     *
-    * Three passes over the data, whatever the number of columns (the
-    * reference fits 3 columns for ~the price of 1,
-    * docs/_static/benchmark_summary.md:36-43):
-    *  1. one min/max/count aggregate over every column;
-    *  2. one [[FitScan]] job: every column's histogram counts and the
-    *     fitting sample (per column, with its event flags, for a censored
-    *     fit);
-    *  3. driver stats/prefilter/interleave → broadcast FitContexts → one
-    *     `parallelize(pairs).map(fitOne)` fan-out (a plain JVM closure —
-    *     the reference's Arrow/pandas-UDF hop does not exist here) →
-    *     collect.
+    * One plan, two scans, one fan-out, whatever the number of columns
+    * (the reference fits 3 columns for ~the price of 1,
+    * docs/_static/benchmark_summary.md:36-43). The cleaned frame is
+    * planned once and both scans run over its rows, each one job with no
+    * shuffle:
+    *  1. the stats scan: every column's min/max/count ([[FitScan.extents]]);
+    *  2. the fused [[FitScan]] scan: every column's histogram counts and
+    *     the fitting sample (per column, with its event flags, for a
+    *     censored fit);
+    *  then driver stats/prefilter/interleave → broadcast FitContexts →
+    *  one `parallelize(pairs).map(fitOne)` fan-out (a plain JVM closure —
+    *  the reference's Arrow/pandas-UDF hop does not exist here) →
+    *  collect.
     * The results table is a driver-local relation of the collected rows
     * (reference lifecycle, SURVEY.md §3.1, without its cache).
     */
@@ -389,22 +391,18 @@ object Fitter {
       else baseNames
     val capped = supportFiltered.take(cfg.maxDistributions)
 
-    // ---- pass 1: stats. NaN/±Inf→null per column so min/max/count see
+    // ---- scan 1: stats. NaN/±Inf→null per column so min/max/count see
     // only finite values; a censored fit carries its event flag along ----
     val cleaned = df.select(columns.map { c =>
       finiteOrNull(F.col(c).cast("double")).as(c)
     } ++ cfg.censoringColumn.map(cc => F.col(cc).cast("boolean").as(EventCol)): _*)
-    val statAggs = columns.flatMap(c =>
-      Seq(F.min(c).as(s"mn_$c"), F.max(c).as(s"mx_$c"), F.count(c).as(s"cnt_$c")))
-    val statRow = cleaned.agg(statAggs.head, statAggs.tail: _*).head()
+    val cleanedRows = cleaned.queryExecution.toRdd
+    val extents = FitScan.extents(cleanedRows, columns.length)
     // a column with no finite values fits nothing but fails nothing —
     // it is dropped here, and an all-invalid request returns the empty
     // collection (the reference's contract, not an exception)
-    val colStats: Map[String, (Double, Double, Long)] = columns.zipWithIndex.flatMap {
-      case (c, i) =>
-        if (statRow.isNullAt(3 * i) || statRow.getLong(3 * i + 2) == 0L) None
-        else Some(c -> ((statRow.getDouble(3 * i), statRow.getDouble(3 * i + 1),
-          statRow.getLong(3 * i + 2))))
+    val colStats: Map[String, (Double, Double, Long)] = columns.zip(extents).collect {
+      case (c, e) if e.count > 0L => c -> ((e.min, e.max, e.count))
     }.toMap
     val fitCols = columns.filter(colStats.contains)
     if (fitCols.isEmpty) return emptyResults(spark, cfg)
@@ -417,7 +415,7 @@ object Fitter {
     val nMax = colStats.values.map(_._3).max
     val (scanDf, samplePlan) = AdaptiveSampling.prepare(cleaned, fitCols, nMax, cfg)
 
-    // ---- pass 2: histograms + fitting sample in one scan ----
+    // ---- scan 2: histograms + fitting sample in one scan ----
     // explicit bin edges (the reference's tuple `bins` form) bin every
     // column by Histogram's edge rule — non-uniform widths allowed, values
     // outside [head, last] excluded; otherwise each non-singular column
@@ -460,9 +458,10 @@ object Fitter {
         Seq(FitScan.Draw.seeded(FitScan.anyRow, nMaxEff <= size, nMin, size,
           cfg.sampleSeed, size * 4))
       }
+    val scanRows = if (scanDf eq cleaned) cleanedRows else scanDf.queryExecution.toRdd
     val (counts, drawn) =
-      if (!censored || (scanDf eq cleaned)) binnedPass(scanDf, binners, draws)
-      else (binnedPass(scanDf, binners, Nil)._1, FitScan.draw(cleaned, draws))
+      if (!censored || (scanDf eq cleaned)) binnedPass(scanRows, binners, draws)
+      else (binnedPass(scanRows, binners, Nil)._1, FitScan.draw(cleanedRows, draws))
     val histByCol: Map[String, Hist] = fitCols.map { c =>
       val slot = binned.indexOf(c)
       c -> (edges match {
@@ -487,7 +486,7 @@ object Fitter {
       if (!censored) Map.empty
       else kept.map { case (c, rows) => c -> rows.map(r => !r.isNullAt(ei) && r.getBoolean(ei)) }
 
-    // ---- pass 3: one fan-out job over every (column, family) pair ----
+    // ---- the fan-out: one job over every (column, family) pair ----
     val ctxs: Map[String, FitContext] = fitCols.map { c =>
       c -> FitContext(c, histByCol(c), samples(c), DataStats.of(samples(c)),
         censorByCol.get(c))
@@ -518,11 +517,14 @@ object Fitter {
     * reference, which fits whole columns only; its lifecycle per group
     * would rescan the table G times).
     *
-    * Three passes, independent of the number of groups: ONE per-group
-    * stats aggregate, ONE [[FitScan]] job for the (group, bin) counts
-    * and the per-group sample (`sampleBy` semantics: a `rand(seed)`
-    * column against per-group fractions sized from the stats), then a
-    * single (group, family) fan-out through the same [[fitOne]] kernel.
+    * One plan, two scans, one fan-out, independent of the number of
+    * groups. The cleaned frame with its `rand(seed)` column is planned
+    * once (rand is seeded per partition, so both scans see the same
+    * draws): ONE scan folds per-group min/max/count, ONE [[FitScan]]
+    * scan makes the (group, bin) counts and the per-group sample
+    * (`sampleBy` semantics: the rand column against per-group fractions
+    * sized from the stats), then a single (group, family) fan-out runs
+    * through the same [[fitOne]] kernel.
     * Results carry the group value in `column_name`. Driver state is
     * O(groups · (bins + sampleSize)) — groups must be segment-like
     * (flags, categories), not key-like. */
@@ -543,13 +545,21 @@ object Fitter {
         finiteOrNull(F.col(valueCol).cast("double")).as("x"))
       .where(F.col("g").isNotNull && F.col("x").isNotNull)
 
-    // 1) per-group stats
-    val statRows = cleaned.groupBy("g")
-      .agg(F.min("x").as("mn"), F.max("x").as("mx"), F.count("x").as("cnt"))
-      .collect()
-    require(statRows.nonEmpty, s"no valid data in '$valueCol'")
-    val stats: Map[String, (Double, Double, Long)] = statRows.map { r =>
-      r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3)))
+    // g is column 0, x column 1, the draw's rand column 2
+    val cleanedRows = cleaned.withColumn("r", F.rand(cfg.sampleSeed)).queryExecution.toRdd
+
+    // 1) per-group stats; a new key is copied out of the reused row
+    type Extents = mutable.HashMap[UTF8String, FitScan.Extent]
+    val extentByGroup = FitScan.tally(cleanedRows, () => new Extents,
+      (t: Extents, row: InternalRow) => {
+        val g = row.getUTF8String(0)
+        t.getOrElse(g, t.getOrElseUpdate(g.clone(), new FitScan.Extent)).add(row.getDouble(1))
+      },
+      (into: Extents, from: Extents) =>
+        from.foreach { case (g, e) => into.getOrElseUpdate(g, new FitScan.Extent).merge(e) })
+    require(extentByGroup.nonEmpty, s"no valid data in '$valueCol'")
+    val stats: Map[String, (Double, Double, Long)] = extentByGroup.map { case (g, e) =>
+      g.toString -> ((e.min, e.max, e.count))
     }.toMap
 
     // 2) one scan: (group, bin) counts over each non-singular group's
@@ -562,7 +572,7 @@ object Fitter {
       case (g, (mn, mx, cnt)) if mn < mx => g -> equalBins(mn, mx, cnt, cfg)
     }.toArray
     // executor-side lookups key on the row's own UTF8String (no per-row
-    // String); g is column 0, x column 1, the draw's rand column 2
+    // String)
     val slotOf: Map[UTF8String, Int] =
       binned.map(_._1).zipWithIndex.map { case (g, s) => UTF8String.fromString(g) -> s }.toMap
     val totalRows = stats.values.map(_._3).sum
@@ -572,8 +582,7 @@ object Fitter {
     val admit: InternalRow => Boolean =
       if (totalRows <= cfg.fittingSampleSize.toLong * 4) FitScan.anyRow
       else r => r.getDouble(2) < fracOf.getOrElse(r.getUTF8String(0), 0.0)
-    val (counts, drawn) = FitScan.run(
-      cleaned.withColumn("r", F.rand(cfg.sampleSeed)),
+    val (counts, drawn) = FitScan.run(cleanedRows,
       Seq(FitScan.Draw(admit, None, cfg.sampleSeed, Int.MaxValue)),
       FitScan.zeroCounts(binned.map(_._2.nBins)),
       (t: Array[Array[Long]], row: InternalRow) =>
@@ -627,9 +636,10 @@ object Fitter {
                   cfg: FitConfig = FitConfig()): FitResults =
     fitDiscreteMulti(spark, df, Seq(column), distributions, cfg)
 
-  /** Multi-column discrete fit in the continuous path's three passes: ONE
-    * count aggregate, ONE [[FitScan]] job for every column's empirical
-    * PMF and the shared fitting sample, then a single fan-out job over
+  /** Multi-column discrete fit in the continuous path's shape — one plan,
+    * two scans, one fan-out: ONE count scan, ONE [[FitScan]] scan for
+    * every column's empirical PMF and the shared fitting sample, both
+    * over the once-planned cleaned rows, then a single fan-out job over
     * every (column, family) pair. m columns cost ~1. */
   def fitDiscreteMulti(spark: SparkSession, df: DataFrame, columns: Seq[String],
                        distributions: Option[Seq[String]] = None,
@@ -652,10 +662,18 @@ object Fitter {
     // 1) per-column valid counts; all-invalid columns drop out, and an
     // all-invalid request returns the empty collection with the full
     // schema (the reference's contract)
-    val countRow = cleaned.agg(F.count(columns.head), columns.tail.map(F.count): _*).head()
-    val nByCol: Map[String, Long] = columns.zipWithIndex.collect {
-      case (c, i) if countRow.getLong(i) > 0L => c -> countRow.getLong(i)
-    }.toMap
+    val nCols = columns.length
+    val cleanedRows = cleaned.queryExecution.toRdd
+    val valid = FitScan.tally(cleanedRows, () => new Array[Long](nCols),
+      (t: Array[Long], row: InternalRow) => {
+        var i = 0
+        while (i < nCols) {
+          if (!row.isNullAt(i)) t(i) += 1L
+          i += 1
+        }
+      },
+      (into: Array[Long], from: Array[Long]) => into.indices.foreach(i => into(i) += from(i)))
+    val nByCol: Map[String, Long] = columns.zip(valid).filter(_._2 > 0L).toMap
     val fitCols = columns.filter(nByCol.contains)
     if (fitCols.isEmpty) return emptyResults(spark, cfg)
 
@@ -668,8 +686,7 @@ object Fitter {
     val nMax = nByCol.values.max
     val draw = FitScan.Draw.seeded(FitScan.anyRow, nMax <= size, nByCol.values.min, size,
       cfg.sampleSeed, size * 4)
-    val nCols = columns.length
-    val (valueCounts, drawn) = FitScan.run(cleaned, Seq(draw),
+    val (valueCounts, drawn) = FitScan.run(cleanedRows, Seq(draw),
       () => Array.fill(nCols)(mutable.HashMap.empty[Long, Long]),
       (t: Array[mutable.HashMap[Long, Long]], row: InternalRow) => {
         var i = 0

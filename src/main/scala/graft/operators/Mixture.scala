@@ -83,16 +83,13 @@ object Mixture {
     * the component from the cumulative weights, then draws
     * `mean_c + L_c·z` with that component's Cholesky factor. Same
     * partition-seeded pattern as Sampling.generate / MVN sampling — rows
-    * are born on executors, n scales with no driver path. */
+    * are born on executors, n scales with no driver path; each partition
+    * writes its draws into one reused UnsafeRow ([[Sampling.seededRows]]).
+    * The columns and `component` are nullable. */
   def sampleDistributed(spark: org.apache.spark.sql.SparkSession,
                         r: GaussianMixtureResult, n: Long,
                         seed: Long = 42L, numPartitions: Int = 0): DataFrame = {
     import org.apache.commons.math3.linear.{Array2DRowRealMatrix, CholeskyDecomposition}
-    import org.apache.spark.TaskContext
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sparkContext.defaultParallelism
-    val counts = Sampling.partitionCounts(n, parts)
-    val bcCounts = spark.sparkContext.broadcast(counts)
     val cum = r.weights.scanLeft(0.0)(_ + _).tail
     val chols = r.covariances.map(c =>
       new CholeskyDecomposition(new Array2DRowRealMatrix(c), 1e-10, 1e-10).getL.getData)
@@ -103,24 +100,22 @@ object Mixture {
         c, org.apache.spark.sql.types.DoubleType)) :+
       org.apache.spark.sql.types.StructField(
         "component", org.apache.spark.sql.types.IntegerType))
-    val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
-      val pid = TaskContext.getPartitionId()
-      val rng = new java.util.SplittableRandom(seed + pid)
-      Iterator.range(0L, bcCounts.value(pid)).map { _ =>
-        val u = rng.nextDouble()
-        var c = 0
-        while (c < cum.length - 1 && u > cum(c)) c += 1
-        val z = Array.fill(kk)(GaussianCopula.nextGaussian(rng))
-        val l = chols(c); val mu = means(c)
-        org.apache.spark.sql.Row.fromSeq(Seq.tabulate(kk) { i =>
-          var s = mu(i)
-          var j = 0
-          while (j <= i) { s += l(i)(j) * z(j); j += 1 }
-          s
-        } :+ c)
+    Sampling.seededRows(spark, n, seed, numPartitions, schema) { (rng, w) =>
+      val u = rng.nextDouble()
+      var c = 0
+      while (c < cum.length - 1 && u > cum(c)) c += 1
+      val z = Array.fill(kk)(GaussianCopula.nextGaussian(rng))
+      val l = chols(c); val mu = means(c)
+      var i = 0
+      while (i < kk) {
+        var s = mu(i)
+        var j = 0
+        while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+        w.write(i, s)
+        i += 1
       }
+      w.write(kk, c)
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Serving-path scoring under a FIXED diagonal-covariance mixture —

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.TaskContext
 import org.apache.commons.math3.linear.{Array2DRowRealMatrix, CholeskyDecomposition, LUDecomposition}
 
 /** Multivariate-normal fit/sample/density (reference:
@@ -72,32 +71,26 @@ final case class MultivariateNormalResult(
   }
 
   /** Distributed sampling with per-partition seeds (same pattern as
-    * Sampling.generate). */
+    * Sampling.generate): each partition writes its draws into one reused
+    * UnsafeRow ([[Sampling.seededRows]]); the columns are nullable. */
   def sampleDistributed(spark: SparkSession, n: Long, seed: Long = 42L,
                         numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sparkContext.defaultParallelism
-    val counts = Sampling.partitionCounts(n, parts)
-    val bcCounts = spark.sparkContext.broadcast(counts)
     val l = cholesky
     val mu = mean
     val kk = k
     val schema = org.apache.spark.sql.types.StructType(columns.map(c =>
       org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.DoubleType)))
-    val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
-      val pid = TaskContext.getPartitionId()
-      val rng = new java.util.SplittableRandom(seed + pid)
-      Iterator.range(0L, bcCounts.value(pid)).map { _ =>
-        val z = Array.fill(kk)(GaussianCopula.nextGaussian(rng))
-        Row.fromSeq(Seq.tabulate(kk) { i =>
-          var s = mu(i)
-          var j = 0
-          while (j <= i) { s += l(i)(j) * z(j); j += 1 }
-          s
-        })
+    Sampling.seededRows(spark, n, seed, numPartitions, schema) { (rng, w) =>
+      val z = Array.fill(kk)(GaussianCopula.nextGaussian(rng))
+      var i = 0
+      while (i < kk) {
+        var s = mu(i)
+        var j = 0
+        while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+        w.write(i, s)
+        i += 1
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 }
 

@@ -2169,8 +2169,6 @@ object Regression {
     require(iters >= 1, "need at least one scoring iteration")
     withDesign(df, labelCol, xCols, y => y === 0.0 || y === 1.0) { d =>
       val y = d.y
-      val n = d.clean.count()
-      require(n > d.k, "need n > k labeled rows")
       val muUdf = F.udf((eta: Double) =>
         0.5 * graft.functions.SpecialMath.erfc(-eta / math.sqrt(2.0)))
       val invSqrt2Pi = 0.3989422804014327
@@ -2180,11 +2178,16 @@ object Regression {
         val phi = F.exp(eta * eta * F.lit(-0.5)) * F.lit(invSqrt2Pi)
         (mu, phi)
       }
-      val beta = (0 until iters).foldLeft(d.start(0.0)) { (beta, _) =>
-        val (mu, phi) = muPhi(d.eta(beta))
-        val v = mu * (F.lit(1.0) - mu)
-        val (h, g, _) = d.step(phi * phi / v, f => (y - mu) * phi / v * f)
-        newton(beta, h, g)
+      // each step also counts the rows, checked before its solve
+      val (beta, n) = (0 until iters).foldLeft((d.start(0.0), 0L)) {
+        case ((beta, _), _) =>
+          val (mu, phi) = muPhi(d.eta(beta))
+          val v = mu * (F.lit(1.0) - mu)
+          val (h, g, r) = d.step(phi * phi / v, f => (y - mu) * phi / v * f,
+            F.count(F.lit(1)).as("n"))
+          val n = r.getAs[Long]("n")
+          require(n > d.k, "need n > k labeled rows")
+          (newton(beta, h, g), n)
       }
       val (muF, _) = muPhi(d.eta(beta))
       val fin = d.agg(

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.TaskContext
 import graft.dists.{ContinuousDist, DistRegistry, Truncated}
 
@@ -14,6 +18,14 @@ import graft.dists.{ContinuousDist, DistRegistry, Truncated}
   * Draws are inverse-transform: u ~ U(0,1) from a per-partition
   * SplittableRandom, x = ppf(u). One closed-form ppf per row, fully
   * executor-local, linearly scalable to any n.
+  *
+  * The samplers here and in GaussianCopula, Mixture and
+  * MultivariateNormalResult write each draw
+  * straight into Catalyst's row format: a partition reuses ONE UnsafeRow,
+  * overwritten by every draw and valid only until the next, and the rows
+  * become a DataFrame without an encoder ([[ColumnBridge.dataFrame]]).
+  * Spark's scan of that frame projects each row, so consumers see
+  * ordinary rows.
   */
 object Sampling {
 
@@ -53,6 +65,32 @@ object Sampling {
     }
   }
 
+  /** The partition-seeded draw frame: `partitionCounts(n, parts)` rows
+    * split over `parts` partitions; partition p seeds its generator with
+    * `seed + p` and `draw` writes each row's fields (one per column of
+    * `schema`, all fixed-width) into the partition's one reused row. */
+  private[operators] def seededRows(spark: SparkSession, n: Long, seed: Long,
+                                    numPartitions: Int, schema: StructType)
+                                   (draw: (java.util.SplittableRandom, UnsafeRowWriter) => Unit)
+      : DataFrame = {
+    val parts = if (numPartitions > 0) numPartitions
+                else spark.sparkContext.defaultParallelism
+    val counts = partitionCounts(n, parts)
+    val width = schema.length
+    val rows = spark.sparkContext.parallelize(0 until parts, parts).mapPartitions[InternalRow] { _ =>
+      val pid = TaskContext.getPartitionId()
+      val rng = new java.util.SplittableRandom(seed + pid)
+      val w = new UnsafeRowWriter(width)
+      w.zeroOutNullBytes()
+      Iterator.range(0L, counts(pid)).map { _ => draw(rng, w); w.getRow }
+    }
+    ColumnBridge.dataFrame(spark, rows, schema)
+  }
+
+  /** A one-column frame of doubles. */
+  private def doubles(name: String): StructType =
+    StructType(Seq(StructField(name, DoubleType, nullable = false)))
+
   /** Generate `n` samples of a fitted (optionally truncated) distribution
     * as a one-column DataFrame. */
   def generate(spark: SparkSession, distName: String, params: Array[Double],
@@ -60,13 +98,8 @@ object Sampling {
                lowerBound: Option[Double] = None,
                upperBound: Option[Double] = None,
                columnName: String = "sample"): DataFrame = {
-    import spark.implicits._
     val dist = DistRegistry.get(distName).getOrElse(
       throw new IllegalArgumentException(s"unknown distribution '$distName'"))
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sparkContext.defaultParallelism
-    val counts = partitionCounts(n, parts)
-    val bcCounts = spark.sparkContext.broadcast(counts)
     val lb = lowerBound; val ub = upperBound
 
     // build the quantile table on the driver, ship it in the closure
@@ -78,18 +111,12 @@ object Sampling {
       } else (q: Double) => dist.ppf(q, params)
     val table = new TabulatedPpf(exactPpf)
 
-    val ds: Dataset[Double] = spark.range(0, parts, 1, parts).mapPartitions { _ =>
-      val pid = TaskContext.getPartitionId()
-      val rng = new java.util.SplittableRandom(seed + pid)
-      val m = bcCounts.value(pid)
-      Iterator.range(0L, m).map { _ =>
-        var u = rng.nextDouble()
-        if (u <= 0.0) u = Double.MinPositiveValue
-        if (u >= 1.0) u = 1.0 - 1e-16
-        table(u)
-      }
+    seededRows(spark, n, seed, numPartitions, doubles(columnName)) { (rng, w) =>
+      var u = rng.nextDouble()
+      if (u <= 0.0) u = Double.MinPositiveValue
+      if (u >= 1.0) u = 1.0 - 1e-16
+      w.write(0, table(u))
     }
-    ds.toDF(columnName)
   }
 
   /** Deterministic low-discrepancy generation: draw i maps the midpoint
@@ -98,13 +125,13 @@ object Sampling {
     * space; rows are produced where they will live), but the output SET
     * is reproducible independent of partitioning and RNG — the
     * stratified/QMC analogue of the seeded path for variance-reduced
-    * Monte Carlo, and the one an external engine can replay exactly. */
+    * Monte Carlo, and the one an external engine can replay exactly.
+    * Each partition maps the range's rows into one reused row. */
   def generateGrid(spark: SparkSession, distName: String, params: Array[Double],
                    n: Long, numPartitions: Int = 0,
                    lowerBound: Option[Double] = None,
                    upperBound: Option[Double] = None,
                    columnName: String = "sample"): DataFrame = {
-    import spark.implicits._
     require(n > 0, "n must be positive")
     val dist = DistRegistry.get(distName).getOrElse(
       throw new IllegalArgumentException(s"unknown distribution '$distName'"))
@@ -118,9 +145,12 @@ object Sampling {
         t.ppf _
       } else (q: Double) => dist.ppf(q, params)
     val nn = n.toDouble
-    spark.range(0L, n, 1L, parts)
-      .map(i => exactPpf((i + 0.5) / nn))
-      .toDF(columnName)
+    val rows = spark.range(0L, n, 1L, parts).queryExecution.toRdd.mapPartitions[InternalRow] { it =>
+      val w = new UnsafeRowWriter(1)
+      w.zeroOutNullBytes()
+      it.map { r => w.write(0, exactPpf((r.getLong(0) + 0.5) / nn)); w.getRow }
+    }
+    ColumnBridge.dataFrame(spark, rows, doubles(columnName))
   }
 
   /** Driver-side sampling from a fitted model (small n; reference

@@ -691,11 +691,11 @@ class FitterSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sharedState.cacheManager.clearCache()
     for ((name, call) <- calls) {
       val (r, jobs, shuffles) = jobsOf(call())
-      // AQE runs the stats aggregate as 2 jobs; the fused pass and the
-      // fan-out are one job each
-      assert(jobs <= 4, s"$name fit ran $jobs jobs")
-      assert(shuffles <= 1, s"$name fit shuffled in $shuffles stages; " +
-        "only the stats aggregate may shuffle")
+      // the stats scan, the fused scan and the fan-out are one job each; the
+      // stats pass is a scan of the planned RDD now, so it no longer shuffles
+      // and the bounds are tighter than the name's
+      assert(jobs <= 3, s"$name fit ran $jobs jobs")
+      assert(shuffles == 0, s"$name fit shuffled in $shuffles stages")
       assert(spark.sharedState.cacheManager.isEmpty, s"$name fit cached a relation")
       assert(r.successful.count() > 0, s"$name fit has no successful rows")
     }
@@ -792,6 +792,75 @@ class FitterSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = if (arr.length <= gk) arr else Fitter.exactResample(arr, gk, seed)
       assert(gr.samples(g).sameElements(want), s"group $g: sample differs from sampleBy's")
     }
+  }
+
+  test("the stats scan reads the stats aggregate's min/max/count on edge inputs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    // six partitions, three of them empty. `bad` holds no finite value;
+    // `lo` ties its minimum between 0.0 (seen first) and −0.0, `hi` its
+    // maximum between −0.0 (seen first) and 0.0; `zero` is ±0.0 alone;
+    // `one` has one finite value
+    val parts: Seq[Seq[Row]] = Seq(
+      Seq(),
+      Seq(Row(nan, 0.0, -0.0, -0.0, null, "g"), Row(null, 3.0, -1.0, 0.0, null, "g"),
+        Row(inf, -0.0, 0.0, -0.0, 7.25, "g")),
+      Seq(),
+      Seq(Row(-inf, -0.0, -2.0, 0.0, nan, "g"), Row(nan, 0.0, 0.0, 0.0, inf, "g")),
+      Seq(Row(null, 1.0, -0.0, -0.0, null, "g")),
+      Seq())
+    val schema = StructType(Seq("bad", "lo", "hi", "zero", "one").map(StructField(_, DoubleType)) :+
+      StructField("g", StringType))
+    val table = spark.createDataFrame(
+      spark.sparkContext.parallelize(parts, parts.length).flatMap(identity), schema)
+    assert(table.rdd.getNumPartitions == 6)
+    val cols = Seq("bad", "lo", "hi", "zero", "one")
+    val cleaned = table.select(cols.map(c => finite(c).as(c)) :+ F.col("g"): _*)
+    def bits(x: Any): Any = x match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }
+    // the stats aggregate the scan replaced, per column and per group
+    val aggs = cols.flatMap(c => Seq(F.min(c), F.max(c), F.count(c)))
+    val agg = cleaned.agg(aggs.head, aggs.tail: _*).head()
+    val extents = FitScan.extents(cleaned.queryExecution.toRdd, cols.length)
+    for ((c, i) <- cols.zipWithIndex) {
+      val e = extents(i)
+      val want = (0 until 3).map(j => bits(agg.get(3 * i + j)))
+      val got = if (e.count == 0L) Seq(null, null, 0L) else Seq(bits(e.min), bits(e.max), e.count)
+      assert(got == want, s"$c: scan $got, aggregate $want")
+    }
+    assert(extents(1).min.equals(0.0) && extents(2).max.equals(-0.0),
+      "the table must tie ±0.0 at lo's minimum and hi's maximum")
+
+    // fits over the table: `bad` drops out, every other column fits, and
+    // a fitted column's histogram is the one over the aggregate's range
+    val cfg = FitConfig(bins = 4)
+    val r = Fitter.fit(spark, table, cols, Some(Seq("uniform")), cfg)
+    assert(r.columnNames == Seq("hi", "lo", "one", "zero"))
+    def sseOver(fitted: FitResults, c: String, mn: Double, mx: Double, xs: Seq[Double]): Unit = {
+      val row = fitted.df.head()
+      val model = graft.dists.FrozenModel(graft.dists.ContinuousFamilies.Uniform,
+        row.getSeq[Double](row.fieldIndex("parameters")).toArray, None, None)
+      val hi = mx + (mx - mn) * 1e-10
+      val width = (hi - mn) / 4
+      val counts = new Array[Long](4)
+      xs.foreach(x => counts(math.min(math.max(math.floor((x - mn) / width).toLong, 0L), 3L).toInt) += 1)
+      val density = counts.map(_.toDouble / (xs.length * width))
+      val edges = Array.tabulate(5)(j => mn + j * (hi - mn) / 4)
+      assert(row.getAs[Double]("sse") == graft.functions.Metrics.sseContinuous(model, density, edges),
+        s"$c: histogram differs")
+    }
+    val lo = cleaned.where(F.col("lo").isNotNull).collect().map(_.getDouble(1)).toSeq
+    sseOver(r.forColumn("lo"), "lo", agg.getDouble(3), agg.getDouble(4), lo)
+
+    // a one-group grouped fit reads the grouped aggregate's stats
+    val g = Fitter.fitGrouped(spark, table, "g", "lo", Some(Seq("uniform")), cfg)
+    val gAgg = cleaned.where(F.col("lo").isNotNull).groupBy("g")
+      .agg(F.min("lo"), F.max("lo"), F.count("lo")).head()
+    assert(g.df.count() == 1 && g.df.head().getAs[Double]("data_count") == gAgg.getLong(3))
+    sseOver(g, "g", gAgg.getDouble(1), gAgg.getDouble(2), lo)
   }
 
   test("fitGrouped ignores ±Inf like fit: results with and without injected infinities agree") {

@@ -53,6 +53,165 @@ class GenerationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.forall(x => x >= -1.0 && x <= 1.5))
   }
 
+  /** Every row of `df` in order, doubles as their raw bits. */
+  private def rowBits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+
+  test("the samplers' UnsafeRow frames equal the Dataset/Row frames they replaced") {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.{DataFrame, Dataset, Row}
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+    import org.apache.commons.math3.linear.{Array2DRowRealMatrix, CholeskyDecomposition}
+    import graft.dists.{DistRegistry, Truncated}
+    import graft.functions.{SpecialMath => SM}
+    import spark.implicits._
+    def ppfOf(name: String, params: Array[Double], lb: Option[Double],
+              ub: Option[Double]): Double => Double = {
+      val dist = DistRegistry.get(name).get
+      if (lb.isDefined || ub.isDefined) {
+        val t = new Truncated(dist, params, lb.getOrElse(Double.NegativeInfinity),
+          ub.getOrElse(Double.PositiveInfinity))
+        t.ppf _
+      } else (q: Double) => dist.ppf(q, params)
+    }
+    def nextGaussian(rng: java.util.SplittableRandom): Double =
+      SM.normPpf(math.min(1 - 1e-16, math.max(1e-300, rng.nextDouble())))
+    // the constructions as they were: a typed Dataset over spark.range
+    // and Row RDDs through createDataFrame
+    def oldGenerate(name: String, params: Array[Double], n: Long, seed: Long, parts: Int,
+                    lb: Option[Double] = None, ub: Option[Double] = None): DataFrame = {
+      val bcCounts = spark.sparkContext.broadcast(Sampling.partitionCounts(n, parts))
+      val table = new Sampling.TabulatedPpf(ppfOf(name, params, lb, ub))
+      val ds: Dataset[Double] = spark.range(0, parts, 1, parts).mapPartitions { _ =>
+        val pid = TaskContext.getPartitionId()
+        val rng = new java.util.SplittableRandom(seed + pid)
+        Iterator.range(0L, bcCounts.value(pid)).map { _ =>
+          var u = rng.nextDouble()
+          if (u <= 0.0) u = Double.MinPositiveValue
+          if (u >= 1.0) u = 1.0 - 1e-16
+          table(u)
+        }
+      }
+      ds.toDF("sample")
+    }
+    def oldGrid(name: String, params: Array[Double], n: Long, parts: Int,
+                lb: Option[Double]): DataFrame = {
+      val ppf = ppfOf(name, params, lb, None)
+      val nn = n.toDouble
+      spark.range(0L, n, 1L, parts).map(i => ppf((i + 0.5) / nn)).toDF("sample")
+    }
+    val cop = new GaussianCopula(
+      Seq(Marginal("a", "norm", Array(50.0, 10.0)), Marginal("b", "expon", Array(0.0, 5.0)),
+        Marginal("c", "gamma", Array(2.0, 0.0, 2.0), lowerBound = Some(0.5))),
+      Array(Array(1.0, 0.5, 0.3), Array(0.5, 1.0, 0.4), Array(0.3, 0.4, 1.0)))
+    def oldCopula(n: Long, seed: Long, parts: Int, returnUniform: Boolean): DataFrame = {
+      val bcCounts = spark.sparkContext.broadcast(Sampling.partitionCounts(n, parts))
+      val l = cop.cholesky
+      val k = cop.marginals.length
+      val ppfs = if (returnUniform) Array.empty[Double => Double] else cop.marginals.toArray.map { m =>
+        val clamp = (u: Double) => math.min(1 - 1e-16, math.max(1e-300, u))
+        val exact = ppfOf(m.distName, m.params, m.lowerBound, m.upperBound)
+        val table = new Sampling.TabulatedPpf(u => exact(clamp(u)))
+        (u: Double) => table(u)
+      }
+      val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
+        val pid = TaskContext.getPartitionId()
+        val rng = new java.util.SplittableRandom(seed + pid)
+        Iterator.range(0L, bcCounts.value(pid)).map { _ =>
+          val z = Array.fill(k)(nextGaussian(rng))
+          val out = new Array[Any](k)
+          var i = 0
+          while (i < k) {
+            var s = 0.0
+            var j = 0
+            while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+            val u = SM.normCdf(s)
+            out(i) = if (returnUniform) u else ppfs(i)(u)
+            i += 1
+          }
+          Row.fromSeq(out.toSeq)
+        }
+      }
+      spark.createDataFrame(rows, StructType(cop.columns.map(c => StructField(c, DoubleType))))
+    }
+    val mix = GaussianMixtureResult(Seq("x", "y"), Array(0.4, 0.6),
+      Array(Array(0.0, 0.0), Array(5.0, 3.0)),
+      Array(Array(Array(1.0, 0.2), Array(0.2, 1.0)), Array(Array(1.0, -0.3), Array(-0.3, 2.0))),
+      0.0, 0L, 0.0, 0.0)
+    def oldMixture(n: Long, seed: Long, parts: Int): DataFrame = {
+      val bcCounts = spark.sparkContext.broadcast(Sampling.partitionCounts(n, parts))
+      val cum = mix.weights.scanLeft(0.0)(_ + _).tail
+      val chols = mix.covariances.map(c =>
+        new CholeskyDecomposition(new Array2DRowRealMatrix(c), 1e-10, 1e-10).getL.getData)
+      val means = mix.means
+      val kk = mix.columns.length
+      val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
+        val pid = TaskContext.getPartitionId()
+        val rng = new java.util.SplittableRandom(seed + pid)
+        Iterator.range(0L, bcCounts.value(pid)).map { _ =>
+          val u = rng.nextDouble()
+          var c = 0
+          while (c < cum.length - 1 && u > cum(c)) c += 1
+          val z = Array.fill(kk)(nextGaussian(rng))
+          val l = chols(c); val mu = means(c)
+          Row.fromSeq(Seq.tabulate(kk) { i =>
+            var s = mu(i)
+            var j = 0
+            while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+            s
+          } :+ c)
+        }
+      }
+      spark.createDataFrame(rows, StructType(mix.columns.map(c => StructField(c, DoubleType)) :+
+        StructField("component", IntegerType)))
+    }
+    val mvn = MultivariateNormalResult(Seq("u", "v"), Array(1.0, -2.0),
+      Array(Array(2.0, 0.6), Array(0.6, 1.0)), 0L)
+    def oldMvn(n: Long, seed: Long, parts: Int): DataFrame = {
+      val bcCounts = spark.sparkContext.broadcast(Sampling.partitionCounts(n, parts))
+      val (l, mu, kk) = (mvn.cholesky, mvn.mean, mvn.k)
+      val rows = spark.range(0, parts, 1, parts).rdd.mapPartitions { _ =>
+        val pid = TaskContext.getPartitionId()
+        val rng = new java.util.SplittableRandom(seed + pid)
+        Iterator.range(0L, bcCounts.value(pid)).map { _ =>
+          val z = Array.fill(kk)(nextGaussian(rng))
+          Row.fromSeq(Seq.tabulate(kk) { i =>
+            var s = mu(i)
+            var j = 0
+            while (j <= i) { s += l(i)(j) * z(j); j += 1 }
+            s
+          })
+        }
+      }
+      spark.createDataFrame(rows, StructType(mvn.columns.map(c => StructField(c, DoubleType))))
+    }
+
+    val n = 2001L
+    for (parts <- Seq(1, 3, 4)) {
+      val cases = Seq[(String, DataFrame, DataFrame)](
+        ("generate", Sampling.generate(spark, "gamma", Array(2.0, 0.0, 2.0), n, 7L, parts),
+          oldGenerate("gamma", Array(2.0, 0.0, 2.0), n, 7L, parts)),
+        ("generate, truncated", Sampling.generate(spark, "norm", Array(50.0, 10.0), n, 7L, parts,
+          lowerBound = Some(40.0), upperBound = Some(70.0)),
+          oldGenerate("norm", Array(50.0, 10.0), n, 7L, parts, Some(40.0), Some(70.0))),
+        ("generateGrid", Sampling.generateGrid(spark, "gamma", Array(2.0, 0.0, 2.0), n, parts,
+          lowerBound = Some(0.5)), oldGrid("gamma", Array(2.0, 0.0, 2.0), n, parts, Some(0.5))),
+        ("copula", cop.sampleDistributed(spark, n, 7L, parts), oldCopula(n, 7L, parts, false)),
+        ("copula, uniform", cop.sampleDistributed(spark, n, 7L, parts, returnUniform = true),
+          oldCopula(n, 7L, parts, true)),
+        ("mixture", Mixture.sampleDistributed(spark, mix, n, 7L, parts), oldMixture(n, 7L, parts)),
+        ("multivariate normal", mvn.sampleDistributed(spark, n, 7L, parts), oldMvn(n, 7L, parts)))
+      for ((name, got, want) <- cases) {
+        assert(got.schema == want.schema, s"$name at $parts partitions: schema")
+        assert(got.rdd.getNumPartitions == parts, s"$name at $parts partitions: layout")
+        assert(rowBits(got) == rowBits(want), s"$name at $parts partitions: rows")
+      }
+    }
+  }
+
   test("truncated generation stays inside bounds") {
     val df = Sampling.generate(spark, "norm", Array(0.0, 1.0), 5000L,
       lowerBound = Some(-1.0), upperBound = Some(1.0))

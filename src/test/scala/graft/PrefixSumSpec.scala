@@ -139,4 +139,35 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty, "hand-written range-partition constructions " +
       s"in ${offenders.mkString(", ")}: use PrefixSum")
   }
+
+  test("fits run no Catalyst aggregate; samplers build no Row or typed frame") {
+    def source(file: String): Vector[String] = {
+      val f = new java.io.File(s"src/main/scala/graft/operators/$file")
+      assert(f.isFile, s"source not found at ${f.getAbsolutePath}")
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().toVector finally src.close()
+    }
+    // a DataFrame groupBy names its keys by string or Column; a Scala
+    // collection's groupBy takes a function
+    val catalystAgg = """\.agg\(|\.groupBy\(\s*("|F\.|\$|col\()""".r
+    val fitter = source("Fitter.scala")
+    val aggs = fitter.indices.filter(i => catalystAgg.findFirstIn(fitter(i)).isDefined)
+    assert(aggs.isEmpty, "Catalyst aggregates at Fitter.scala lines " +
+      s"${aggs.map(_ + 1).mkString(", ")}: fold the stats in a FitScan pass")
+
+    // each sampler's body, from its def to the method's closing brace
+    val samplers = Seq("Sampling.scala" -> "def seededRows(", "Sampling.scala" -> "def generate(",
+      "Sampling.scala" -> "def generateGrid(", "Copula.scala" -> "def sampleDistributed(",
+      "Mixture.scala" -> "def sampleDistributed(", "Multivariate.scala" -> "def sampleDistributed(")
+    val encoded = """createDataFrame\(|spark\.range\([^)]*\)(\.rdd)?\s*\.mapPartitions""".r
+    val offenders = samplers.filter { case (file, sig) =>
+      val lines = source(file)
+      val start = lines.indexWhere(_.contains(sig))
+      val end = lines.indexWhere(_ == "  }", start)
+      assert(start >= 0 && end > start, s"$sig not found in $file")
+      encoded.findFirstIn(lines.slice(start, end).mkString("\n")).isDefined
+    }
+    assert(offenders.isEmpty, s"samplers that build frames through encoders: " +
+      s"${offenders.mkString(", ")}: write UnsafeRows through Sampling.seededRows")
+  }
 }
