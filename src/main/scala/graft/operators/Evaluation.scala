@@ -236,56 +236,40 @@ object Evaluation {
     *
     *   fitted_j = max_{a≤j} min_{b≥j} rate(a..b)
     *
-    * over the ≤ `bins`-row bucket frame — no sequential PAV loop, the
-    * whole fit is three joins over a tiny frame and replays in any
-    * engine (interval rates are exact integer ratios, so pooled
+    * over the ≤ `bins`-row bucket frame — no sequential PAV loop; the
+    * fit runs on the driver over the collected pre-bins and replays in
+    * any engine (interval rates are exact integer ratios, so pooled
     * buckets share bit-identical fitted values and the merge is an
     * exact equality). For a DECREASING trend, negate the label
-    * upstream (isotonic in 1−rate). Data is touched once (the rank
-    * shuffle of the quantile binning).
+    * upstream (isotonic in 1−rate). Data is touched once: the pre-bins
+    * are one [[Ranks.bucketTable]].
     *
     * @return one row per pre-bin: (bucket, n, n_pos, rate, fitted,
     *         merged_bin) — merged_bin is the 1-based pooled-bin id */
   def monotoneWoeBins(df: DataFrame, xCol: String, labelCol: String,
                       bins: Int = 10): DataFrame = {
     require(bins >= 2 && bins <= 64, "bins must be in 2..64")
-    import org.apache.spark.sql.expressions.Window
+    val spark = df.sparkSession
+    import spark.implicits._
     val y = F.col(labelCol).cast("boolean")
-    val clean = df
-      .where(F.col(xCol).cast("double").isNotNull &&
-        !F.isnan(F.col(xCol).cast("double")) && y.isNotNull)
-      .select(F.col(xCol).cast("double").as("__x"),
-        F.when(y, 1L).otherwise(0L).as("__y"))
-    val bucketed = Ranks.quantileBuckets(clean, "__x", bins, "bucket")
-    val cells = bucketed.groupBy("bucket")
-      .agg(F.count(F.lit(1)).as("n"), F.sum("__y").as("n_pos"))
-    val wOrd = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pre = cells
-      .withColumn("cn", F.sum("n").over(wOrd))
-      .withColumn("cp", F.sum("n_pos").over(wOrd))
-      .localCheckpoint(true)
-    // interval rates over the <= bins-row frame: rate(a..b) from the
-    // prefix sums; the three tiny joins below never touch data rows
-    val lo = pre.select(F.col("bucket").as("a"),
-      (F.col("cn") - F.col("n")).as("cna"),
-      (F.col("cp") - F.col("n_pos")).as("cpa"))
-    val hi = pre.select(F.col("bucket").as("b"), F.col("cn").as("cnb"),
-      F.col("cp").as("cpb"))
-    val intervals = lo.join(hi, F.col("a") <= F.col("b"))
-      .select(F.col("a"), F.col("b"),
-        ((F.col("cpb") - F.col("cpa")).cast("double") /
-          (F.col("cnb") - F.col("cna"))).as("avg"))
-    val js = pre.select(F.col("bucket").as("j"))
-    val innerMin = js
-      .join(intervals, F.col("a") <= F.col("j") &&
-        F.col("b") >= F.col("j"))
-      .groupBy("j", "a").agg(F.min("avg").as("mn"))
-    val fitted = innerMin.groupBy("j").agg(F.max("mn").as("__fit"))
-    val wRank = Window.orderBy("j")
-    pre.join(fitted, F.col("bucket") === F.col("j"))
-      .withColumn("merged_bin",
-        F.dense_rank().over(wRank.orderBy(F.col("__fit"))).cast("long"))
+    val (_, cells) = Ranks.bucketTable(df.where(y.isNotNull), F.col(xCol),
+      bins, "n_pos" -> F.when(y, 1L).otherwise(0L))
+    val pre = cells.select(F.col("__b") + 1L, F.col("__c"), F.col("n_pos"))
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    // rate(a..b) over pre-bins a..b from the prefix sums: an exact
+    // integer ratio, the same double division the SQL replay runs
+    val cn = pre.scanLeft(0L)(_ + _._2)
+    val cp = pre.scanLeft(0L)(_ + _._3)
+    def rate(a: Int, b: Int): Double =
+      (cp(b + 1) - cp(a)).toDouble / (cn(b + 1) - cn(a)).toDouble
+    val fitted = pre.indices.map(j => (0 to j).map(a =>
+      (j until pre.length).map(rate(a, _)).reduce[Double](math.min))
+      .reduce[Double](math.max))
+    val levels = fitted.distinct.sorted(Ordering.Double.TotalOrdering)
+    pre.indices.map { j =>
+      (pre(j)._1, pre(j)._2, pre(j)._3, fitted(j),
+        levels.indexOf(fitted(j)) + 1L)
+    }.toDF("bucket", "n", "n_pos", "__fit", "merged_bin")
       .select(F.col("bucket"), F.col("n"), F.col("n_pos"),
         F.round(F.col("n_pos").cast("double") / F.col("n"), 6)
           .as("rate"),
@@ -1662,10 +1646,9 @@ object Evaluation {
     * Bucketing is the deterministic tie-stable form: every row with the
     * same score lands in the same bucket (bucket = k − ⌊(rank−1)·k/n⌋
     * on the ascending min-rank), unlike SQL NTILE whose within-tie
-    * assignment is arbitrary. Scale shape: the [[Ranks.minRanks]]
-    * prefix-sum construction (distinct scores only, no global window) +
-    * one value join back + ONE bucket aggregation; the cumulative
-    * window runs over ≤ k bucket rows.
+    * assignment is arbitrary. Scale shape: one [[Ranks.bucketTable]]
+    * over the distinct scores (no global window, no join back to the
+    * rows); the cumulative window runs over ≤ k bucket rows.
     *
     * @return one row per non-empty bucket: (bucket, n, n_pos, rate,
     *         cum_n, cum_pos, capture, lift), floats rounded to 6;
@@ -1674,20 +1657,12 @@ object Evaluation {
                 k: Int = 10): DataFrame = {
     require(k >= 2, "need at least 2 buckets")
     import org.apache.spark.sql.expressions.Window
-    val s = F.col(scoreCol).cast("double")
     val y = F.col(labelCol).cast("boolean")
-    val base = df.where(s.isNotNull && !F.isnan(s) && y.isNotNull)
-      .select(s.as("__s"), F.when(y, 1L).otherwise(0L).as("__y"))
-    val (n, ranks0) = Ranks.minRanksWithN(base, "__s", "__rk")
+    val (n, cells) = Ranks.bucketTable(df.where(y.isNotNull),
+      F.col(scoreCol), k, "n_pos" -> F.when(y, 1L).otherwise(0L))
     require(n > 0L, "no complete rows")
-    val ranks = ranks0.withColumnRenamed("__s", "__v")
-    val bucketed = base
-      .join(ranks, F.col("__s") === F.col("__v"), "left")
-      .withColumn("bucket",
-        (F.lit(k) - F.floor((F.col("__rk") - 1) * k / n)).cast("long"))
-    val agged = bucketed.groupBy("bucket").agg(
-      F.count(F.lit(1)).as("n"),
-      F.sum("__y").as("n_pos"))
+    val agged = cells.select((F.lit(k.toLong) - F.col("__b")).as("bucket"),
+      F.col("__c").as("n"), F.col("n_pos"))
     val wCum = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy("bucket")

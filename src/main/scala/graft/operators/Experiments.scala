@@ -396,12 +396,14 @@ object Experiments {
     *   ATE = Σ_s (n_s/N) · (ȳ_t(s) − ȳ_c(s))
     *
     * — the five-strata classic that removes ~90% of the bias a naive
-    * mean difference carries (Rosenbaum–Rubin). Bucketing is the
-    * tie-stable prefix-sum form; strata missing an arm are excluded
-    * from BOTH the weights and the ATE (reported as n_excluded).
+    * mean difference carries (Rosenbaum–Rubin). The strata are one
+    * [[Ranks.bucketTable]] (tie-stable, the naive gap read from the same
+    * sums); strata missing an arm are excluded from BOTH the weights
+    * and the ATE (reported as n_excluded).
     *
     * @return one row: (ate, naive_diff, n, n_strata, n_excluded),
-    *         floats rounded to 6 */
+    *         floats rounded to 6; ate null when no stratum has both
+    *         arms, naive_diff null when an arm is empty */
   def stratifiedAte(df: DataFrame, treatedCol: String,
                     outcomeCol: String, scoreCol: String,
                     k: Int = 5): DataFrame = {
@@ -409,37 +411,28 @@ object Experiments {
     val t = F.col(treatedCol).cast("boolean")
     val y = F.col(outcomeCol).cast("double")
     val s = F.col(scoreCol).cast("double")
-    val base = df
-      .where(t.isNotNull && y.isNotNull && !F.isnan(y) &&
-        s.isNotNull && !F.isnan(s))
-      .select(t.as("__t"), y.as("__y"), s.as("__s"))
-    val bucketed = Ranks.quantileBuckets(base, "__s", k, "__b")
-    val strata = bucketed.groupBy("__b").agg(
-      F.count(F.lit(1)).as("__n"),
-      F.sum(F.when(F.col("__t"), 1L).otherwise(0L)).as("__nt"),
-      F.sum(F.when(!F.col("__t"), 1L).otherwise(0L)).as("__nc"),
-      F.sum(F.when(F.col("__t"), F.col("__y")).otherwise(0.0))
-        .as("__st"),
-      F.sum(F.when(!F.col("__t"), F.col("__y")).otherwise(0.0))
-        .as("__sc"))
+    val (_, strata) = Ranks.bucketTable(
+      df.where(t.isNotNull && y.isNotNull && !F.isnan(y)), s, k,
+      "__nt" -> F.when(t, 1L).otherwise(0L),
+      "__nc" -> F.when(!t, 1L).otherwise(0L),
+      "__st" -> F.when(t, y).otherwise(0.0),
+      "__sc" -> F.when(!t, y).otherwise(0.0))
     val ok = F.col("__nt") > 0L && F.col("__nc") > 0L
     val gap = F.col("__st") / F.col("__nt") -
       F.col("__sc") / F.col("__nc")
-    val naive = base.agg(
-      (F.sum(F.when(F.col("__t"), F.col("__y")).otherwise(0.0)) /
-        F.sum(F.when(F.col("__t"), 1L).otherwise(0L)) -
-        F.sum(F.when(!F.col("__t"), F.col("__y")).otherwise(0.0)) /
-          F.sum(F.when(!F.col("__t"), 1L).otherwise(0L))).as("__nd"))
     strata
       .agg(
-        F.round(F.sum(F.when(ok, F.col("__n").cast("double") * gap)) /
-          F.sum(F.when(ok, F.col("__n"))).cast("double"), 6).as("ate"),
-        F.sum(F.when(ok, F.col("__n")).otherwise(0L)).as("n"),
+        F.round(F.sum(F.when(ok, F.col("__c").cast("double") * gap)) /
+          F.sum(F.when(ok, F.col("__c"))).cast("double"), 6).as("ate"),
+        F.sum(F.when(ok, F.col("__c")).otherwise(0L)).as("n"),
         F.sum(F.when(ok, 1L).otherwise(0L)).as("n_strata"),
-        F.coalesce(F.sum(F.when(!ok, F.col("__n"))), F.lit(0L))
-          .as("n_excluded"))
-      .crossJoin(naive)
-      .withColumn("naive_diff", F.round(F.col("__nd"), 6))
+        F.coalesce(F.sum(F.when(!ok, F.col("__c"))), F.lit(0L))
+          .as("n_excluded"),
+        // the naive gap over every stratum, one-armed ones included;
+        // null when an arm is empty (x / 0 raises under ANSI)
+        F.when(F.sum("__nt") > 0L && F.sum("__nc") > 0L,
+          F.round(F.sum("__st") / F.sum("__nt") -
+            F.sum("__sc") / F.sum("__nc"), 6)).as("naive_diff"))
       .select("ate", "naive_diff", "n", "n_strata", "n_excluded")
   }
 
@@ -565,8 +558,8 @@ object Experiments {
     *   qini(b) = cumPos_t(b) − cumPos_c(b) · cumN_t(b)/cumN_c(b)
     *
     * (Radcliffe's Qini curve data; a model that targets noise gives a
-    * flat curve). Same scale shape as liftTable: prefix-sum min-ranks
-    * over distinct scores, one bucket aggregation, cumulative windows
+    * flat curve). Same scale shape as liftTable: one
+    * [[Ranks.bucketTable]] over the distinct scores, cumulative windows
     * over ≤ k bucket rows.
     *
     * @return one row per bucket: (bucket, n_t, n_c, pos_t, pos_c,
@@ -577,28 +570,16 @@ object Experiments {
                 scoreCol: String, k: Int = 10): DataFrame = {
     require(k >= 2, "need at least 2 buckets")
     import org.apache.spark.sql.expressions.Window
-    val s = F.col(scoreCol).cast("double")
     val t = F.col(treatedCol).cast("boolean")
     val y = F.col(labelCol).cast("boolean")
-    val base = df
-      .where(s.isNotNull && !F.isnan(s) && t.isNotNull && y.isNotNull)
-      .select(s.as("__s"), t.as("__t"),
-        F.when(y, 1L).otherwise(0L).as("__y"))
-    val (n, ranks0) = Ranks.minRanksWithN(base, "__s", "__rk")
+    val (n, cells) = Ranks.bucketTable(df.where(t.isNotNull && y.isNotNull),
+      F.col(scoreCol), k,
+      "n_t" -> F.when(t, 1L).otherwise(0L),
+      "n_c" -> F.when(!t, 1L).otherwise(0L),
+      "pos_t" -> F.when(t && y, 1L).otherwise(0L),
+      "pos_c" -> F.when(!t && y, 1L).otherwise(0L))
     require(n > 0L, "no complete rows")
-    val ranks = ranks0.withColumnRenamed("__s", "__v")
-    val agged = base
-      .join(ranks, F.col("__s") === F.col("__v"), "left")
-      .withColumn("bucket",
-        (F.lit(k) - F.floor((F.col("__rk") - 1) * k / n)).cast("long"))
-      .groupBy("bucket")
-      .agg(
-        F.sum(F.when(F.col("__t"), 1L).otherwise(0L)).as("n_t"),
-        F.sum(F.when(!F.col("__t"), 1L).otherwise(0L)).as("n_c"),
-        F.sum(F.when(F.col("__t"), F.col("__y")).otherwise(0L))
-          .as("pos_t"),
-        F.sum(F.when(!F.col("__t"), F.col("__y")).otherwise(0L))
-          .as("pos_c"))
+    val agged = cells.withColumn("bucket", F.lit(k.toLong) - F.col("__b"))
     val wCum = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val rateT = F.col("pos_t").cast("double") / F.col("n_t")

@@ -29,7 +29,7 @@ object Packing {
       .select(F.col(idCol).cast("long").as("id"),
         F.coalesce(F.col(nTokensCol).cast("long"), F.lit(0L)).as("n_tokens"))
       .where(F.col("id").isNotNull)
-    PrefixSum.scanTwice(base.as[(Long, Long)], F.col("id")) { ps =>
+    PrefixSum(base.as[(Long, Long)], F.col("id")) { ps =>
       ps.walk(ps.offsets(1)((s, r) => s(0) += r._2)) { (o, it) =>
         var running = o(0)
         it.map { case (id, nt) =>

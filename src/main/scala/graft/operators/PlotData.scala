@@ -124,7 +124,7 @@ object PlotData {
     val values = df
       .select(F.col(column).cast("double").as("__v"))
       .where(F.col("__v").isNotNull && !F.isnan(F.col("__v")))
-    PrefixSum.scanTwice(values.as[Double], F.col("__v")) { ps =>
+    PrefixSum(values.as[Double], F.col("__v")) { ps =>
       val off = ps.offsets(1)((s, _) => s(0) += 1)
       val n = off.last(0)
       // the emit loop walks targets monotonically — enforce the sorted,

@@ -9,27 +9,27 @@ import org.apache.spark.sql.{Column, Dataset}
   * construction Spark itself uses for `zipWithIndex`, shared by every
   * rank, ECDF and risk-set operator in this package:
   *
-  *   1. persist the input: range partitioning samples its child in a
-  *      separate job before the shuffle job reads it again, so an
-  *      aggregated input is computed once, not twice
-  *      ([[PrefixSum.scanTwice]] skips this for row-scale inputs);
-  *   2. `repartitionByRange` + `sortWithinPartitions` on the order
+  *   1. `repartitionByRange` + `sortWithinPartitions` on the order
   *      columns (ascending, or `.desc` for suffix sums such as a Cox
-  *      risk set), cached as a typed RDD;
-  *   3. [[PrefixSum#parts]]: one job, one summary per partition, in
+  *      risk set), cached as a typed RDD. Under adaptive execution
+  *      taking the RDD materializes the input's shuffles and the range
+  *      shuffle as query stages, so the range sampler reads an
+  *      aggregated input's shuffle output instead of recomputing it;
+  *   2. [[PrefixSum#parts]]: one job, one summary per partition, in
   *      partition order — driver traffic O(#partitions);
-  *   4. a driver-side scan of the summaries ([[PrefixSum.scan]] for
+  *   3. a driver-side scan of the summaries ([[PrefixSum.scan]] for
   *      `Long` lanes; Double, max/min, first-value and carry scans are
   *      the caller's own fold over `parts`);
-  *   5. [[PrefixSum#walk]]: the scan broadcast once, partition i
+  *   4. [[PrefixSum#walk]]: the scan broadcast once, partition i
   *      walking its sorted rows from seed i.
   *
-  * Lifecycle contract: the entry points are loans. The persisted input
-  * and the sorted RDD live for the body only and are released in
-  * `finally`, also when the body throws. A result the body returns that
-  * is still backed by the sorted RDD must be materialized inside the
-  * loan with `localCheckpoint(true)`, or it re-runs the range shuffle on
-  * first use after the release.
+  * Lifecycle contract: the entry point is a loan. The cached sorted RDD
+  * lives for the body only and is released in `finally`, also when the
+  * body throws. A walk the body returns stays lazy and valid after the
+  * release: on first use it re-reads the range shuffle's output, which
+  * the loan has already written, and sorts each partition again. A
+  * result read by several actions may still be materialized inside the
+  * loan (`localCheckpoint(true)`), at one job and a persisted RDD.
   */
 private[operators] final class PrefixSum[T] private (sorted: RDD[T]) {
 
@@ -59,32 +59,14 @@ private[operators] final class PrefixSum[T] private (sorted: RDD[T]) {
 
 private[operators] object PrefixSum {
 
-  /** Loan the range-sorted `input` to `body`, the input persisted for
-    * the loan (see the class doc). For aggregated inputs, whose
-    * recomputation would re-run their shuffle. */
+  /** Loan the range-sorted `input` to `body` (see the class doc). */
   def apply[T, R](input: Dataset[T], order: Column*)(
-      body: PrefixSum[T] => R): R =
-    loan(input, order, persistInput = true)(body)
-
-  /** [[apply]] without persisting the input: the range sampler and the
-    * shuffle each scan it. For row-scale or already-materialized inputs,
-    * where a cache would hold a whole table and cost one more job (the
-    * adaptive planner materializes a cached relation in a job of its
-    * own) to save one cheap scan. */
-  def scanTwice[T, R](input: Dataset[T], order: Column*)(
-      body: PrefixSum[T] => R): R =
-    loan(input, order, persistInput = false)(body)
-
-  private def loan[T, R](input: Dataset[T], order: Seq[Column],
-                         persistInput: Boolean)(body: PrefixSum[T] => R): R = {
-    if (persistInput) input.persist()
-    try {
-      val sorted = input.repartitionByRange(order: _*)
-        .sortWithinPartitions(order: _*).rdd
-      sorted.cache()
-      try body(new PrefixSum(sorted))
-      finally sorted.unpersist(blocking = false)
-    } finally if (persistInput) input.unpersist(blocking = false)
+      body: PrefixSum[T] => R): R = {
+    val sorted = input.repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*).rdd
+    sorted.cache()
+    try body(new PrefixSum(sorted))
+    finally sorted.unpersist(blocking = false)
   }
 
   /** Exclusive k-lane scan of per-partition Long sums: `sums.length + 1`

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Scale-safe rank construction.
   *
@@ -13,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   *      [[PrefixSum]] construction, driver traffic O(#partitions),
   *   3. hash-join the (value → rank) table back to the rows.
   *
-  * Every stage is distributed.
+  * Every stage is distributed. Tables that need only per-bucket sums
+  * skip step 3: [[bucketTable]] sums the per-value cells by bucket.
   */
 object Ranks {
 
@@ -35,21 +37,60 @@ object Ranks {
     * avoid a second aggregation and a second value join. */
   private[operators] def minRanksWithCounts(df: DataFrame, column: String,
                                             rankCol: String,
-                                            countCol: String): (Long, DataFrame) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val counts = df.select(F.col(column).cast("double").as("__v"))
-      .where(F.col("__v").isNotNull && !F.isnan(F.col("__v")))
-      .groupBy("__v").agg(F.count(F.lit(1)).as("__c"))
-    PrefixSum(counts.as[(Double, Long)], F.col("__v")) { ps =>
-      val off = ps.offsets(1)((s, r) => s(0) += r._2)
-      val ranked = ps.walk(off) { (o, it) =>
-        var running = o(0)
-        it.map { case (v, c) =>
-          val r = running + 1; running += c; (v, r.toDouble, c) }
-      }.toDF(column, rankCol, countCol)
-      // lineage-free copy: the rank table outlives the loan
-      (off.last(0), ranked.localCheckpoint(true))
+                                            countCol: String): (Long, DataFrame) =
+    walkCells(df, F.col(column), Nil)(_ => StructType(Seq(
+      StructField(column, DoubleType, nullable = false),
+      StructField(rankCol, DoubleType, nullable = false),
+      StructField(countCol, LongType, nullable = false)))) { (below, _, c) =>
+      Row(c.getDouble(0), (below + 1).toDouble, c.getLong(1))
+    }
+
+  /** Tie-stable k-bucket table from per-value cells — the shape of the
+    * ranked diagnostics (Qini, lift, quantile strata, binned response,
+    * WoE bins). The rows with a valid `value` are grouped by value once
+    * into cells holding a count and the `sums`; the [[PrefixSum]] walk
+    * gives each value its 0-based bucket ⌊(minrank − 1)·k/n⌋ from the
+    * offsets the loan already computes, so equal values always share a
+    * bucket; the cells are then summed by bucket. Nothing is joined back
+    * to the rows and the source is scanned once.
+    *
+    * @param sums (name, per-row Long or Double expression) pairs, each
+    *             summed per bucket
+    * @return (n, table): n the valid-row count; the lazy table has one
+    *         row per non-empty bucket: (`__b` 0-based, `__c` rows,
+    *         sums...) */
+  private[operators] def bucketTable(rows: DataFrame, value: Column, k: Int,
+                                     sums: (String, Column)*): (Long, DataFrame) = {
+    val (n, cells) = walkCells(rows, value,
+        sums.map { case (name, e) => F.sum(e).as(name) })(s =>
+      StructType(StructField("__b", LongType, nullable = false) +: s.fields.tail)) {
+      (below, n, c) =>
+        // the double algebra of F.floor((minrank - 1) * k / n)
+        Row.fromSeq(math.floor(below.toDouble * k / n).toLong +: c.toSeq.tail)
+    }
+    (n, cells.groupBy("__b").agg(F.sum("__c").as("__c"),
+      sums.map { case (name, _) => F.sum(name).as(name) }: _*))
+  }
+
+  /** The cells of `rows` per valid (non-null, non-NaN) double `value`:
+    * (`__v`, `__c` the row count, `aggs`...), walked in value order.
+    * `emit(below, n, cell)` maps each cell given the count of valid rows
+    * strictly below its value and their total n, into rows of the
+    * schema `out` gives for the cells' schema. The walk is lazy. */
+  private def walkCells(rows: DataFrame, value: Column, aggs: Seq[Column])(
+      out: StructType => StructType)(
+      emit: (Long, Long, Row) => Row): (Long, DataFrame) = {
+    val v = value.cast("double")
+    val cells = rows.where(v.isNotNull && !F.isnan(v)).groupBy(v.as("__v"))
+      .agg(F.count(F.lit(1)).as("__c"), aggs: _*)
+    PrefixSum(cells, F.col("__v")) { ps =>
+      val off = ps.offsets(1)((s, c) => s(0) += c.getLong(1))
+      val n = off.last(0)
+      val walked = ps.walk(off) { (o, it) =>
+        var below = o(0)
+        it.map { c => val r = emit(below, n, c); below += c.getLong(1); r }
+      }
+      (n, rows.sparkSession.createDataFrame(walked, out(cells.schema)))
     }
   }
 
@@ -82,7 +123,7 @@ object Ranks {
     * BEFORE trusting a fitted slope, and the population twin of the
     * score-space reliability table.
     *
-    * One rank pass + one bucket aggregation of explicit sums.
+    * One [[bucketTable]] of explicit sums.
     *
     * @return one row per bucket: (bucket, n, x_mean, y_mean, ci_lo,
     *         ci_hi), floats rounded 6 */
@@ -91,14 +132,10 @@ object Ranks {
     require(bins >= 2 && bins <= 1000, "bins must be in 2..1000")
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    val clean = df
-      .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y))
-      .select(x.as("__bx"), y.as("__by"))
-    val bucketed = quantileBuckets(clean, "__bx", bins, "bucket")
-    val agged = bucketed.groupBy("bucket").agg(
-      F.count(F.lit(1)).as("n"),
-      F.sum("__bx").as("__sx"), F.sum("__by").as("__sy"),
-      F.sum(F.col("__by") * F.col("__by")).as("__syy"))
+    val (_, cells) = bucketTable(df.where(y.isNotNull && !F.isnan(y)), x, bins,
+      "__sx" -> x, "__sy" -> y, "__syy" -> y * y)
+    val agged = cells.select((F.col("__b") + 1L).as("bucket"),
+      F.col("__c").as("n"), F.col("__sx"), F.col("__sy"), F.col("__syy"))
     val nD = F.col("n").cast("double")
     val xm = F.col("__sx") / nD
     val ym = F.col("__sy") / nD
@@ -416,7 +453,7 @@ object Ranks {
       F.lit(null).cast("double").as("__u"))
     // ref boundaries sort BEFORE src probes at equal position, so a
     // probe t matches the ref value whose rank range starts at t
-    PrefixSum.scanTwice(refRows.unionByName(srcRows)
+    PrefixSum(refRows.unionByName(srcRows)
         .as[(Double, Int, Option[Double], Option[Double], Option[Double])],
         F.col("__pos"), F.col("__side")) { ps =>
       val partLast = ps.parts { it =>

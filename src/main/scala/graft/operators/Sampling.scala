@@ -423,7 +423,7 @@ object Sampling {
     val keyed = df.withColumn("__gs_key",
       F.md5(F.concat_ws(":", F.col(keyCol).cast("string"),
         F.lit(seed.toString))))
-    PrefixSum.scanTwice(keyed, F.col("__gs_key"), F.col(keyCol)) { ps =>
+    PrefixSum(keyed, F.col("__gs_key"), F.col(keyCol)) { ps =>
       val positioned = ps.walk(ps.offsets(1)((s, _) => s(0) += 1)) {
         (o, it) =>
           var pos = o(0)

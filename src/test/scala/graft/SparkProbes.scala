@@ -17,6 +17,13 @@ object SparkProbes {
       case (id, rdd) if !rdd.isCheckpointed => id
     }.toSet, spark.sharedState.cacheManager.isEmpty)
 
+  /** Every persistent RDD, local checkpoints included, and whether the
+    * CacheManager is empty: the state of an operator whose result must
+    * not pin anything. */
+  def persistedState(spark: SparkSession): (Set[Int], Boolean) =
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      spark.sharedState.cacheManager.isEmpty)
+
   /** State `after` holds that `before` did not. Entries may only vanish
     * in between: the ContextCleaner drops collected RDDs on its own. */
   def added(before: (Set[Int], Boolean),
