@@ -265,40 +265,37 @@ object Clustering {
     *
     * @return k rows: (rank, idCol, sel_dist, coverage_radius) */
   def kCenterCoreset(df: DataFrame, idCol: String, embCol: String,
-                     k: Int): DataFrame = {
+                     k: Int): DataFrame = Persisted { scope =>
     require(k >= 2, "need k >= 2")
     val spark = df.sparkSession
     import spark.implicits._
-    val pts = df
+    val pts = scope.cache(df
       .where(F.col(idCol).isNotNull && F.col(embCol).isNotNull)
       .select(F.col(idCol).cast("long").as("__id"),
-        F.transform(F.col(embCol), x => x.cast("double")).as("__e"))
-      .persist()
-    try {
-      def sqDist(center: Array[Double]): org.apache.spark.sql.Column =
-        F.aggregate(
-          F.zip_with(F.col("__e"), F.lit(center),
-            (a, b) => (a - b) * (a - b)),
-          F.lit(0.0), (acc, x) => acc + x)
-      val seedRow = pts.orderBy(F.col("__id").asc).limit(1)
-        .select(F.col("__id"), F.col("__e")).head()
-      var centers = Vector((seedRow.getLong(0),
-        seedRow.getSeq[Double](1).toArray, 0.0))
-      (2 to k).foreach { _ =>
-        val minDist = centers.map(c => sqDist(c._2)).reduce(F.least(_, _))
-        val far = pts
-          .select(F.col("__id"), F.col("__e"), minDist.as("__d"))
-          .orderBy(F.col("__d").desc, F.col("__id").asc)
-          .limit(1).head()
-        centers = centers :+ ((far.getLong(0),
-          far.getSeq[Double](1).toArray, far.getDouble(2)))
-      }
-      val minAll = centers.map(c => sqDist(c._2)).reduce(F.least(_, _))
-      val radius = pts.agg(F.max(minAll)).head().getDouble(0)
-      centers.zipWithIndex.map { case ((id, _, d), i) =>
-        (i + 1L, id, math.rint(math.sqrt(d) * 1e6) / 1e6,
-          math.rint(math.sqrt(radius) * 1e6) / 1e6)
-      }.toDF("rank", idCol, "sel_dist", "coverage_radius")
-    } finally pts.unpersist(blocking = false)
+        F.transform(F.col(embCol), x => x.cast("double")).as("__e")))
+    def sqDist(center: Array[Double]): org.apache.spark.sql.Column =
+      F.aggregate(
+        F.zip_with(F.col("__e"), F.lit(center),
+          (a, b) => (a - b) * (a - b)),
+        F.lit(0.0), (acc, x) => acc + x)
+    val seedRow = pts.orderBy(F.col("__id").asc).limit(1)
+      .select(F.col("__id"), F.col("__e")).head()
+    var centers = Vector((seedRow.getLong(0),
+      seedRow.getSeq[Double](1).toArray, 0.0))
+    (2 to k).foreach { _ =>
+      val minDist = centers.map(c => sqDist(c._2)).reduce(F.least(_, _))
+      val far = pts
+        .select(F.col("__id"), F.col("__e"), minDist.as("__d"))
+        .orderBy(F.col("__d").desc, F.col("__id").asc)
+        .limit(1).head()
+      centers = centers :+ ((far.getLong(0),
+        far.getSeq[Double](1).toArray, far.getDouble(2)))
+    }
+    val minAll = centers.map(c => sqDist(c._2)).reduce(F.least(_, _))
+    val radius = pts.agg(F.max(minAll)).head().getDouble(0)
+    centers.zipWithIndex.map { case ((id, _, d), i) =>
+      (i + 1L, id, math.rint(math.sqrt(d) * 1e6) / 1e6,
+        math.rint(math.sqrt(radius) * 1e6) / 1e6)
+    }.toDF("rank", idCol, "sel_dist", "coverage_radius")
   }
 }

@@ -131,17 +131,15 @@ object Decontam {
     * @return (id, n_hits, n_uniq_grams), identical to contaminationReport */
   def bloomContaminationReport(corpus: DataFrame, benchmark: DataFrame,
                                idCol: String, textCol: String,
-                               n: Int = 8, fpp: Double = 0.01): DataFrame = {
-    val benchGrams = benchmark
+                               n: Int = 8, fpp: Double = 0.01): DataFrame = Persisted { scope =>
+    // cached for the two driver actions, count + bloom build; the verify
+    // join below recomputes the benchmark-sized gram set from lineage
+    // instead of pinning blocks for the caller's whole session
+    val benchGrams = scope.cache(benchmark
       .select(F.explode(gramsCol(F.col(textCol), n)).as("gram"))
-      .distinct()
-      .persist() // shared by the two driver actions: count + bloom build
+      .distinct())
     val nGrams = math.max(benchGrams.count(), 1L)
     val bf = benchGrams.stat.bloomFilter("gram", nGrams, fpp)
-    // release before returning the lazy plan — the verify join recomputes
-    // the benchmark-sized gram set from lineage instead of pinning blocks
-    // for the caller's whole session
-    benchGrams.unpersist(blocking = false)
     val bfB = corpus.sparkSession.sparkContext.broadcast(bf)
     val mightContain = F.udf((g: String) => bfB.value.mightContain(g))
     corpus

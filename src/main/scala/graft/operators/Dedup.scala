@@ -161,12 +161,12 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 128, bands: Int = 32,
-                   threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
+                   threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = Persisted { scope =>
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     // signatures feed the band explode AND both verification joins —
     // cache so the text is hashed exactly once
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, 3).cache()
+    val sigs = scope.cache(minhashSignatures(df, idCol, textCol, numHashes, 3))
 
     // bands carry ONLY (id, band, bkey) — the 128-slot signatures stay
     // out of the band shuffle (at 5K docs that is already a ~160 MB
@@ -201,14 +201,9 @@ object Dedup {
       .select(F.col("id_a"), F.col("id_b"),
         F.round(estUdf(F.col("sig_a"), F.col("sig_b")), 6).as("est_jaccard"))
       .where(F.col("est_jaccard") >= threshold)
-    // materialize the (small) pairs table lineage-free, then release the
-    // signature cache — signatures are ~1 KB/doc and must not outlive the
-    // call at corpus scale. localCheckpoint (vs persist) means the pairs
-    // blocks are freed by the ContextCleaner once the caller drops the
-    // DataFrame, instead of leaking one pinned relation per call.
-    val pinned = pairs.localCheckpoint(true)
-    sigs.unpersist(blocking = false)
-    pinned
+    // materialize the (small) pairs table lineage-free — signatures are
+    // ~1 KB/doc and must not outlive the call at corpus scale
+    scope.checkpoint(pairs)
   }
 
   /** Persistable MinHash dedup index: one (id, sig) row per document.
@@ -251,19 +246,15 @@ object Dedup {
                           numHashes: Int = 128, bands: Int = 32,
                           threshold: Double = 0.7,
                           maxBucket: Int = 1000,
-                          shingleSize: Int = 3): DataFrame = {
+                          shingleSize: Int = 3): DataFrame = Persisted { scope =>
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    val newSigs =
-      minhashSignatures(newDocs, idCol, textCol, numHashes, shingleSize).cache()
+    val newSigs = scope.cache(
+      minhashSignatures(newDocs, idCol, textCol, numHashes, shingleSize))
     // the index is consumed twice (band derivation + verification join);
-    // cache it so a lazily-built index isn't re-hashed per subtree — but
-    // only if the CALLER hasn't persisted it (cache() is keyed by plan,
-    // so unpersisting here would otherwise evict the caller's
-    // maintained-index cache and force a full re-hash on the next batch)
-    val callerCached =
-      index.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val idx = if (callerCached) index else index.cache()
+    // cache it so a lazily-built index isn't re-hashed per subtree (a
+    // caller's maintained-index cache stays the caller's)
+    val idx = scope.cache(index)
     val oldBanded = bandedOf(idx, bands, rows)
     val okBuckets = oldBanded.groupBy("band", "bkey")
       .agg(F.count(F.lit(1)).as("__n"))
@@ -291,10 +282,7 @@ object Dedup {
       .select(F.col("new_id"), F.col("old_id"),
         F.round(estUdf(F.col("sig_n"), F.col("sig_o")), 6).as("est_jaccard"))
       .where(F.col("est_jaccard") >= threshold)
-    val pinned = pairs.localCheckpoint(true)
-    newSigs.unpersist(blocking = false)
-    if (!callerCached) idx.unpersist(blocking = false)
-    pinned
+    scope.checkpoint(pairs)
   }
 
   /** Survivors after MinHash near-dup removal: drop the larger id of
@@ -616,16 +604,15 @@ object Dedup {
 
   private def connectedComponentsImpl(edges: DataFrame, aCol: String,
                                       bCol: String, maxIter: Int,
-                                      localThreshold: Long): DataFrame = {
+                                      localThreshold: Long): DataFrame = Persisted { scope =>
     val u = F.col("u"); val v = F.col("v")
     // canonical orientation (u > v), self-loops dropped
-    var e = edges
+    var e = scope.checkpoint(edges
       .select(F.col(aCol).cast("long").as("x"), F.col(bCol).cast("long").as("y"))
       .where(F.col("x") =!= F.col("y"))
       .select(F.greatest(F.col("x"), F.col("y")).as("u"),
         F.least(F.col("x"), F.col("y")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // (count, Σu, Σv, Σhash) fingerprint: one map-side-combined agg job
     // per round instead of the two shuffle jobs an `except` would cost.
     // A fingerprint match is only a CANDIDATE for convergence — it is
@@ -651,39 +638,39 @@ object Dedup {
     if (fpE._1 > 0L && fpE._1 <= localThreshold) {
       val spark = e.sparkSession
       import spark.implicits._
-      val arr = e.select("u", "v").as[(Long, Long)].collect()
-      e.unpersist()
-      return localComponents(arr).toSeq.toDF("id", "component")
-    }
-    var converged = fpE._1 == 0L
-    var it = 0
-    while (!converged && it < maxIter) {
-      // large-star: symmetrize, attach each strictly-larger neighbor to
-      // the minimum of the closed neighborhood (emitted edge keeps u > v)
-      val sym = e.union(e.select(v.as("u"), u.as("v")))
-      val lsMin = sym.groupBy("u").agg(F.min("v").as("mn"))
-      val ls = sym.join(lsMin, "u").where(v > u)
-        .select(v.as("u"), F.least(F.col("mn"), u).as("v"))
+      localComponents(e.select("u", "v").as[(Long, Long)].collect())
+        .toSeq.toDF("id", "component")
+    } else {
+      var converged = fpE._1 == 0L
+      var it = 0
+      while (!converged && it < maxIter) {
+        // large-star: symmetrize, attach each strictly-larger neighbor to
+        // the minimum of the closed neighborhood (emitted edge keeps u > v)
+        val sym = e.union(e.select(v.as("u"), u.as("v")))
+        val lsMin = sym.groupBy("u").agg(F.min("v").as("mn"))
+        val ls = sym.join(lsMin, "u").where(v > u)
+          .select(v.as("u"), F.least(F.col("mn"), u).as("v"))
+          .distinct()
+        // small-star: group by the larger endpoint, attach it and its
+        // non-minimal smaller neighbors to the minimal one
+        val ssMin = ls.groupBy("u").agg(F.min("v").as("mn"))
+        val next = scope.checkpoint(ls.join(ssMin, "u")
+          .where(v =!= F.col("mn"))
+          .select(v.as("u"), F.col("mn").as("v"))
+          .union(ssMin.select(u, F.col("mn").as("v")))
+          .distinct())
+        val fpN = fingerprint(next)
+        converged = fpN == fpE && next.except(e).isEmpty
+        scope.release(e)
+        e = next
+        fpE = fpN
+        it += 1
+      }
+      // at convergence every edge is (node, root): roots label themselves
+      e.select(u.as("id"), v.as("component"))
+        .union(e.select(v.as("id"), v.as("component")).distinct())
         .distinct()
-      // small-star: group by the larger endpoint, attach it and its
-      // non-minimal smaller neighbors to the minimal one
-      val ssMin = ls.groupBy("u").agg(F.min("v").as("mn"))
-      val next = ls.join(ssMin, "u").where(v =!= F.col("mn"))
-        .select(v.as("u"), F.col("mn").as("v"))
-        .union(ssMin.select(u, F.col("mn").as("v")))
-        .distinct()
-        .localCheckpoint(true)
-      val fpN = fingerprint(next)
-      converged = fpN == fpE && next.except(e).isEmpty
-      e.unpersist()
-      e = next
-      fpE = fpN
-      it += 1
     }
-    // at convergence every edge is (node, root): roots label themselves
-    e.select(u.as("id"), v.as("component"))
-      .union(e.select(v.as("id"), v.as("component")).distinct())
-      .distinct()
   }
 
   /** One survivor per duplicate cluster: the minimum id. Docs absent

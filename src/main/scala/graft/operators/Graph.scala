@@ -48,23 +48,21 @@ object Graph {
     * groupBy+join shuffled on (guide §2.4: two operations keyed the same
     * way share one exchange). Identical addend multiset per dst group →
     * identical sums. Each round's contrib frame is eagerly checkpointed
-    * so the plan stays O(1) deep instead of O(iters); every cache
-    * releases before returning (the returned frame is self-contained).
+    * so the plan stays O(1) deep instead of O(iters).
     *
     * @return (node, rank) for every node appearing as src or dst */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 10, damping: Double = 0.85): DataFrame = {
+               iters: Int = 10, damping: Double = 0.85): DataFrame = Persisted { scope =>
     require(iters >= 1, "need at least one iteration")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
     import org.apache.spark.sql.expressions.Window
-    val ed = edges.select(F.col(srcCol).cast("string").as("src"),
+    val ed = scope.cache(edges.select(F.col(srcCol).cast("string").as("src"),
         F.col(dstCol).cast("string").as("dst"))
       .withColumn("__deg",
-        F.count(F.lit(1)).over(Window.partitionBy("src")))
-      .persist()
-    val nodes = ed
+        F.count(F.lit(1)).over(Window.partitionBy("src"))))
+    val nodes = scope.cache(ed
       .select(F.explode(F.array(F.col("src"), F.col("dst"))).as("node"))
-      .distinct().persist()
+      .distinct())
     val small = nodes.count() <= maxBroadcastNodes // also materializes
     var contrib: DataFrame = null
     var it = 0
@@ -77,24 +75,16 @@ object Graph {
           .withColumn("rank",
             F.lit(1.0 - damping) + F.lit(damping) *
               F.coalesce(F.col("__in"), F.lit(0.0)))
-      val next = withRank
+      contrib = scope.round(contrib, withRank
         .groupBy(F.col("dst").as("node"))
-        .agg(F.sum(F.col("rank") / F.col("__deg")).as("__in"))
-        .localCheckpoint(true)
-      if (contrib != null) contrib.unpersist(false)
-      contrib = next
+        .agg(F.sum(F.col("rank") / F.col("__deg")).as("__in")))
       it += 1
     }
-    val out = nodes
+    scope.checkpoint(nodes
       .join(maybeBroadcast(contrib, small), Seq("node"), "left")
       .select(F.col("node"),
         (F.lit(1.0 - damping) + F.lit(damping) *
-          F.coalesce(F.col("__in"), F.lit(0.0))).as("rank"))
-      .localCheckpoint(true)
-    contrib.unpersist(false)
-    ed.unpersist(false)
-    nodes.unpersist(false)
-    out
+          F.coalesce(F.col("__in"), F.lit(0.0))).as("rank")))
   }
 
   /** Eigenvector centrality by fixed-round power iteration — the
@@ -119,13 +109,13 @@ object Graph {
     * @return (node, score) for every node with an edge, after `iters`
     *         rounds from the all-ones vector */
   def eigenvectorCentrality(edges: DataFrame, srcCol: String,
-                            dstCol: String, iters: Int = 5): DataFrame = {
+                            dstCol: String, iters: Int = 5): DataFrame = Persisted { scope =>
     require(iters >= 1 && iters <= 50, "iters must be in 1..50")
-    val e = edges.select(F.col(srcCol).cast("string").as("src"),
-      F.col(dstCol).cast("string").as("dst")).persist()
-    val nodes = e.select(F.col("src").as("node"))
+    val e = scope.cache(edges.select(F.col(srcCol).cast("string").as("src"),
+      F.col(dstCol).cast("string").as("dst")))
+    val nodes = scope.cache(e.select(F.col("src").as("node"))
       .union(e.select(F.col("dst").as("node")))
-      .distinct().persist()
+      .distinct())
     val small = nodes.count() <= maxBroadcastNodes
     // per round ONE job: the joined iterate is checkpointed once, its
     // squared 2-norm rides the checkpoint materialization as an
@@ -133,7 +123,6 @@ object Graph {
     // job), and the normalized/rounded score is a LAZY projection over
     // that checkpoint (plan depth stays O(1); nothing re-materializes)
     var x = nodes.withColumn("score", F.lit(1.0))
-    var prevCkpt: DataFrame = null
     var it = 0
     while (it < iters) {
       val contrib = e
@@ -142,29 +131,23 @@ object Graph {
         .groupBy(F.col("dst").as("node"))
         .agg(F.sum(F.col("score")).as("__in"))
       val obs = org.apache.spark.sql.Observation()
-      val joined = x
+      val joined = scope.round(x, x
         .join(maybeBroadcast(contrib, small), Seq("node"), "left")
         .select(F.col("node"),
           (F.coalesce(F.col("__in"), F.lit(0.0)) + F.col("score"))
             .as("__in"))
         .observe(obs, F.coalesce(F.sum(F.col("__in") * F.col("__in")),
-          F.lit(0.0)).as("ss"))
-        .localCheckpoint(true)
+          F.lit(0.0)).as("ss")))
       val norm = math.sqrt(obs.get("ss").asInstanceOf[Double])
       require(norm > 0.0,
         s"iterate collapsed to zero at round ${it + 1} — the graph " +
           "has no edges into any node (or x became orthogonal)")
       val normR = math.rint(norm * 1e6) / 1e6
-      // the previous round's checkpoint is dead once this one exists
-      if (prevCkpt != null) prevCkpt.unpersist(false)
-      prevCkpt = joined
       x = joined
         .select(F.col("node"),
           F.round(F.col("__in") / normR, 6).as("score"))
       it += 1
     }
-    e.unpersist(false)
-    nodes.unpersist(false)
     x
   }
 
@@ -187,34 +170,31 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            nodeCol: String, iters: Int = 10,
-                           damping: Double = 0.85): DataFrame = {
+                           damping: Double = 0.85): DataFrame = Persisted { scope =>
     require(iters >= 1, "need at least one iteration")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
     import org.apache.spark.sql.expressions.Window
-    val seedSet = seeds
+    val seedSet = scope.cache(seeds
       .select(F.col(nodeCol).cast("string").as("node")).distinct()
-      .withColumn("__seed", F.lit(true))
-      .persist()
+      .withColumn("__seed", F.lit(true)))
     val nSeeds = seedSet.count()
     require(nSeeds >= 1L, "need at least one seed node")
     val seedSmall = nSeeds <= maxBroadcastNodes
     val eVal = F.when(F.col("__seed"), F.lit(1.0 / nSeeds)).otherwise(0.0)
-    val ed = edges.select(F.col(srcCol).cast("string").as("src"),
+    val ed = scope.cache(edges.select(F.col(srcCol).cast("string").as("src"),
         F.col(dstCol).cast("string").as("dst"))
       .withColumn("__deg",
         F.count(F.lit(1)).over(Window.partitionBy("src")))
       .join(maybeBroadcast(seedSet.withColumnRenamed("node", "src"),
         seedSmall), Seq("src"), "left")
       .withColumn("__e", eVal)
-      .select("src", "dst", "__deg", "__e")
-      .persist()
-    val nodes = ed
+      .select("src", "dst", "__deg", "__e"))
+    val nodes = scope.cache(ed
       .select(F.explode(F.array(F.col("src"), F.col("dst"))).as("node"))
       .distinct()
       .join(maybeBroadcast(seedSet, seedSmall), Seq("node"), "left")
       .withColumn("__e", eVal)
-      .select("node", "__e")
-      .persist()
+      .select("node", "__e"))
     val small = nodes.count() <= maxBroadcastNodes
     var contrib: DataFrame = null
     var it = 0
@@ -227,25 +207,16 @@ object Graph {
           .withColumn("rank",
             F.lit(1.0 - damping) * F.col("__e") + F.lit(damping) *
               F.coalesce(F.col("__in"), F.lit(0.0)))
-      val next = withRank
+      contrib = scope.round(contrib, withRank
         .groupBy(F.col("dst").as("node"))
-        .agg(F.sum(F.col("rank") / F.col("__deg")).as("__in"))
-        .localCheckpoint(true)
-      if (contrib != null) contrib.unpersist(false)
-      contrib = next
+        .agg(F.sum(F.col("rank") / F.col("__deg")).as("__in")))
       it += 1
     }
-    val out = nodes
+    scope.checkpoint(nodes
       .join(maybeBroadcast(contrib, small), Seq("node"), "left")
       .select(F.col("node"),
         (F.lit(1.0 - damping) * F.col("__e") + F.lit(damping) *
-          F.coalesce(F.col("__in"), F.lit(0.0))).as("rank"))
-      .localCheckpoint(true)
-    contrib.unpersist(false)
-    ed.unpersist(false)
-    seedSet.unpersist(false)
-    nodes.unpersist(false)
-    out
+          F.coalesce(F.col("__in"), F.lit(0.0))).as("rank")))
   }
 
   /** Fixed-round k-core peeling — "the graph's engaged core": each
@@ -262,7 +233,7 @@ object Graph {
     *
     * @return surviving (node, degree) under the final subgraph */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int): DataFrame = {
+                k: Int, rounds: Int): DataFrame = Persisted { scope =>
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1 && rounds <= 64, "rounds must be in 1..64")
     val und0 = edges
@@ -274,11 +245,10 @@ object Graph {
     // materialization as an observe() metric (the eigencentrality
     // discipline) — no separate count job per round
     val obs0 = org.apache.spark.sql.Observation()
-    var cur = und0.select(F.col("a"), F.col("b"))
+    var cur = scope.checkpoint(und0.select(F.col("a"), F.col("b"))
       .union(und0.select(F.col("b").as("a"), F.col("a").as("b")))
       .distinct()
-      .observe(obs0, F.count(F.lit(1)).as("n"))
-      .localCheckpoint(true)
+      .observe(obs0, F.count(F.lit(1)).as("n")))
     var nEdges = obs0.get("n").asInstanceOf[Long]
     var r = 0
     var stable = false
@@ -286,17 +256,14 @@ object Graph {
       val deg = cur.groupBy(F.col("a")).agg(F.count(F.lit(1)).as("__d"))
       val keep = deg.where(F.col("__d") >= k.toLong).select("a")
       val obs = org.apache.spark.sql.Observation()
-      val next = cur
+      cur = scope.round(cur, cur
         .join(keep, Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-        .observe(obs, F.count(F.lit(1)).as("n"))
-        .localCheckpoint(true)
+        .observe(obs, F.count(F.lit(1)).as("n")))
       val nNext = obs.get("n").asInstanceOf[Long]
       stable = nNext == nEdges
       nEdges = nNext
-      cur.unpersist(false) // previous round's blocks are dead now
-      cur = next
       r += 1
     }
     cur.groupBy(F.col("a").as("node"))
@@ -322,13 +289,12 @@ object Graph {
     * @return (node, dist) for every node within maxHops of a source */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, nodeCol: String,
-              maxHops: Int): DataFrame = {
+              maxHops: Int): DataFrame = Persisted { scope =>
     require(maxHops >= 1 && maxHops <= 64, "maxHops must be in 1..64")
-    val e = edges
+    val e = scope.cache(edges
       .select(F.col(srcCol).cast("string").as("src"),
         F.col(dstCol).cast("string").as("dst"))
-      .where(F.col("src").isNotNull && F.col("dst").isNotNull)
-      .persist()
+      .where(F.col("src").isNotNull && F.col("dst").isNotNull))
     e.count()
     // `visited` stays a LAZY union over the per-hop checkpointed
     // frontier frames: each node's row is checkpoint-written exactly
@@ -336,26 +302,23 @@ object Graph {
     // checkpointing every hop (O(V·hops) writes); the anti-join scans
     // the same rows either way, and the union depth is bounded by
     // maxHops (≤ 64).
-    var visited = sources
+    var visited = scope.checkpoint(sources
       .select(F.col(nodeCol).cast("string").as("node")).distinct()
-      .withColumn("dist", F.lit(0L))
-      .localCheckpoint(true)
+      .withColumn("dist", F.lit(0L)))
     var frontier = visited
     var hop = 0L
     var frontierSize = frontier.count()
     while (hop < maxHops && frontierSize > 0L) {
-      val next = frontier.withColumnRenamed("node", "src")
+      val next = scope.checkpoint(frontier.withColumnRenamed("node", "src")
         .join(e, "src")
         .select(F.col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", F.lit(hop + 1L))
-        .localCheckpoint(true)
+        .withColumn("dist", F.lit(hop + 1L)))
       frontierSize = next.count()
       if (frontierSize > 0L) visited = visited.union(next)
       frontier = next
       hop += 1L
     }
-    e.unpersist(false)
     visited
   }
 
@@ -379,13 +342,13 @@ object Graph {
     *
     * @return (node, hub, authority) — nodes missing a role score 0 */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 8): DataFrame = {
+           iters: Int = 8): DataFrame = Persisted { scope =>
     require(iters >= 1, "need at least one iteration")
-    val e = edges.select(F.col(srcCol).cast("string").as("src"),
-      F.col(dstCol).cast("string").as("dst")).persist()
-    val nodes = e.select(F.col("src").as("node"))
+    val e = scope.cache(edges.select(F.col(srcCol).cast("string").as("src"),
+      F.col(dstCol).cast("string").as("dst")))
+    val nodes = scope.cache(e.select(F.col("src").as("node"))
       .union(e.select(F.col("dst").as("node")))
-      .distinct().persist()
+      .distinct())
     val small = nodes.count() <= maxBroadcastNodes
     // raw (unnormalized) score frames + the norm to divide them by;
     // hubs start at 1.0 for every node (norm 1.0 keeps 1.0/1.0 exact)
@@ -396,45 +359,32 @@ object Graph {
     var it = 0
     while (it < iters) {
       val obsA = org.apache.spark.sql.Observation()
-      val aRaw = e
+      authsRaw = scope.round(authsRaw, e
         .join(maybeBroadcast(hubsRaw.withColumnRenamed("node", "src"),
           small), "src")
         .groupBy(F.col("dst").as("node"))
         .agg(F.sum(F.col("__h") / hNorm).as("__a"))
         .observe(obsA, F.coalesce(F.sum(F.col("__a") * F.col("__a")),
-          F.lit(0.0)).as("ss"))
-        .localCheckpoint(true)
+          F.lit(0.0)).as("ss")))
       aNorm = math.sqrt(obsA.get("ss").asInstanceOf[Double])
       val obsH = org.apache.spark.sql.Observation()
-      val hRaw = e
-        .join(maybeBroadcast(aRaw.withColumnRenamed("node", "dst"),
+      hubsRaw = scope.round(hubsRaw, e
+        .join(maybeBroadcast(authsRaw.withColumnRenamed("node", "dst"),
           small), "dst")
         .groupBy(F.col("src").as("node"))
         .agg(F.sum(F.col("__a") / aNorm).as("__h"))
         .observe(obsH, F.coalesce(F.sum(F.col("__h") * F.col("__h")),
-          F.lit(0.0)).as("ss"))
-        .localCheckpoint(true)
+          F.lit(0.0)).as("ss")))
       hNorm = math.sqrt(obsH.get("ss").asInstanceOf[Double])
-      if (authsRaw != null) authsRaw.unpersist(false)
-      hubsRaw.unpersist(false)
-      authsRaw = aRaw
-      hubsRaw = hRaw
       it += 1
     }
-    // checkpoint: the result must be self-contained before the edge and
-    // node caches release below
-    val out = nodes
+    // checkpoint: the result must not read the edge and node caches
+    scope.checkpoint(nodes
       .join(maybeBroadcast(hubsRaw, small), Seq("node"), "left")
       .join(maybeBroadcast(authsRaw, small), Seq("node"), "left")
       .select(F.col("node"),
         (F.coalesce(F.col("__h"), F.lit(0.0)) / hNorm).as("hub"),
-        (F.coalesce(F.col("__a"), F.lit(0.0)) / aNorm).as("authority"))
-      .localCheckpoint(true)
-    authsRaw.unpersist(false)
-    hubsRaw.unpersist(false)
-    e.unpersist(false)
-    nodes.unpersist(false)
-    out
+        (F.coalesce(F.col("__a"), F.lit(0.0)) / aNorm).as("authority")))
   }
 
   /** Degree distribution of the link graph, long form: for each
@@ -479,20 +429,20 @@ object Graph {
     * @return (node, label) for every node
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 2): DataFrame = {
+                       iters: Int = 2): DataFrame = Persisted { scope =>
     require(iters >= 1, "need at least one round")
     import org.apache.spark.sql.expressions.Window
     val s = F.col(srcCol).cast("string")
     val d = F.col(dstCol).cast("string")
     val dir = edges.where(s.isNotNull && d.isNotNull && s =!= d)
       .select(s.as("a"), d.as("b")).distinct()
-    val und = dir.union(dir.select(F.col("b").as("a"), F.col("a").as("b")))
-      .distinct().persist()
-    val nodes = und.select(F.col("a").as("node")).distinct().persist()
+    val und = scope.cache(dir.union(dir.select(F.col("b").as("a"), F.col("a").as("b")))
+      .distinct())
+    val nodes = scope.cache(und.select(F.col("a").as("node")).distinct())
     val nNodes = nodes.count()
     val small = nNodes <= maxBroadcastNodes
-    var labels = nodes.select(F.col("node"), F.col("node").as("label"))
-      .localCheckpoint(true)
+    var labels = scope.checkpoint(
+      nodes.select(F.col("node"), F.col("node").as("label")))
     var it = 0
     while (it < iters) {
       val nbr = und.join(
@@ -506,13 +456,11 @@ object Graph {
         .withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") === 1)
         .select(F.col("node"), F.col("label").as("__new"))
-      labels = labels.join(winners, Seq("node"), "left")
+      labels = scope.round(labels, labels.join(winners, Seq("node"), "left")
         .select(F.col("node"),
-          F.coalesce(F.col("__new"), F.col("label")).as("label"))
-        .localCheckpoint(true)
+          F.coalesce(F.col("__new"), F.col("label")).as("label")))
       it += 1
     }
-    und.unpersist(); nodes.unpersist()
     labels
   }
 
@@ -548,7 +496,7 @@ object Graph {
     val d = F.col(dstCol).cast("string")
     val canon = edges.where(s.isNotNull && d.isNotNull && s =!= d)
       .select(F.least(s, d).as("a"), F.greatest(s, d).as("b"))
-      .distinct().persist()
+      .distinct()
     val m = canon.count()
     require(m > 0L, "modularity needs at least one edge")
     val lab = labels
@@ -586,14 +534,12 @@ object Graph {
       F.sum("__q").as("__q"))
       .select(F.lit("__total__").as("label"), F.col("n_nodes"),
         F.col("internal_edges"), F.col("degree_sum"), F.col("__q"))
-    val out = per
+    per
       .select(F.col("label"), F.col("n_nodes"), F.col("internal_edges"),
         F.col("degree_sum"), F.col("__q"))
       .union(total)
       .select(F.col("label"), F.col("n_nodes"), F.col("internal_edges"),
         F.col("degree_sum"), F.round(F.col("__q"), 6).as("q_c"))
-    canon.unpersist(blocking = false)
-    out
   }
 
   /** Per-node triangle count + local clustering coefficient over the
@@ -619,16 +565,16 @@ object Graph {
     *         appears, triangle-free nodes included.
     */
   def triangleStats(edges: DataFrame, srcCol: String,
-                    dstCol: String): DataFrame = {
+                    dstCol: String): DataFrame = Persisted { scope =>
     val s = F.col(srcCol).cast("string")
     val d = F.col(dstCol).cast("string")
-    val und = edges
+    val und = scope.cache(edges
       .where(s.isNotNull && d.isNotNull && s =!= d)
       .select(F.least(s, d).as("a"), F.greatest(s, d).as("b"))
-      .distinct().persist()
-    val deg = und.select(F.col("a").as("node"))
+      .distinct())
+    val deg = scope.cache(und.select(F.col("a").as("node"))
       .union(und.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("degree")).persist()
+      .groupBy("node").agg(F.count(F.lit(1)).as("degree")))
     val nNodes = deg.count()
     val small = nNodes <= maxBroadcastNodes
     val degB = maybeBroadcast(deg, small)
@@ -636,35 +582,32 @@ object Graph {
     val withDeg = und
       .join(degB.select(F.col("node").as("a"), F.col("degree").as("da")), "a")
       .join(degB.select(F.col("node").as("b"), F.col("degree").as("db")), "b")
-    val oriented = withDeg.select(
+    val oriented = scope.cache(withDeg.select(
       F.when(F.col("da") < F.col("db") ||
           (F.col("da") === F.col("db") && F.col("a") < F.col("b")),
           F.col("a")).otherwise(F.col("b")).as("u"),
       F.when(F.col("da") < F.col("db") ||
           (F.col("da") === F.col("db") && F.col("a") < F.col("b")),
-          F.col("b")).otherwise(F.col("a")).as("v")).persist()
+          F.col("b")).otherwise(F.col("a")).as("v")))
     // wedges centered at u; canonicalize the open pair and close it
     // against the undirected edge set
     val w1 = oriented.select(F.col("u"), F.col("v").as("x"))
     val w2 = oriented.select(F.col("u"), F.col("v").as("y"))
     val wedges = w1.join(w2, "u").where(F.col("x") < F.col("y"))
-    val tris = wedges.join(und,
+    val tris = scope.cache(wedges.join(und,
         wedges("x") === und("a") && wedges("y") === und("b"))
-      .select(F.col("u"), F.col("x"), F.col("y")).persist()
+      .select(F.col("u"), F.col("x"), F.col("y")))
     val perNode = tris.select(F.col("u").as("node"))
       .union(tris.select(F.col("x").as("node")))
       .union(tris.select(F.col("y").as("node")))
       .groupBy("node").agg(F.count(F.lit(1)).as("triangles"))
-    val out = deg.join(perNode, Seq("node"), "left")
+    scope.checkpoint(deg.join(perNode, Seq("node"), "left")
       .select(F.col("node"), F.col("degree"),
         F.coalesce(F.col("triangles"), F.lit(0L)).as("triangles"),
         F.when(F.col("degree") >= 2L,
             F.round(F.lit(2.0) * F.coalesce(F.col("triangles"), F.lit(0L)) /
               (F.col("degree") * (F.col("degree") - F.lit(1L))), 6))
-          .otherwise(0.0).as("clustering_coeff"))
-    val materialized = out.localCheckpoint(eager = true)
-    und.unpersist(); deg.unpersist(); oriented.unpersist(); tris.unpersist()
-    materialized
+          .otherwise(0.0).as("clustering_coeff")))
   }
 
   /** Link prediction over the 2-hop neighborhood: for every non-edge
@@ -685,43 +628,41 @@ object Graph {
     *
     * @return topK rows: (a, b, common, jaccard, adamic_adar) */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
-                     topK: Int = 20): DataFrame = {
+                     topK: Int = 20): DataFrame = Persisted { scope =>
     require(topK > 0, "topK must be positive")
     val raw = edges.select(F.col(srcCol).cast("string").as("s"),
       F.col(dstCol).cast("string").as("d"))
-    val und = raw.union(raw.select(F.col("d").as("s"), F.col("s").as("d")))
-      .where(F.col("s") =!= F.col("d")).distinct().persist()
-    try {
-      val deg = und.groupBy("s").agg(F.count(F.lit(1)).as("deg"))
-      val withDeg = und.join(deg.withColumnRenamed("s", "__u")
-        .withColumnRenamed("deg", "udeg"),
-        F.col("s") === F.col("__u")).drop("__u")
-      // wedges through u: (a ← u → b), a < b lexicographically
-      val l = withDeg.select(F.col("s").as("u"), F.col("d").as("a"),
-        F.col("udeg"))
-      val r = und.select(F.col("s").as("u"), F.col("d").as("b"))
-      val pairs = l.join(r, "u")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).as("common"),
-          F.round(F.sum(F.lit(1.0) / F.log(F.col("udeg"))), 6)
-            .as("adamic_adar"))
-      val nonEdges = pairs.join(und,
-        pairs("a") === und("s") && pairs("b") === und("d"),
-        "left_anti")
-      val degA = deg.select(F.col("s").as("a"), F.col("deg").as("da"))
-      val degB = deg.select(F.col("s").as("b"), F.col("deg").as("db"))
-      nonEdges.join(degA, "a").join(degB, "b")
-        .withColumn("jaccard",
-          F.round(F.col("common").cast("double") /
-            (F.col("da") + F.col("db") - F.col("common")), 6))
-        .orderBy(F.col("adamic_adar").desc, F.col("a").asc,
-          F.col("b").asc)
-        .limit(topK)
-        .select(F.col("a"), F.col("b"), F.col("common"),
-          F.col("jaccard"), F.col("adamic_adar"))
-        .localCheckpoint(true)
-    } finally und.unpersist(blocking = false)
+    val und = scope.cache(raw
+      .union(raw.select(F.col("d").as("s"), F.col("s").as("d")))
+      .where(F.col("s") =!= F.col("d")).distinct())
+    val deg = und.groupBy("s").agg(F.count(F.lit(1)).as("deg"))
+    val withDeg = und.join(deg.withColumnRenamed("s", "__u")
+      .withColumnRenamed("deg", "udeg"),
+      F.col("s") === F.col("__u")).drop("__u")
+    // wedges through u: (a ← u → b), a < b lexicographically
+    val l = withDeg.select(F.col("s").as("u"), F.col("d").as("a"),
+      F.col("udeg"))
+    val r = und.select(F.col("s").as("u"), F.col("d").as("b"))
+    val pairs = l.join(r, "u")
+      .where(F.col("a") < F.col("b"))
+      .groupBy("a", "b")
+      .agg(F.count(F.lit(1)).as("common"),
+        F.round(F.sum(F.lit(1.0) / F.log(F.col("udeg"))), 6)
+          .as("adamic_adar"))
+    val nonEdges = pairs.join(und,
+      pairs("a") === und("s") && pairs("b") === und("d"),
+      "left_anti")
+    val degA = deg.select(F.col("s").as("a"), F.col("deg").as("da"))
+    val degB = deg.select(F.col("s").as("b"), F.col("deg").as("db"))
+    scope.checkpoint(nonEdges.join(degA, "a").join(degB, "b")
+      .withColumn("jaccard",
+        F.round(F.col("common").cast("double") /
+          (F.col("da") + F.col("db") - F.col("common")), 6))
+      .orderBy(F.col("adamic_adar").desc, F.col("a").asc,
+        F.col("b").asc)
+      .limit(topK)
+      .select(F.col("a"), F.col("b"), F.col("common"),
+        F.col("jaccard"), F.col("adamic_adar")))
   }
 
   /** Newman degree assortativity of an undirected graph — do hubs
@@ -738,33 +679,32 @@ object Graph {
     *
     * @return one row: (m_edges, n_nodes, assortativity) */
   def assortativity(edges: DataFrame, srcCol: String,
-                    dstCol: String): DataFrame = {
+                    dstCol: String): DataFrame = Persisted { scope =>
     val raw = edges.select(F.col(srcCol).cast("string").as("s"),
       F.col(dstCol).cast("string").as("d"))
-    val und = raw.union(raw.select(F.col("d").as("s"), F.col("s").as("d")))
-      .where(F.col("s") =!= F.col("d")).distinct().persist()
-    try {
-      val deg = und.groupBy("s").agg(F.count(F.lit(1)).as("deg"))
-      val degS = deg.select(F.col("s"), F.col("deg").as("dj"))
-      val degD = deg.select(F.col("s").as("d"), F.col("deg").as("dk"))
-      val m = und.join(degS, "s").join(degD, "d")
-        .agg(F.count(F.lit(1)).as("m"),
-          F.sum(F.col("dj") * F.col("dk")).as("sjk"),
-          F.sum(F.col("dj") + F.col("dk")).as("sj"),
-          F.sum(F.col("dj") * F.col("dj") +
-            F.col("dk") * F.col("dk")).as("sj2"))
-        .head()
-      val nNodes = deg.count()
-      val mE = m.getAs[Long]("m").toDouble
-      val mu = m.getAs[Long]("sj") / (2.0 * mE)
-      val num = m.getAs[Long]("sjk") / mE - mu * mu
-      val den = m.getAs[Long]("sj2") / (2.0 * mE) - mu * mu
-      require(den > 0.0, "degenerate degree distribution (all equal)")
-      val spark = edges.sparkSession
-      import spark.implicits._
-      Seq((m.getAs[Long]("m"), nNodes,
-        math.rint(num / den * 1e6) / 1e6))
-        .toDF("m_edges", "n_nodes", "assortativity")
-    } finally und.unpersist(blocking = false)
+    val und = scope.cache(raw
+      .union(raw.select(F.col("d").as("s"), F.col("s").as("d")))
+      .where(F.col("s") =!= F.col("d")).distinct())
+    val deg = und.groupBy("s").agg(F.count(F.lit(1)).as("deg"))
+    val degS = deg.select(F.col("s"), F.col("deg").as("dj"))
+    val degD = deg.select(F.col("s").as("d"), F.col("deg").as("dk"))
+    val m = und.join(degS, "s").join(degD, "d")
+      .agg(F.count(F.lit(1)).as("m"),
+        F.sum(F.col("dj") * F.col("dk")).as("sjk"),
+        F.sum(F.col("dj") + F.col("dk")).as("sj"),
+        F.sum(F.col("dj") * F.col("dj") +
+          F.col("dk") * F.col("dk")).as("sj2"))
+      .head()
+    val nNodes = deg.count()
+    val mE = m.getAs[Long]("m").toDouble
+    val mu = m.getAs[Long]("sj") / (2.0 * mE)
+    val num = m.getAs[Long]("sjk") / mE - mu * mu
+    val den = m.getAs[Long]("sj2") / (2.0 * mE) - mu * mu
+    require(den > 0.0, "degenerate degree distribution (all equal)")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Seq((m.getAs[Long]("m"), nNodes,
+      math.rint(num / den * 1e6) / 1e6))
+      .toDF("m_edges", "n_nodes", "assortativity")
   }
 }

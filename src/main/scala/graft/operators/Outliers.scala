@@ -327,7 +327,7 @@ object Outliers {
     * @return one row per group: (groupCols…, n, var_q, es_q, tail_n)
     *         — es rounded to 6 */
   def varEsByGroup(df: DataFrame, groupCols: Seq[String],
-                   valueCol: String, q: Double): DataFrame = {
+                   valueCol: String, q: Double): DataFrame = Persisted { scope =>
     require(groupCols.nonEmpty, "need at least one group column")
     require(q > 0.0 && q < 1.0, "q must be in (0,1)")
     import org.apache.spark.sql.expressions.Window
@@ -336,13 +336,12 @@ object Outliers {
     // cells feeds BOTH the VaR pick and the tail probe — without a
     // persist the aggregation executes twice inside the one job (no
     // common-subplan reuse); distinct-value-sized, released once the
-    // ≤-groups result is checkpointed (the ecodScore lifecycle)
-    val cells = df
+    // ≤-groups result is checkpointed
+    val cells = scope.cache(df
       .where(v.isNotNull && !F.isnan(v) &&
         groupCols.map(F.col(_).isNotNull).reduce(_ && _))
       .groupBy(gCols :+ v.as("__v"): _*)
-      .agg(F.count(F.lit(1)).as("__c"), F.sum(v).as("__s"))
-      .persist()
+      .agg(F.count(F.lit(1)).as("__c"), F.sum(v).as("__s")))
     val wg = Window.partitionBy(gCols: _*)
     val wCum = Window.partitionBy(gCols: _*).orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -362,13 +361,10 @@ object Outliers {
       .groupBy(gCols: _*)
       .agg(F.max("__var").as("var_q"), F.max("n").as("__n"),
         F.sum("__s").as("__ts"), F.sum("__c").as("tail_n"))
-    val out = tail.select(gCols ++ Seq(F.col("__n").as("n"),
+    scope.checkpoint(tail.select(gCols ++ Seq(F.col("__n").as("n"),
       F.col("var_q"),
       F.round(F.col("__ts") / F.col("tail_n"), 6).as("es_q"),
-      F.col("tail_n")): _*)
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    out
+      F.col("tail_n")): _*))
   }
 
   /** Local Outlier Factor (Breunig et al. 2000), exact deterministic
@@ -547,7 +543,7 @@ object Outliers {
     * @return topK rows by (score desc, idCol asc): (idCol, s_left,
     *         s_right, score), floats rounded to 6 */
   def ecodScore(df: DataFrame, idCol: String, cols: Seq[String],
-                topK: Int = 20): DataFrame = {
+                topK: Int = 20): DataFrame = Persisted { scope =>
     require(cols.nonEmpty, "need at least one feature column")
     require(topK >= 1, "need topK >= 1")
     val vs = cols.map(c => F.col(c).cast("double"))
@@ -555,12 +551,11 @@ object Outliers {
       F.col(idCol).isNotNull
     // cached: every per-feature rank construction scans this projection
     // (k aggregations), and the scored join scans it once more
-    val clean = df.where(ok)
+    val clean = scope.cache(df.where(ok)
       .select(F.col(idCol).as("__id") +:
         cols.zipWithIndex.map { case (c, i) =>
           F.col(c).cast("double").as(s"__x$i")
-        }: _*)
-      .persist()
+        }: _*))
     var joined = clean
     var n = 0L
     // rank AND tie count ride ONE prefix-sum table — one aggregation
@@ -588,17 +583,15 @@ object Outliers {
     val sRight = cols.indices.map { i =>
       -F.log((nD - F.col(s"__r$i") + 1.0) / nD)
     }.reduce(_ + _)
-    val out = joined
+    // topK rows; the checkpoint frees the projection cache
+    scope.checkpoint(joined
       .withColumn("s_left", F.round(sLeft, 6))
       .withColumn("s_right", F.round(sRight, 6))
       .withColumn("score", F.greatest(F.col("s_left"), F.col("s_right")))
       .orderBy(F.col("score").desc, F.col("__id").asc)
       .limit(topK)
       .select(F.col("__id").as(idCol), F.col("s_left"),
-        F.col("s_right"), F.col("score"))
-      .localCheckpoint(true) // topK rows; frees the projection cache
-    clean.unpersist(false)
-    out
+        F.col("s_right"), F.col("score")))
   }
 
   /** Bivariate Mahalanobis outlier report per group — joint outliers

@@ -316,7 +316,7 @@ object Pca {
     *         recovered = post-alignment mean error < 1e−6 */
   def procrustesAlign(dfA: DataFrame, idColA: String, embColA: String,
                       dfB: DataFrame, idColB: String,
-                      embColB: String): DataFrame = {
+                      embColB: String): DataFrame = Persisted { scope =>
     val spark = dfA.sparkSession
     import spark.implicits._
     val a = dfA
@@ -327,7 +327,7 @@ object Pca {
       .where(F.col(idColB).isNotNull && F.col(embColB).isNotNull)
       .select(F.col(idColB).cast("long").as("__id"),
         F.col(embColB).cast("array<double>").as("__b"))
-    val joined = a.join(b, "__id").persist()
+    val joined = scope.cache(a.join(b, "__id"))
     // headOption: an empty id intersection must surface the intended
     // "no paired rows" message, not a NoSuchElementException from head()
     val head = joined.select(F.size(F.col("__a")).as("d"))
@@ -339,7 +339,6 @@ object Pca {
     val st = joined.select(F.col("__a"), F.col("__b"))
       .as[(Seq[Double], Seq[Double])]
       .select(new CrossMomentAgg(d).toColumn).head()
-    joined.unpersist(blocking = false)
     val n = st(0)
     require(n >= 1.0, "no paired rows")
     val saa = st(1); val sbb = st(2)

@@ -29,7 +29,7 @@ object Preference {
     * @return one row per item: (item, wins, n_matches,
     *         strength rounded 6) */
   def bradleyTerry(pairs: DataFrame, winnerCol: String, loserCol: String,
-                   iters: Int = 3): DataFrame = {
+                   iters: Int = 3): DataFrame = Persisted { scope =>
     require(iters >= 1, "iters must be >= 1")
     val w = F.col(winnerCol).cast("string")
     val l = F.col(loserCol).cast("string")
@@ -38,28 +38,24 @@ object Preference {
     // ordered win counts, then the symmetric long-form match table:
     // every unordered pair appears once per direction with the TOTAL
     // match count m
-    val winCounts = decided.groupBy("__w", "__l")
-      .agg(F.count(F.lit(1)).as("__n"))
-      .localCheckpoint(true)
-    val matches = winCounts
+    val winCounts = scope.checkpoint(decided.groupBy("__w", "__l")
+      .agg(F.count(F.lit(1)).as("__n")))
+    val matches = scope.checkpoint(winCounts
       .select(F.col("__w").as("__i"), F.col("__l").as("__j"),
         F.col("__n"))
       .unionByName(winCounts.select(F.col("__l").as("__i"),
         F.col("__w").as("__j"), F.col("__n")))
-      .groupBy("__i", "__j").agg(F.sum("__n").as("__m"))
-      .localCheckpoint(true)
+      .groupBy("__i", "__j").agg(F.sum("__n").as("__m")))
     val items = matches.groupBy("__i")
       .agg(F.count(F.lit(1)).as("__deg"))
       .select("__i")
     val wins = winCounts.groupBy(F.col("__w").as("__i"))
       .agg(F.sum("__n").as("wins"))
-    val base = items.join(wins, Seq("__i"), "left")
+    val base = scope.checkpoint(items.join(wins, Seq("__i"), "left")
       .select(F.col("__i"),
-        F.coalesce(F.col("wins"), F.lit(0L)).as("wins"))
-      .localCheckpoint(true)
-    var strength = base.select(F.col("__i"), F.lit(1.0).as("__s"))
-      .localCheckpoint(true)
-    var prevCkpt: DataFrame = strength
+        F.coalesce(F.col("wins"), F.lit(0L)).as("wins")))
+    var strength = scope.checkpoint(
+      base.select(F.col("__i"), F.lit(1.0).as("__s")))
     var it = 0
     while (it < iters) {
       val denom = matches
@@ -76,15 +72,11 @@ object Preference {
       // frame recomputed the whole round twice), and the mean division
       // is a lazy projection over the checkpoint.
       val obs = org.apache.spark.sql.Observation()
-      val raw = base.join(denom, Seq("__i"))
+      val raw = scope.round(strength, base.join(denom, Seq("__i"))
         .select(F.col("__i"),
           (F.col("wins").cast("double") / F.col("__den")).as("__s"))
-        .observe(obs, F.avg("__s").as("mean"))
-        .localCheckpoint(true)
+        .observe(obs, F.avg("__s").as("mean")))
       val mean = obs.get("mean").asInstanceOf[Double]
-      // the previous round's checkpoint blocks are dead once raw exists
-      prevCkpt.unpersist(false)
-      prevCkpt = raw
       strength = raw
         .select(F.col("__i"), (F.col("__s") / mean).as("__s"))
       it += 1

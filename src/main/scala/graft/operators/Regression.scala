@@ -336,11 +336,10 @@ object Regression {
   /** The fixed-step Newton substrate of the GLM fits. A fit is a loan
     * over its design: rows with a null/NaN feature or response, or a
     * response outside `domain`, are dropped listwise; the projection
-    * onto the feature and response columns is persisted, because every
-    * step re-aggregates it (each pass after the first reads the
-    * columnar cache instead of re-running the scan and any upstream
-    * exchange), and it is released in `finally`, also when the body
-    * throws.
+    * onto the feature and response columns is cached ([[Persisted]]),
+    * because every step re-aggregates it (each pass after the first
+    * reads the columnar cache instead of re-running the scan and any
+    * upstream exchange).
     *
     * Each Newton step is ONE aggregation (`Design.step`): the upper
     * triangle of the weighted Gram Σ w·fᵢ·fⱼ and the k gradient sums
@@ -357,9 +356,10 @@ object Regression {
     val y = F.col(yCol).cast(yType)
     val ok = xCols.map(c => valid(F.col(c).cast("double"))).reduce(_ && _) &&
       (if (yType == "double") valid(y) else y.isNotNull) && domain(y)
-    val clean = df.where(ok)
-      .select((xCols :+ yCol).distinct.map(F.col): _*).persist()
-    try body(new Design(clean, y, xCols)) finally clean.unpersist(false)
+    Persisted { scope =>
+      body(new Design(scope.cache(df.where(ok)
+        .select((xCols :+ yCol).distinct.map(F.col): _*)), y, xCols))
+    }
   }
 
   /** The design a fixed-step GLM fit iterates over: the persisted clean

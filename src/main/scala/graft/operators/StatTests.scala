@@ -1211,7 +1211,7 @@ object StatTests {
     *         p_value, n_a, n_b, h_a, h_b) */
   def yuenTTest(df: DataFrame, cohortCol: String, valueCol: String,
                 trim: Double = 0.2,
-                labelA: String = "a", labelB: String = "b"): DataFrame = {
+                labelA: String = "a", labelB: String = "b"): DataFrame = Persisted { scope =>
     require(trim > 0.0 && trim < 0.5, "trim must be in (0, 0.5)")
     require(labelA != labelB, "cohort labels must differ")
     import org.apache.spark.sql.expressions.Window
@@ -1228,11 +1228,10 @@ object StatTests {
     // trimmed-sum scan below; Spark does not dedupe common subplans, so
     // without a persist the cells aggregation AND its per-cohort window
     // sort execute twice inside the single collect job (measured round
-    // 14: ~40% of q_yuen's wall). Cells-frame-sized, released below.
-    val withCum = cells
+    // 14: ~40% of q_yuen's wall). Cells-frame-sized.
+    val withCum = scope.cache(cells
       .withColumn("__n", F.sum("__c").over(wg))
-      .withColumn("__cum", F.sum("__c").over(wCum))
-      .persist()
+      .withColumn("__cum", F.sum("__c").over(wCum)))
     val gCut = F.floor(F.col("__n").cast("double") * trim)
     // clamp bounds: the (g+1)-th and (n−g)-th order statistics
     val bounds = withCum
@@ -1261,7 +1260,6 @@ object StatTests {
         r.getAs[Double]("ts"), r.getAs[Double]("ws"),
         r.getAs[Double]("wq"))
     }.toMap
-    withCum.unpersist(blocking = false)
     require(rows.contains(labelA) && rows.contains(labelB),
       "both cohorts need rows")
     def side(l: String): (Long, Long, Double, Double) = {

@@ -787,22 +787,20 @@ object Survival {
     * iters + 1 passes total, independent of data size.
     */
   def coxPH(df: DataFrame, durationCol: String, eventCol: String,
-            xCols: Seq[String], iters: Int = 4): CoxModel = {
+            xCols: Seq[String], iters: Int = 4): CoxModel = Persisted { scope =>
     require(xCols.nonEmpty, "need at least one covariate")
     require(iters >= 1, "need at least one Newton step")
     val k = xCols.length
     val spark = df.sparkSession
     val xs = xCols.map(c => F.col(c).cast("double"))
     val okX = xs.map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    val clean = df
+    // every Newton pass re-aggregates this same narrow projection
+    val clean = scope.cache(df
       .select(F.col(durationCol).cast("double").as("__t") +:
         F.col(eventCol).cast("boolean").as("__e") +:
         xs.zipWithIndex.map { case (c, i) => c.as(s"__x$i") }: _*)
       .where(F.col("__t").isNotNull && !F.isnan(F.col("__t")) &&
-        F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX)
-      // every Newton pass re-aggregates this same narrow projection;
-      // persist once, released in the finally below
-      .persist()
+        F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX))
 
     // one Newton-step pass at a fixed β: (U, I, ℓ, n, d_total)
     def pass(beta: Array[Double]): (Array[Double], Array[Array[Double]],
@@ -895,27 +893,25 @@ object Survival {
       }
     }
 
-    try {
-      var beta = Array.fill(k)(0.0)
-      var ll0 = 0.0
-      var it = 0
-      while (it < iters) {
-        val (u, inf, ll, _, _) = pass(beta)
-        if (it == 0) ll0 = ll
-        val delta = Regression.solve(inf, u)
-        beta = Array.tabulate(k)(i => beta(i) + delta(i))
-        it += 1
-      }
-      // final pass at β_final: observed information → SEs, final ℓ
-      val (_, infF, llF, n, dTot) = pass(beta)
-      val se = Array.tabulate(k) { i =>
-        // i-th diagonal of I⁻¹ via k solves against unit vectors would be
-        // wasteful; solve once per feature (k ≤ dozens, driver-side)
-        val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
-        math.sqrt(Regression.solve(infF, ei)(i))
-      }
-      CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
-    } finally clean.unpersist(false)
+    var beta = Array.fill(k)(0.0)
+    var ll0 = 0.0
+    var it = 0
+    while (it < iters) {
+      val (u, inf, ll, _, _) = pass(beta)
+      if (it == 0) ll0 = ll
+      val delta = Regression.solve(inf, u)
+      beta = Array.tabulate(k)(i => beta(i) + delta(i))
+      it += 1
+    }
+    // final pass at β_final: observed information → SEs, final ℓ
+    val (_, infF, llF, n, dTot) = pass(beta)
+    val se = Array.tabulate(k) { i =>
+      // i-th diagonal of I⁻¹ via k solves against unit vectors would be
+      // wasteful; solve once per feature (k ≤ dozens, driver-side)
+      val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
+      math.sqrt(Regression.solve(infF, ei)(i))
+    }
+    CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
   }
 
   /** Cox proportional hazards with EFRON ties — the tie correction R's
@@ -938,22 +934,20 @@ object Survival {
     * cells frame (Σ_t d = nEvents iterations total, executor-local).
     * iters + 1 passes, independent of data size; no row collected. */
   def coxPHEfron(df: DataFrame, durationCol: String, eventCol: String,
-                 xCols: Seq[String], iters: Int = 4): CoxModel = {
+                 xCols: Seq[String], iters: Int = 4): CoxModel = Persisted { scope =>
     require(xCols.nonEmpty, "need at least one covariate")
     require(iters >= 1, "need at least one Newton step")
     val k = xCols.length
     val spark = df.sparkSession
     val xs = xCols.map(c => F.col(c).cast("double"))
     val okX = xs.map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    val clean = df
+    // every Newton pass re-aggregates this same narrow projection
+    val clean = scope.cache(df
       .select(F.col(durationCol).cast("double").as("__t") +:
         F.col(eventCol).cast("boolean").as("__e") +:
         xs.zipWithIndex.map { case (c, i) => c.as(s"__x$i") }: _*)
       .where(F.col("__t").isNotNull && !F.isnan(F.col("__t")) &&
-        F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX)
-      // every Newton pass re-aggregates this same narrow projection;
-      // persist once, released in the finally below
-      .persist()
+        F.col("__t") >= 0.0 && F.col("__e").isNotNull && okX))
 
     def pass(beta: Array[Double]): (Array[Double], Array[Array[Double]],
                                     Double, Long, Long) = {
@@ -1059,24 +1053,22 @@ object Survival {
       }
     }
 
-    try {
-      var beta = Array.fill(k)(0.0)
-      var ll0 = 0.0
-      var it = 0
-      while (it < iters) {
-        val (u, inf, ll, _, _) = pass(beta)
-        if (it == 0) ll0 = ll
-        val delta = Regression.solve(inf, u)
-        beta = Array.tabulate(k)(i => beta(i) + delta(i))
-        it += 1
-      }
-      val (_, infF, llF, n, dTot) = pass(beta)
-      val se = Array.tabulate(k) { i =>
-        val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
-        math.sqrt(Regression.solve(infF, ei)(i))
-      }
-      CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
-    } finally clean.unpersist(false)
+    var beta = Array.fill(k)(0.0)
+    var ll0 = 0.0
+    var it = 0
+    while (it < iters) {
+      val (u, inf, ll, _, _) = pass(beta)
+      if (it == 0) ll0 = ll
+      val delta = Regression.solve(inf, u)
+      beta = Array.tabulate(k)(i => beta(i) + delta(i))
+      it += 1
+    }
+    val (_, infF, llF, n, dTot) = pass(beta)
+    val se = Array.tabulate(k) { i =>
+      val ei = Array.tabulate(k)(j => if (j == i) 1.0 else 0.0)
+      math.sqrt(Regression.solve(infF, ei)(i))
+    }
+    CoxModel(xCols, beta, se, llF, ll0, n, dTot, iters)
   }
 
   /** Harrell's concordance index — the acceptance metric for [[coxPH]]
@@ -1270,87 +1262,84 @@ object Survival {
     *         σ·ln ln 2), the predicted median lifetime at the average
     *         covariate; everything 6-rounded */
   def weibullAft(df: DataFrame, durationCol: String, eventCol: String,
-                 xCol: String, iters: Int = 4): DataFrame = {
+                 xCol: String, iters: Int = 4): DataFrame = Persisted { scope =>
     require(iters >= 1 && iters <= 12, "iters must be in 1..12")
     val spark = df.sparkSession
     import spark.implicits._
     val t = F.col(durationCol).cast("double")
     val e = F.col(eventCol).cast("boolean")
     val x = F.col(xCol).cast("double")
-    val clean = df
+    // the warm-start pass + `iters` Newton rounds all aggregate this
+    // 3-column projection
+    val clean = scope.cache(df
       .where(t.isNotNull && !F.isnan(t) && t > 0.0 && e.isNotNull &&
         x.isNotNull && !F.isnan(x))
       .select(F.log(t).as("__lt"), x.as("__x"),
-        F.when(e, 1.0).otherwise(0.0).as("__d"))
-      // the warm-start pass + `iters` Newton rounds all aggregate this
-      // 3-column projection; persist once, release in `finally`
-      .persist()
-    try {
-      def r6(v: Double) = math.rint(v * 1e6) / 1e6 + 0.0
-      // warm start: OLS of ln t on x over uncensored rows
-      val init = clean.agg(
-        F.count(F.lit(1)).as("n"),
-        F.sum("__d").as("nev"),
-        F.sum("__x").as("sxa"),
-        F.sum(F.col("__d") * F.col("__x")).as("sx"),
-        F.sum(F.col("__d") * F.col("__x") * F.col("__x")).as("sxx"),
-        F.sum(F.col("__d") * F.col("__lt")).as("sy"),
-        F.sum(F.col("__d") * F.col("__x") * F.col("__lt")).as("sxy"),
-        F.sum(F.col("__d") * F.col("__lt") * F.col("__lt")).as("syy"))
-        .head()
-      val n = init.getAs[Long]("n")
-      val nev = init.getAs[Double]("nev")
-      require(n >= 8L && nev >= 5.0,
-        s"need n >= 8 rows and >= 5 events, got n=$n events=$nev")
-      val sx = init.getAs[Double]("sx"); val sxx = init.getAs[Double]("sxx")
-      val sy = init.getAs[Double]("sy"); val sxy = init.getAs[Double]("sxy")
-      val syy = init.getAs[Double]("syy")
-      val det0 = nev * sxx - sx * sx
-      require(det0 > 0.0, "constant covariate among events — no OLS start")
-      var bb = r6((nev * sxy - sx * sy) / det0)
-      var mu = r6((sy * sxx - sx * sxy) / det0)
-      val mse = (syy - mu * sy - bb * sxy) / nev
-      require(mse > 0.0, "zero residual variance in the OLS start")
-      // Gumbel moment: Var(ln t) = sigma^2 * pi^2 / 6
-      var sg = r6(math.sqrt(mse * 6.0) / math.Pi)
-      val xbar = init.getAs[Double]("sxa") / n
-      var it = 0
-      while (it < iters) {
-        val w = (F.col("__lt") - F.lit(mu) - F.lit(bb) * F.col("__x")) /
-          F.lit(sg)
-        val z = F.exp(w)
-        val r = clean.agg(
-          F.sum(z).as("a1"),
-          F.sum(z * F.col("__x")).as("a2"),
-          F.sum(z * F.col("__x") * F.col("__x")).as("a3"),
-          F.sum(z - F.col("__d")).as("g1"),
-          F.sum((z - F.col("__d")) * F.col("__x")).as("g2"),
-          F.sum(w * (z - F.col("__d"))).as("u3"),
-          F.sum(w * w * z).as("i3")).head()
-        val a1 = r.getAs[Double]("a1"); val a2 = r.getAs[Double]("a2")
-        val a3 = r.getAs[Double]("a3"); val g1 = r.getAs[Double]("g1")
-        val g2 = r.getAs[Double]("g2"); val u3 = r.getAs[Double]("u3")
-        val i3 = r.getAs[Double]("i3")
-        val dd = a1 * a3 - a2 * a2
-        val is = u3 + i3
-        require(java.lang.Double.isFinite(dd) &&
-          java.lang.Double.isFinite(g1) && java.lang.Double.isFinite(g2) &&
-          java.lang.Double.isFinite(is) && dd > 0.0 && is > 0.0,
-          s"Weibull AFT Newton round ${it + 1} degenerate (det=$dd, " +
-            s"I_s=$is) — standardize the covariate or check ln-duration " +
-            "outliers; refusing to emit garbage")
-        val muN = r6(mu + sg * (a3 * g1 - a2 * g2) / dd)
-        val bbN = r6(bb + sg * (a1 * g2 - a2 * g1) / dd)
-        val sgN = r6(sg * math.exp((u3 - nev) / is))
-        mu = muN; bb = bbN; sg = sgN
-        require(sg > 0.0, s"sigma collapsed at round ${it + 1}")
-        it += 1
-      }
-      val med = r6(math.exp(mu + bb * xbar + sg * math.log(math.log(2.0))))
-      Seq((n, nev.toLong, mu, bb, sg, med))
-        .toDF("n", "n_events", "icept", "slope", "sigma",
-          "median_at_mean")
-    } finally clean.unpersist(false)
+        F.when(e, 1.0).otherwise(0.0).as("__d")))
+    def r6(v: Double) = math.rint(v * 1e6) / 1e6 + 0.0
+    // warm start: OLS of ln t on x over uncensored rows
+    val init = clean.agg(
+      F.count(F.lit(1)).as("n"),
+      F.sum("__d").as("nev"),
+      F.sum("__x").as("sxa"),
+      F.sum(F.col("__d") * F.col("__x")).as("sx"),
+      F.sum(F.col("__d") * F.col("__x") * F.col("__x")).as("sxx"),
+      F.sum(F.col("__d") * F.col("__lt")).as("sy"),
+      F.sum(F.col("__d") * F.col("__x") * F.col("__lt")).as("sxy"),
+      F.sum(F.col("__d") * F.col("__lt") * F.col("__lt")).as("syy"))
+      .head()
+    val n = init.getAs[Long]("n")
+    val nev = init.getAs[Double]("nev")
+    require(n >= 8L && nev >= 5.0,
+      s"need n >= 8 rows and >= 5 events, got n=$n events=$nev")
+    val sx = init.getAs[Double]("sx"); val sxx = init.getAs[Double]("sxx")
+    val sy = init.getAs[Double]("sy"); val sxy = init.getAs[Double]("sxy")
+    val syy = init.getAs[Double]("syy")
+    val det0 = nev * sxx - sx * sx
+    require(det0 > 0.0, "constant covariate among events — no OLS start")
+    var bb = r6((nev * sxy - sx * sy) / det0)
+    var mu = r6((sy * sxx - sx * sxy) / det0)
+    val mse = (syy - mu * sy - bb * sxy) / nev
+    require(mse > 0.0, "zero residual variance in the OLS start")
+    // Gumbel moment: Var(ln t) = sigma^2 * pi^2 / 6
+    var sg = r6(math.sqrt(mse * 6.0) / math.Pi)
+    val xbar = init.getAs[Double]("sxa") / n
+    var it = 0
+    while (it < iters) {
+      val w = (F.col("__lt") - F.lit(mu) - F.lit(bb) * F.col("__x")) /
+        F.lit(sg)
+      val z = F.exp(w)
+      val r = clean.agg(
+        F.sum(z).as("a1"),
+        F.sum(z * F.col("__x")).as("a2"),
+        F.sum(z * F.col("__x") * F.col("__x")).as("a3"),
+        F.sum(z - F.col("__d")).as("g1"),
+        F.sum((z - F.col("__d")) * F.col("__x")).as("g2"),
+        F.sum(w * (z - F.col("__d"))).as("u3"),
+        F.sum(w * w * z).as("i3")).head()
+      val a1 = r.getAs[Double]("a1"); val a2 = r.getAs[Double]("a2")
+      val a3 = r.getAs[Double]("a3"); val g1 = r.getAs[Double]("g1")
+      val g2 = r.getAs[Double]("g2"); val u3 = r.getAs[Double]("u3")
+      val i3 = r.getAs[Double]("i3")
+      val dd = a1 * a3 - a2 * a2
+      val is = u3 + i3
+      require(java.lang.Double.isFinite(dd) &&
+        java.lang.Double.isFinite(g1) && java.lang.Double.isFinite(g2) &&
+        java.lang.Double.isFinite(is) && dd > 0.0 && is > 0.0,
+        s"Weibull AFT Newton round ${it + 1} degenerate (det=$dd, " +
+          s"I_s=$is) — standardize the covariate or check ln-duration " +
+          "outliers; refusing to emit garbage")
+      val muN = r6(mu + sg * (a3 * g1 - a2 * g2) / dd)
+      val bbN = r6(bb + sg * (a1 * g2 - a2 * g1) / dd)
+      val sgN = r6(sg * math.exp((u3 - nev) / is))
+      mu = muN; bb = bbN; sg = sgN
+      require(sg > 0.0, s"sigma collapsed at round ${it + 1}")
+      it += 1
+    }
+    val med = r6(math.exp(mu + bb * xbar + sg * math.log(math.log(2.0))))
+    Seq((n, nev.toLong, mu, bb, sg, med))
+      .toDF("n", "n_events", "icept", "slope", "sigma",
+        "median_at_mean")
   }
 
   /** Predicted median lifetime under a fitted [[weibullAft]] model as

@@ -489,18 +489,17 @@ object TextOps {
     *         order, the artifact a tokenizer ships */
   def bpeMerges(df: DataFrame, idCol: String, textCol: String,
                 numMerges: Int, minPairCount: Long = 2L,
-                tokenRegex: String = null): DataFrame = {
+                tokenRegex: String = null): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val toks0 = tokens(df, idCol, textCol)
     val filtered =
       if (tokenRegex == null) toks0
       else toks0.where(F.col("token").rlike(tokenRegex))
-    var vocab = filtered
-      .groupBy("token").agg(F.count(F.lit(1)).as("wc"))
-      .select(F.split(F.col("token"), "").as("syms"), F.col("wc"))
-      .localCheckpoint(true)
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    var vocab = scope.checkpoint(filtered
+      .groupBy("token").agg(F.count(F.lit(1)).as("wc"))
+      .select(F.split(F.col("token"), "").as("syms"), F.col("wc")))
     var round = 0
     var exhausted = false
     while (round < numMerges && !exhausted) {
@@ -518,15 +517,12 @@ object TextOps {
         val (l, r, n) = (top(0).getAs[String]("l"), top(0).getAs[String]("r"),
           top(0).getAs[Long]("n"))
         learned += ((round + 1, l, r, n))
-        val next = vocab.select(
+        vocab = scope.round(vocab, vocab.select(
           bpeMergeUdf(F.col("syms"), F.lit(l), F.lit(r)).as("syms"),
-          F.col("wc")).localCheckpoint(true)
-        vocab.unpersist(false)
-        vocab = next
+          F.col("wc")))
       }
       round += 1
     }
-    vocab.unpersist(false)
     learned.toSeq.toDF("merge_rank", "left", "right", "n")
   }
 

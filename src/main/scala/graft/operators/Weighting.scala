@@ -146,21 +146,19 @@ object Weighting {
     *         weighted control means (≈ targets at convergence), ess
     *         the Kish effective sample size of the weights */
   def entropyBalance(df: DataFrame, treatCol: String, x1Col: String,
-                     x2Col: String, iters: Int = 4): DataFrame = {
+                     x2Col: String, iters: Int = 4): DataFrame = Persisted { scope =>
     require(iters >= 1 && iters <= 12, "iters must be in 1..12")
     val spark = df.sparkSession
     import spark.implicits._
     val tr = F.col(treatCol).cast("boolean")
     val x1 = F.col(x1Col).cast("double")
     val x2 = F.col(x2Col).cast("double")
-    val clean = df
+    val clean = scope.cache(df
       .where(tr.isNotNull && x1.isNotNull && !F.isnan(x1) &&
         x2.isNotNull && !F.isnan(x2))
-      .select(tr.as("__t"), x1.as("__x1"), x2.as("__x2"))
       // the treated-means pass + `iters` Newton rounds + the final ESS
-      // pass all aggregate this 3-column projection; persist once,
-      // release before return (opt guide §5)
-      .persist()
+      // pass all aggregate this 3-column projection
+      .select(tr.as("__t"), x1.as("__x1"), x2.as("__x2")))
     def r6(v: Double) = math.rint(v * 1e6) / 1e6 + 0.0
     val tRow = clean.where(F.col("__t"))
       .agg(F.count(F.lit(1)).as("n"), F.avg("__x1").as("m1"),
@@ -209,7 +207,6 @@ object Weighting {
       F.sum(eF * F.col("__x1")).as("s1"),
       F.sum(eF * F.col("__x2")).as("s2")).head()
     val se = fin.getAs[Double]("se")
-    clean.unpersist(false)
     Seq((nT, nC, l1, l2, t1, t2,
       r6(fin.getAs[Double]("s1") / se),
       r6(fin.getAs[Double]("s2") / se),

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import graft.operators._
-import graft.SparkProbes.{added, cachedState, jobsOf, persistedState}
+import graft.SparkProbes.{cachedState, jobsOf, leaks, persistedState}
 
 /** The range-partition prefix-sum substrate (`operators/PrefixSum`) and
   * its callers: cached state is released on every path, Spark jobs per
@@ -30,11 +30,6 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
         i % 4 == 0, (i % 20) / 20.0, i.toLong, (i % 13).toLong,
         (i * 7 % 23 + i % 3 - 1).toDouble)
     }.toDF("g", "v", "t", "e", "x", "y", "p", "id", "ntok", "w")
-  }
-
-  private def force(r: Any): Unit = r match {
-    case df: DataFrame => df.collect()
-    case _ =>
   }
 
   test("every prefix-sum caller leaves no cached state, also when it throws") {
@@ -95,12 +90,7 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
         df.withColumn("p", F.lit(null).cast("double")), "p"), false),
       ("holmAdjust, no valid p", () => StatTests.holmAdjust(
         df.withColumn("p", F.lit(null).cast("double")), "p"), false))
-    val leaked = cases.filter { case (_, call, throws) =>
-      val before = cachedState(spark)
-      if (throws) intercept[IllegalArgumentException](call())
-      else force(call())
-      added(before, cachedState(spark))
-    }.map(_._1)
+    val leaked = leaks(spark, cachedState)(cases)
     assert(leaked.isEmpty, s"cached state left behind by: ${leaked.mkString(", ")}")
   }
 
@@ -132,12 +122,7 @@ class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("stratifiedAte, empty", () => ate(empty), false),
       ("stratifiedAte, null/NaN scores", () => ate(noScore), false),
       ("stratifiedAte, one arm", () => ate(oneArm), false))
-    val leaked = cases.filter { case (_, call, throws) =>
-      val before = persistedState(spark)
-      if (throws) intercept[IllegalArgumentException](call())
-      else force(call())
-      added(before, persistedState(spark))
-    }.map(_._1)
+    val leaked = leaks(spark, persistedState)(cases)
     assert(leaked.isEmpty, s"persistent state left behind by: ${leaked.mkString(", ")}")
 
     def nulls(d: DataFrame, cols: String*): Boolean =

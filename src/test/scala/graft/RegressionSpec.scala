@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import graft.operators._
-import graft.SparkProbes.{added, cachedState, jobsOf}
+import graft.SparkProbes.{cachedState, jobsOf, leaks}
 
 /** Regression operators: per-group OLS, Gram-matrix OLS/ridge, IRLS
   * logistic. Recovery tests use deterministic constructions (no RNG). */
@@ -862,14 +862,7 @@ class RegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq((1.0, true, 0.1), (2.0, true, 0.2), (3.0, true, 0.3),
           (4.0, false, 0.4), (5.0, false, 0.5), (6.0, false, 0.6))
           .toDF("t", "e", "x"), "t", "e", "x"), true))
-    val leaked = cases.filter { case (_, call, throws) =>
-      // an earlier leak of the same plan would mask this case's own
-      spark.catalog.clearCache()
-      val before = cachedState(spark)
-      if (throws) intercept[IllegalArgumentException](call())
-      else call()
-      added(before, cachedState(spark))
-    }.map(_._1)
+    val leaked = leaks(spark, cachedState)(cases)
     assert(leaked.isEmpty, s"cached state left behind by: ${leaked.mkString(", ")}")
   }
 
@@ -891,20 +884,5 @@ class RegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       name -> jobsOf(spark)(call())
     }
     assert(got == pinned.map(p => p._1 -> p._3))
-  }
-
-  test("Regression.scala persists and releases only in the GLM substrate") {
-    val f = new java.io.File("src/main/scala/graft/operators/Regression.scala")
-    assert(f.isFile, s"source not found at ${f.getAbsolutePath}")
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    val start = lines.indexWhere(_.contains("private def withDesign"))
-    val end = lines.indexWhere(_ == "  }", start)
-    val sites = lines.indices.filter(i =>
-      lines(i).contains(".persist(") || lines(i).contains("unpersist"))
-    val outside = sites.filterNot(i => i > start && i < end)
-    assert(start >= 0 && sites.nonEmpty && outside.isEmpty,
-      "hand-written cache lifecycle at Regression.scala lines " +
-        s"${outside.map(_ + 1).mkString(", ")}: use withDesign")
   }
 }

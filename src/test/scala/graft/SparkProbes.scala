@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.scalatest.Assertions
 
 /** What a call leaves behind in a session, and how many Spark jobs it
   * runs: the probes of the substrate specs. */
@@ -24,11 +25,35 @@ object SparkProbes {
     (spark.sparkContext.getPersistentRDDs.keySet.toSet,
       spark.sharedState.cacheManager.isEmpty)
 
-  /** State `after` holds that `before` did not. Entries may only vanish
-    * in between: the ContextCleaner drops collected RDDs on its own. */
-  def added(before: (Set[Int], Boolean),
-            after: (Set[Int], Boolean)): Boolean =
-    (after._1 -- before._1).nonEmpty || (before._2 && !after._2)
+  /** What `body` adds to `probe`'s state, run from an empty
+    * CacheManager: the RDD ids it added, and whether the CacheManager
+    * holds an entry afterwards. Entries may only vanish in between: the
+    * ContextCleaner drops collected RDDs on its own. */
+  def added(spark: SparkSession, probe: SparkSession => (Set[Int], Boolean))
+           (body: => Any): (Set[Int], Boolean) = {
+    // an earlier leak of the same plan would mask this call's own
+    spark.catalog.clearCache()
+    val before = probe(spark)
+    body
+    val after = probe(spark)
+    (after._1 -- before._1, !after._2)
+  }
+
+  /** The names of the cases that leave state behind in `probe`. A case
+    * is (name, call, throws): a throwing call must raise a typed
+    * `IllegalArgumentException`; a returned DataFrame is collected. */
+  def leaks(spark: SparkSession, probe: SparkSession => (Set[Int], Boolean))
+           (cases: Seq[(String, () => Any, Boolean)]): Seq[String] =
+    cases.filter { case (_, call, throws) =>
+      val (rdds, cached) = added(spark, probe) {
+        if (throws) Assertions.intercept[IllegalArgumentException](call())
+        else call() match {
+          case df: Dataset[_] => df.collect()
+          case _ =>
+        }
+      }
+      rdds.nonEmpty || cached
+    }.map(_._1)
 
   /** Spark jobs started while `body` runs. */
   def jobsOf(spark: SparkSession)(body: => Any): Int = {
