@@ -11,84 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // collect_list/percentile aggregations (LSH buckets, quantiles) use
-      // ObjectHashAggregate; the default 128-key fallback degrades them to
-      // sort-based aggregation almost immediately
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      // AQE partition coalescing for persist() materializations (off by
-      // default): without it every cached frame pins the static
-      // shuffle-partition count and all downstream cache scans inherit
-      // that many tasks regardless of data size — the partition count
-      // should derive from input size at any scale (opt guide §2.2).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "1") == "1").toString)
-      // Whole-stage-codegen class cache (static conf, default 100
-      // entries): a ~560-query sweep cycles far more generated classes
-      // than that, so the timed loop recompiles everything the untimed
-      // warm-up pass already compiled (measured: q_stl paid 181 Janino
-      // compiles = 2.8 s of its 5.5 s in the timed run). Same
-      // JIT-warmth discipline the prewarm exists for; caches compiled
-      // CODE, never results.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "32768"))
-      // Input split sizing (opt guide §6): split size is
-      // max(openCostInBytes, min(maxPartitionBytes, bytes/minPartitionNum)).
-      // The SF dirs are single 1-25 MB parquet files, so the default 4 MB
-      // openCost floors the split at 4 MB and caps EVERY full-table scan at
-      // ~3 tasks regardless of core count — the map side of each query runs
-      // near-sequentially. Local files have no per-open latency; charge
-      // 64 KB so bytes/minPartitionNum (defaults to the core count) drives
-      // the split and scans fan out to the session's cores. At cluster
-      // scale files are >=128 MB and the openCost floor is never the
-      // binding term, so the production value is irrelevant there — but it
-      // stays env-overridable for many-small-files object-store layouts
-      // where a 4 MB open charge is the honest model.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES",
-          (64 * 1024).toString))
-      // Catalyst constraint propagation costs optimizer time superlinear
-      // in plan depth (every Project/Filter recomputes the transitive
-      // constraint set), and this engine's replay-exact plans are deep —
-      // it is the dominant per-query planning cost here. Measured
-      // (60-query tail sample, min-of-2 per arm): −19% with it off;
-      // plan audit (plans/r13/*_{cp,nocp}.txt): join strategies,
-      // exchanges and every EXPLICIT pushed predicate unchanged — the
-      // only delta is inferred join-key IsNotNull pushdowns, a no-op on
-      // non-null keys and bounded scan waste otherwise. The cost of
-      // constraint propagation is driver planning time PER QUERY (and
-      // per micro-batch), identical at any data scale, so off is the
-      // right default for this workload's deep generated plans;
-      // SPARK_GRAFT_CONSTRAINT_PROP=1 restores the Spark default for
-      // shallow-plan workloads where inferred null-filter pruning pays.
-      .config("spark.sql.constraintPropagation.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "0") == "1").toString)
-    // free-form session-conf overrides for measurement experiments
-    // ("k=v;k=v") — applied at BUILDER time (so static confs take effect
-    // when this JVM creates the session) and re-applied after
-    // getOrCreate with logged failures (so runtime confs still land when
-    // an earlier builder created the session). PlanDump applies the same
-    // variable at the same two points, so an A/B experiment's bench and
-    // plan evidence run under identical configs.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i), kv.drop(i + 1))
-    })
-    val spark = builder.getOrCreate()
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) try spark.conf.set(kv.take(i), kv.drop(i + 1))
-      catch { case e: Throwable =>
-        System.err.println(s"EXTRA CONF rejected: $kv -> ${e.getMessage}") }
-    })
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val spark = Harness.session()
 
     warmUp(spark)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -14,35 +13,7 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench/Verify's default (see Bench.scala) so dumped plans
-      // are the plans the bench times and the verify gate checks — all
-      // three tools share the SPARK_GRAFT_CONSTRAINT_PROP switch
-      .config("spark.sql.constraintPropagation.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "0") == "1").toString)
-    // mirror Bench's A/B passthrough so plan evidence can be dumped
-    // under the exact session confs an experiment ran with; applied at
-    // builder time (static confs accepted when this JVM creates the
-    // session) AND re-applied after getOrCreate with logged failures —
-    // the same reach Bench gives the variable, so an A/B experiment's
-    // two tools see identical configs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i), kv.drop(i + 1))
-    })
-    val spark = builder.getOrCreate()
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) try spark.conf.set(kv.take(i), kv.drop(i + 1))
-      catch { case e: Throwable =>
-        System.err.println(s"EXTRA CONF rejected: $kv -> ${e.getMessage}") }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     names.split(",").foreach { name =>
       try {

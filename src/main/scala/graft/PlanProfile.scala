@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement aid (optimization rounds): split each query's wall time
   * into DataFrame construction (includes any eager iterate execution),
   * plan forcing (analysis + optimization + physical planning of the
@@ -20,29 +18,7 @@ object PlanProfile {
       if (args.length < 2 || args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "1") == "1").toString)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "32768"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", (64 * 1024).toString))
-      .config("spark.sql.constraintPropagation.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "0") == "1").toString)
-      .getOrCreate()
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) try spark.conf.set(kv.take(i), kv.drop(i + 1))
-      catch { case e: Throwable =>
-        System.err.println(s"EXTRA CONF rejected: $kv -> ${e.getMessage}") }
-    })
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val spark = Harness.session()
 
     // warm pass (codegen/JIT), mirroring the bench's prewarm discipline
     if (sys.env.getOrElse("SPARK_GRAFT_PREWARM", "1") == "1") {

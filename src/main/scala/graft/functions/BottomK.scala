@@ -81,17 +81,3 @@ class BottomK(k: Int)
   def outputEncoder: Encoder[Seq[(String, Long)]] =
     ExpressionEncoder[Seq[(String, Long)]]()
 }
-
-object BottomK {
-  /** KMV distinct-count estimate from the k-th smallest hash: with the
-    * first 8 hex chars of the hash read as a 32-bit integer `v`,
-    * `U = (v+1)/2^32` estimates the k-th order statistic of k uniform
-    * draws and `(k−1)/U` the number of distinct hashed items. Exact when
-    * fewer than k distinct items exist (caller uses the kept count). */
-  def estimateDistinct(kept: Int, k: Int, kthHashHex: String): Double =
-    if (kept < k) kept.toDouble
-    else {
-      val v = java.lang.Long.parseLong(kthHashHex.substring(0, 8), 16)
-      (k - 1).toDouble / ((v + 1).toDouble / 4294967296.0)
-    }
-}

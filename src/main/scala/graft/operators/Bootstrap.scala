@@ -1,13 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.dists.{ContinuousDist, DiscreteDist, ContinuousDist => CD}
+import graft.dists.{ContinuousDist, ContinuousDist => CD}
 
 /** Percentile-bootstrap confidence intervals for fitted parameters
-  * (reference: src/spark_bestfit/estimation.py:826-943, discrete twin
-  * :626-712): B resamples with replacement, refit each, drop failed fits
-  * (≥ 10 successes required), remove 3×IQR outlier rows per parameter,
-  * take (α/2, 1−α/2) percentiles.
+  * (reference: src/spark_bestfit/estimation.py:826-943): B resamples
+  * with replacement, refit each, drop failed fits (≥ 10 successes
+  * required), remove 3×IQR outlier rows per parameter, take
+  * (α/2, 1−α/2) percentiles.
   *
   * The refits fan out over the cluster via `spark.range(B)` — each task
   * holds only the broadcast 10K sample, so B can be large without driver
@@ -20,29 +20,6 @@ object Bootstrap {
   def confidenceIntervals(spark: SparkSession, dist: ContinuousDist,
                           sample: Array[Double], b: Int = 1000,
                           alpha: Double = 0.05, seed: Long = 42L): Seq[ParamCI] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(sample)
-    val point = dist.fit(sample)
-    val fits = spark.range(0, b, 1, math.min(b, 2 * spark.sparkContext.defaultParallelism))
-      .map { i =>
-        val xs = bc.value
-        val rng = new java.util.SplittableRandom(seed + i)
-        val res = Array.fill(xs.length)(xs(rng.nextInt(xs.length)))
-        try {
-          val p = dist.fit(res)
-          if (p.forall(java.lang.Double.isFinite)) p else Array.empty[Double]
-        } catch { case _: Throwable => Array.empty[Double] }
-      }
-      .filter(_.nonEmpty)
-      .collect()
-    require(fits.length >= 10,
-      s"bootstrap needs >= 10 successful refits, got ${fits.length}")
-    buildCIs(dist.paramNames, fits, point, alpha)
-  }
-
-  def confidenceIntervalsDiscrete(spark: SparkSession, dist: DiscreteDist,
-                                  sample: Array[Long], b: Int = 1000,
-                                  alpha: Double = 0.05, seed: Long = 42L): Seq[ParamCI] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(sample)
     val point = dist.fit(sample)

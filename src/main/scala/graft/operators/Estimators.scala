@@ -119,8 +119,4 @@ object Estimators extends Serializable {
     val (best, fBest) = Optimize.nelderMead(negLL, warm, maxIter = 600)
     if (fBest < f0) best else warm
   }
-
-  /** Fraction of censored observations (used for the >80% warning path). */
-  def censoredFraction(eventObserved: Array[Boolean]): Double =
-    eventObserved.count(!_).toDouble / math.max(eventObserved.length, 1)
 }

@@ -169,18 +169,4 @@ object Histogram {
       .withColumn("bin_hi",
         F.lit(binStart) + (F.col("bin") + 1L) * F.lit(binWidth))
   }
-
-  def discretePmf(df: DataFrame, column: String): Pmf = {
-    val c = F.col(column).cast("long")
-    val grouped = df.select(c.as("k")).where(F.col("k").isNotNull)
-      .groupBy("k").agg(F.count(F.lit(1)).as("cnt"))
-      .orderBy("k")
-      .collect()
-    if (grouped.isEmpty)
-      throw new IllegalArgumentException(s"column '$column' contains no valid values")
-    val xs = grouped.map(_.getLong(0))
-    val counts = grouped.map(_.getLong(1))
-    val total = counts.sum
-    Pmf(xs, counts.map(_.toDouble / total), total)
-  }
 }

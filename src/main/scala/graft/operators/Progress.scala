@@ -50,20 +50,3 @@ final class ProgressTracker(
     Option(thread).foreach(_.interrupt())
   }
 }
-
-object ProgressTracker {
-  /** Run `body` inside a tagged job group with progress reported to
-    * `callback`; always clears the group and stops the poller. */
-  def withProgress[T](spark: SparkSession, description: String,
-                      callback: (Int, Int, Double) => Unit)(body: => T): T = {
-    val group = s"graft-${System.identityHashCode(callback)}-${description.hashCode}"
-    val tracker = new ProgressTracker(spark, group, callback)
-    spark.sparkContext.setJobGroup(group, description, interruptOnCancel = false)
-    tracker.start()
-    try body
-    finally {
-      tracker.stop()
-      spark.sparkContext.clearJobGroup()
-    }
-  }
-}
