@@ -33,7 +33,7 @@ object Associations {
     *         conf_a_b, lift), floats rounded to 6 */
   def basketPairs(df: DataFrame, basketCol: String, itemCol: String,
                   minPairCount: Long = 2L, k: Int = 50,
-                  maxBasketSize: Int = 1000): DataFrame = {
+                  maxBasketSize: Int = 1000): DataFrame = Persisted { scope =>
     require(minPairCount >= 1L, "minPairCount must be >= 1")
     require(k >= 1, "k must be >= 1")
     require(maxBasketSize >= 2, "maxBasketSize must be >= 2")
@@ -47,8 +47,7 @@ object Associations {
       .observeDropped(sizes, "basketPairs", F.col("__sz"), maxBasketSize)
       .where(F.col("__sz") <= maxBasketSize)
       .select("__b")
-    val kept = items.join(okBaskets, Seq("__b"))
-      .localCheckpoint(true)
+    val kept = scope.checkpoint(items.join(okBaskets, Seq("__b")))
     val n = kept.select("__b").distinct().count()
     require(n > 0L, "no baskets after the size guard")
     val itemCounts = kept.groupBy("__i").agg(F.count(F.lit(1)).as("__ci"))

@@ -88,7 +88,7 @@ object Bootstrap {
     * inside the cap. Refusing oversized input is the same
     * bounded-audit-op discipline as the exact near-dup baseline. */
   def hashResampleCI(df: DataFrame, valueCol: String, b: Int = 200,
-                     alpha: Double = 0.05, maxSample: Int = 100000): DataFrame = {
+                     alpha: Double = 0.05, maxSample: Int = 100000): DataFrame = Persisted { scope =>
     import org.apache.spark.sql.{functions => F}
     require(b >= 2, "need at least 2 replicates")
     val spark = df.sparkSession
@@ -109,14 +109,14 @@ object Bootstrap {
         require(total > 0, "empty sample")
         require(total <= maxSample, s"hashResampleCI is a bounded audit op: " +
           s"$total rows > cap $maxSample — pass the fitting sample, not the corpus")
-        val pinned = ps.walk(off) { (seed, it) =>
+        val pinned = scope.checkpoint(ps.walk(off) { (seed, it) =>
           var running = seed(0)
           it.flatMap { case (v, c) =>
             val start = running
             running += c
             (0L until c).iterator.map(o => (start + o, v))
           }
-        }.toDF("idx", "x").localCheckpoint(true)
+        }.toDF("idx", "x"))
         (total, pinned)
       }
     val draws = spark.range(b).toDF("rep")

@@ -497,14 +497,13 @@ object Cohorts {
     *         conv_rate_touched) */
   def shapleyAttribution(df: DataFrame, userCol: String,
                          channelCol: String,
-                         convValue: String): DataFrame = {
+                         convValue: String): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val u = F.col(userCol)
     val ch = F.col(channelCol).cast("string")
-    val base = df.where(u.isNotNull && ch.isNotNull)
-      .select(u.cast("string").as("__u"), ch.as("__c"))
-      .localCheckpoint(true)
+    val base = scope.checkpoint(df.where(u.isNotNull && ch.isNotNull)
+      .select(u.cast("string").as("__u"), ch.as("__c")))
     val channels = base.where(F.col("__c") =!= convValue)
       .select("__c").distinct().collect().map(_.getString(0)).sorted
     val cc = channels.length
@@ -586,7 +585,7 @@ object Cohorts {
   def markovRemovalEffect(df: DataFrame, userCol: String, tsCol: String,
                           channelCol: String, convEvent: String,
                           iters: Int = 8,
-                          maxChannels: Int = 12): DataFrame = {
+                          maxChannels: Int = 12): DataFrame = Persisted { scope =>
     require(iters >= 1 && iters <= 64, "iters must be in 1..64")
     require(maxChannels >= 1, "maxChannels must be >= 1")
     val spark = df.sparkSession
@@ -616,9 +615,8 @@ object Cohorts {
     val endPairs = nodes.join(mx, "__u")
       .where(F.col("__rn") === F.col("__mrn") && F.col("__cv") === 0)
       .select(F.col("__node").as("src"), F.lit("__null").as("dst"))
-    val cnt = seqPairs.unionByName(endPairs)
-      .groupBy("src", "dst").agg(F.count(F.lit(1)).as("c"))
-      .localCheckpoint(true)
+    val cnt = scope.checkpoint(seqPairs.unionByName(endPairs)
+      .groupBy("src", "dst").agg(F.count(F.lit(1)).as("c")))
     val nCh = cnt.where(F.col("src") =!= "__start")
       .select("src").distinct().count()
     require(nCh >= 1L, "no channel transitions found")

@@ -1418,14 +1418,13 @@ object Evaluation {
     *
     * @return one row: (n, concordant, discordant, gamma, lambda_yx) */
   def gkAssociation(df: DataFrame, xCol: String, yCol: String,
-                    maxCells: Int = 16384): DataFrame = {
+                    maxCells: Int = 16384): DataFrame = Persisted { scope =>
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    val cells = df.where(x.isNotNull && !F.isnan(x) &&
+    val cells = scope.checkpoint(df.where(x.isNotNull && !F.isnan(x) &&
         y.isNotNull && !F.isnan(y))
       .groupBy(x.as("__x"), y.as("__y"))
-      .agg(F.count(F.lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("__n")))
     val meta = cells.agg(F.sum("__n").as("n"),
       F.count(F.lit(1)).as("cells")).head()
     val nTot = meta.getAs[Long]("n")
@@ -1857,15 +1856,14 @@ object Evaluation {
     *         the index degenerates (single cluster both sides), nmi
     *         null when either marginal entropy is zero */
   def clusterAgreement(df: DataFrame, labelColA: String,
-                       labelColB: String): DataFrame = {
+                       labelColB: String): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val a = F.col(labelColA).cast("string")
     val b = F.col(labelColB).cast("string")
-    val cellsDf = df.where(a.isNotNull && b.isNotNull)
+    val cellsDf = scope.checkpoint(df.where(a.isNotNull && b.isNotNull)
       .groupBy(a.as("__a"), b.as("__b"))
-      .agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("__c")))
     val nCells = cellsDf.count()
     require(nCells >= 1L, "no doubly-labeled rows")
     // loud guard, not a silent cap: the cells collect to the driver

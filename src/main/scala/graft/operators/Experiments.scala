@@ -166,15 +166,14 @@ object Experiments {
     * @return one row per group: (groupCols..., n, x, rate, shrunk_rate,
     *         alpha, beta), floats rounded to 6 */
   def ebShrinkRates(df: DataFrame, groupCols: Seq[String],
-                    successCol: String): DataFrame = {
+                    successCol: String): DataFrame = Persisted { scope =>
     require(groupCols.nonEmpty, "need at least one group column")
     val y = F.col(successCol).cast("boolean")
-    val groups = df.where(y.isNotNull)
+    val groups = scope.checkpoint(df.where(y.isNotNull)
       .groupBy(groupCols.map(F.col): _*)
       .agg(F.count(F.lit(1)).as("n"),
         F.sum(F.when(y, 1L).otherwise(0L)).as("x"))
-      .withColumn("__r", F.col("x").cast("double") / F.col("n"))
-      .localCheckpoint(true)
+      .withColumn("__r", F.col("x").cast("double") / F.col("n")))
     val row = groups.agg(F.count(F.lit(1)).as("k"),
       F.sum("__r").as("sr"),
       F.sum(F.col("__r") * F.col("__r")).as("srr")).head()
@@ -221,23 +220,20 @@ object Experiments {
     * @return one row per (cohort, period ≥ cohort with baseline):
     *         (cohort, period, n_treated, n_control, att) */
   def eventStudy(df: DataFrame, unitCol: String, timeCol: String,
-                 cohortCol: String, yCol: String): DataFrame = {
+                 cohortCol: String, yCol: String): DataFrame = Persisted { scope =>
     val y = F.col(yCol).cast("double")
     val t = F.col(timeCol).cast("long")
     val g = F.col(cohortCol).cast("long")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val cells = df
       .where(F.col(unitCol).isNotNull && t.isNotNull && y.isNotNull &&
         !F.isnan(y))
       .groupBy(F.col(unitCol).as("__u"), t.as("__t"))
       .agg((dsum(y) / F.count(F.lit(1))).as("__y"),
         F.max(g).as("__g"))
-    val cp = cells
+    val cp = scope.checkpoint(cells
       .groupBy(F.col("__g"), F.col("__t"))
       .agg(F.count(F.lit(1)).as("__n"),
-        (dsum(F.col("__y")) / F.count(F.lit(1))).as("__m"))
-      .localCheckpoint(true)
+        (dsum(F.col("__y")) / F.count(F.lit(1))).as("__m")))
     val treated = cp.where(F.col("__g").isNotNull &&
       F.col("__t") >= F.col("__g"))
       .select(F.col("__g").as("cohort"), F.col("__t").as("period"),
@@ -282,13 +278,11 @@ object Experiments {
     *         shrunk_rate, alpha, beta), doubles rounded to 6 */
   def ebShrinkPoisson(df: DataFrame, groupCols: Seq[String],
                       eventCol: String,
-                      exposureCol: String): DataFrame = {
+                      exposureCol: String): DataFrame = Persisted { scope =>
     require(groupCols.nonEmpty, "need at least one group column")
     val c = F.col(eventCol).cast("double")
     val e = F.col(exposureCol).cast("double")
-    def dsum(col: org.apache.spark.sql.Column) =
-      F.sum(col.cast("decimal(38,6)")).cast("double")
-    val groups = df
+    val groups = scope.checkpoint(df
       .where(c.isNotNull && !F.isnan(c) && e.isNotNull && !F.isnan(e))
       .groupBy(groupCols.map(F.col): _*)
       .agg(dsum(c).as("__ev"), dsum(e).as("__ex"))
@@ -297,8 +291,7 @@ object Experiments {
       // the prior folds the 6-rounded rates as decimals so α/β are pure
       // functions of rounded scalars — partition-order-independent, and
       // the oracle's sequential fold reproduces them bit-for-bit
-      .withColumn("__r6", F.round(F.col("__r"), 6))
-      .localCheckpoint(true)
+      .withColumn("__r6", F.round(F.col("__r"), 6)))
     val row = groups.agg(F.count(F.lit(1)).as("k"),
       F.sum(F.col("__r6").cast("decimal(38,6)")).cast("double").as("sr"),
       F.sum((F.col("__r6") * F.col("__r6")).cast("decimal(38,12)"))
@@ -1039,7 +1032,7 @@ object Experiments {
   def qteByQuantile(df: DataFrame, cohortCol: String, valueCol: String,
                     qs: Seq[Double], labelA: String = "a",
                     labelB: String = "b",
-                    z: Double = 1.959964): DataFrame = {
+                    z: Double = 1.959964): DataFrame = Persisted { scope =>
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q < 1.0),
       "quantiles must be in (0,1)")
     require(labelA != labelB, "cohort labels must differ")
@@ -1053,10 +1046,9 @@ object Experiments {
     val wg = Window.partitionBy("__g")
     val wCum = Window.partitionBy("__g").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCum = cells
+    val withCum = scope.checkpoint(cells
       .withColumn("__n", F.sum("__c").over(wg))
-      .withColumn("__cum", F.sum("__c").over(wCum))
-      .localCheckpoint(true)
+      .withColumn("__cum", F.sum("__c").over(wCum)))
     val nD = F.col("__n").cast("double")
     val perQ = qs.map { q =>
       val half = F.lit(z) * F.sqrt(nD * q * (1.0 - q))
@@ -1414,8 +1406,6 @@ object Experiments {
     val z = F.col(instrumentCol).cast("boolean")
     val d = F.col(treatCol).cast("double")
     val y = F.col(outcomeCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val m = df
       .where(z.isNotNull && d.isNotNull && !F.isnan(d) && y.isNotNull &&
         !F.isnan(y))
@@ -1466,8 +1456,6 @@ object Experiments {
     import spark.implicits._
     val x = F.col(runningCol).cast("double")
     val y = F.col(outcomeCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val xc = x - F.lit(cutoff)
     val right = x >= F.lit(cutoff)
     def side(cond: org.apache.spark.sql.Column, tag: String) = Seq(
@@ -1628,8 +1616,6 @@ object Experiments {
         else lo
       bcM.value(cand)
     })
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val m = clean.where(F.col("__t"))
       .withColumn("__m", matchUdf(F.col("__s")))
       .agg(F.count(F.lit(1)).as("nt"),

@@ -1021,8 +1021,6 @@ object Features {
     require(periodUnit > 0L, "periodUnit must be positive")
     val v = F.col(valueCol).cast("double")
     val t = F.col(tsCol).cast("long")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val cells = df
       .where(F.col(keyCol).isNotNull && t.isNotNull && v.isNotNull &&
         !F.isnan(v))
@@ -1077,21 +1075,18 @@ object Features {
     *         degenerate variance omitted */
   def cointegrationByKey(df: DataFrame, keyCol: String, tsCol: String,
                          xCol: String, yCol: String,
-                         periodUnit: Long): DataFrame = {
+                         periodUnit: Long): DataFrame = Persisted { scope =>
     require(periodUnit > 0L, "periodUnit must be positive")
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
     val t = F.col(tsCol).cast("long")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(F.col(keyCol).isNotNull && t.isNotNull && x.isNotNull &&
         !F.isnan(x) && y.isNotNull && !F.isnan(y))
       .groupBy(F.col(keyCol).as("__k"),
         F.expr(s"CAST(`$tsCol` AS BIGINT) DIV $periodUnit").as("__p"))
       .agg((dsum(x) / F.count(F.lit(1))).as("__x"),
-        (dsum(y) / F.count(F.lit(1))).as("__y"))
-      .localCheckpoint(true)
+        (dsum(y) / F.count(F.lit(1))).as("__y")))
     val mom = cells.groupBy("__k").agg(
       F.count(F.lit(1)).as("n_periods"),
       F.sum("__x").as("sx"), F.sum("__y").as("sy"),
@@ -1663,7 +1658,7 @@ object Features {
     *         half of its segment's split */
   def binarySegmentByKey(df: DataFrame, keyCol: String, tsCol: String,
                          valueCol: String,
-                         periodUnit: Long): DataFrame = {
+                         periodUnit: Long): DataFrame = Persisted { scope =>
     require(periodUnit > 0L, "periodUnit must be positive")
     val v = F.col(valueCol).cast("double")
     val t = F.col(tsCol).cast("long")
@@ -1720,7 +1715,7 @@ object Features {
           (F.col("__n").cast("double") * F.sqrt(F.col("__var")) *
             F.sqrt(F.col("__n").cast("double"))), 6).as("z"))
     }
-    val l1 = scan(cells, Seq("__k"), F.lit("all")).localCheckpoint(true)
+    val l1 = scope.checkpoint(scan(cells, Seq("__k"), F.lit("all")))
     val seg = cells.join(
       l1.select(F.col("__k"), F.col("cp_period").as("__cp1")), "__k")
       .withColumn("__side",
@@ -2290,13 +2285,12 @@ object Features {
   def collapseRareLevels(df: DataFrame, catCol: String,
                          minShare: Double = 0.01,
                          outCol: String = "collapsed",
-                         otherLabel: String = "_other"): DataFrame = {
+                         otherLabel: String = "_other"): DataFrame = Persisted { scope =>
     require(minShare > 0.0 && minShare <= 1.0,
       "minShare must be in (0, 1]")
     val c = F.col(catCol).cast("string")
-    val counts = df.where(c.isNotNull)
-      .groupBy(c.as("__lvl")).agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(true)
+    val counts = scope.checkpoint(df.where(c.isNotNull)
+      .groupBy(c.as("__lvl")).agg(F.count(F.lit(1)).as("__c")))
     val n = counts.agg(F.coalesce(F.sum("__c"), F.lit(0L)))
       .head().getLong(0)
     val keep = counts
@@ -2623,7 +2617,7 @@ object Features {
   def stlByKey(df: DataFrame, keyCol: String, tsCol: String,
                valueCol: String, periodUnit: Long, period: Int,
                seasonalSpan: Int = 7, trendSpan: Int = 13,
-               innerRounds: Int = 2, robustRounds: Int = 1): DataFrame = {
+               innerRounds: Int = 2, robustRounds: Int = 1): DataFrame = Persisted { scope =>
     require(periodUnit > 0L, "periodUnit must be positive")
     require(period >= 2 && period <= 1000, "period must be in 2..1000")
     require(seasonalSpan >= 3 && seasonalSpan % 2 == 1,
@@ -2644,7 +2638,7 @@ object Features {
     def rint6(src: DataFrame, tmp: String, out: String): DataFrame =
       src.withColumn(out, F.expr(s"rint($tmp * 1e6) / 1e6 + 0.0"))
         .drop(tmp)
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(F.col(keyCol).isNotNull && t.isNotNull && v.isNotNull &&
         !F.isnan(v))
       .groupBy(F.col(keyCol).as("__k"),
@@ -2659,8 +2653,7 @@ object Features {
       .withColumn("__cy", F.expr(s"CAST((__i - 1) DIV $period AS BIGINT)"))
       .withColumn("__rho", F.lit(1.0))
       .withColumn("__t", F.lit(0.0))
-      .withColumn("__s", F.lit(0.0))
-      .localCheckpoint(true)
+      .withColumn("__s", F.lit(0.0)))
 
     // weighted local-linear loess of `valCol` at every point of `src`,
     // over cycle number within (key, phase) [seasonal] or row position
@@ -2751,7 +2744,6 @@ object Features {
         .withColumn("__t", F.col("__tn"))
         .withColumn("__s", F.col("__sn"))
         .select(baseCols.map(F.col): _*)
-        .localCheckpoint(true)
     }
 
     def reweight(cur: DataFrame): DataFrame = {
@@ -2781,15 +2773,14 @@ object Features {
         "__rho0", "__rho1")
         .withColumn("__rho", F.greatest(F.col("__rho1"), F.lit(1e-6)))
         .select(baseCols.map(F.col): _*)
-        .localCheckpoint(true)
     }
 
     var cur = cells
     var o = 0
     while (o <= robustRounds) {
       var i = 0
-      while (i < innerRounds) { cur = innerPass(cur); i += 1 }
-      if (o < robustRounds) cur = reweight(cur)
+      while (i < innerRounds) { cur = scope.round(cur, innerPass(cur)); i += 1 }
+      if (o < robustRounds) cur = scope.round(cur, reweight(cur))
       o += 1
     }
     rint6(
@@ -2827,8 +2818,6 @@ object Features {
                             tsCol: String, valueCol: String,
                             period: Int): DataFrame = {
     val dec = seasonalDecompose(df, keyCol, tsCol, valueCol, period)
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val r = F.col("remainder")
     val sr = F.col("seasonal") + F.col("remainder")
     val tr = F.col("trend") + F.col("remainder")
@@ -4183,7 +4172,6 @@ object Features {
       .withColumn("__v1", F.lag("__v", 1).over(wOrd))
       .withColumn("__c1", F.lag("__c", 1).over(wOrd))
       .where(F.col("__v1").isNotNull)
-    def dsum(c: Column) = F.sum(c.cast("decimal(38,6)")).cast("double")
     val m = lagged.groupBy("__k").agg(
       F.count(F.lit(1)).as("n"),
       dsum(F.col("__v1")).as("sx1"), dsum(F.col("__c1")).as("sx2"),

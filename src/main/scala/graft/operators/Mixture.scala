@@ -37,17 +37,13 @@ object Mixture {
     * once and shared by every restart. */
   def fit(df: DataFrame, columns: Seq[String], k: Int,
           seed: Long = 42L, maxIter: Int = 100, tol: Double = 1e-4,
-          nInit: Int = 1): (GaussianMixtureResult, DataFrame) = {
+          nInit: Int = 1): (GaussianMixtureResult, DataFrame) = Persisted { scope =>
     require(nInit >= 1, "nInit must be >= 1")
     val assembler = new VectorAssembler()
       .setInputCols(columns.toArray).setOutputCol("__features")
       .setHandleInvalid("skip")
-    // lineage-free materialization (vs cache()): the blocks are released
-    // by the ContextCleaner when the frame is dropped, so repeated fits
-    // don't accumulate pinned relations
-    val vecDf = assembler.transform(
-      df.select(columns.map(c => F.col(c).cast("double").as(c)): _*))
-      .localCheckpoint(true)
+    val vecDf = scope.checkpoint(assembler.transform(
+      df.select(columns.map(c => F.col(c).cast("double").as(c)): _*)))
     val n = vecDf.count()
     val gmm = new GaussianMixture()
       .setK(k).setMaxIter(maxIter).setTol(tol)

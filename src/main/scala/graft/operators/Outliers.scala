@@ -18,9 +18,9 @@ object Outliers {
 
   /** Exact discrete quantile (DuckDB `quantile_disc` convention);
     * None when the column has no finite values. */
-  def quantileDiscOpt(df: DataFrame, column: String, q: Double): Option[Double] = {
+  def quantileDiscOpt(df: DataFrame, column: String, q: Double): Option[Double] = Persisted { scope =>
     require(q >= 0.0 && q <= 1.0, "q must be in [0,1]")
-    val (n, rows) = PlotData.rankSelectAt(df, column,
+    val (n, rows) = PlotData.rankSelectAt(scope, df, column,
       n => Array(math.floor((n - 1) * q).toLong + 1L))
     if (n == 0L) None else Some(rows.head().getDouble(1))
   }
@@ -388,18 +388,17 @@ object Outliers {
     * @return one row per point: (id, k_dist, lrd, lof) rounded to 6 */
   def localOutlierFactor(df: DataFrame, idCol: String, xCol: String,
                          yCol: String, k: Int,
-                         maxPoints: Int = 4096): DataFrame = {
+                         maxPoints: Int = 4096): DataFrame = Persisted { scope =>
     require(k >= 2 && k <= 64, "k must be in 2..64")
     require(maxPoints >= k + 1 && maxPoints <= 65536,
       "maxPoints must be in [k+1, 65536]")
     import org.apache.spark.sql.expressions.Window
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    val pts = df
+    val pts = scope.checkpoint(df
       .where(F.col(idCol).isNotNull && x.isNotNull && !F.isnan(x) &&
         y.isNotNull && !F.isnan(y))
-      .select(F.col(idCol).cast("long").as("id"), x.as("x"), y.as("y"))
-      .localCheckpoint(true)
+      .select(F.col(idCol).cast("long").as("id"), x.as("x"), y.as("y")))
     val n = pts.count()
     require(n <= maxPoints,
       s"$n points — localOutlierFactor is exact on BOUNDED point " +
@@ -416,10 +415,9 @@ object Outliers {
         F.sqrt(dx * dx + dy * dy).as("dist"))
     val wNn = Window.partitionBy("ida")
       .orderBy(F.col("dist").asc, F.col("idb").asc)
-    val knn = pairs
+    val knn = scope.checkpoint(pairs
       .withColumn("__rn", F.row_number().over(wNn))
-      .where(F.col("__rn") <= k)
-      .localCheckpoint(true)
+      .where(F.col("__rn") <= k))
     val kdist = knn.groupBy("ida").agg(F.max("dist").as("kd"))
     // reach(a,b) = max(dist, kdist(b)); lrd = k / sum(reach)
     val reach = knn

@@ -19,7 +19,7 @@ object Packing {
   /** @param capacity tokens per packed training sequence
     * @return (id, n_tokens, offset, first_seq, last_seq, n_seqs) */
   def packSequences(df: DataFrame, idCol: String, nTokensCol: String,
-                    capacity: Long): DataFrame = {
+                    capacity: Long): DataFrame = Persisted { scope =>
     require(capacity > 0, "capacity must be positive")
     val spark = df.sparkSession
     import spark.implicits._
@@ -30,7 +30,7 @@ object Packing {
         F.coalesce(F.col(nTokensCol).cast("long"), F.lit(0L)).as("n_tokens"))
       .where(F.col("id").isNotNull)
     PrefixSum(base.as[(Long, Long)], F.col("id")) { ps =>
-      ps.walk(ps.offsets(1)((s, r) => s(0) += r._2)) { (o, it) =>
+      scope.checkpoint(ps.walk(ps.offsets(1)((s, r) => s(0) += r._2)) { (o, it) =>
         var running = o(0)
         it.map { case (id, nt) =>
           val off = running
@@ -39,8 +39,7 @@ object Packing {
           val last = if (nt == 0) first else (off + nt - 1) / capacity
           (id, nt, off, first, last, last - first + 1)
         }
-      }.toDF("id", "n_tokens", "offset", "first_seq", "last_seq", "n_seqs")
-        .localCheckpoint(true)
+      }.toDF("id", "n_tokens", "offset", "first_seq", "last_seq", "n_seqs"))
     }
   }
 }

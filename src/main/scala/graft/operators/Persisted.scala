@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one lifecycle of the frames an operator reads more than once or
   * carries from round to round (the reference caches the frame it
-  * reuses and lets the caller `unpersist` it). Inside
-  * `Persisted { scope => ... }`:
+  * reuses and lets the caller `unpersist` it). Every eager checkpoint
+  * under `operators/` is made here. Inside `Persisted { scope => ... }`:
   *
   *  - `cache(df)` persists a frame the body reads more than once. A
   *    frame whose plan the CacheManager already holds is the caller's:
@@ -25,9 +25,13 @@ import org.apache.spark.storage.StorageLevel
   * When the body returns or throws, every frame it cached is released,
   * and so is every checkpoint that the frame it returns does not read: a
   * returned lazy frame keeps only the checkpoints it reads, which the
-  * ContextCleaner frees once the caller drops the frame. A returned frame
-  * must not read a cached one (that one would be recomputed), so a body
-  * checkpoints what it returns. Releases do not block. */
+  * ContextCleaner frees once the caller drops the frame. A returned
+  * `Product` (a tuple, a case class) keeps the checkpoints read by each
+  * of its `Dataset` fields. A checkpoint whose job fails is released
+  * before the failure propagates. A returned frame must not read a
+  * cached one (that one would be recomputed), so a body checkpoints
+  * what it returns. Releases do not block. A nested helper takes its
+  * operator's scope as an argument. */
 private[operators] final class Persisted private {
   private val cached = mutable.ArrayBuffer.empty[DataFrame]
   private val checkpoints = mutable.LinkedHashMap.empty[Int, RDD[_]]
@@ -77,10 +81,12 @@ private[operators] object Persisted {
     var kept = Set.empty[Int]
     try {
       val result = body(scope)
-      result match {
-        case df: Dataset[_] => kept = checkpointsOf(df).map(_.id).toSet
-        case _ =>
+      val returned = result match {
+        case df: Dataset[_] => Iterator(df)
+        case p: Product => p.productIterator.collect { case df: Dataset[_] => df }
+        case _ => Iterator.empty
       }
+      kept = returned.flatMap(checkpointsOf).map(_.id).toSet
       result
     } finally {
       scope.cached.foreach(_.unpersist(blocking = false))

@@ -103,16 +103,16 @@ object PlotData {
     * [[PrefixSum]] substrate — NO single-partition window, so this
     * holds at 100 TB where a global row_number() dies.
     * Returns (n, DataFrame(rank: long, sample_quantile: double)). */
-  private def rankSelect(df: DataFrame, column: String,
+  private def rankSelect(scope: Persisted, df: DataFrame, column: String,
                          points: Int): (Long, DataFrame) =
-    rankSelectAt(df, column, n =>
+    rankSelectAt(scope, df, column, n =>
       (1 to points).map(j => math.max(1L, j.toLong * n / points))
         .distinct.sorted.toArray)
 
   /** Exact order statistics at caller-chosen ranks (1-based, derived
     * from the total count): the shared scale-safe machinery behind the
     * Q-Q/P-P points and the robust-statistics selections. */
-  private[operators] def rankSelectAt(df: DataFrame, column: String,
+  private[operators] def rankSelectAt(scope: Persisted, df: DataFrame, column: String,
                                       targetsOf: Long => Array[Long])
       : (Long, DataFrame) = {
     val spark = df.sparkSession
@@ -142,7 +142,7 @@ object PlotData {
           } else Iterator.empty
         }
       }.toDF("rank", "sample_quantile")
-      (n, rows.localCheckpoint(true))
+      (n, scope.checkpoint(rows))
     }
   }
 
@@ -153,9 +153,9 @@ object PlotData {
     * libm implementations. */
   def qqDist(df: DataFrame, column: String, distName: String,
              params: Array[Double], points: Int = 100,
-             lb: Option[Double] = None, ub: Option[Double] = None): DataFrame = {
+             lb: Option[Double] = None, ub: Option[Double] = None): DataFrame = Persisted { scope =>
     val m = frozen(distName, params, lb, ub)
-    val (n, os) = rankSelect(df, column, points)
+    val (n, os) = rankSelect(scope, df, column, points)
     val ppfUdf = F.udf((r: Long) => m.ppf((r - 0.375) / (n + 0.25)))
     os.select(F.col("rank"),
       F.round(ppfUdf(F.col("rank")), 6).as("theoretical_quantile"),
@@ -166,9 +166,9 @@ object PlotData {
     * same exact order statistics. */
   def ppDist(df: DataFrame, column: String, distName: String,
              params: Array[Double], points: Int = 100,
-             lb: Option[Double] = None, ub: Option[Double] = None): DataFrame = {
+             lb: Option[Double] = None, ub: Option[Double] = None): DataFrame = Persisted { scope =>
     val m = frozen(distName, params, lb, ub)
-    val (n, os) = rankSelect(df, column, points)
+    val (n, os) = rankSelect(scope, df, column, points)
     val cdfUdf = F.udf((x: Double) => m.cdf(x))
     os.select(F.col("rank"),
       ((F.col("rank") - F.lit(0.5)) / F.lit(n.toDouble)).as("empirical_cdf"),

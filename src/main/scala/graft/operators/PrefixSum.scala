@@ -29,7 +29,8 @@ import org.apache.spark.sql.{Column, Dataset}
   * release: on first use it re-reads the range shuffle's output, which
   * the loan has already written, and sorts each partition again. A
   * result read by several actions may still be materialized inside the
-  * loan (`localCheckpoint(true)`), at one job and a persisted RDD.
+  * loan by its operator's `scope.checkpoint` (see [[Persisted]]), at
+  * one job and a persisted RDD.
   */
 private[operators] final class PrefixSum[T] private (sorted: RDD[T]) {
 

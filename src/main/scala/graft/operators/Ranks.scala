@@ -362,14 +362,13 @@ object Ranks {
     *
     * @return one row: (n, concordant, discordant, tau_b rounded to 6;
     *         null τ when either margin is all-ties) */
-  def kendallTauB(df: DataFrame, colA: String, colB: String): DataFrame = {
+  def kendallTauB(df: DataFrame, colA: String, colB: String): DataFrame = Persisted { scope =>
     val a = F.col(colA).cast("double")
     val b = F.col(colB).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(a.isNotNull && !F.isnan(a) && b.isNotNull && !F.isnan(b))
       .groupBy(a.as("__x"), b.as("__y"))
-      .agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("__c")))
     // loud guard, not a silent cap: the concordance join is |cells|²
     val nCells = cells.count()
     require(nCells <= 16384L,
@@ -425,7 +424,7 @@ object Ranks {
     * @return the distinct-src-value mapping table: (value, u, mapped)
     *         — join it back to rewrite rows */
   def quantileMap(df: DataFrame, cohortCol: String, valueCol: String,
-                  labelSrc: String, labelRef: String): DataFrame = {
+                  labelSrc: String, labelRef: String): DataFrame = Persisted { scope =>
     require(labelSrc != labelRef, "cohort labels must differ")
     val spark = df.sparkSession
     import spark.implicits._
@@ -464,7 +463,7 @@ object Ranks {
       val seeds = partLast.scanLeft(Option.empty[Double]) {
         (acc, cur) => cur.orElse(acc)
       }
-      ps.walk(seeds) { (seed, it) =>
+      scope.checkpoint(ps.walk(seeds) { (seed, it) =>
         var carry = seed
         it.flatMap { r =>
           if (r._2 == 0) { carry = r._3; None }
@@ -472,7 +471,7 @@ object Ranks {
           // is always defined by the time a probe is reached
           else Some((r._4.get, r._5.get, carry.get))
         }
-      }.toDF("value", "u", "mapped").localCheckpoint(true)
+      }.toDF("value", "u", "mapped"))
     }
   }
 

@@ -1579,8 +1579,6 @@ object Regression {
       .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y) &&
         lbl.isNotNull)
       .select(lbl.as("__c"), x.as("__x"), y.as("__y"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val perClass = clean.groupBy("__c").agg(
       F.count(F.lit(1)).as("n"),
       dsum(F.col("__x")).as("sx"), dsum(F.col("__y")).as("sy"),
@@ -2054,8 +2052,6 @@ object Regression {
     val x1 = F.col(x1Col).cast("double")
     val x2 = F.col(x2Col).cast("double")
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val agged = df
       .where(x1.isNotNull && !F.isnan(x1) && x2.isNotNull &&
         !F.isnan(x2) && y.isNotNull && !F.isnan(y))
@@ -2105,8 +2101,6 @@ object Regression {
     import spark.implicits._
     val cs = xCols.map(c => F.col(c).cast("double"))
     val ok = cs.map(c => c.isNotNull && !F.isnan(c)).reduce(_ && _)
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val r = df.where(ok)
       .agg(F.count(F.lit(1)).as("n"),
         dsum(cs(0)).as("s1"), dsum(cs(1)).as("s2"), dsum(cs(2)).as("s3"),
@@ -2225,8 +2219,6 @@ object Regression {
     val x1 = F.col(x1Col).cast("double")
     val x2 = F.col(x2Col).cast("double")
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val m = df
       .where(x1.isNotNull && !F.isnan(x1) && x2.isNotNull &&
         !F.isnan(x2) && y.isNotNull && !F.isnan(y))
@@ -2308,8 +2300,6 @@ object Regression {
     val k = xCols.length
     val xs = xCols.map(c => F.col(c).cast("double"))
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val ok = (xs :+ y).map(c => c.isNotNull && !F.isnan(c))
       .reduce(_ && _)
     val aggCols =
@@ -2387,8 +2377,6 @@ object Regression {
     require(topK > 0, "topK must be positive")
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val clean = df
       .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y))
       .select(idCols.map(F.col) :+ x.as("__x") :+ y.as("__y"): _*)
@@ -2448,8 +2436,6 @@ object Regression {
     import spark.implicits._
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     val clean = df
       .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y))
       .select(x.as("__x"), y.as("__y"))
@@ -2573,18 +2559,15 @@ object Regression {
     *
     * @return one row: (breakpoint, n_left, n_right, slope_left,
     *         slope_right, intercept_left, intercept_right, sse_ratio) */
-  def segmentedOls(df: DataFrame, yCol: String, xCol: String): DataFrame = {
+  def segmentedOls(df: DataFrame, yCol: String, xCol: String): DataFrame = Persisted { scope =>
     import org.apache.spark.sql.expressions.Window
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y))
       .groupBy(x.as("__x"))
       .agg(F.count(F.lit(1)).as("c"), dsum(y).as("sy"),
-        dsum(y * y).as("syy"))
-      .localCheckpoint(true)
+        dsum(y * y).as("syy")))
     // loud guard, not a silent cap: the prefix windows below sort the
     // distinct-x cell frame on ONE reducer — fine for binned/integer
     // x, a single-reducer blowup on a continuous column

@@ -418,7 +418,7 @@ object Sampling {
     * sharded training-data write.
     */
   def globalShuffle(df: DataFrame, keyCol: String, seed: Long,
-                    positionCol: String = "position"): DataFrame = {
+                    positionCol: String = "position"): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     val keyed = df.withColumn("__gs_key",
       F.md5(F.concat_ws(":", F.col(keyCol).cast("string"),
@@ -430,10 +430,9 @@ object Sampling {
           it.map { row => val r = org.apache.spark.sql.Row.fromSeq(
             row.toSeq :+ pos); pos += 1; r }
       }
-      spark.createDataFrame(positioned,
+      scope.checkpoint(spark.createDataFrame(positioned,
           keyed.schema.add(positionCol, "long", nullable = false))
-        .drop("__gs_key")
-        .localCheckpoint(true)
+        .drop("__gs_key"))
     }
   }
 

@@ -367,9 +367,11 @@ object Similarity {
         "the index was built from a different embedding model; rebuild it")
     // pin the new batch's assignment so N daily calls don't stack N
     // normalize+score layers of lineage under every later query
-    val batch = assignCells(normalizedOf(newDf, embCol, idCol), index.centroids)
-      .localCheckpoint(true)
-    IvfIndex(index.centroids, index.assigned.unionByName(batch))
+    Persisted { scope =>
+      val batch = scope.checkpoint(
+        assignCells(normalizedOf(newDf, embCol, idCol), index.centroids))
+      IvfIndex(index.centroids, index.assigned.unionByName(batch))
+    }
   }
 
   /** Approximate top-k against a prebuilt IVF index: rank exactly inside
@@ -542,8 +544,8 @@ object Similarity {
     * @return one row per group pair (a < b): (group_a, group_b,
     *         cosine rounded 6); zero-norm centroids omitted */
   def centroidSimilarity(df: DataFrame, groupCol: String,
-                         embCol: String): DataFrame = {
-    val c = groupCentroids(df, groupCol, embCol).localCheckpoint(true)
+                         embCol: String): DataFrame = Persisted { scope =>
+    val c = scope.checkpoint(groupCentroids(df, groupCol, embCol))
     val l = c.select(F.col("grp").cast("string").as("group_a"),
       F.col("dim"), F.col("centroid").as("__ca"))
     val r = c.select(F.col("grp").cast("string").as("group_b"),
@@ -798,12 +800,11 @@ object Similarity {
   def semDedupPairsWith(df: DataFrame, embCol: String, idCol: String,
                         centroids: Array[Array[Double]],
                         threshold: Double, maxCell: Int = 10000,
-                        splitSeed: Long = 42L): DataFrame = {
+                        splitSeed: Long = 42L): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
-    var assigned = assignCells(normalizedOf(df, embCol, idCol), centroids)
-      .withColumn("sub", F.lit(""))
-      .localCheckpoint(true)
+    var assigned = scope.checkpoint(assignCells(normalizedOf(df, embCol, idCol), centroids)
+      .withColumn("sub", F.lit("")))
     // ---- oversize-cell splitting (bounded rounds, bounded training) ----
     val splitTrainCap = 4096
     var round = 0
@@ -883,11 +884,9 @@ object Similarity {
           // pin each round's assignment (lineage-free, eager): without
           // this, round k's size audit re-runs every earlier round's
           // re-assign UDF plus the base assignment — O(rounds²) scans.
-          // Blocks are freed by the ContextCleaner once unreferenced.
           // The no-oversize common path never reaches here.
-          assigned = assigned.withColumn("sub",
-            reassignUdf(F.col("cell"), F.col("sub"), F.col("emb")))
-            .localCheckpoint(true)
+          assigned = scope.round(assigned, assigned.withColumn("sub",
+            reassignUdf(F.col("cell"), F.col("sub"), F.col("emb"))))
           round += 1
         }
       }
@@ -1020,8 +1019,6 @@ object Similarity {
       (x, y) => x * y)))
     val nb = F.sqrt(fold(F.zip_with(F.col("eb"), F.col("eb"),
       (x, y) => x * y)))
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
     a.join(b, F.col("id_b") === F.col("id_a") + 1L)
       .where(na > 0.0 && nb > 0.0)
       .select(F.round(dot / (na * nb), 6).as("__c"))

@@ -289,7 +289,7 @@ object StatTests {
     *         kxy_mean) rounded to 9 */
   def mmdTest(df: DataFrame, cohortCol: String, valueCol: String,
               sigma: Double, labelA: String = "a", labelB: String = "b",
-              maxCells: Int = 4096): DataFrame = {
+              maxCells: Int = 4096): DataFrame = Persisted { scope =>
     require(sigma > 0.0, "sigma must be positive")
     require(maxCells >= 2 && maxCells <= 16384,
       "maxCells must be in 2..16384")
@@ -297,12 +297,11 @@ object StatTests {
     import spark.implicits._
     val g = F.col(cohortCol).cast("string")
     val v = F.col(valueCol).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(v.isNotNull && !F.isnan(v) && g.isin(labelA, labelB))
       .groupBy(v.as("__v"))
       .agg(F.sum(F.when(g === labelA, 1L).otherwise(0L)).as("ca"),
-        F.sum(F.when(g === labelB, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint(true)
+        F.sum(F.when(g === labelB, 1L).otherwise(0L)).as("cb")))
     val meta = cells.agg(F.count(F.lit(1)).as("cells"),
       F.sum("ca").as("na"), F.sum("cb").as("nb")).head()
     require(meta.getAs[Long]("cells") <= maxCells,
@@ -846,13 +845,13 @@ object StatTests {
     * order-independent and replay exactly.
     *
     * @return one row: (n, w_stat, z_stat, p_value), 6-rounded */
-  def shapiroWilk(df: DataFrame, valueCol: String): DataFrame = {
+  def shapiroWilk(df: DataFrame, valueCol: String): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val v = F.col(valueCol).cast("double")
-    val clean = df.where(v.isNotNull && !F.isnan(v))
-      .select(v.as("__v")).localCheckpoint(true)
+    val clean = scope.checkpoint(df.where(v.isNotNull && !F.isnan(v))
+      .select(v.as("__v")))
     val n = clean.count()
     require(n >= 12L && n <= 5000L,
       s"Shapiro-Wilk runs on 12 <= n <= 5000 (Royston's approximation" +
@@ -862,11 +861,10 @@ object StatTests {
     val w = Window.partitionBy(F.lit(0)).orderBy("__v")
     val pCol = (F.col("__i").cast("double") - F.lit(0.375)) /
       F.lit(nD + 0.25)
-    val base = clean.repartition(1)
+    val base = scope.checkpoint(clean.repartition(1)
       .withColumn("__i", F.row_number().over(w).cast("long"))
       .withColumn("__m0", acklamProbit(pCol))
-      .withColumn("__m", F.expr("rint(__m0 * 1e12) / 1e12"))
-      .localCheckpoint(true)
+      .withColumn("__m", F.expr("rint(__m0 * 1e12) / 1e12")))
     val r1 = base.agg(
       F.sum((F.col("__m") * F.col("__m")).cast("decimal(38,12)"))
         .cast("double").as("sm2"),
@@ -937,7 +935,7 @@ object StatTests {
   def hodgesLehmannShift(df: DataFrame, cohortCol: String,
                          valueCol: String, labelA: String = "a",
                          labelB: String = "b",
-                         maxCellProduct: Long = 4194304L): DataFrame = {
+                         maxCellProduct: Long = 4194304L): DataFrame = Persisted { scope =>
     require(labelA != labelB, "cohort labels must differ")
     val spark = df.sparkSession
     import spark.implicits._
@@ -946,8 +944,8 @@ object StatTests {
     val clean = df
       .where(g.isin(labelA, labelB) && v.isNotNull && !F.isnan(v))
       .select(g.as("__g"), v.as("__v"))
-    val cells = clean.groupBy("__g", "__v")
-      .agg(F.count(F.lit(1)).as("__c")).localCheckpoint(true)
+    val cells = scope.checkpoint(clean.groupBy("__g", "__v")
+      .agg(F.count(F.lit(1)).as("__c")))
     val counts = cells.groupBy("__g")
       .agg(F.count(F.lit(1)).as("cells"), F.sum("__c").as("n"))
       .collect().map(r => r.getAs[String]("__g") ->
@@ -1741,7 +1739,7 @@ object StatTests {
     * @return `df` + (holm_rank, p_holm, reject_fwer) — null p rows get
     *         null adjustments and reject_fwer = false */
   def holmAdjust(df: DataFrame, pCol: String,
-                 alpha: Double = 0.05): DataFrame = {
+                 alpha: Double = 0.05): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val pc = F.col(pCol).cast("double")
@@ -1778,7 +1776,7 @@ object StatTests {
             (p, rank, run)
           }
         }.toDF("__p", "holm_rank", "p_holm")
-        val pinned = qTable.localCheckpoint(true)
+        val pinned = scope.checkpoint(qTable)
         df.join(pinned, pc === F.col("__p"), "left")
           .withColumn("reject_fwer",
             F.coalesce(F.col("p_holm") <= F.lit(alpha), F.lit(false)))
@@ -1805,7 +1803,7 @@ object StatTests {
     *         mean_rank_a, mean_rank_b, z, p_value, bh_rank, q_value,
     *         reject) — ranks/z rounded to 6, p at the 6-rounded z */
   def dunnTest(df: DataFrame, factorCol: String, valueCol: String,
-               alpha: Double = 0.05): DataFrame = {
+               alpha: Double = 0.05): DataFrame = Persisted { scope =>
     val v = F.col(valueCol).cast("double")
     val base = df
       .where(v.isNotNull && !F.isnan(v) && F.col(factorCol).isNotNull)
@@ -1827,12 +1825,11 @@ object StatTests {
         F.col("__ct")), F.lit(0.0))).head().getDouble(0)
     val nD = n.toDouble
     val sigma2 = nD * (nD + 1.0) / 12.0 - tieSum / (12.0 * (nD - 1.0))
-    val byLevel = vcells
+    val byLevel = scope.checkpoint(vcells
       .join(mids, F.col("__v") === F.col("__mv"))
       .groupBy("__l")
       .agg(F.sum("__cl").as("__nl"),
-        F.sum(F.col("__cl") * F.col("__mid")).as("__rl"))
-      .localCheckpoint(true)
+        F.sum(F.col("__cl") * F.col("__mid")).as("__rl")))
     val l = byLevel.select(F.col("__l").as("group_a"),
       F.col("__nl").as("n_a"), F.col("__rl").as("__ra"))
     val r = byLevel.select(F.col("__l").as("group_b"),
@@ -1871,7 +1868,7 @@ object StatTests {
     *
     * @return `df` + (bh_rank, q_value, reject) — null p rows get null
     *         adjustments and reject = false */
-  def bhAdjust(df: DataFrame, pCol: String, alpha: Double = 0.05): DataFrame = {
+  def bhAdjust(df: DataFrame, pCol: String, alpha: Double = 0.05): DataFrame = Persisted { scope =>
     require(alpha > 0.0 && alpha < 1.0, "alpha must be in (0,1)")
     val spark = df.sparkSession
     import spark.implicits._
@@ -1922,7 +1919,7 @@ object StatTests {
           }
           out.iterator
         }.toDF("__p", "bh_rank", "q_value")
-        val pinned = qTable.localCheckpoint(true)
+        val pinned = scope.checkpoint(qTable)
         df.join(pinned, F.col(pCol).cast("double") === F.col("__p"),
             "left")
           .withColumn("reject",
@@ -2052,16 +2049,15 @@ object StatTests {
     * @return one row per pair: (group_a, group_b, n_a, n_b, mean_a,
     *         mean_b, cohen_d, hedges_g), rounded to 6 */
   def effectSizes(df: DataFrame, groupCol: String,
-                  valueCol: String): DataFrame = {
+                  valueCol: String): DataFrame = Persisted { scope =>
     val g = F.col(groupCol).cast("string")
     val v = F.col(valueCol).cast("double")
-    val m = df
+    val m = scope.checkpoint(df
       .where(g.isNotNull && v.isNotNull && !F.isnan(v))
       .groupBy(g.as("__g"))
       .agg(F.count(F.lit(1)).as("__n"), F.avg(v).as("__m"),
         F.var_samp(v).as("__v"))
-      .where(F.col("__n") >= 2L && F.col("__v").isNotNull)
-      .localCheckpoint(true)
+      .where(F.col("__n") >= 2L && F.col("__v").isNotNull))
     val l = m.select(F.col("__g").as("group_a"), F.col("__n").as("n_a"),
       F.col("__m").as("__ma"), F.col("__v").as("__va"))
     val r = m.select(F.col("__g").as("group_b"), F.col("__n").as("n_b"),
@@ -2217,16 +2213,15 @@ object StatTests {
     *         rounded to 6, p at the 6-rounded z */
   def pairwiseContrasts(df: DataFrame, groupCol: String,
                         valueCol: String,
-                        alpha: Double = 0.05): DataFrame = {
+                        alpha: Double = 0.05): DataFrame = Persisted { scope =>
     val g = F.col(groupCol).cast("string")
     val v = F.col(valueCol).cast("double")
-    val m = df
+    val m = scope.checkpoint(df
       .where(g.isNotNull && v.isNotNull && !F.isnan(v))
       .groupBy(g.as("__g"))
       .agg(F.count(F.lit(1)).as("__n"), F.avg(v).as("__m"),
         F.var_samp(v).as("__v"))
-      .where(F.col("__n") >= 2L && F.col("__v").isNotNull)
-      .localCheckpoint(true)
+      .where(F.col("__n") >= 2L && F.col("__v").isNotNull))
     val l = m.select(F.col("__g").as("group_a"), F.col("__n").as("n_a"),
       F.col("__m").as("__ma"), F.col("__v").as("__va"))
     val r = m.select(F.col("__g").as("group_b"), F.col("__n").as("n_b"),
@@ -3172,16 +3167,15 @@ object StatTests {
     *
     * @return one row: (n, n_cells, dcov2, dvar_x, dvar_y, dcor) */
   def distanceCorrCells(df: DataFrame, xCol: String,
-                        yCol: String): DataFrame = {
+                        yCol: String): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val x = F.col(xCol).cast("double")
     val y = F.col(yCol).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(x.isNotNull && !F.isnan(x) && y.isNotNull && !F.isnan(y))
       .groupBy(x.as("x"), y.as("y"))
-      .agg(F.count(F.lit(1)).as("w"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("w")))
     val cn = cells.agg(F.sum("w").as("n"),
       F.count(F.lit(1)).as("cells")).head()
     val n = cn.getAs[Long]("n")
@@ -3334,19 +3328,16 @@ object StatTests {
     * @return one row: (n, dist_a, dist_b, mean_ll_a, mean_ll_b, z,
     *         p_value, preferred) */
   def vuongTest(df: DataFrame, valueCol: String, distA: String,
-                distB: String): DataFrame = {
+                distB: String): DataFrame = Persisted { scope =>
     val allowed = Set("norm", "lognorm", "expon")
     require(allowed(distA) && allowed(distB), "dist must be norm/lognorm/expon")
     require(distA != distB, "candidates must differ")
     val spark = df.sparkSession
     import spark.implicits._
     val x = F.col(valueCol).cast("double")
-    def dsum(c: org.apache.spark.sql.Column) =
-      F.sum(c.cast("decimal(38,6)")).cast("double")
-    val clean = df
+    val clean = scope.checkpoint(df
       .where(x.isNotNull && !F.isnan(x) && x > 0.0)
-      .select(x.as("__x"))
-      .localCheckpoint(true)
+      .select(x.as("__x")))
     val m = clean.agg(F.count(F.lit(1)).as("n"),
       dsum(F.col("__x")).as("s"),
       dsum(F.col("__x") * F.col("__x")).as("ss"),

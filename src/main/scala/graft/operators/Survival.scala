@@ -706,7 +706,7 @@ object Survival {
     * @return one row per distinct event time: (t, n_event, h0, s0),
     *         h0/s0 rounded to 6 */
   def baselineHazard(df: DataFrame, durationCol: String,
-                     eventCol: String, model: CoxModel): DataFrame = {
+                     eventCol: String, model: CoxModel): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val xs = model.features.map(c => F.col(c).cast("double"))
@@ -756,7 +756,7 @@ object Survival {
           } else None
         }
       }
-      rows.toDF("t", "n_event", "h0", "s0").localCheckpoint(true)
+      scope.checkpoint(rows.toDF("t", "n_event", "h0", "s0"))
     }
   }
 
@@ -1088,19 +1088,18 @@ object Survival {
     * @return one row: (n, n_comparable, n_concordant, n_tied_score,
     *         c_index, somers_d) */
   def concordanceIndex(df: DataFrame, durationCol: String,
-                       eventCol: String, scoreCol: String): DataFrame = {
+                       eventCol: String, scoreCol: String): DataFrame = Persisted { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     val t = F.col(durationCol).cast("double")
     val e = F.col(eventCol).cast("boolean")
     val s = F.col(scoreCol).cast("double")
-    val cells = df
+    val cells = scope.checkpoint(df
       .where(t.isNotNull && !F.isnan(t) && e.isNotNull &&
         s.isNotNull && !F.isnan(s))
       .groupBy(t.as("t"), s.as("s"))
       .agg(F.sum(F.when(e, 1L).otherwise(0L)).as("ev"),
-        F.count(F.lit(1)).as("c"))
-      .localCheckpoint(true)
+        F.count(F.lit(1)).as("c")))
     val cn = cells.agg(F.sum("c").as("n"),
       F.count(F.lit(1)).as("cells")).head()
     val n = cn.getAs[Long]("n")

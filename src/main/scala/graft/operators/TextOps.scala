@@ -649,7 +649,7 @@ object TextOps {
   /** The seed + fixed-round EM/prune loop shared by
     * [[unigramLmTrain]] and [[unigramFertility]]: returns the final
     * piece probabilities and the final surviving expected counts. */
-  private def unigramEm(words: DataFrame, maxPieceLen: Int,
+  private def unigramEm(scope: Persisted, words: DataFrame, maxPieceLen: Int,
                         maxSeed: Int, emRounds: Int, minCount: Double):
       (Map[String, Double], Seq[(String, Double)]) = {
     val spark = words.sparkSession
@@ -661,10 +661,9 @@ object TextOps {
         F.transform(F.sequence(F.lit(1), F.lit(maxPieceLen)), l =>
           F.when(i + l - F.lit(1) <= n, F.col("word").substr(i, l))),
         p => p.isNotNull)))
-    val freq = words
+    val freq = scope.checkpoint(words
       .select(F.explode(pcs).as("piece"), F.col("wc"))
-      .groupBy("piece").agg(F.sum("wc").as("freq"))
-      .localCheckpoint(true)
+      .groupBy("piece").agg(F.sum("wc").as("freq")))
     val chars = freq.where(F.length(F.col("piece")) === 1)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     require(chars.nonEmpty, "empty corpus vocabulary")
@@ -721,18 +720,17 @@ object TextOps {
   def unigramLmTrain(df: DataFrame, idCol: String, textCol: String,
                      maxPieceLen: Int = 3, maxSeed: Int = 2048,
                      emRounds: Int = 2, minCount: Double = 1.0,
-                     topK: Int = 64, maxWordLen: Int = 24): DataFrame = {
+                     topK: Int = 64, maxWordLen: Int = 24): DataFrame = Persisted { scope =>
     unigramRequires(maxPieceLen, maxSeed, emRounds, minCount, maxWordLen)
     require(topK >= 1, "topK must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    val words = tokens(df, idCol, textCol)
+    val words = scope.checkpoint(tokens(df, idCol, textCol)
       .where(F.length(F.col("token")) <= maxWordLen)
       .groupBy(F.col("token").as("word"))
-      .agg(F.count(F.lit(1)).as("wc"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("wc")))
     val (pieces, lastCnt) =
-      unigramEm(words, maxPieceLen, maxSeed, emRounds, minCount)
+      unigramEm(scope, words, maxPieceLen, maxSeed, emRounds, minCount)
     lastCnt
       .sortBy { case (p, c) => (-c, p) }
       .take(topK)
@@ -758,16 +756,15 @@ object TextOps {
   def unigramFertility(df: DataFrame, idCol: String, textCol: String,
                        maxPieceLen: Int = 3, maxSeed: Int = 2048,
                        emRounds: Int = 2, minCount: Double = 1.0,
-                       maxWordLen: Int = 24): DataFrame = {
+                       maxWordLen: Int = 24): DataFrame = Persisted { scope =>
     unigramRequires(maxPieceLen, maxSeed, emRounds, minCount, maxWordLen)
     val spark = df.sparkSession
-    val words = tokens(df, idCol, textCol)
+    val words = scope.checkpoint(tokens(df, idCol, textCol)
       .where(F.length(F.col("token")) <= maxWordLen)
       .groupBy(F.col("token").as("word"))
-      .agg(F.count(F.lit(1)).as("wc"))
-      .localCheckpoint(true)
+      .agg(F.count(F.lit(1)).as("wc")))
     val (pieces, _) =
-      unigramEm(words, maxPieceLen, maxSeed, emRounds, minCount)
+      unigramEm(scope, words, maxPieceLen, maxSeed, emRounds, minCount)
     val bc = spark.sparkContext.broadcast(pieces)
     val gammaUdf = unigramGamma(bc, maxPieceLen)
     words
@@ -1797,7 +1794,7 @@ object TextOps {
     * @return topK rows: (idCol, n_tokens, score) */
   def mooreLewisSelect(dfTarget: DataFrame, dfPool: DataFrame,
                        idCol: String, textCol: String,
-                       topK: Int): DataFrame = {
+                       topK: Int): DataFrame = Persisted { scope =>
     require(topK >= 1, "topK must be >= 1")
     def toks(df: DataFrame) = df
       .where(F.col(idCol).isNotNull && F.col(textCol).isNotNull)
@@ -1807,11 +1804,10 @@ object TextOps {
     val cTgt = toks(dfTarget).groupBy("w")
       .agg(F.count(F.lit(1)).as("ct"))
     val cPool = tPool.groupBy("w").agg(F.count(F.lit(1)).as("cp"))
-    val vocab = cTgt.join(cPool, Seq("w"), "full_outer")
+    val vocab = scope.checkpoint(cTgt.join(cPool, Seq("w"), "full_outer")
       .select(F.col("w"),
         F.coalesce(F.col("ct"), F.lit(0L)).as("ct"),
-        F.coalesce(F.col("cp"), F.lit(0L)).as("cp"))
-      .localCheckpoint(true)
+        F.coalesce(F.col("cp"), F.lit(0L)).as("cp")))
     val tot = vocab.agg(F.sum("ct").as("nt"), F.sum("cp").as("np"),
       F.count(F.lit(1)).as("v")).head()
     val nt = tot.getAs[Long]("nt"); val np = tot.getAs[Long]("np")

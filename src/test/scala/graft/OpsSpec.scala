@@ -2630,17 +2630,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def await(prefix: String): org.apache.spark.sql.Row = {
       // The shared listener bus can deliver a BACKLOGGED execution-end
       // event (an earlier test's run of the same op, with zero drops)
-      // right after registration; every assertion below expects nonzero
-      // drops, so poll past zero-drop rows until the real observation
-      // overwrites them (captured.put is last-wins per name) or the
-      // deadline passes — then return whatever arrived so the assert
-      // fails with the row in the message.
+      // right after registration. Each observeDropped call has its own
+      // name (graft.dropped/<op>/<seq>), so such a row sits beside the
+      // real one. Every assertion below expects nonzero drops: poll
+      // until a matching row with nonzero drops arrives or the deadline
+      // passes, then return whatever arrived so the assert fails with
+      // the row in the message.
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
       var hit: Option[org.apache.spark.sql.Row] = None
       var done = false
       while (!done && System.nanoTime() < deadline) {
-        hit = captured.asScala.collectFirst {
+        val rows = captured.asScala.collect {
           case (n, r) if n.startsWith(prefix) => r }
+        hit = rows.find(_.getAs[Long]("dropped_buckets") > 0L)
+          .orElse(rows.headOption)
         done = hit.exists(_.getAs[Long]("dropped_buckets") > 0L)
         if (!done) Thread.sleep(50)
       }

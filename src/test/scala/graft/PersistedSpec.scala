@@ -159,6 +159,76 @@ class PersistedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leaked.isEmpty, s"cached state left behind by: ${leaked.mkString(", ")}")
   }
 
+  test("an operator that checkpoints leaves no persistent RDD unless its result reads it, also when it throws") {
+    val df = frame
+    val empty = df.where(F.lit(false))
+    val few = df.where(F.col("id") < 5L)
+    val conversions = df.withColumn("c", F.lit("conv"))
+    /** `n` distinct (a, b) cells. */
+    def grid(n: Int): DataFrame = spark.range(n)
+      .select(F.col("id").as("a"), F.col("id").as("b"), F.lit(true).as("e"))
+    val cases = Seq[(String, () => Any, Boolean)](
+      // results built on the driver: every checkpoint is released
+      ("shapiroWilk", () => StatTests.shapiroWilk(df, "v"), false),
+      ("clusterAgreement", () => Evaluation.clusterAgreement(df, "g", "e"), false),
+      ("hodgesLehmannShift",
+        () => StatTests.hodgesLehmannShift(df, "g", "v"), false),
+      ("vuongTest", () => StatTests.vuongTest(df, "t", "norm", "expon"), false),
+      ("shapleyAttribution",
+        () => Cohorts.shapleyAttribution(df, "id", "g", "a"), false),
+      ("unigramLmTrain", () => TextOps.unigramLmTrain(docs, "doc_id", "text"), false),
+      ("medianMad", () => Outliers.medianMad(df, "v"), false),
+      // throwing inputs: a require after the checkpoint
+      ("basketPairs, every basket over the size guard", () =>
+        Associations.basketPairs(df, "g", "id", maxBasketSize = 2), true),
+      ("shapleyAttribution, conversions only", () =>
+        Cohorts.shapleyAttribution(conversions, "id", "c", "conv"), true),
+      ("clusterAgreement, no doubly-labelled rows", () =>
+        Evaluation.clusterAgreement(df.withColumn("la",
+          F.lit(null).cast("string")), "la", "g"), true),
+      ("ebShrinkRates, empty", () =>
+        Experiments.ebShrinkRates(empty, Seq("g"), "e"), true),
+      ("localOutlierFactor, n <= k", () =>
+        Outliers.localOutlierFactor(few, "id", "v", "t", k = 5), true),
+      ("kendallTauB, over 16,384 cells",
+        () => Ranks.kendallTauB(grid(16385), "a", "b"), true),
+      ("segmentedOls, over 65,536 cells",
+        () => Regression.segmentedOls(grid(65537), "b", "a"), true),
+      ("shapiroWilk, n < 12", () => StatTests.shapiroWilk(few, "v"), true),
+      ("vuongTest, under 8 positive rows",
+        () => StatTests.vuongTest(few, "t", "norm", "expon"), true),
+      ("concordanceIndex, over 4,096 cells",
+        () => Survival.concordanceIndex(grid(4097), "a", "e", "b"), true),
+      ("mooreLewisSelect, empty pool", () => TextOps.mooreLewisSelect(
+        docs, docs.where(F.lit(false)), "doc_id", "text", 3), true))
+    val leaked = leaks(spark, persistedState)(cases)
+    assert(leaked.isEmpty, s"persistent state left behind by: ${leaked.mkString(", ")}")
+  }
+
+  test("a returned frame, alone or in a tuple or case class, still reads its checkpoints") {
+    val df = frame
+    // no zero vector: the cell assignment divides by the norm
+    val vecs = df.withColumn("emb", F.transform(F.col("emb"), _ + 1.0))
+    val cells = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+    val index = Similarity.ivfBuildWith(vecs, "emb", "id", cells)
+    val returned = Seq[(String, () => Dataset[_])](
+      ("Mixture.fit", () => Mixture.fit(df, Seq("v", "t"), k = 2)._2),
+      ("ivfAssign", () => Similarity.ivfAssign(index,
+        vecs.withColumn("id", F.col("id") + 100L), "emb", "id").assigned),
+      ("qqDist", () =>
+        PlotData.qqDist(df, "v", "norm", Array(10.0, 5.0), points = 10)),
+      ("hashResampleCI", () => Bootstrap.hashResampleCI(df, "id", b = 5)),
+      ("packSequences", () => Packing.packSequences(df, "id", "w", 4L)),
+      ("semDedupPairsWith, split rounds", () => Similarity.semDedupPairsWith(
+        vecs, "emb", "id", cells, threshold = 0.9, maxCell = 5)),
+      ("stlByKey", () => Features.stlByKey(df, "g", "id", "v", 1L, 3)))
+    returned.foreach { case (name, call) =>
+      val d = call()
+      val first = d.collect().map(_.toString).sorted.toSeq
+      assert(d.collect().map(_.toString).sorted.toSeq == first, name)
+    }
+  }
+
   test("labelPropagation keeps only the checkpoint of the frame it returns") {
     val (rdds, cached) = added(spark, persistedState) {
       Graph.labelPropagation(edges, "src", "dst", iters = 3).collect()
@@ -209,7 +279,8 @@ class PersistedSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("entropyBalance",
         () => Weighting.entropyBalance(df, "treat", "x", "w"), 13),
       ("minhashPairs",
-        () => Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5), 9))
+        () => Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5), 9),
+      ("kendallTauB", () => Ranks.kendallTauB(df, "v", "t"), 15))
     val got = pinned.map { case (name, call, _) => name -> jobs(call) }
     assert(got == pinned.map(p => p._1 -> p._3))
     // its dead persist is gone: at most the hand-written 15 jobs
@@ -223,19 +294,21 @@ class PersistedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dir.isDirectory, s"source tree not found at ${dir.getAbsolutePath}")
     // PrefixSum caches an RDD, not a frame; FitResults.unpersist is a
     // public no-op kept for the reference's API
-    val allowed = Set("Persisted.scala", "PrefixSum.scala", "FitResults.scala")
+    val cacheAllowed = Set("Persisted.scala", "PrefixSum.scala", "FitResults.scala")
     val offenders = dir.listFiles().filter(_.getName.endsWith(".scala"))
-      .filterNot(f => allowed(f.getName))
+      .filterNot(_.getName == "Persisted.scala")
       .flatMap { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
         val lines = try src.getLines().toVector finally src.close()
+        val calls = Seq(".localCheckpoint(") ++
+          (if (cacheAllowed(f.getName)) Nil
+           else Seq(".persist(", ".cache()", "unpersist"))
         lines.indices.collect {
-          case i if Seq(".persist(", ".cache()", "unpersist")
-              .exists(lines(i).contains) => s"${f.getName}:${i + 1}"
+          case i if calls.exists(lines(i).contains) => s"${f.getName}:${i + 1}"
         }
       }.sorted
-    assert(allowed.forall(n => new java.io.File(dir, n).isFile) &&
-      offenders.isEmpty, "hand-written cache lifecycle at " +
+    assert(cacheAllowed.forall(n => new java.io.File(dir, n).isFile) &&
+      offenders.isEmpty, "hand-written cache or checkpoint lifecycle at " +
       s"${offenders.mkString(", ")}: use Persisted")
   }
 }
